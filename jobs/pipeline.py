@@ -3,7 +3,7 @@
 Usage:
     spark-submit --py-files <zip> jobs/pipeline.py \
         --convs 10000 --out /tmp/pipeline-out [--input <parquet-dir>] \
-        [--salt 16] [--resume]
+        [--poll-days N] [--resume]
 
 Reads the transcript table (a parquet path with the input_hint schema,
 or the deterministic synthetic generator when --input is omitted),
@@ -22,7 +22,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from opentelemetry_collector_contrib_spark.plans.pipeline import run_pipeline, write_pipeline
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+
+from opentelemetry_collector_contrib_spark.plans.pipeline import (
+    ROUTE_NAMES,
+    PipelineOutput,
+    run_pipeline,
+    write_pipeline,
+)
 from opentelemetry_collector_contrib_spark.runtime.lineage import LineageLog
 from opentelemetry_collector_contrib_spark.session import get_spark
 from opentelemetry_collector_contrib_spark.sources.transcripts import generate_transcripts
@@ -33,7 +41,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--input", help="parquet dir with transcript schema; default: synthesize")
     ap.add_argument("--convs", type=int, default=5000)
     ap.add_argument("--out", required=True)
-    ap.add_argument("--salt", type=int, default=16)
     ap.add_argument("--master", default=None)
     ap.add_argument("--run-id", default="run-0")
     ap.add_argument(
@@ -67,11 +74,6 @@ def main(argv: list[str] | None = None) -> int:
     out = run_pipeline(spark, transcripts)
     t_plan = time.time()
     if args.sink == "noop":
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        from opentelemetry_collector_contrib_spark.plans.pipeline import ROUTE_NAMES
-
         obs = Observation("sink_counts")
         observed = out.routed.observe(
             obs,
@@ -80,10 +82,6 @@ def main(argv: list[str] | None = None) -> int:
         observed.write.format("noop").mode("overwrite").save()
         counts = {r: n for r, n in obs.get.items() if n > 0}
     elif args.poll_days > 0:
-        from pyspark.sql import functions as F
-
-        from opentelemetry_collector_contrib_spark.plans.pipeline import PipelineOutput
-
         # One tiny distinct-agg to enumerate days (bounded by the
         # calendar, not the data); on a ts-day-partitioned Iceberg
         # input each cycle's day filter partition-prunes the scan.
@@ -96,34 +94,20 @@ def main(argv: list[str] | None = None) -> int:
             chunk = days[i : i + args.poll_days]
             cycle = PipelineOutput(
                 routed=out.routed.filter(F.col("ts_day").cast("string").isin(chunk)),
-                aggregates=out.aggregates,
             )
-            c = write_pipeline(
-                cycle, args.out, salt_buckets=args.salt, lineage=lineage,
-                resume=args.resume, write_metrics=False,
-            )
+            # each cycle's read-back refreshes the metric tables along
+            # with its lineage records: they always match the sink
+            c = write_pipeline(cycle, args.out, lineage=lineage, resume=args.resume)
             for k, v in c.items():
                 counts[k] = counts.get(k, 0) + v
     else:
-        counts = write_pipeline(
-            out, args.out, salt_buckets=args.salt, lineage=lineage, resume=args.resume,
-            write_metrics=False,
-        )
+        counts = write_pipeline(out, args.out, lineage=lineage, resume=args.resume)
     t_write = time.time()
-    from opentelemetry_collector_contrib_spark.plans.pipeline import aggregate_counts
-    from opentelemetry_collector_contrib_spark.runtime.sinks import sink_path, write_sink
-
-    if args.sink == "parquet" and sum(counts.values()) > 0:
-        back = spark.read.parquet(sink_path(args.out, "routed"))
-        for name, agg in aggregate_counts(back).items():
-            write_sink(agg, sink_path(args.out, f"metric_{name}"))
-    t_metrics = time.time()
 
     elapsed = time.time() - t0
     phases = {
         "plan": round(t_plan - t0, 2),
         "write": round(t_write - t_plan, 2),
-        "metrics": round(t_metrics - t_write, 2),
     }
     total = sum(counts.values())
     print(

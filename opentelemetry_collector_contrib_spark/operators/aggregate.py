@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 
 # ---------------------------------------------------------------------------
@@ -69,6 +70,30 @@ def sum_connector(
 
 
 # ---------------------------------------------------------------------------
+# keep-first row structs: min/max(struct(..row..)) needs orderable columns
+# ---------------------------------------------------------------------------
+
+def _row_struct(df: DataFrame, cols: list[str]) -> Column:
+    """``struct(cols)`` for a min/max keep-first aggregate. A map has no
+    ordering, so each map column is carried as its key-sorted entry
+    array (keys are unique, so ties still break deterministically);
+    ``_row_field`` decodes it. Frames without maps get the plain struct."""
+    maps = {f.name for f in df.schema.fields if isinstance(f.dataType, MapType)}
+    return F.struct(*[
+        F.array_sort(F.map_entries(F.col(c))).alias(c) if c in maps else F.col(c)
+        for c in cols
+    ])
+
+
+def _row_field(df: DataFrame, row: str, c: str) -> Column:
+    """Column ``c`` of a ``_row_struct`` at path ``row``, as it was."""
+    field = F.col(f"{row}.{c}")
+    if isinstance(df.schema[c].dataType, MapType):
+        field = F.map_from_entries(field)
+    return field.alias(c)
+
+
+# ---------------------------------------------------------------------------
 # logdedup processor (processor/logdedupprocessor/processor.go:85-160)
 # ---------------------------------------------------------------------------
 
@@ -90,7 +115,7 @@ def log_dedup(
     """
     t = F.col(ts_col)
     win = F.window(t, interval)
-    keep_first = F.struct(t.alias("__ts"), F.struct(*[F.col(c) for c in df.columns]).alias("row"))
+    keep_first = F.struct(t.alias("__ts"), _row_struct(df, df.columns).alias("row"))
     agg = (
         df.groupBy(win.alias("window"), *key_cols)
         .agg(
@@ -105,7 +130,7 @@ def log_dedup(
     sel = (
         [F.col("window.start").alias("window_start")]
         + [F.col(c) for c in key_cols]
-        + [F.col(f"__first.row.{c}").alias(c) for c in other]
+        + [_row_field(df, "__first.row", c) for c in other]
         + [F.col(count_col), F.col("first_observed_ts"), F.col("last_observed_ts")]
     )
     return agg.select(*sel)
@@ -247,7 +272,7 @@ def recombine(
         group_keys = group_keys + ["__grp_part"]
 
     ordered_pair = F.struct(F.col(order_col).alias("__o"), F.col(combine_col).alias("v"))
-    meta_pair = F.struct(F.col(order_col).alias("__o"), F.struct(*[F.col(c) for c in other]).alias("row"))
+    meta_pair = F.struct(F.col(order_col).alias("__o"), _row_struct(df, other).alias("row"))
     agg = (
         grouped.groupBy(*group_keys)
         .agg(
@@ -262,7 +287,7 @@ def recombine(
     )
     sel = (
         [F.col(c) for c in source_cols]
-        + [F.col(f"__meta.row.{c}").alias(c) for c in other]
+        + [_row_field(df, "__meta.row", c) for c in other]
         + [F.col(combine_col), F.col("recombined_count")]
     )
     return agg.select(*sel)
@@ -294,7 +319,7 @@ def _recombine_size_capped(
         F.col(order_col).alias("__o"),
         F.col(combine_col).cast("string").alias("__v"),
         (F.col("__match") if has_match_col else F.lit(1)).alias("__m"),
-        F.struct(*[F.col(c) for c in other]).alias("row"),
+        _row_struct(grouped, other).alias("row"),
     )
     tmp = grouped.select(rowstruct.alias("__r"))
     r_dt = tmp.schema["__r"].dataType
@@ -367,7 +392,7 @@ def _recombine_size_capped(
     )
     return folded.select(
         *source_cols,
-        *[F.col(f"__b.meta.{c}").alias(c) for c in other],
+        *[_row_field(grouped, "__b.meta", c) for c in other],
         F.col("__b.text").alias(combine_col),
         F.col("__b.cnt").alias("recombined_count"),
     )

@@ -98,7 +98,11 @@ def ring_endpoint_for(identifier_bin: Column,
     endpoints × weight, a config constant."""
     if not ring:
         return F.lit("")
-    pos = F.crc32(identifier_bin) % MAX_POSITIONS
+    # a NULL identifier hashes like an empty one (crc32 0 -> slot 0) on
+    # both branches below; unguarded, the LUT branch would read
+    # element_at(..., NULL) as the last endpoint and the filter branch
+    # would wrap to ring[0]
+    pos = F.coalesce(F.crc32(identifier_bin) % MAX_POSITIONS, F.lit(0))
     uniq = list(dict.fromkeys(ep for _, ep in ring))
     if len(uniq) <= 90:
         # O(1) per row: the ring positions are bounded (0..35999), so

@@ -2430,7 +2430,7 @@ def haproxy_stats(
     exploded = staged.select(
         *[c for c in staged.columns
           if c not in ("_hdr", "_recs", "_rec_line", "_rec", "_page_ok")
-          and not c.startswith("_hi_")],
+          and c not in set(_idx.values())],
         F.coalesce(val("pxname"), F.lit("")).alias("ha_pxname"),
         F.coalesce(val("svname"), F.lit("")).alias("ha_svname"),
         F.lit(endpoint).alias("ha_addr"),

@@ -5,27 +5,31 @@ This is the Spark re-expression of the reference's EP1 lifecycle
 (filelog receiver -> stanza operators -> processors -> routingconnector
 -> countconnector -> exporters; SURVEY.md §3): the whole
 parse+enrich+route section is ONE narrow codegen'd stage — the only
-shuffles are (a) the salted repartition before partitioned sink writes
-and (b) the aggregate jobs. Dims broadcast.
+shuffles are (a) the AQE rebalance before the partitioned sink write
+and (b) the one grouped count over the written sink. Dims are JVM
+local relations, broadcast without a Python worker.
 
 Stage map (reference -> here):
   filelog+regex/json parse  -> parse_turns()        (grok/regex/from_json columns)
   severity_parser           -> parse_turns()        (severity map lookup)
   k8sattributes/resource    -> enrich_turns()       (broadcast insert-if-absent joins)
   routingconnector          -> route_turns()        (ordered when() chain)
-  countconnector            -> sink_counts()/warn_counts()
-  fileexporter group_by     -> write_sinks()        (partitionBy(route, ts_day))
+  countconnector            -> aggregate_counts()   (lazy, over any routed frame)
+                               SinkCounts           (one read-back of the written sink)
+  fileexporter group_by     -> write_pipeline()     (rebalance + partitionBy(route, ts_day))
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..model import INFO, WARN, severity_number
-from ..operators.aggregate import count_connector
+from ..operators.aggregate import count_connector, sum_connector
 from ..operators.enrich import broadcast_enrich
 from ..operators.route import Route, apply_routes
 from ..runtime.lineage import LineageLog
@@ -117,19 +121,59 @@ def route_turns(df: DataFrame) -> DataFrame:
     return apply_routes(df, routes, default="catchall")
 
 
+# countconnector metrics (FIXTURES.md F6): table -> (grouped attrs,
+# condition, metric column). Rows with a NULL grouped attr are not counted.
+COUNT_METRICS: dict[str, tuple[list[str], Callable[[], Column] | None, str]] = {
+    "turns_per_sink": (["route"], None, "turn_count"),
+    "warn_turns": (["role", "tool_family"], lambda: F.col("severity_number") >= WARN, "warn_count"),
+}
+
+
 def aggregate_counts(routed: DataFrame) -> dict[str, DataFrame]:
-    """countconnector metrics: per-sink counts + conditional WARN
-    counts grouped by (role, tool_family) (FIXTURES.md F6 — rows with a
-    NULL grouped attr are not counted)."""
+    """countconnector metrics over a routed frame, one lazy aggregate
+    per ``COUNT_METRICS`` table."""
     return {
-        "turns_per_sink": count_connector(routed, ["route"], metric_name="turn_count"),
-        "warn_turns": count_connector(
-            routed,
-            ["role", "tool_family"],
-            condition=F.col("severity_number") >= WARN,
-            metric_name="warn_count",
-        ),
+        name: count_connector(routed, keys, condition=cond() if cond else None, metric_name=metric)
+        for name, (keys, cond, metric) in COUNT_METRICS.items()
     }
+
+
+def _cond_col(name: str) -> str:
+    return f"__if_{name}"
+
+
+@dataclass
+class SinkCounts:
+    """Turn counts per (route, ts_day, every grouped attr, every
+    metric condition) over the written sink: ONE grouped count, at most
+    routes x days x roles x families x 2 rows, fetched as Arrow. Both
+    metric tables and the per-day lineage records roll up from it, so
+    the sink is read back once."""
+
+    table: pa.Table
+
+    @classmethod
+    def read(cls, spark: SparkSession, root: str) -> SinkCounts:
+        back = spark.read.parquet(sink_path(root, "routed"))
+        keys = dict.fromkeys(["route", "ts_day"] + [k for ks, _, _ in COUNT_METRICS.values() for k in ks])
+        conds = [c().alias(_cond_col(name)) for name, (_, c, _) in COUNT_METRICS.items() if c]
+        return cls(back.groupBy(*keys, *conds).agg(F.count(F.lit(1)).alias("n")).toArrow())
+
+    def per_day(self) -> dict[str, int]:
+        """Rows per ts_day, keyed as ``LineageLog.record_counts`` keys them."""
+        days = self.table.group_by("ts_day").aggregate([("n", "sum")])
+        return {str(d): n for d, n in zip(days["ts_day"].to_pylist(), days["n_sum"].to_pylist())}
+
+    def metrics(self, spark: SparkSession) -> dict[str, DataFrame]:
+        """The ``COUNT_METRICS`` tables — ``aggregate_counts`` of the
+        sink — summed over the counts as a JVM local relation."""
+        cube = spark.createDataFrame(self.table)
+        return {
+            name: sum_connector(
+                cube, "n", keys, condition=F.col(_cond_col(name)) if cond else None, metric_name=metric
+            )
+            for name, (keys, cond, metric) in COUNT_METRICS.items()
+        }
 
 
 @dataclass
@@ -148,7 +192,6 @@ def run_pipeline(spark: SparkSession, transcripts: DataFrame) -> PipelineOutput:
 def write_pipeline(
     out: PipelineOutput,
     root: str,
-    salt_buckets: int = 16,
     lineage: LineageLog | None = None,
     write_metrics: bool = True,
     resume: bool = False,
@@ -156,19 +199,20 @@ def write_pipeline(
     """Fan out to per-sink tables: ONE partitioned write job
     (partitionBy(route, ts_day)).
 
-    Shuffle layout: repartition by (route, ts_day, salt) — co-locates
-    each output partition's rows into few tasks (no small-files
-    explosion: tasks x dirs file count collapses to ~1 file per
-    output partition per salt bucket) while the salt spreads hot
-    conversations/days over ``salt_buckets`` tasks. This is the write
-    strategy that survives 10^12 turns; AQE coalesces the tail.
+    Shuffle layout: a ``rebalance`` on (route, ts_day). Each output
+    partition's rows land in one task, so the sink gets one file per
+    (route, ts_day); AQE then coalesces small shuffle partitions and
+    splits a skewed one (a hot day) by size, so a hot partition is
+    spread over several tasks and files only when it is big.
 
     Per-sink counts are collected with ``DataFrame.observe`` DURING the
     write job (countconnector's counter map ≙ accumulator-style
     observed aggregates) — zero extra jobs and still an exact
-    sent==received check. The richer metric tables are computed from
-    the written sink (cheap columnar read-back, no lineage recompute).
-    Returns per-sink row counts.
+    sent==received check. The metric tables (``write_metrics``) and the
+    per-day lineage records then come from one grouped count over the
+    written sink (``SinkCounts``). A call that writes no rows leaves
+    the sink, and so both of them, as they were, and skips the
+    read-back. Returns per-sink row counts.
     """
     from pyspark.sql import Observation
 
@@ -180,10 +224,8 @@ def write_pipeline(
         # overwrite only touches days this run writes)
         routed = routed.withColumn("__day", F.col("ts_day").cast("string"))
         routed = lineage.filter_pending(routed, "sink_day", "__day").drop("__day")
-    salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_buckets))
-    balanced = routed.repartition(F.col("route"), F.col("ts_day"), salt)
     obs = Observation("sink_counts")
-    observed = balanced.observe(
+    observed = routed.hint("rebalance", "route", "ts_day").observe(
         obs,
         *[
             F.count(F.when(F.col("route") == r, F.lit(1))).alias(r)
@@ -192,18 +234,19 @@ def write_pipeline(
     )
     write_sink(observed, sink_path(root, "routed"), partition_by=["route", "ts_day"])
     counts = {r: n for r, n in obs.get.items() if n > 0}
+    if lineage is not None:
+        lineage.record_all("write_sinks", counts)
+    if not counts or not (write_metrics or lineage is not None):
+        # an empty write leaves the sink, its metric tables and its
+        # per-day lineage as they were
+        return counts
 
+    sink = SinkCounts.read(spark, root)
     if write_metrics:
-        back = spark.read.parquet(sink_path(root, "routed"))
-        for name, agg in aggregate_counts(back).items():
+        for name, agg in sink.metrics(spark).items():
             write_sink(agg, sink_path(root, f"metric_{name}"))
     if lineage is not None:
-        for sink, n in sorted(counts.items()):
-            lineage.record("write_sinks", sink, n)
-        if sum(counts.values()) > 0:
-            # per-day completion records (the resume unit). Read back
-            # from the written sink: columnar scan of one column, no
-            # lineage recompute.
-            back = spark.read.parquet(sink_path(root, "routed"))
-            lineage.record_counts("sink_day", back, "ts_day")
+        # per-day completion records (the resume unit), recorded after
+        # the metric tables so a committed day always has current ones
+        lineage.record_all("sink_day", sink.per_day())
     return counts

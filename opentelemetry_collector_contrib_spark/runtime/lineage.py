@@ -42,9 +42,17 @@ class LineageLog:
         os.makedirs(root, exist_ok=True)
 
     def record(self, stage: str, partition: str, rows: int, status: str = "completed") -> None:
-        rec = PartitionRecord(stage, partition, rows, status, time.time(), self.run_id)
+        self.record_all(stage, {partition: rows}, status)
+
+    def record_all(self, stage: str, counts: dict[str, int], status: str = "completed") -> None:
+        """Log one record per partition, in partition order, with one append."""
+        now = time.time()
+        lines = [
+            json.dumps(asdict(PartitionRecord(stage, part, n, status, now, self.run_id))) + "\n"
+            for part, n in sorted(counts.items())
+        ]
         with open(self.path, "a") as f:
-            f.write(json.dumps(asdict(rec)) + "\n")
+            f.writelines(lines)
 
     def record_counts(self, stage: str, df: DataFrame, partition_col: str) -> dict[str, int]:
         """Compute per-partition counts (one agg job) and log them all."""
@@ -52,8 +60,7 @@ class LineageLog:
             str(r[0]): r[1]
             for r in df.groupBy(partition_col).agg(F.count(F.lit(1))).collect()
         }
-        for part, n in sorted(counts.items()):
-            self.record(stage, part, n)
+        self.record_all(stage, counts)
         return counts
 
     def completed(self, stage: str) -> set[str]:

@@ -33,15 +33,17 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    # cores of the master: local[N] runs N task threads, anything else
+    # (local[*], a cluster master's driver) counts this box's cores
+    n = os.cpu_count() or 8
+    if master.startswith("local["):
+        body = master[len("local[") : -1]
+        if body.isdigit():
+            n = int(body)
     if shuffle_partitions is None:
         # 4x cores: fine-grained reduce tasks pack the cores through
         # stage tails; AQE coalesces the small ones back. A real
         # cluster submit overrides this.
-        n = os.cpu_count() or 8
-        if master.startswith("local["):
-            body = master[len("local[") : -1]
-            if body.isdigit():
-                n = int(body)
         shuffle_partitions = max(8, 4 * n)
 
     builder = (
@@ -58,14 +60,14 @@ def get_spark(
         .config("spark.sql.legacy.codingErrorAction", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        # cap GC threads: with local[32] on a shared box, G1's
-        # cores-scaled GC workers contend with task threads and
-        # *reduce* throughput (measured 2x slowdown); 8 GC threads
-        # restores scaling. On a real cluster executors are smaller
-        # (4-8 cores) and the JVM default is already in this range.
+        # cap GC threads at min(8, cores): with local[32] on a shared
+        # box, G1's cores-scaled GC workers contend with task threads
+        # and *reduce* throughput (measured 2x slowdown); 8 GC threads
+        # restores scaling. Below 8 cores, more GC threads than cores
+        # made 4-core jobs bimodal (~2x CPU per job on the slow mode).
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-XX:ParallelGCThreads=8"),
+            os.environ.get("SPARK_DRIVER_JAVA_OPTS", f"-XX:ParallelGCThreads={min(8, n)}"),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")

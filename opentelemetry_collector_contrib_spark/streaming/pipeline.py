@@ -16,7 +16,7 @@ ones on Structured Streaming:
   ``applyInPandasWithState``
 
 Scale posture: state stores shard by the groupBy key (conv_id) —
-identical key layout to the batch salted writes; watermarks bound
+identical key layout to the batch conv_id-keyed operators; watermarks bound
 state size; ``availableNow`` triggers make every streaming query
 testable in batch-ish mode (and are how a backfill would run).
 """

@@ -81,3 +81,13 @@ def test_bad_page_dead_letters(spark):
     out = haproxy_stats(df).collect()
     assert len(out) == 1
     assert out[0].ha_ok is False and out[0].ha_metric is None
+
+
+def test_user_column_with_generated_prefix_survives(spark):
+    # only the operator's own header-index columns are dropped, not a
+    # user column that happens to share their "_hi_" prefix
+    page = HDR + "\n" + FE + "\n"
+    df = spark.createDataFrame([(1, "keep", page)], ["id", "_hi_x", "body"])
+    out = haproxy_stats(df).collect()
+    assert out and all(r["_hi_x"] == "keep" for r in out)
+    assert not any(c.startswith("_hi_") and c != "_hi_x" for c in out[0].asDict())

@@ -69,3 +69,15 @@ def test_attr_routing_composite_key(spark):
     out = route_by_attr_key(df, ring, ["svc", "env"]).collect()
     assert out[0]["endpoint"] == endpoint_for_py(ring, b"svcAprod")
     assert out[1]["endpoint"] == endpoint_for_py(ring, b"svcB")
+
+
+def test_null_identifier_routes_alike_on_both_branches(spark):
+    # <=90 endpoints take the lookup-string branch, >90 the ring-filter
+    # branch; a NULL identifier must land where the empty one does on
+    # each, which is ring[0] (crc32 of nothing is 0)
+    df = spark.createDataFrame([(None,), ("",)], "key string")
+    for n in (5, 91):
+        ring = build_hash_ring([f"backend-{i}" for i in range(n)], weight=1)
+        got = [r["ep"] for r in df.select(
+            ring_endpoint_for(F.col("key").cast("binary"), ring).alias("ep")).collect()]
+        assert got == [ring[0][1], endpoint_for_py(ring, b"")], n

@@ -8,12 +8,17 @@ MOVE semantics (connector/routingconnector/logs.go:62-107).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.model import WARN
 from opentelemetry_collector_contrib_spark.plans.pipeline import (
     ROUTE_NAMES,
+    aggregate_counts,
     run_pipeline,
     write_pipeline,
 )
@@ -77,14 +82,14 @@ def test_severity_parse(routed):
 
 def test_per_turn_text_equality_under_stable_ordering(spark, routed, tmp_path):
     """North-star per-row invariant: after the full parse→enrich→route
-    →salted partitioned write, re-establishing order with a window over
+    →rebalanced partitioned write, re-establishing order with a window over
     (conv_id, turn_idx) reproduces the reference stream exactly —
     every turn's text is byte-identical and the per-conversation
     ordering is dense and gapless."""
     from pyspark.sql import Window as W
 
     root = str(tmp_path / "ordered")
-    write_pipeline(routed, root, salt_buckets=4, write_metrics=False)
+    write_pipeline(routed, root, write_metrics=False)
     back = spark.read.parquet(f"{root}/sink=routed")
 
     reference = generate_transcripts(spark, n_convs=100, partitions=4).select(
@@ -108,7 +113,7 @@ def test_per_turn_text_equality_under_stable_ordering(spark, routed, tmp_path):
 def test_write_and_lineage_resume(spark, routed, tmp_path):
     root = str(tmp_path / "out")
     lineage = LineageLog(root, run_id="t1")
-    counts = write_pipeline(routed, root, salt_buckets=4, lineage=lineage)
+    counts = write_pipeline(routed, root, lineage=lineage)
     assert sum(counts.values()) == routed.routed.count()
     # files written per route partition
     back = spark.read.parquet(f"{root}/sink=routed")
@@ -118,3 +123,57 @@ def test_write_and_lineage_resume(spark, routed, tmp_path):
     assert lineage.completed("write_sinks") == set(counts)
     pending = lineage.filter_pending(routed.routed, "write_sinks", "route")
     assert pending.count() == 0
+
+
+def test_enrich_dims_need_no_python_worker(spark):
+    """The dims are JVM local relations: the executed plan scans no
+    Python-built RDD (``Scan ExistingRDD``), so a job that broadcasts
+    them starts no Python worker."""
+    routed = run_pipeline(spark, generate_transcripts(spark, n_convs=20, partitions=2)).routed
+    routed.write.format("noop").mode("overwrite").save()
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan and "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+
+def _sink_files(root):
+    files = glob.glob(os.path.join(root, "sink=routed", "route=*", "ts_day=*", "*.parquet"))
+    return files, {os.path.dirname(f) for f in files}
+
+
+def test_one_file_per_route_day(spark, routed, tmp_path):
+    """The pre-sink shuffle keeps each (route, ts_day) in one task, so
+    a small input writes one file per output partition — even with
+    AQE's coalescing of small shuffle partitions switched off."""
+    root = str(tmp_path / "files")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        write_pipeline(routed, root, write_metrics=False)
+    finally:
+        spark.conf.set(key, prev)
+    files, partitions = _sink_files(root)
+    n_partitions = routed.routed.select("route", "ts_day").distinct().count()
+    assert len(partitions) == n_partitions
+    assert len(files) == n_partitions
+
+
+def test_metrics_and_day_lineage_match_the_sink(spark, routed, tmp_path):
+    """The metric tables and per-day lineage records come from one
+    grouped count; they must equal ``aggregate_counts`` and a
+    groupBy(ts_day) recomputed over the written sink."""
+    root = str(tmp_path / "metrics")
+    lineage = LineageLog(root, run_id="m1")
+    write_pipeline(routed, root, lineage=lineage)
+    back = spark.read.parquet(f"{root}/sink=routed")
+    for name, expect in aggregate_counts(back).items():
+        got = spark.read.parquet(f"{root}/sink=metric_{name}")
+        assert got.columns == expect.columns
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect())), name
+    days = {str(r[0]): r[1] for r in back.groupBy("ts_day").count().collect()}
+    with open(lineage.path) as f:
+        records = [json.loads(line) for line in f]
+    logged = {r["partition"]: r["rows"] for r in records if r["stage"] == "sink_day"}
+    assert logged == days
+    assert lineage.completed("sink_day") == set(days)

@@ -134,7 +134,7 @@ Why this matters at 10^12 turns: at 1000 executors, executor loss is
 not an edge case — it is steady-state. The pipeline's determinism
 (synthesized or snapshot input + pure-expression plan) plus Spark's
 task re-execution makes the output exactly reproducible under loss;
-the salted partitioned sink commits per partition, so no partial
+the partitioned sink commits per partition, so no partial
 files survive a failed task.
 """)
     return 0 if ok else 1

@@ -151,7 +151,7 @@ skew), fresh JVM per run, hard cpuset per "cluster size" (taskset
 box's CPU speed fluctuates ±40% between runs), wall clock measured
 inside the job after session startup. Two variants per size:
 
-- **full job**: parse→enrich→route + salted repartition + partitioned
+- **full job**: parse→enrich→route + rebalance + partitioned
   parquet sinks + observed counts + metric tables (disk-bound tail);
 - **compute path** (`--sink noop`): the same pipeline executed fully
   with the sink I/O removed — the engine-scaling signal a multi-node

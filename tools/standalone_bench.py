@@ -76,8 +76,7 @@ for _ in range(trials):
         observed = out.routed.observe(
             obs, *[F.count(F.when(F.col("route") == r, F.lit(1))).alias(r) for r in ROUTE_NAMES])
         d = tempfile.mkdtemp(prefix=f"sb{{n_exec}}-", dir=sink_base)
-        salt = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(16))
-        (observed.repartition(F.col("route"), F.col("ts_day"), salt)
+        (observed.hint("rebalance", "route", "ts_day")
          .write.mode("overwrite").partitionBy("route", "ts_day").parquet(d + "/routed"))
         total = sum(obs.get.values())
     el = time.time() - t0
