@@ -3,7 +3,7 @@
 Usage:
     spark-submit --py-files <zip> jobs/pipeline.py \
         --convs 10000 --out /tmp/pipeline-out [--input <parquet-dir>] \
-        [--poll-days N] [--resume]
+        [--poll-days N] [--resume] [--sink noop]
 
 Reads the transcript table (a parquet path with the input_hint schema,
 or the deterministic synthetic generator when --input is omitted),
@@ -22,12 +22,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_contrib_spark.plans.pipeline import (
-    ROUTE_NAMES,
     PipelineOutput,
+    observe_routes,
     run_pipeline,
     write_pipeline,
 )
@@ -73,15 +72,7 @@ def main(argv: list[str] | None = None) -> int:
     lineage = LineageLog(args.out, run_id=args.run_id)
     out = run_pipeline(spark, transcripts)
     t_plan = time.time()
-    if args.sink == "noop":
-        obs = Observation("sink_counts")
-        observed = out.routed.observe(
-            obs,
-            *[F.count(F.when(F.col("route") == r, F.lit(1))).alias(r) for r in ROUTE_NAMES],
-        )
-        observed.write.format("noop").mode("overwrite").save()
-        counts = {r: n for r, n in obs.get.items() if n > 0}
-    elif args.poll_days > 0:
+    if args.poll_days > 0:
         # One tiny distinct-agg to enumerate days (bounded by the
         # calendar, not the data); on a ts-day-partitioned Iceberg
         # input each cycle's day filter partition-prunes the scan.
@@ -89,19 +80,24 @@ def main(argv: list[str] | None = None) -> int:
             str(r[0])
             for r in out.routed.select("ts_day").distinct().orderBy("ts_day").collect()
         ]
-        counts = {}
-        for i in range(0, len(days), args.poll_days):
-            chunk = days[i : i + args.poll_days]
-            cycle = PipelineOutput(
-                routed=out.routed.filter(F.col("ts_day").cast("string").isin(chunk)),
-            )
-            # each cycle's read-back refreshes the metric tables along
-            # with its lineage records: they always match the sink
-            c = write_pipeline(cycle, args.out, lineage=lineage, resume=args.resume)
-            for k, v in c.items():
-                counts[k] = counts.get(k, 0) + v
+        cycles = [
+            out.routed.filter(F.col("ts_day").cast("string").isin(days[i : i + args.poll_days]))
+            for i in range(0, len(days), args.poll_days)
+        ]
     else:
-        counts = write_pipeline(out, args.out, lineage=lineage, resume=args.resume)
+        cycles = [out.routed]  # single shot: one cycle over every day
+    counts: dict[str, int] = {}
+    for routed in cycles:
+        if args.sink == "noop":
+            observed, seen = observe_routes(routed)
+            observed.write.format("noop").mode("overwrite").save()
+            c = seen.per_route()
+        else:
+            # each cycle commits its days to the lineage manifest, and
+            # its read-back refreshes the metric tables with them
+            c = write_pipeline(PipelineOutput(routed), args.out, lineage=lineage, resume=args.resume)
+        for k, v in c.items():
+            counts[k] = counts.get(k, 0) + v
     t_write = time.time()
 
     elapsed = time.time() - t0

@@ -1034,31 +1034,42 @@ def _edit(name: str, args: list, kwargs: dict, where: Column | None, df: DataFra
     def stmt(target: str, edit: Column) -> DataFrame:
         return TR.apply_statement(df, target, edit, where=where)
 
-    def edit_value_path(tgt: Path, edited: Column) -> DataFrame:
-        """Write `edited` back to a settable path (column, map key, or
-        nested JSON-cell segments)."""
-        tgt.require_settable(name)
-        nested = tgt.nested_write()
+    def write_back(path: Path, value: Column) -> DataFrame:
+        """Write ``value`` back to a settable path (column, map key, or
+        nested JSON-cell segments) with func_set.go's gates, evaluated
+        per row: a NULL value (missing attribute, errored
+        sub-expression) performs NO edit — the key is not created, the
+        old value kept — and so does a dynamic key resolving to nil (a
+        statement error under error_mode=ignore, grammar.go Key; a NULL
+        map key would otherwise kill the job with NULL_MAP_KEY)."""
+        path.require_settable(name)
+        nested = path.nested_write()
         if nested is not None:
             from .jsonpath import json_set
 
             first_key, segs = nested
-            cell = F.element_at(F.col(tgt.column), first_key)
-            new_cell = json_set(cell, segs, edited)
-            return stmt(
-                tgt.column, TR.map_set(F.col(tgt.column), first_key, new_cell)
+            cell = F.element_at(F.col(path.column), first_key)
+            new_cell = json_set(cell, segs, value)
+            edited = F.when(
+                value.isNull(), F.col(path.column)
+            ).otherwise(
+                TR.map_set(F.col(path.column), first_key, new_cell)
             )
-        if tgt.map_key is not None:
-            new_map = TR.map_set(F.col(tgt.column), tgt.map_key, edited)
-            if isinstance(tgt.map_key, Column):
-                # nil dynamic key -> statement error -> no edit
-                # (same ignore-mode gate as set(); a NULL map key
-                # would otherwise kill the job with NULL_MAP_KEY)
-                new_map = F.when(
-                    tgt.map_key.isNull(), F.col(tgt.column)
-                ).otherwise(new_map)
-            return stmt(tgt.column, new_map)
-        return stmt(tgt.column, _write_scalar(tgt.column, edited))
+            return stmt(path.column, edited)
+        if path.map_key is not None:
+            no_edit = value.isNull()
+            if isinstance(path.map_key, Column):
+                no_edit = no_edit | path.map_key.isNull()
+            edited = F.when(
+                no_edit, F.col(path.column)
+            ).otherwise(TR.map_set(F.col(path.column), path.map_key, value))
+            return stmt(path.column, edited)
+        if path.column in _ROOT_TYPES:
+            # typed-column write: uncastable value = statement error =
+            # keep original (and both CASE branches share one type, so
+            # ANSI coercion can never throw mid-job)
+            return stmt(path.column, _write_scalar(path.column, value))
+        return stmt(path.column, F.when(value.isNull(), path.get()).otherwise(value))
 
     if name == "set":
         path = args[0]
@@ -1087,39 +1098,7 @@ def _edit(name: str, args: list, kwargs: dict, where: Column | None, df: DataFra
             )
         else:
             value = _as_col(args[1])
-        path.require_settable(name)
-        nested = path.nested_write()
-        if nested is not None:
-            from .jsonpath import json_set
-
-            first_key, segs = nested
-            cell = F.element_at(F.col(path.column), first_key)
-            new_cell = json_set(cell, segs, value)
-            edited = F.when(
-                value.isNull(), F.col(path.column)
-            ).otherwise(
-                TR.map_set(F.col(path.column), first_key, new_cell)
-            )
-            return stmt(path.column, edited)
-        # a NULL-valued getter (missing attribute, errored
-        # sub-expression) performs NO edit — func_set.go nil gate,
-        # evaluated per row: the key is not created, the old value kept
-        if path.map_key is not None:
-            no_edit = value.isNull()
-            if isinstance(path.map_key, Column):
-                # dynamic index resolving to nil -> statement error ->
-                # no edit under error_mode=ignore (grammar.go Key)
-                no_edit = no_edit | path.map_key.isNull()
-            edited = F.when(
-                no_edit, F.col(path.column)
-            ).otherwise(TR.map_set(F.col(path.column), path.map_key, value))
-            return stmt(path.column, edited)
-        if path.column in _ROOT_TYPES:
-            # typed-column write: uncastable value = statement error =
-            # keep original (and both CASE branches share one type, so
-            # ANSI coercion can never throw mid-job)
-            return stmt(path.column, _write_scalar(path.column, value))
-        return stmt(path.column, F.when(value.isNull(), path.get()).otherwise(value))
+        return write_back(path, value)
 
     if name == "replace_pattern":
         tgt = args[0]
@@ -1150,11 +1129,11 @@ def _edit(name: str, args: list, kwargs: dict, where: Column | None, df: DataFra
             edited = F.aggregate(
                 full, cur, lambda acc, fm: F.replace(acc, fm, conv(_expand(fm)))
             )
-            return edit_value_path(tgt, edited)
+            return write_back(tgt, edited)
         repl = conv(_as_col(template)) if conv is not None else _as_col(template)
         # string-view edit: regexp_replace needs strings, and a typed
-        # target is restored (or kept) by edit_value_path's write gate
-        return edit_value_path(
+        # target is restored (or kept) by write_back's write gate
+        return write_back(
             tgt,
             F.regexp_replace(cur.cast("string"), F.lit(pat), repl.cast("string")),
         )
@@ -1171,7 +1150,7 @@ def _edit(name: str, args: list, kwargs: dict, where: Column | None, df: DataFra
         edited = F.when(
             cur.rlike(rx), _as_col(args[2]).cast("string")
         ).otherwise(cur)
-        return edit_value_path(tgt, edited)
+        return write_back(tgt, edited)
 
     if name == "append":
         # func_append.go: append value/values to the target; a missing
@@ -1200,9 +1179,8 @@ def _edit(name: str, args: list, kwargs: dict, where: Column | None, df: DataFra
             cell = F.element_at(F.col(path.column), first_key)
             for v in vals:
                 cell = json_set(cell, segs, _as_col(v), append=True)
-            return stmt(
-                path.column, TR.map_set(F.col(path.column), first_key, cell)
-            )
+            # the appended cell replaces the first key's cell
+            return write_back(Path(path.column, path.accessors[:1]), cell)
         cur = path.get().cast("string")
         cur_arr = (
             F.when(cur.isNull(), F.array().cast("array<string>"))
@@ -1212,17 +1190,7 @@ def _edit(name: str, args: list, kwargs: dict, where: Column | None, df: DataFra
             )
             .otherwise(F.array(cur))
         )
-        encoded = F.to_json(F.concat(cur_arr, new_items))
-        if path.map_key is not None:
-            new_map = TR.map_set(F.col(path.column), path.map_key, encoded)
-            if isinstance(path.map_key, Column):
-                # nil dynamic key -> statement error -> no edit
-                # (NULL_MAP_KEY guard, same as set/replace_*)
-                new_map = F.when(
-                    path.map_key.isNull(), F.col(path.column)
-                ).otherwise(new_map)
-            return stmt(path.column, new_map)
-        return stmt(path.column, _write_scalar(path.column, encoded))
+        return write_back(path, F.to_json(F.concat(cur_arr, new_items)))
 
     # remaining editors operate on a map path
     path = args[0]

@@ -21,7 +21,8 @@ falls through, matching config.go:26-34.
 Skew: hot conversations make ``repartition(conv_id)`` skewed at
 10^12-turn scale. ``salted_repartition`` spreads each key over
 ``salt`` subpartitions — (key, salt) hash layout — which AQE cannot do
-for writes on its own.
+for writes on its own. No job calls it yet: the flagship sink write
+takes an AQE rebalance, and the conv_id-keyed stages run unsalted.
 """
 
 from __future__ import annotations
@@ -102,10 +103,3 @@ def salted_repartition(
     else:
         out = out.repartition(F.col(key), F.col(salt_col))
     return out.drop(salt_col)
-
-
-def round_robin_column(df_cols: list[str], n: int) -> Column:
-    """roundrobinconnector analog: deterministic row spreading by
-    pmod(xxhash64(stable cols), n) — content-derived, not monotonic id,
-    so it is stable across retries/partitionings."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in df_cols]), F.lit(n))

@@ -13,19 +13,20 @@ Stage map (reference -> here):
   filelog+regex/json parse  -> parse_turns()        (grok/regex/from_json columns)
   severity_parser           -> parse_turns()        (severity map lookup)
   k8sattributes/resource    -> enrich_turns()       (broadcast insert-if-absent joins)
-  routingconnector          -> route_turns()        (ordered when() chain)
-  countconnector            -> aggregate_counts()   (lazy, over any routed frame)
+  routingconnector          -> route_turns()        (DEFAULT_ROUTES as an ordered when() chain)
+  countconnector            -> observe_routes()     (per-route counts observed by the write job)
+                               aggregate_counts()   (lazy, over any routed frame)
                                SinkCounts           (one read-back of the written sink)
-  fileexporter group_by     -> write_pipeline()     (rebalance + partitionBy(route, ts_day))
+  fileexporter group_by     -> write_pipeline()     (rebalance + partitionBy(*SINK_KEYS))
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..model import INFO, WARN, severity_number
@@ -51,8 +52,6 @@ LOGLINE_PATTERN = (
 )
 
 TOOL_PAYLOAD_SCHEMA = "tool string, args struct<q string, n int>, status string"
-
-ROUTE_NAMES = ["alerts", "tools", "user", "catchall"]
 
 
 def parse_turns(df: DataFrame) -> DataFrame:
@@ -109,16 +108,24 @@ def enrich_turns(df: DataFrame, spark: SparkSession) -> DataFrame:
     return out
 
 
+# routingconnector table: first match wins, unmatched rows take
+# DEFAULT_ROUTE (the reference's default_pipelines)
 DEFAULT_ROUTES = [
     ("alerts", lambda: F.col("severity_number") >= WARN),
     ("tools", lambda: F.col("tool").isNotNull()),
     ("user", lambda: F.col("role") == "user"),
 ]
+DEFAULT_ROUTE = "catchall"
+ROUTE_NAMES = [name for name, _ in DEFAULT_ROUTES] + [DEFAULT_ROUTE]
+
+# fileexporter group_by: the routed sink's partition columns, which are
+# also its shuffle keys and the keys of its read-back
+SINK_KEYS = ["route", "ts_day"]
 
 
 def route_turns(df: DataFrame) -> DataFrame:
     routes = [Route(name, cond()) for name, cond in DEFAULT_ROUTES]
-    return apply_routes(df, routes, default="catchall")
+    return apply_routes(df, routes, default=DEFAULT_ROUTE)
 
 
 # countconnector metrics (FIXTURES.md F6): table -> (grouped attrs,
@@ -155,7 +162,7 @@ class SinkCounts:
     @classmethod
     def read(cls, spark: SparkSession, root: str) -> SinkCounts:
         back = spark.read.parquet(sink_path(root, "routed"))
-        keys = dict.fromkeys(["route", "ts_day"] + [k for ks, _, _ in COUNT_METRICS.values() for k in ks])
+        keys = dict.fromkeys(SINK_KEYS + [k for ks, _, _ in COUNT_METRICS.values() for k in ks])
         conds = [c().alias(_cond_col(name)) for name, (_, c, _) in COUNT_METRICS.items() if c]
         return cls(back.groupBy(*keys, *conds).agg(F.count(F.lit(1)).alias("n")).toArrow())
 
@@ -176,17 +183,51 @@ class SinkCounts:
         }
 
 
+# observation key of the day set; no route can take it
+_DAYS = "__ts_days"
+
+
+@dataclass
+class RouteCounts:
+    """What ``observe_routes`` saw, readable once the job that
+    consumed its frame has finished."""
+
+    obs: Observation
+
+    def per_route(self) -> dict[str, int]:
+        """Rows per route that received any, in ``ROUTE_NAMES`` order."""
+        got = self.obs.get
+        return {r: got[r] for r in ROUTE_NAMES if got[r] > 0}
+
+    def days(self) -> set[str]:
+        """The ts_days the job carried, keyed as ``SinkCounts.per_day`` keys them."""
+        return {str(d) for d in self.obs.get[_DAYS]}
+
+
+def observe_routes(routed: DataFrame) -> tuple[DataFrame, RouteCounts]:
+    """Attach the per-route row counts and the set of ts_days to
+    ``routed`` with ``DataFrame.observe``: they are collected DURING
+    whichever job consumes the returned frame (countconnector's counter
+    map ≙ accumulator-style observed aggregates), zero extra jobs. The
+    day set is bounded by the calendar, not the data."""
+    obs = Observation("sink_counts")
+    observed = routed.observe(
+        obs,
+        *[F.count(F.when(F.col("route") == r, F.lit(1))).alias(r) for r in ROUTE_NAMES],
+        F.collect_set("ts_day").alias(_DAYS),
+    )
+    return observed, RouteCounts(obs)
+
+
 @dataclass
 class PipelineOutput:
     routed: DataFrame
-    aggregates: dict[str, DataFrame] = field(default_factory=dict)
 
 
 def run_pipeline(spark: SparkSession, transcripts: DataFrame) -> PipelineOutput:
     parsed = parse_turns(transcripts)
     enriched = enrich_turns(parsed, spark)
-    routed = route_turns(enriched).withColumn("ts_day", F.to_date("ts"))
-    return PipelineOutput(routed=routed, aggregates=aggregate_counts(routed))
+    return PipelineOutput(routed=route_turns(enriched).withColumn("ts_day", F.to_date("ts")))
 
 
 def write_pipeline(
@@ -197,25 +238,22 @@ def write_pipeline(
     resume: bool = False,
 ) -> dict[str, int]:
     """Fan out to per-sink tables: ONE partitioned write job
-    (partitionBy(route, ts_day)).
+    (partitionBy(*SINK_KEYS)).
 
-    Shuffle layout: a ``rebalance`` on (route, ts_day). Each output
+    Shuffle layout: a ``rebalance`` on ``SINK_KEYS``. Each output
     partition's rows land in one task, so the sink gets one file per
     (route, ts_day); AQE then coalesces small shuffle partitions and
     splits a skewed one (a hot day) by size, so a hot partition is
     spread over several tasks and files only when it is big.
 
-    Per-sink counts are collected with ``DataFrame.observe`` DURING the
-    write job (countconnector's counter map ≙ accumulator-style
-    observed aggregates) — zero extra jobs and still an exact
-    sent==received check. The metric tables (``write_metrics``) and the
-    per-day lineage records then come from one grouped count over the
-    written sink (``SinkCounts``). A call that writes no rows leaves
-    the sink, and so both of them, as they were, and skips the
-    read-back. Returns per-sink row counts.
+    Per-sink counts and the days written are observed during the write
+    job (``observe_routes``); callers compare the counts with what they
+    sent. The metric tables (``write_metrics``) and the per-day lineage
+    records then come from one grouped count over the written sink
+    (``SinkCounts``); a day gets a record only when this call wrote it.
+    A call that writes no rows leaves the sink, and so both of them, as
+    they were, and skips the read-back. Returns per-sink row counts.
     """
-    from pyspark.sql import Observation
-
     spark = out.routed.sparkSession
     routed = out.routed
     if resume and lineage is not None:
@@ -224,16 +262,9 @@ def write_pipeline(
         # overwrite only touches days this run writes)
         routed = routed.withColumn("__day", F.col("ts_day").cast("string"))
         routed = lineage.filter_pending(routed, "sink_day", "__day").drop("__day")
-    obs = Observation("sink_counts")
-    observed = routed.hint("rebalance", "route", "ts_day").observe(
-        obs,
-        *[
-            F.count(F.when(F.col("route") == r, F.lit(1))).alias(r)
-            for r in ROUTE_NAMES
-        ],
-    )
-    write_sink(observed, sink_path(root, "routed"), partition_by=["route", "ts_day"])
-    counts = {r: n for r, n in obs.get.items() if n > 0}
+    observed, seen = observe_routes(routed.hint("rebalance", *SINK_KEYS))
+    write_sink(observed, sink_path(root, "routed"), partition_by=SINK_KEYS)
+    counts = seen.per_route()
     if lineage is not None:
         lineage.record_all("write_sinks", counts)
     if not counts or not (write_metrics or lineage is not None):
@@ -248,5 +279,6 @@ def write_pipeline(
     if lineage is not None:
         # per-day completion records (the resume unit), recorded after
         # the metric tables so a committed day always has current ones
-        lineage.record_all("sink_day", sink.per_day())
+        written = seen.days()
+        lineage.record_all("sink_day", {d: n for d, n in sink.per_day().items() if d in written})
     return counts

@@ -4,9 +4,10 @@ Scale posture: these configs are chosen so the same code runs on a
 1000-executor cluster against ~100 TB. On the sandbox we run
 ``local[N]`` (single JVM); the knobs that matter at both scales:
 
-- AQE on (runtime coalescing, skew-join splitting) — the reference has
-  per-file worker parallelism and never sees shuffle skew; we do, so we
-  lean on AQE plus explicit salting (see operators/route.py).
+- AQE on (runtime coalescing, skew-join splitting, the rebalance
+  before the sink write) — the reference has per-file worker
+  parallelism and never sees shuffle skew; we do. The conv_id-keyed
+  window/aggregate stages run unsalted (ARCHITECTURE.md §4).
 - shuffle partitions ~ 2-4x total cores (AQE coalesces down).
 - Arrow enabled: every Python-side op is a vectorized pandas UDF.
 - UTC session timezone so results compare bit-exactly vs the DuckDB

@@ -16,8 +16,9 @@ Python row loop — generation runs at JVM speed and scales linearly
 with cores.
 
 Skew is generated on purpose: ``hot_frac`` of conversations get
-``hot_mult``x the turns (FIXTURES.md F1) so the salted-repartition path
-is actually exercised.
+``hot_mult``x the turns (FIXTURES.md F1) so the skew paths — the AQE
+rebalance before the sink and the unsalted conv_id-keyed windows and
+aggregates — are actually exercised.
 
 Text mix (FIXTURES.md F1):
   (a) plain prose               — word salad from a fixed vocabulary

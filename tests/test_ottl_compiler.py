@@ -179,3 +179,19 @@ def test_corpus_more_statements(record):
     for stmt, check in cases:
         out = rows(compile_statement(stmt)(record))
         assert check(out[0]), f"failed: {stmt}\n got {out[0]}"
+
+
+@pytest.mark.parametrize(
+    "stmt",
+    [
+        'set(attributes["missing"], attributes["nope"])',
+        'replace_pattern(attributes["missing"], "l", "L")',
+        'replace_match(attributes["missing"], "*", "Z")',
+    ],
+)
+def test_nil_target_is_not_written_back(spark, stmt):
+    # func_replace_pattern.go / func_replace_match.go return without
+    # calling Set when the target is nil, exactly like func_set.go on
+    # a nil value: the key is not created
+    df = spark.createDataFrame([({"a": "hello"},)], "attributes map<string,string>")
+    assert rows(compile_statement(stmt)(df)) == [{"attributes": {"a": "hello"}}]

@@ -37,7 +37,10 @@ def routed(spark):
 
 def test_every_row_routed_exactly_once(spark, routed):
     n_in = generate_transcripts(spark, n_convs=100, partitions=4).count()
-    per_sink = {r["route"]: r["turn_count"] for r in routed.aggregates["turns_per_sink"].collect()}
+    per_sink = {
+        r["route"]: r["turn_count"]
+        for r in aggregate_counts(routed.routed)["turns_per_sink"].collect()
+    }
     assert set(per_sink) <= set(ROUTE_NAMES)
     assert sum(per_sink.values()) == n_in  # sent == received
     assert routed.routed.count() == n_in

@@ -31,6 +31,13 @@ def _day_counts(spark, root):
     }
 
 
+def _sink_day_records(root):
+    with open(f"{root}/_lineage.jsonl") as f:
+        return sorted(
+            rec["partition"] for rec in map(json.loads, f) if rec["stage"] == "sink_day"
+        )
+
+
 def test_poll_cycles_commit_per_cycle_and_match_single_shot(spark, tmp_path, capsys):
     inp = str(tmp_path / "input")
     generate_transcripts(spark, n_convs=80).write.parquet(inp)
@@ -49,6 +56,25 @@ def test_poll_cycles_commit_per_cycle_and_match_single_shot(spark, tmp_path, cap
     # the manifest holds every day (30-day synthetic spread -> 4 cycles)
     days = LineageLog(polled).completed("sink_day")
     assert len(days) == len({d for (_, d) in _day_counts(spark, single)})
+    # ... once: a cycle records only the days it wrote, not every day
+    # its read-back of the sink sees
+    assert _sink_day_records(polled) == sorted(days)
+
+
+def test_noop_sink_reports_the_parquet_per_sink(spark, tmp_path, capsys):
+    inp = str(tmp_path / "input")
+    generate_transcripts(spark, n_convs=80).write.parquet(inp)
+
+    assert pipeline_job.main(["--input", inp, "--out", str(tmp_path / "parquet")]) == 0
+    ref = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    noop = tmp_path / "noop"
+    assert pipeline_job.main(["--input", inp, "--out", str(noop), "--sink", "noop"]) == 0
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    assert got["per_sink"] == ref["per_sink"]
+    assert sum(got["per_sink"].values()) == got["turns"] > 0
+    assert not (noop / "sink=routed").exists()  # nothing written
 
 
 def test_poll_cycle_resume_reprocesses_only_pending_days(spark, tmp_path, capsys):
@@ -83,10 +109,8 @@ def test_poll_cycle_resume_reprocesses_only_pending_days(spark, tmp_path, capsys
         n for (_, d), n in before.items() if d in committed
     )
     assert skipped > 0
-    # committed days are never rewritten; the post-write read-back also
-    # SELF-HEALS the manifest (any day visible in the sink was written
-    # by a committed job — commit algorithm v1 exposes nothing partial),
-    # so later cycles may skip forgotten-but-present days too.
+    # committed days are never rewritten; forgotten days are rewritten
+    # (the dynamic overwrite replaces them in place) and recorded again
     assert 0 < resumed["turns"] <= full["turns"] - skipped
     assert _day_counts(spark, out) == before  # sink unchanged
     # after resume the manifest is whole again: every day completed

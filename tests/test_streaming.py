@@ -5,6 +5,7 @@ availableNow triggers (deterministic, batch-testable)."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,7 +39,7 @@ def events_dir(spark, tmp_path):
     return d
 
 
-def _run(stream_df, tmp_path, name, mode="append"):
+def _run(stream_df, tmp_path, name, mode="append", min_rows=0):
     q = (
         stream_df.writeStream.format("memory")
         .queryName(name)
@@ -47,7 +48,26 @@ def _run(stream_df, tmp_path, name, mode="append"):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # availableNow ends the query once its input is consumed, except
+    # over processing-time timeout state (stream_recombine): Spark then
+    # asks for a no-data batch on every trigger and the query never
+    # ends by itself. A finished batch with no input rows means every
+    # input row is already in the sink; stop there (or, with
+    # ``min_rows``, once the sink also holds that many rows, so a test
+    # can wait for timeout flushes), so no query keeps running into
+    # later tests.
+    spark = stream_df.sparkSession
+    deadline = time.time() + 120
+    while q.isActive and time.time() < deadline:
+        if (
+            q.lastProgress
+            and q.lastProgress["numInputRows"] == 0
+            and (not min_rows or spark.table(name).count() >= min_rows)
+        ):
+            break
+        time.sleep(0.2)
+    q.stop()
+    q.awaitTermination()  # re-raises a query failure
     return q
 
 
@@ -135,17 +155,17 @@ def test_stream_recombine_max_batch_size_bounds_state(spark, tmp_path):
     stream = spark.readStream.schema(
         "conv_id string, turn_idx int, text string, is_first boolean"
     ).parquet(d)
-    out = stream_recombine(stream, max_batch_size=3)
-    _run(out, tmp_path, "rc_cap")
+    # a 1-s timeout so the run also covers the timeout flush
+    out = stream_recombine(stream, timeout_ms=1000, max_batch_size=3)
+    _run(out, tmp_path, "rc_cap", min_rows=3)
     got = spark.sql("select * from rc_cap").collect()
     flushed = sorted(
         (r["session_start"], r["n_turns"], r["closed"]) for r in got
     )
     # two cap flushes of 3; the last turn stays buffered until the
-    # processing-time timeout, which may fire within the run and emit
-    # it as a third (also closed=false) flush
-    assert flushed[:2] == [(0, 3, False), (3, 3, False)]
-    assert flushed[2:] in ([], [(6, 1, False)])
+    # processing-time timeout emits it as a third (also closed=false)
+    # flush and drops the key's state, so nothing is flushed twice
+    assert flushed == [(0, 3, False), (3, 3, False), (6, 1, False)]
 
 
 def test_stream_alert_for_persistence(spark, tmp_path):

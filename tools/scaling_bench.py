@@ -18,6 +18,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -26,41 +27,77 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def materialize_input(input_dir: str, convs: int, cores: int, files: int) -> None:
+    """Write the synthetic transcript input once, as ``files`` parquet
+    files (the generator itself is not benchmarked)."""
+    gen = subprocess.run(
+        [
+            sys.executable, "-c",
+            f"""
+import sys; sys.path.insert(0, {REPO!r})
+from opentelemetry_collector_contrib_spark.session import get_spark
+from opentelemetry_collector_contrib_spark.sources.transcripts import generate_transcripts
+spark = get_spark(master="local[{cores}]")
+df = generate_transcripts(spark, n_convs={convs})
+df.repartition({files}).write.mode("overwrite").parquet({input_dir!r})
+print("rows:", spark.read.parquet({input_dir!r}).count())
+""",
+        ],
+        capture_output=True, text=True, timeout=3600,
+    )
+    print((gen.stdout.strip() or gen.stderr[-500:]).splitlines()[-1])
+
+
 def run_job(
     input_dir: str,
     master: str,
     out: str,
     cores: int | None = None,
     sink: str = "parquet",
+    trials: int = 3,
+    conf: dict[str, str] | None = None,
 ) -> dict:
-    """Run the pipeline job. ``cores`` pins a hard cpuset (taskset) so
-    a 'cluster of N cores' cannot borrow extra CPU for GC/IO threads —
-    the faithful N-vs-4N emulation (an N-executor cluster has N*c cores
-    total, not N*c task threads on shared silicon). GC threads scale
-    with the cpuset for the same reason."""
+    """Run the pipeline job ``trials`` times, each in a fresh JVM and a
+    fresh output directory under ``out`` (removed after the run), and
+    return the fastest run's JSON line. ``cores`` pins a hard cpuset
+    (taskset) so a 'cluster of N cores' cannot borrow extra CPU for
+    GC/IO threads — the faithful N-vs-4N emulation (an N-executor
+    cluster has N*c cores total, not N*c task threads on shared
+    silicon). GC threads scale with the cpuset for the same reason.
+    ``conf`` adds Spark settings (e.g. executor sizes for a cluster
+    master)."""
     env = dict(os.environ)
     # parse-heavy pipeline on a small fixture: fine scan splits keep
     # every core busy through the map stage tail (at 100 TB the default
     # 128 MB split gives the same tasks-per-core ratio)
-    env["SPARK_EXTRA_CONF"] = (
-        "spark.sql.files.maxPartitionBytes=16777216;"
-        "spark.sql.files.openCostInBytes=1048576"
-    )
+    settings = {
+        "spark.sql.files.maxPartitionBytes": "16777216",
+        "spark.sql.files.openCostInBytes": "1048576",
+        **(conf or {}),
+    }
+    env["SPARK_EXTRA_CONF"] = ";".join(f"{k}={v}" for k, v in settings.items())
     if cores is not None:
         env["SPARK_DRIVER_JAVA_OPTS"] = f"-XX:ParallelGCThreads={min(cores, 8)}"
     cmd = [
         sys.executable,
         os.path.join(REPO, "jobs", "pipeline.py"),
         "--input", input_dir,
-        "--out", out,
         "--master", master,
         "--sink", sink,
     ]
     if cores is not None:
         cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
+    os.makedirs(out, exist_ok=True)
     best: dict | None = None
-    for _ in range(3):  # this box's CPU speed swings ±40%; take best-of-3
-        res = subprocess.run(cmd, capture_output=True, text=True, env=env, timeout=1800)
+    for _ in range(trials):  # this box's CPU speed swings ±40%; take the best
+        trial_out = tempfile.mkdtemp(prefix="trial-", dir=out)
+        try:
+            res = subprocess.run(
+                cmd + ["--out", trial_out],
+                capture_output=True, text=True, env=env, timeout=1800,
+            )
+        finally:
+            shutil.rmtree(trial_out, ignore_errors=True)
         got = None
         for line in res.stdout.splitlines():
             if line.startswith('{"turns"'):
@@ -85,25 +122,9 @@ def main() -> int:
     work = tempfile.mkdtemp(prefix="scaling-")
     input_dir = args.input or os.path.join(work, "input")
 
-    # materialize the input once (generator itself is not benchmarked)
-    gen = None if args.input else subprocess.run(
-        [
-            sys.executable, "-c",
-            f"""
-import sys; sys.path.insert(0, {REPO!r})
-from opentelemetry_collector_contrib_spark.session import get_spark
-from opentelemetry_collector_contrib_spark.sources.transcripts import generate_transcripts
-spark = get_spark(master="local[{n4}]")
-df = generate_transcripts(spark, n_convs={args.convs})
-# 256 files -> fine-grained map tasks at every parallelism level
-df.repartition(256).write.mode("overwrite").parquet({input_dir!r})
-print("rows:", spark.read.parquet({input_dir!r}).count())
-""",
-        ],
-        capture_output=True, text=True, timeout=1800,
-    )
-    if gen is not None:
-        print(gen.stdout.strip().splitlines()[-1] if gen.stdout.strip() else gen.stderr[-500:])
+    if not args.input:
+        # 256 files -> fine-grained map tasks at every parallelism level
+        materialize_input(input_dir, args.convs, cores=n4, files=256)
 
     results = {}
     compute = {}

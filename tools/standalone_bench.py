@@ -9,8 +9,14 @@ multi-executor cluster at two cluster sizes": executors are separate
 JVMs with isolated heaps/GC exactly as on a real cluster; only disk
 and memory bandwidth stay shared (single box).
 
-Reports per size: full job (sinks to parquet) and compute path (noop
-sink), each best-of-N trials (box CPU speed swings ±40%).
+The job is ``jobs/pipeline.py`` itself, submitted with
+``--master spark://…`` and the executor sizes in ``SPARK_EXTRA_CONF``
+(``scaling_bench.run_job``): the ``get_spark`` session, the zstd sink,
+the metric tables and the lineage manifest, exactly as the repo runs
+it. Reports per size: full job (parquet sink) and compute path
+(``--sink noop``), each the best of N fresh submissions (box CPU speed
+swings ±40%); a run's seconds are the job's own, from session start,
+cold codegen included.
 
 Usage:
     python tools/standalone_bench.py [--convs 2400000] [--n 2]
@@ -31,63 +37,14 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from tools.scaling_bench import materialize_input, run_job  # noqa: E402
+
 SPARK_HOME = subprocess.run(
     [sys.executable, "-c", "import pyspark, os; print(os.path.dirname(pyspark.__file__))"],
     capture_output=True, text=True,
 ).stdout.strip()
 
 MASTER_URL = "spark://127.0.0.1:7077"
-
-JOB = r"""
-import sys, time, json, tempfile, shutil
-sys.path.insert(0, {repo!r})
-n_exec, sink, trials, inp = int(sys.argv[1]), sys.argv[2], int(sys.argv[3]), sys.argv[4]
-sink_base = sys.argv[5] if len(sys.argv) > 5 and sys.argv[5] != "-" else None
-from pyspark.sql import SparkSession, Observation
-from pyspark.sql import functions as F
-spark = (SparkSession.builder
-  .master({master!r})
-  .appName(f"scale-{{n_exec}}x2-{{sink}}")
-  .config("spark.executor.cores", "2")
-  .config("spark.executor.memory", "5g")
-  .config("spark.cores.max", str(n_exec * 2))
-  .config("spark.executor.extraJavaOptions", "-XX:ParallelGCThreads=2")
-  .config("spark.sql.shuffle.partitions", str(n_exec * 8))
-  .config("spark.sql.adaptive.enabled", "true")
-  .config("spark.sql.session.timeZone", "UTC")
-  .config("spark.sql.files.maxPartitionBytes", "16777216")
-  .config("spark.sql.files.openCostInBytes", "1048576")
-  .config("spark.ui.enabled", "false")
-  .config("spark.ui.showConsoleProgress", "false")
-  .getOrCreate())
-spark.sparkContext.setLogLevel("ERROR")
-from opentelemetry_collector_contrib_spark.plans.pipeline import run_pipeline, ROUTE_NAMES
-df = spark.read.parquet(inp)
-out = run_pipeline(spark, df)
-out.routed.limit(100).write.format("noop").mode("overwrite").save()   # warm codegen
-best, total = None, 0
-for _ in range(trials):
-    t0 = time.time()
-    if sink == "noop":
-        out.routed.write.format("noop").mode("overwrite").save()
-        total = total or df.count()
-    else:
-        obs = Observation()
-        observed = out.routed.observe(
-            obs, *[F.count(F.when(F.col("route") == r, F.lit(1))).alias(r) for r in ROUTE_NAMES])
-        d = tempfile.mkdtemp(prefix=f"sb{{n_exec}}-", dir=sink_base)
-        (observed.hint("rebalance", "route", "ts_day")
-         .write.mode("overwrite").partitionBy("route", "ts_day").parquet(d + "/routed"))
-        total = sum(obs.get.values())
-    el = time.time() - t0
-    if sink != "noop":
-        shutil.rmtree(d, ignore_errors=True)   # keep tmpfs from filling
-    if best is None or el < best:
-        best = el
-print(json.dumps({{"executors": n_exec, "sink": sink, "sec": round(best, 2),
-                   "turns": total, "tps": round(total / best, 1)}}))
-"""
-
 
 def _burn(_: int) -> float:
     t0 = time.time()
@@ -139,17 +96,18 @@ def start_cluster(local_dir: str | None = None) -> list[subprocess.Popen]:
 
 
 def run(n_exec: int, sink: str, trials: int, inp: str, sink_dir: str | None = None) -> dict:
-    script = JOB.format(repo=REPO, master=MASTER_URL)
-    res = subprocess.run(
-        [sys.executable, "-c", script, str(n_exec), sink, str(trials), inp,
-         sink_dir or "-"],
-        capture_output=True, text=True, timeout=3600,
-        env=dict(os.environ, SPARK_HOME=SPARK_HOME),
-    )
-    for line in res.stdout.splitlines():
-        if line.startswith("{"):
-            return json.loads(line)
-    raise RuntimeError(f"no JSON ({n_exec}x, {sink}): {res.stdout[-1500:]}\n{res.stderr[-1500:]}")
+    """Submit ``jobs/pipeline.py`` to the cluster at ``n_exec`` 2-core
+    executors, best of ``trials`` fresh submissions, each into its own
+    output directory under ``sink_dir`` (removed after the run, so a
+    tmpfs does not fill)."""
+    return run_job(inp, MASTER_URL, sink_dir or tempfile.gettempdir(),
+                   sink=sink, trials=trials, conf={
+        "spark.executor.cores": "2",
+        "spark.executor.memory": "5g",
+        "spark.cores.max": str(n_exec * 2),
+        "spark.executor.extraJavaOptions": "-XX:ParallelGCThreads=2",
+        "spark.sql.shuffle.partitions": str(n_exec * 8),
+    })
 
 
 def main() -> int:
@@ -167,18 +125,7 @@ def main() -> int:
     input_dir = args.input
     if not input_dir:
         input_dir = os.path.join(tempfile.mkdtemp(prefix="sb-"), "input")
-        gen = subprocess.run(
-            [sys.executable, "-c", f"""
-import sys; sys.path.insert(0, {REPO!r})
-from opentelemetry_collector_contrib_spark.session import get_spark
-from opentelemetry_collector_contrib_spark.sources.transcripts import generate_transcripts
-spark = get_spark(master="local[32]")
-generate_transcripts(spark, n_convs={args.convs}).repartition(512).write.mode("overwrite").parquet({input_dir!r})
-print("rows:", spark.read.parquet({input_dir!r}).count())
-"""],
-            capture_output=True, text=True, timeout=3600,
-        )
-        print((gen.stdout.strip() or gen.stderr[-400:]).splitlines()[-1])
+        materialize_input(input_dir, args.convs, cores=32, files=512)
 
     if args.sink_dir:
         os.makedirs(args.sink_dir, exist_ok=True)
@@ -190,7 +137,7 @@ print("rows:", spark.read.parquet({input_dir!r}).count())
         for sink in ("parquet", "noop"):
             for ne in (n, n4):
                 res[(ne, sink)] = run(ne, sink, args.trials, input_dir, args.sink_dir)
-                print(json.dumps(res[(ne, sink)]))
+                print(json.dumps({"executors": ne, "sink": sink, **res[(ne, sink)]}))
     finally:
         for p in procs:
             p.send_signal(signal.SIGTERM)
@@ -200,15 +147,15 @@ print("rows:", spark.read.parquet({input_dir!r}).count())
 
     full_n, full_n4 = res[(n, "parquet")], res[(n4, "parquet")]
     noop_n, noop_n4 = res[(n, "noop")], res[(n4, "noop")]
-    eff = (full_n4["tps"] / full_n["tps"]) / (n4 / n)
-    ceff = (noop_n4["tps"] / noop_n["tps"]) / (n4 / n)
+    eff = (full_n4["turns_per_sec"] / full_n["turns_per_sec"]) / (n4 / n)
+    ceff = (noop_n4["turns_per_sec"] / noop_n["turns_per_sec"]) / (n4 / n)
     summary = {
         "executors_n": n, "executors_4n": n4, "cores_per_executor": 2,
         "turns": full_n["turns"],
         "full_sec": {n: full_n["sec"], n4: full_n4["sec"]},
-        "full_tps": {n: full_n["tps"], n4: full_n4["tps"]},
+        "full_tps": {n: full_n["turns_per_sec"], n4: full_n4["turns_per_sec"]},
         "compute_sec": {n: noop_n["sec"], n4: noop_n4["sec"]},
-        "compute_tps": {n: noop_n["tps"], n4: noop_n4["tps"]},
+        "compute_tps": {n: noop_n["turns_per_sec"], n4: noop_n4["turns_per_sec"]},
         "scaling_efficiency_full": round(eff, 3),
         "scaling_efficiency_compute": round(ceff, 3),
         "machine_ceiling_pre": ceiling_pre,
@@ -225,13 +172,15 @@ print("rows:", spark.read.parquet({input_dir!r}).count())
 
 Spark standalone master + worker on localhost; executors are separate
 2-core / 5 GB JVMs (own heap + GC, `ParallelGCThreads=2`), cluster
-size carved with `spark.cores.max`. Identical job, identical
-{full_n["turns"]:,}-turn input, best-of-{args.trials} trials.
+size carved with `spark.cores.max`. Identical job (`jobs/pipeline.py`:
+zstd sink, metric tables, lineage), identical {full_n["turns"]:,}-turn
+input, best of {args.trials} fresh submissions (seconds from session
+start, cold codegen included).
 
 | cluster | full job (s) | turns/s | compute path (s) | turns/s |
 |---|---|---|---|---|
-| {n} executors ({2 * n} cores) | {full_n["sec"]} | {full_n["tps"]:,.1f} | {noop_n["sec"]} | {noop_n["tps"]:,.1f} |
-| {n4} executors ({2 * n4} cores) | {full_n4["sec"]} | {full_n4["tps"]:,.1f} | {noop_n4["sec"]} | {noop_n4["tps"]:,.1f} |
+| {n} executors ({2 * n} cores) | {full_n["sec"]} | {full_n["turns_per_sec"]:,.1f} | {noop_n["sec"]} | {noop_n["turns_per_sec"]:,.1f} |
+| {n4} executors ({2 * n4} cores) | {full_n4["sec"]} | {full_n4["turns_per_sec"]:,.1f} | {noop_n4["sec"]} | {noop_n4["turns_per_sec"]:,.1f} |
 
 - **Full job efficiency (N→4N): {eff:.3f}**
 - **Compute-path efficiency (N→4N): {ceff:.3f}**
