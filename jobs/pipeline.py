@@ -9,7 +9,8 @@ Reads the transcript table (a parquet path with the input_hint schema,
 or the deterministic synthetic generator when --input is omitted),
 runs parse -> enrich -> route -> aggregate, writes per-sink partitioned
 parquet + count metrics + per-partition lineage, prints a one-line JSON
-summary.
+summary (counts per sink, seconds per phase and the number of Spark
+jobs the run took).
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ import json
 import os
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -63,6 +65,11 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     spark = get_spark(app_name="transcript-pipeline", master=args.master)
+    # every Spark job of the run carries one job group, so the summary
+    # reports how many jobs the run took: its fixed cost, in every run
+    sc = spark.sparkContext
+    group = f"transcript-pipeline-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"transcript pipeline {args.run_id}")
     t0 = time.time()
     if args.input:
         transcripts = spark.read.parquet(args.input)
@@ -99,6 +106,9 @@ def main(argv: list[str] | None = None) -> int:
         for k, v in c.items():
             counts[k] = counts.get(k, 0) + v
     t_write = time.time()
+    spark_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    for key in ("spark.jobGroup.id", "spark.job.description"):
+        sc.setLocalProperty(key, None)
 
     elapsed = time.time() - t0
     phases = {
@@ -114,6 +124,7 @@ def main(argv: list[str] | None = None) -> int:
                 "sec": round(elapsed, 2),
                 "turns_per_sec": round(total / elapsed, 1),
                 "phases": phases,
+                "spark_jobs": spark_jobs,
                 "out": args.out,
             }
         )

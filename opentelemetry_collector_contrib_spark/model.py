@@ -63,15 +63,17 @@ def severity_map_expr() -> Column:
     A tiny constant map evaluated JVM-side per row via ``element_at`` —
     the vectorized equivalent of the severity parser's lookup table.
     Includes aliases.
+
+    Built as ONE SQL literal, which the JVM parses in one py4j round
+    trip. A ``create_map`` of per-entry ``F.lit`` costs a round trip per
+    key and per value, and so does ``F.lit`` of a Python list, which
+    PySpark expands entry by entry. Both forms fold to the same map
+    literal in the optimized plan.
     """
-    entries: list[Column] = []
     full = dict(SEVERITY_NUMBER)
     for alias, target in SEVERITY_ALIASES.items():
         full[alias] = SEVERITY_NUMBER[target]
-    for k, v in full.items():
-        entries.append(F.lit(k))
-        entries.append(F.lit(v))
-    return F.create_map(*entries)
+    return F.expr("map(" + ", ".join(f"'{k}', {v}" for k, v in full.items()) + ")")
 
 
 def severity_number(text_col: Column, default: int = 0) -> Column:

@@ -37,20 +37,22 @@ def broadcast_enrich(
     """
     keys = [on] if isinstance(on, str) else list(on)
     dim_cols = [c for c in dim.columns if c not in keys]
-    renamed = dim
-    for c in dim_cols:
-        renamed = renamed.withColumnRenamed(c, f"__dim_{c}")
+    renamed = dim.withColumnsRenamed({c: f"__dim_{c}" for c in dim_cols})
     out = fact.join(F.broadcast(renamed), on=keys, how="left")
+    fact_cols = set(fact.columns)
+    values: dict[str, Column] = {}
     for c in dim_cols:
         target = prefix + c
         dim_val = F.col(f"__dim_{c}")
-        if target in fact.columns and insert_if_absent:
+        if target in fact_cols and insert_if_absent:
             existing = F.col(target)
             keep = existing.isNotNull() & (existing.cast("string") != "")
-            out = out.withColumn(target, F.when(keep, existing).otherwise(dim_val))
+            values[target] = F.when(keep, existing).otherwise(dim_val)
         else:
-            out = out.withColumn(target, dim_val)
-    return out.drop(*[f"__dim_{c}" for c in dim_cols])
+            values[target] = dim_val
+    # one projection for every field: the Spark driver analyses the
+    # plan once, not once per field
+    return out.withColumns(values).drop(*[f"__dim_{c}" for c in dim_cols])
 
 
 def stamp_constants(df: DataFrame, attrs: dict[str, object]) -> DataFrame:

@@ -16,7 +16,9 @@ Stage map (reference -> here):
   routingconnector          -> route_turns()        (DEFAULT_ROUTES as an ordered when() chain)
   countconnector            -> observe_routes()     (per-route counts observed by the write job)
                                aggregate_counts()   (lazy, over any routed frame)
-                               SinkCounts           (one read-back of the written sink)
+                               SinkCounts           (one grouped count of the written sink;
+                                                     the metric tables roll up from it
+                                                     on the Spark driver)
   fileexporter group_by     -> write_pipeline()     (rebalance + partitionBy(*SINK_KEYS))
 """
 
@@ -26,11 +28,13 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..model import INFO, WARN, severity_number
-from ..operators.aggregate import count_connector, sum_connector
+from ..operators.aggregate import count_connector
 from ..operators.enrich import broadcast_enrich
 from ..operators.route import Route, apply_routes
 from ..runtime.lineage import LineageLog
@@ -56,7 +60,9 @@ TOOL_PAYLOAD_SCHEMA = "tool string, args struct<q string, n int>, status string"
 
 def parse_turns(df: DataFrame) -> DataFrame:
     """Parse stage: log-line extract + JSON tool payloads + severity
-    resolution. Pure column exprs — one codegen'd projection.
+    resolution. Pure column exprs in ONE ``withColumns``: the Spark
+    driver analyses one projection instead of one per field, and the
+    stage runs it as one codegen'd projection.
 
     Perf note (measured at sf0.1): validating with ONE rlike pass and
     extracting fields from ONE split() is ~3x cheaper per row than a
@@ -80,22 +86,26 @@ def parse_turns(df: DataFrame) -> DataFrame:
         F.lit("INFO"),
     )
 
-    return (
-        df.withColumn("log_ts", F.to_timestamp(ext(1), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-        .withColumn("log_severity", ext(2))
-        .withColumn("client_ip", ext(3))
-        .withColumn("http_method", ext(4))
-        .withColumn("http_path", ext(5))
-        .withColumn("http_status", ext(6).cast("int"))
-        .withColumn(
-            "latency_ms",
-            F.when(is_log, F.replace(F.element_at(parts, 7), F.lit("ms"), F.lit(""))).cast("long"),
-        )
-        .withColumn("tool_status", payload["status"])
-        .withColumn("tool_query", payload["args"]["q"])
-        .withColumn("severity_text", sev_text)
-        .withColumn("severity_number", severity_number(sev_text, default=INFO).cast("int"))
-        .withColumn("is_logline", is_log)
+    # try_* forms: a field that passes the gate but does not convert
+    # (month 13, a latency past int64) is NULL and its row is kept —
+    # under ANSI a plain cast or to_timestamp would fail the whole job
+    return df.withColumns(
+        {
+            "log_ts": F.try_to_timestamp(ext(1), F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")),
+            "log_severity": ext(2),
+            "client_ip": ext(3),
+            "http_method": ext(4),
+            "http_path": ext(5),
+            "http_status": ext(6).try_cast("int"),
+            "latency_ms": F.when(
+                is_log, F.replace(F.element_at(parts, 7), F.lit("ms"), F.lit(""))
+            ).try_cast("long"),
+            "tool_status": payload["status"],
+            "tool_query": payload["args"]["q"],
+            "severity_text": sev_text,
+            "severity_number": severity_number(sev_text, default=INFO).cast("int"),
+            "is_logline": is_log,
+        }
     )
 
 
@@ -154,14 +164,17 @@ class SinkCounts:
     """Turn counts per (route, ts_day, every grouped attr, every
     metric condition) over the written sink: ONE grouped count, at most
     routes x days x roles x families x 2 rows, fetched as Arrow. Both
-    metric tables and the per-day lineage records roll up from it, so
-    the sink is read back once."""
+    metric tables and the per-day lineage records roll up from it on
+    the Spark driver, so the sink is read back once."""
 
     table: pa.Table
 
     @classmethod
-    def read(cls, spark: SparkSession, root: str) -> SinkCounts:
-        back = spark.read.parquet(sink_path(root, "routed"))
+    def read(cls, spark: SparkSession, root: str, schema: StructType) -> SinkCounts:
+        """Count the routed sink under ``root``. ``schema`` is the
+        schema of the frame written there: given it, the read plans
+        without a schema-inference job over the sink's files."""
+        back = spark.read.schema(schema).parquet(sink_path(root, "routed"))
         keys = dict.fromkeys(SINK_KEYS + [k for ks, _, _ in COUNT_METRICS.values() for k in ks])
         conds = [c().alias(_cond_col(name)) for name, (_, c, _) in COUNT_METRICS.items() if c]
         return cls(back.groupBy(*keys, *conds).agg(F.count(F.lit(1)).alias("n")).toArrow())
@@ -173,14 +186,21 @@ class SinkCounts:
 
     def metrics(self, spark: SparkSession) -> dict[str, DataFrame]:
         """The ``COUNT_METRICS`` tables — ``aggregate_counts`` of the
-        sink — summed over the counts as a JVM local relation."""
-        cube = spark.createDataFrame(self.table)
-        return {
-            name: sum_connector(
-                cube, "n", keys, condition=F.col(_cond_col(name)) if cond else None, metric_name=metric
-            )
-            for name, (keys, cond, metric) in COUNT_METRICS.items()
-        }
+        sink — rolled up from the counts on the Spark driver: rows whose
+        condition is true and whose grouped attrs are all non-NULL,
+        ``n`` summed per group. Each is a one-partition JVM local
+        relation, so writing it is one Spark job with no shuffle."""
+        tables = {}
+        for name, (keys, cond, metric) in COUNT_METRICS.items():
+            counted = self.table
+            if cond:
+                counted = counted.filter(pc.field(_cond_col(name)))
+            for k in keys:
+                counted = counted.filter(pc.field(k).is_valid())
+            rolled = counted.group_by(keys).aggregate([("n", "sum")]).select([*keys, "n_sum"])
+            rolled = rolled.rename_columns([*keys, metric]).sort_by([(k, "ascending") for k in keys])
+            tables[name] = spark.createDataFrame(rolled).coalesce(1)
+        return tables
 
 
 # observation key of the day set; no route can take it
@@ -250,9 +270,23 @@ def write_pipeline(
     job (``observe_routes``); callers compare the counts with what they
     sent. The metric tables (``write_metrics``) and the per-day lineage
     records then come from one grouped count over the written sink
-    (``SinkCounts``); a day gets a record only when this call wrote it.
-    A call that writes no rows leaves the sink, and so both of them, as
-    they were, and skips the read-back. Returns per-sink row counts.
+    (``SinkCounts``), read with the written frame's schema; a day gets a
+    record only when this call wrote it. A call that writes no rows
+    leaves the sink, and so both of them, as they were, and skips the
+    read-back. Returns per-sink row counts.
+
+    Spark jobs of a call that writes rows, metric tables and lineage (8):
+
+    1-2. the broadcasts of the role and tool dims (a local relation is
+         still collected for a broadcast by a job, with no Python worker);
+    3.   the fused parse/enrich/route stage, up to the rebalance shuffle;
+    4.   the partitioned write, which also fills ``observe_routes``;
+    5-6. the ``SinkCounts`` grouped count: its map stage, then the
+         Arrow collect of at most a few thousand rows;
+    7-8. one single-task write per metric table.
+
+    A sink wide enough for Spark's parallel partition discovery (more
+    than 32 directories at one level) adds a listing job to step 5.
     """
     spark = out.routed.sparkSession
     routed = out.routed
@@ -272,7 +306,7 @@ def write_pipeline(
         # per-day lineage as they were
         return counts
 
-    sink = SinkCounts.read(spark, root)
+    sink = SinkCounts.read(spark, root, observed.schema)
     if write_metrics:
         for name, agg in sink.metrics(spark).items():
             write_sink(agg, sink_path(root, f"metric_{name}"))

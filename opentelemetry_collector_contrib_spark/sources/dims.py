@@ -6,10 +6,11 @@ Our dimensions are small tables the driver materialises once and Spark
 broadcasts into every enrich join (FIXTURES.md F2).
 
 Both dims are built from an Arrow table, which Spark plans as a JVM
-``LocalRelation``: broadcasting it is a driver-local copy. A list of
-Python tuples would plan as ``Scan ExistingRDD`` instead, and every job
-that broadcasts it would start a Python worker to unpickle a handful
-of rows.
+``LocalRelation``: broadcasting it starts no Python worker, though
+Spark still collects it for the broadcast through one small job. A
+list of Python tuples would plan as ``Scan ExistingRDD`` instead, and
+every job that broadcasts it would start a Python worker to unpickle a
+handful of rows.
 """
 
 from __future__ import annotations

@@ -11,11 +11,12 @@ from __future__ import annotations
 import glob
 import json
 import os
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
-from opentelemetry_collector_contrib_spark.model import WARN
+from opentelemetry_collector_contrib_spark.model import TRANSCRIPT_SCHEMA, WARN
 from opentelemetry_collector_contrib_spark.plans.pipeline import (
     ROUTE_NAMES,
     aggregate_counts,
@@ -180,3 +181,53 @@ def test_metrics_and_day_lineage_match_the_sink(spark, routed, tmp_path):
     logged = {r["partition"]: r["rows"] for r in records if r["stage"] == "sink_day"}
     assert logged == days
     assert lineage.completed("sink_day") == set(days)
+
+
+def test_hostile_loglines_keep_their_row(spark):
+    """Under ANSI, a line that passes ``LOGLINE_PATTERN`` but whose
+    latency overflows int64, or whose date does not exist, must not fail
+    the job: the bad field is NULL, the row is kept and routed as its
+    severity says (stanza ``on_error: send``)."""
+    lines = [
+        "2026-08-16T12:00:00Z INFO 10.1.2.3 GET /api/v1/x 200 123ms",
+        "2026-08-16T12:00:00Z WARN 10.1.2.3 GET /api/v1/x 200 99999999999999999999999ms",
+        "2026-13-45T12:00:00Z ERROR 10.1.2.3 GET /api/v1/x 503 7ms",
+    ]
+    ts = datetime(2026, 8, 16, 12)
+    rows = [("c1", i, "assistant", text, None, ts) for i, text in enumerate(lines)]
+    routed = run_pipeline(spark, spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)).routed
+    got = {
+        r["turn_idx"]: r.asDict()
+        for r in routed.select(
+            "turn_idx", "route", "is_logline", "http_status", "latency_ms",
+            F.col("log_ts").cast("string").alias("log_ts"),
+        ).collect()
+    }
+    assert got == {
+        0: {"turn_idx": 0, "route": "catchall", "is_logline": True, "http_status": 200,
+            "latency_ms": 123, "log_ts": "2026-08-16 12:00:00"},
+        1: {"turn_idx": 1, "route": "alerts", "is_logline": True, "http_status": 200,
+            "latency_ms": None, "log_ts": "2026-08-16 12:00:00"},
+        2: {"turn_idx": 2, "route": "alerts", "is_logline": True, "http_status": 503,
+            "latency_ms": 7, "log_ts": None},
+    }
+
+
+def test_write_pipeline_job_budget(spark, tmp_path):
+    """A single-shot ``write_pipeline`` that writes the sink, both
+    metric tables and the lineage runs at most 8 Spark jobs (listed in
+    its docstring): the read-back plans with the written schema and the
+    metric tables are rolled up on the Spark driver."""
+    src = generate_transcripts(spark, n_convs=100, partitions=4).localCheckpoint()
+    out = run_pipeline(spark, src)
+    root = str(tmp_path / "budget")
+    sc = spark.sparkContext
+    group = "test_write_pipeline_job_budget"
+    sc.setJobGroup(group, "one single-shot write_pipeline")
+    try:
+        counts = write_pipeline(out, root, lineage=LineageLog(root, run_id="b1"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert sum(counts.values()) == src.count()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8

@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 
 import pipeline as pipeline_job
 
+from opentelemetry_collector_contrib_spark.plans.pipeline import aggregate_counts
 from opentelemetry_collector_contrib_spark.runtime.lineage import LineageLog
 from opentelemetry_collector_contrib_spark.sources.transcripts import generate_transcripts
 
@@ -29,6 +30,16 @@ def _day_counts(spark, root):
     return {
         (r[0], str(r[1])): r[2] for r in df.groupBy("route", "ts_day").count().collect()
     }
+
+
+def _assert_metrics_match_sink(spark, root):
+    """Each metric table equals ``aggregate_counts`` over the WHOLE
+    routed sink, however many cycles (or runs) wrote it."""
+    back = spark.read.parquet(f"{root}/sink=routed")
+    for name, expect in aggregate_counts(back).items():
+        got = spark.read.parquet(f"{root}/sink=metric_{name}")
+        assert got.columns == expect.columns
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, expect.collect())), name
 
 
 def _sink_day_records(root):
@@ -74,6 +85,8 @@ def test_noop_sink_reports_the_parquet_per_sink(spark, tmp_path, capsys):
 
     assert got["per_sink"] == ref["per_sink"]
     assert sum(got["per_sink"].values()) == got["turns"] > 0
+    # the job counts its own Spark jobs, whichever sink it writes
+    assert ref["spark_jobs"] > 0 and got["spark_jobs"] > 0
     assert not (noop / "sink=routed").exists()  # nothing written
 
 
@@ -85,6 +98,7 @@ def test_poll_cycle_resume_reprocesses_only_pending_days(spark, tmp_path, capsys
     assert pipeline_job.main(["--input", inp, "--out", out, "--poll-days", "8"]) == 0
     full = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     before = _day_counts(spark, out)
+    _assert_metrics_match_sink(spark, out)
 
     # simulate the crash: forget every sink_day record after the first
     # poll cycle (the first 8 days stay committed)
@@ -113,5 +127,6 @@ def test_poll_cycle_resume_reprocesses_only_pending_days(spark, tmp_path, capsys
     # (the dynamic overwrite replaces them in place) and recorded again
     assert 0 < resumed["turns"] <= full["turns"] - skipped
     assert _day_counts(spark, out) == before  # sink unchanged
+    _assert_metrics_match_sink(spark, out)
     # after resume the manifest is whole again: every day completed
     assert LineageLog(out).completed("sink_day") == {d for (_, d) in before}
