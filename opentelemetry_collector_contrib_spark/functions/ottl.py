@@ -136,10 +136,6 @@ def Len(c: Column, kind: str = "string") -> Column:
     return F.length(c.cast("string"))
 
 
-def LenArray(c: Column) -> Column:
-    return F.size(c)
-
-
 def String(c) -> Column:
     """func_string.go -> StringifyValue: slices render JSON-compact
     ("[1,2,3]", e2e_test.go:1061-1064); scalars are their Go string
@@ -719,17 +715,11 @@ def Murmur3Hash128(c: Column) -> Column:
 
 # The reference's Now() returns wall-clock time (func_now.go). Wall
 # clock is banned here (re-runs must be byte-identical for the resume/
-# lineage contract), so Now() is the *job-start pin*: the pipeline
-# driver calls set_now() once per run and every Now() in every
+# lineage contract), so Now() is a fixed pin: every Now() in every
 # statement sees the same instant — which is also what a vectorized
 # engine wants (one literal, constant-folded) and mirrors how the
 # collector stamps observed_ts per batch.
 _PINNED_NOW = "2020-02-11T20:26:13Z"  # pkg/ottl/e2e TestObservedTime
-
-
-def set_now(iso_ts: str) -> None:
-    global _PINNED_NOW
-    _PINNED_NOW = iso_ts
 
 
 def Now() -> Column:
@@ -896,7 +886,7 @@ def ottl_div(a: Column, b: Column, int_math: bool) -> Column:
     division; /0 is a statement error -> NULL under error_mode=ignore."""
     if int_math:
         return F.when(b != 0, (a / b).cast("long"))
-    return F.when(b != 0.0, a / b)
+    return F.when(b != 0, a / b)
 
 
 # ---------------------------------------------------------------------------

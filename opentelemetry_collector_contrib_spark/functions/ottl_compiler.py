@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..model import SEVERITY_NUMBER
 from ..operators import transform as TR
-from .ottl import OTTL_CONVERTERS, glob_to_regex
+from .ottl import OTTL_CONVERTERS, glob_to_regex, ottl_div
 
 # ---------------------------------------------------------------------------
 # tokenizer
@@ -433,19 +433,15 @@ class Parser:
                 left = _as_col(left) * _as_col(right)
                 continue
             # OTTL division (math.go:165-180): int/int is INTEGER
-            # division (Go truncation toward zero); /0 is a statement
-            # error -> NULL under error_mode=ignore
-            if _is_int_expr(left) and _is_int_expr(right):
-                if isinstance(left, int) and isinstance(right, int):
-                    import math as _math
+            # division (Go truncation toward zero); two int literals
+            # fold here, the rest is ottl_div
+            int_math = _is_int_expr(left) and _is_int_expr(right)
+            if int_math and isinstance(left, int) and isinstance(right, int):
+                import math as _math
 
-                    left = _math.trunc(left / right) if right != 0 else None
-                    continue
-                lc, rc = _as_col(left), _as_col(right)
-                left = F.when(rc != 0, (lc / rc).cast("long"))
-            else:
-                lc, rc = _as_col(left), _as_col(right)
-                left = F.when(rc != 0, lc / rc)
+                left = _math.trunc(left / right) if right != 0 else None
+                continue
+            left = ottl_div(_as_col(left), _as_col(right), int_math=int_math)
         return left
 
     def parse_primary(self):

@@ -50,11 +50,7 @@ SEVERITY_ALIASES: dict[str, str] = {
     "informational": "info",
 }
 
-SEVERITY_TEXT: dict[int, str] = {
-    1: "TRACE", 5: "DEBUG", 9: "INFO", 13: "WARN", 17: "ERROR", 21: "FATAL",
-}
-
-TRACE, DEBUG, INFO, WARN, ERROR, FATAL = 1, 5, 9, 13, 17, 21
+INFO, WARN = 9, 13
 
 
 def severity_map_expr() -> Column:
@@ -93,27 +89,6 @@ def severity_band_text(num_col: Column) -> Column:
         chain = chain.when(num_col >= lo, txt)
     return chain.otherwise(expr)
 
-
-# ---------------------------------------------------------------------------
-# Log record schema (flat pdata LogRecord analog)
-# ---------------------------------------------------------------------------
-
-ATTRS_TYPE = T.MapType(T.StringType(), T.StringType())
-
-LOG_RECORD_FIELDS = [
-    T.StructField("ts", T.TimestampType(), True),            # time_unix_nano view
-    T.StructField("observed_ts", T.TimestampType(), True),
-    T.StructField("severity_number", T.IntegerType(), True),
-    T.StructField("severity_text", T.StringType(), True),
-    T.StructField("body", T.StringType(), True),
-    T.StructField("attributes", ATTRS_TYPE, True),
-    T.StructField("trace_id", T.StringType(), True),          # hex, BinaryType on wire
-    T.StructField("span_id", T.StringType(), True),
-    T.StructField("flags", T.IntegerType(), True),
-    T.StructField("scope", T.StringType(), True),
-]
-
-LOG_RECORD_SCHEMA = T.StructType(LOG_RECORD_FIELDS)
 
 # Transcript input table (BASELINE.json input_hint)
 TRANSCRIPT_SCHEMA = T.StructType(

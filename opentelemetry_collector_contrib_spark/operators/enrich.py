@@ -1,12 +1,10 @@
-"""Enrichment: broadcast lookup joins + constant stamping.
+"""Enrichment: broadcast lookup joins and range lookups.
 
 Reference semantics:
 - k8sattributes processor does per-record dimension lookups with
   **insert-if-absent** — an attribute already present on the record is
   not overwritten (``processor/k8sattributesprocessor/processor.go:209-214``),
   with chained secondary lookups (pod -> namespace -> node).
-- resourcedetection stamps constant resource attrs detected once at
-  startup (``processor/resourcedetectionprocessor/``).
 - geoip / dnslookup are the same shape against other dims.
 
 Spark re-expression: ``join(broadcast(dim), key, "left")`` +
@@ -53,15 +51,6 @@ def broadcast_enrich(
     # one projection for every field: the Spark driver analyses the
     # plan once, not once per field
     return out.withColumns(values).drop(*[f"__dim_{c}" for c in dim_cols])
-
-
-def stamp_constants(df: DataFrame, attrs: dict[str, object]) -> DataFrame:
-    """resourcedetection analog: constant columns decided driver-side
-    once (lit() folds into codegen)."""
-    out = df
-    for k, v in attrs.items():
-        out = out.withColumn(k, F.lit(v))
-    return out
 
 
 def ip_to_long(ip: Column) -> Column:

@@ -127,13 +127,6 @@ def _kv(key: str | Column, value: Column) -> Column:
     )
 
 
-def _kv_always(key: str | Column, value: Column) -> Column:
-    k = F.lit(key) if isinstance(key, str) else key
-    return F.when(
-        value.isNotNull(), F.concat(k, F.lit("="), _logfmt_value(value))
-    )
-
-
 def _rfc3339_milli(ts_str: Column) -> Column:
     """Go RFC3339Milli (.999 trims trailing zeros; UTC inputs)."""
     t = F.to_timestamp(ts_str)

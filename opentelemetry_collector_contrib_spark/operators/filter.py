@@ -96,15 +96,6 @@ def tail_sampler(
 # policies combine with & / | exactly like the and/composite policy
 # wrappers (sampling/composite.go, sampling/and.go).
 
-def policy_latency(latency_col: str, threshold_ms: int) -> Column:
-    """latency.go: sample when total trace duration >= threshold."""
-    return F.max(F.col(latency_col)) >= threshold_ms
-
-
-def policy_status_code(severity_col: str, min_severity: int = 17) -> Column:
-    """status_code.go (ERROR traces): any record at/above severity."""
-    return F.max(F.col(severity_col)) >= min_severity
-
 
 def policy_string_attribute(col: str, values: list[str]) -> Column:
     """string_attribute.go: any span carries one of the values."""
@@ -117,14 +108,6 @@ def policy_numeric_attribute(col: str, lo: float, hi: float) -> Column:
     return F.max(
         F.when((F.col(col) >= lo) & (F.col(col) <= hi), 1).otherwise(0)
     ) == 1
-
-
-def policy_probabilistic(group_col: str, percent: float, seed: int = 22) -> Column:
-    """probabilistic.go: consistent hash of the trace id — the whole
-    group samples together (hash the GROUP key, not the row)."""
-    buckets = 1 << 14
-    threshold = int(buckets * percent / 100.0)
-    return F.pmod(F.xxhash64(F.first(F.col(group_col)), F.lit(seed)), F.lit(buckets)) < threshold
 
 
 def policy_and(*policies: Column) -> Column:

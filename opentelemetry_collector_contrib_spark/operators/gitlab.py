@@ -54,11 +54,6 @@ _SCHEMA = (
     "  created_at:string,started_at:string,finished_at:string>>>"
 )
 
-_SPAN_T = (
-    "gl_span_type string, gl_span_id string, gl_parent_id string,"
-    "gl_name string, gl_start_ns bigint, gl_end_ns bigint"
-)
-
 
 def _sha_hex(s: Column) -> Column:
     return F.lower(F.sha2(s, 256))

@@ -48,7 +48,6 @@ from pyspark.sql import functions as F
 CORE_ATTRS = ["source", "unit", "hostType", "isDeviceMappingEnabled",
               "metricName", "hostname", "entityTypeId", "entityName",
               "instanceName", "entityId"]
-_RATE_FLAG = "bmchelix.requiresRateMetric"
 _ENTRY_T = "array<struct<key:string,value:string>>"
 
 

@@ -3,12 +3,11 @@ metadata, processed with Arrow-batched pandas over ``mapInPandas``.
 
 The Spark-side plumbing here is real and tested — schemas, partition
 strategy, UDF signatures, Arrow batch shapes. The actual media decode
-is STUBBED: the container has no image/audio libraries, so
-``decode_image``/``decode_audio`` raise ``NotImplementedError`` unless
-PIL/soundfile import, and ``extract_media_meta`` computes a
-deterministic fake (pure function of the bytes) that stands in for
-decoded width/height/duration. Swapping the fake for a real decoder
-changes ONE function body, not the pipeline.
+is STUBBED: the package depends on no image/audio library, so
+``extract_media_meta`` computes a deterministic fake (pure function of
+the bytes) that stands in for decoded width/height/duration. Swapping
+the fake for a real decoder changes ONE function body, not the
+pipeline.
 
 Scale posture: media rows are wide (MBs per row), so the operators
 repartition by a content-hash bucket before the pandas stage — batch
@@ -24,16 +23,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("media_type", T.StringType(), True),   # image|audio|video
-        T.StructField("blob", T.BinaryType(), True),          # opaque payload
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
 
 META_SCHEMA = (
     "doc_id long, n_bytes long, fake_width int, fake_height int, "
@@ -60,20 +50,6 @@ def _fake_decode(blob: bytes) -> tuple[int, int, str]:
     height = (n * 7) % 512
     fmt = "png" if n % 2 == 0 else "jpeg"
     return width, height, fmt
-
-
-def decode_image(blob: bytes):  # pragma: no cover - stub
-    """Real decoder hook. Not available in this container."""
-    try:
-        from PIL import Image  # noqa: F401
-        import io
-
-        return Image.open(io.BytesIO(blob))
-    except ImportError as e:
-        raise NotImplementedError(
-            "image decoding requires PIL; this environment stubs it — "
-            "use extract_media_meta's deterministic fake instead"
-        ) from e
 
 
 def extract_media_meta(

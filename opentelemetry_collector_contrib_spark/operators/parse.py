@@ -17,7 +17,7 @@ frame into (parsed, dead-letter) — the on_error={drop,send} routing
 
 Registered stanza parser set covered here (register.go list): regex,
 json, jsonarray, csv, keyvalue, syslog (3164/5424), uri, container,
-time, severity, trace, scope.
+time, severity.
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.grok import grok_columns
-from ..functions.strptime import strptime_to_spark
 from ..model import severity_band_text, severity_number
 
 
@@ -101,14 +100,6 @@ def json_parser(
     """``from_json`` with explicit schema. Unparseable rows -> NULL
     struct (the PERMISSIVE analog of on_error=send)."""
     return df.withColumn(parse_to, F.from_json(_col(parse_from), schema))
-
-
-def json_map_parser(df: DataFrame, parse_from: str = "body", parse_to: str = "attributes") -> DataFrame:
-    """Schema-free variant: JSON object -> MAP<STRING,STRING> — the
-    closest analog of the reference's map[string]any body parse."""
-    return df.withColumn(
-        parse_to, F.from_json(_col(parse_from), T.MapType(T.StringType(), T.StringType()))
-    )
 
 
 def jsonarray_parser(df: DataFrame, element_schema: str, parse_from: str = "body", parse_to: str = "parsed") -> DataFrame:
@@ -307,23 +298,6 @@ def severity_parser(
 
 
 # ---------------------------------------------------------------------------
-# trace parser (parser/trace) — hex ids from parsed fields
-# ---------------------------------------------------------------------------
-
-def trace_parser(
-    df: DataFrame,
-    trace_id_from: str | None = None,
-    span_id_from: str | None = None,
-) -> DataFrame:
-    out = df
-    if trace_id_from:
-        out = out.withColumn("trace_id", F.lower(F.regexp_extract(_col(trace_id_from), r"^([0-9a-fA-F]{32})$", 1)))
-    if span_id_from:
-        out = out.withColumn("span_id", F.lower(F.regexp_extract(_col(span_id_from), r"^([0-9a-fA-F]{16})$", 1)))
-    return out
-
-
-# ---------------------------------------------------------------------------
 # syslog parser (parser/syslog/parser.go:29-44) — RFC3164 + RFC5424
 # ---------------------------------------------------------------------------
 
@@ -336,14 +310,19 @@ _RFC3164 = r"^<(\d{1,3})>([A-Z][a-z]{2}\s+\d{1,2}\s\d{2}:\d{2}:\d{2})\s+(\S+)\s+
 def syslog_parser(df: DataFrame, parse_from: str = "body", protocol: str = "rfc5424") -> DataFrame:
     """Syslog -> columns. priority = facility*8 + severity (both
     derived); severity here is the syslog 0-7 scale mapped onto the
-    24-level enum the way the reference's severity mapping does."""
+    24-level enum the way the reference's severity mapping does.
+
+    A line that is not syslog keeps its row with NULL fields (stanza
+    ``on_error: send``): ``regexp_extract`` gives ``''`` on no match,
+    so the typed fields use the ``try_`` casts, which ANSI mode would
+    otherwise turn into a job abort."""
     src = _col(parse_from)
     if protocol == "rfc5424":
         pat = _RFC5424
         out = (
-            df.withColumn("syslog_priority", F.regexp_extract(src, pat, 1).cast("int"))
-            .withColumn("syslog_version", F.regexp_extract(src, pat, 2).cast("int"))
-            .withColumn("syslog_ts", F.to_timestamp(F.regexp_extract(src, pat, 3)))
+            df.withColumn("syslog_priority", F.regexp_extract(src, pat, 1).try_cast("int"))
+            .withColumn("syslog_version", F.regexp_extract(src, pat, 2).try_cast("int"))
+            .withColumn("syslog_ts", F.try_to_timestamp(F.regexp_extract(src, pat, 3)))
             .withColumn("hostname", F.nullif(F.regexp_extract(src, pat, 4), F.lit("-")))
             .withColumn("appname", F.nullif(F.regexp_extract(src, pat, 5), F.lit("-")))
             .withColumn("proc_id", F.nullif(F.regexp_extract(src, pat, 6), F.lit("-")))
@@ -354,7 +333,7 @@ def syslog_parser(df: DataFrame, parse_from: str = "body", protocol: str = "rfc5
     elif protocol == "rfc3164":
         pat = _RFC3164
         out = (
-            df.withColumn("syslog_priority", F.regexp_extract(src, pat, 1).cast("int"))
+            df.withColumn("syslog_priority", F.regexp_extract(src, pat, 1).try_cast("int"))
             .withColumn("syslog_ts_raw", F.regexp_extract(src, pat, 2))
             .withColumn("hostname", F.regexp_extract(src, pat, 3))
             .withColumn("appname", F.regexp_extract(src, pat, 4))
@@ -364,10 +343,12 @@ def syslog_parser(df: DataFrame, parse_from: str = "body", protocol: str = "rfc5
     else:
         raise ValueError(protocol)
     sev3164 = F.col("syslog_priority") % 8
-    # syslog severity 0..7 -> OTel band starts (emerg=FATAL4 .. debug=DEBUG)
+    # syslog severity 0..7 -> OTel band starts (emerg=FATAL4 .. debug=DEBUG).
+    # get(), not element_at(): Spark 4.1's element_at over a literal
+    # array answers a NULL index with an element, not NULL
     mapping = F.array(*[F.lit(x) for x in [24, 23, 22, 21, 17, 13, 9, 5]])
     return out.withColumn("facility", (F.col("syslog_priority") / 8).cast("int")).withColumn(
-        "severity_number", F.element_at(mapping, (sev3164 + 1).cast("int"))
+        "severity_number", F.get(mapping, sev3164)
     )
 
 

@@ -46,7 +46,6 @@ from pyspark.sql import functions as F
 _STATSD_TYPES = ("c", "g", "h", "ms", "d")
 
 _INT_RE = r"^[+-]?[0-9]+$"
-_FLOAT_RE = r"^[+-]?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?$"
 
 # tokens Go's strconv.ParseFloat maps to ±Inf / zero WITHOUT an error
 # (range errors on finite tokens DO error — 1e309 / 1e-400 are invalid)
@@ -2821,11 +2820,6 @@ _REDIS_DISABLED_DEFAULT = frozenset({
     "redis.maxmemory", "redis.role", "redis.cmd.calls", "redis.cmd.usec",
     "redis.cmd.latency", "redis.replication.replica_offset",
 })
-
-_REDIS_OUT = (
-    "rd_version", "rd_metric", "rd_kind", "rd_mono", "rd_state", "rd_role",
-    "rd_cmd", "rd_db", "rd_percentile", "rd_value", "rd_value_d", "rd_ok",
-)
 
 
 def redis_info(

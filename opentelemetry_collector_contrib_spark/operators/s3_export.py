@@ -62,12 +62,6 @@ def _go_time_string(ts_ns: Column) -> Column:
     return F.concat(base, frac, F.lit(" +0000 UTC"))
 
 
-def s3_body_lines(df: DataFrame, *, id_cols: list[str]) -> DataFrame:
-    return df.select(
-        *id_cols,
-        F.coalesce(F.col("body"), F.lit("")).alias("line"))
-
-
 def s3_sumoic_lines(df: DataFrame, *, id_cols: list[str]) -> DataFrame:
     res = F.col("res_attrs")
     g = lambda k: F.element_at(res, F.lit(k))  # noqa: E731

@@ -186,53 +186,6 @@ def minhash_signatures_wide(
     return sh.groupBy("doc").agg(*mins)
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16, shingle_n: int = 3
-) -> DataFrame:
-    """Long-form view of minhash_signatures_wide: one row per
-    (doc, j, minhash) — kept for callers that band externally."""
-    wide = minhash_signatures_wide(df, id_col, text_col, num_hashes, shingle_n)
-    pairs = ", ".join(f"{j}, h{j}" for j in range(num_hashes))
-    return wide.select(
-        "doc", F.expr(f"stack({num_hashes}, {pairs}) AS (j, minhash)")
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int, rows_per_band: int
-) -> DataFrame:
-    """Band the signature (j // rows_per_band) and bucket-join: docs
-    agreeing on ALL rows of any band become a candidate pair.
-
-    bands*rows_per_band must equal num_hashes. The equi-join on
-    (band, band_key) is the scale path: shuffle carries doc-band rows,
-    never doc x doc.
-    """
-    banded = (
-        signatures.withColumn("band", (F.col("j") / rows_per_band).cast("int"))
-        .groupBy("doc", "band")
-        .agg(
-            F.md5(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("j", "minhash"))),
-                        lambda s: s["minhash"],
-                    ),
-                    "|",
-                )
-            ).alias("band_key")
-        )
-    )
-    a = banded.select(F.col("doc").alias("id_a"), "band", "band_key")
-    b = banded.select(F.col("doc").alias("id_b"), "band", "band_key")
-    return (
-        a.join(b, on=["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
 def minhash_lsh_dedup(
     df: DataFrame,
     id_col: str,

@@ -1,13 +1,15 @@
-"""Single-row transformers: stanza field editors + attributes processor
+"""Single-row transformers: stanza assign_keys + attributes processor
 actions + OTTL editor statements.
 
 Reference semantics:
-- stanza transformers add/copy/move/remove/retain/flatten/unquote/
-  regex_replace operate on Entry fields
-  (``pkg/stanza/operator/transformer/*/transformer.go``).
+- stanza assign_keys turns a list field into a map with configured keys
+  (``pkg/stanza/operator/transformer/assignkeys``); the other stanza
+  field editors are OTTL statements here.
 - attributes processor applies an ordered action list INSERT / UPDATE /
   UPSERT / DELETE / HASH / EXTRACT / CONVERT over the attribute map
-  (``internal/coreinternal/attraction/attraction.go:22-88,111-140``).
+  (``internal/coreinternal/attraction/attraction.go:22-88,111-140``);
+  UPDATE is ``map_merge(..., "update")`` and EXTRACT is OTTL
+  ``ExtractPatterns``.
 - OTTL editors (set, delete_key, keep_keys, replace_pattern, limit,
   truncate_all, merge_maps…) mutate the record under an optional
   ``where`` clause (``pkg/ottl/ottlfuncs``).
@@ -24,43 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
-# column-level editors (stanza add/copy/move/remove/retain/...)
+# column-level editors (stanza assign_keys)
 # ---------------------------------------------------------------------------
-
-
-def add_field(df: DataFrame, name: str, value: Column | object) -> DataFrame:
-    v = value if isinstance(value, Column) else F.lit(value)
-    return df.withColumn(name, v)
-
-
-def copy_field(df: DataFrame, src: str, dst: str) -> DataFrame:
-    return df.withColumn(dst, F.col(src))
-
-
-def move_field(df: DataFrame, src: str, dst: str) -> DataFrame:
-    return df.withColumn(dst, F.col(src)).drop(src)
-
-
-def remove_fields(df: DataFrame, *names: str) -> DataFrame:
-    return df.drop(*names)
-
-
-def retain_fields(df: DataFrame, names: list[str]) -> DataFrame:
-    return df.select(*names)
-
-
-def unquote_field(df: DataFrame, name: str) -> DataFrame:
-    """transformer/unquote: strip one matching pair of quotes."""
-    c = F.col(name)
-    unq = F.when(
-        c.rlike(r'^".*"$') | c.rlike(r"^'.*'$"),
-        F.expr(f"substring({name}, 2, length({name}) - 2)"),
-    ).otherwise(c)
-    return df.withColumn(name, unq)
-
-
-def regex_replace_field(df: DataFrame, name: str, pattern: str, replacement: str) -> DataFrame:
-    return df.withColumn(name, F.regexp_replace(F.col(name), pattern, replacement))
 
 
 def assign_keys(
@@ -128,13 +95,6 @@ def map_insert(attrs: Column, key: str, value: Column) -> Column:
     )
 
 
-def map_update(attrs: Column, key: str, value: Column) -> Column:
-    """attraction UPDATE: only when key present."""
-    return F.when(F.element_at(attrs, key).isNull(), attrs).otherwise(
-        map_set(attrs, key, value)
-    )
-
-
 def map_delete_key(attrs: Column, key: str) -> Column:
     """OTTL delete_key / attraction DELETE."""
     return F.map_filter(attrs, lambda k, _: k != F.lit(key))
@@ -164,19 +124,6 @@ def map_hash_key(attrs: Column, key: str, algo: str = "sha256") -> Column:
         "md5": F.md5(v),
     }[algo]
     return F.when(v.isNull(), attrs).otherwise(map_set(attrs, key, hashed))
-
-
-def map_extract(attrs: Column, key: str, pattern: str, group_names: list[str]) -> Column:
-    """attraction EXTRACT: regex named groups from attrs[key] upserted
-    as new keys (attraction.go extract)."""
-    v = F.element_at(attrs, key)
-    out = attrs
-    for i, g in enumerate(group_names, start=1):
-        ext = F.regexp_extract(v, pattern, i)
-        out = F.when(v.isNull() | ~v.rlike(pattern), out).otherwise(
-            map_set(out, g, ext)
-        )
-    return out
 
 
 def map_merge(a: Column, b: Column, strategy: str = "upsert") -> Column:
@@ -226,17 +173,6 @@ def map_replace_all_patterns(attrs: Column, pattern: str, replacement: str, mode
         F.transform(entries, lambda e: F.regexp_replace(e["key"], pattern, replacement)),
         F.transform(entries, lambda e: e["value"]),
     )
-
-
-def map_flatten(attrs: Column, nested: Column, prefix: str) -> Column:
-    """OTTL flatten: fold a nested map into the parent with
-    dotted-prefix keys."""
-    entries = F.map_entries(nested)
-    prefixed = F.map_from_arrays(
-        F.transform(entries, lambda e: F.concat(F.lit(prefix + "."), e["key"])),
-        F.transform(entries, lambda e: e["value"]),
-    )
-    return F.map_concat(attrs, prefixed)
 
 
 # ---------------------------------------------------------------------------

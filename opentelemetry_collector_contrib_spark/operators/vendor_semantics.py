@@ -251,22 +251,6 @@ def sumologic_cloud_namespace(attrs: Column) -> Column:
     ).otherwise(attrs)
 
 
-def sumologic_translate_attributes(attrs: Column) -> Column:
-    """OpenTelemetry -> Sumo Logic attribute renames
-    (translate_attributes_processor.go:86-111): an entry is renamed
-    only when its target key is NOT already present in the original
-    map (insert-without-overwrite), and among several entries landing
-    on one result key the FIRST in entry order wins.
-
-    Note: the reference iterates a Go map (random order), so its
-    collision winner is nondeterministic run-to-run; this engine pins
-    entry order — deterministic, and identical whenever a record
-    carries at most one source per target (the normal case).
-    """
-    entries = _sumo_renamed_entries(attrs)
-    return _sumo_first_wins_map(entries, _sumo_entry_keys(entries))
-
-
 def _sumo_renamed_entries(
     attrs: Column, table: dict[str, str] | None = None
 ) -> Column:
@@ -335,9 +319,8 @@ def sumologic_semantics(
         *passthrough,
         sumologic_cloud_namespace(F.col(attrs_col)).alias("_a1"),
     )
-    # rename pass: per-entry target lookup against the STAGED map —
-    # same building blocks as sumologic_translate_attributes (single
-    # source of the rename rule)
+    # rename pass: per-entry target lookup against the STAGED map
+    # (_sumo_renamed_entries is the single source of the rename rule)
     s2 = s1.select(
         "*", _sumo_renamed_entries(F.col("_a1")).alias("_entries")
     ).drop("_a1")

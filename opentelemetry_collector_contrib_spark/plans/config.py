@@ -121,34 +121,3 @@ def build_pipeline(
             default=config.get("default_route", "default"),
         )
     return df
-
-
-def metrics_from_config(df: DataFrame, metric_cfgs: list[Mapping]) -> dict[str, DataFrame]:
-    """signaltometrics section: each entry is a MetricInfo-shaped dict
-    (name, type key holding {value, ...}, attributes, conditions) ->
-    one aggregated DataFrame per metric (the connector's per-metric
-    output streams)."""
-    from ..operators.signaltometrics import MetricInfo, signal_to_metrics
-
-    out: dict[str, DataFrame] = {}
-    for cfg in metric_cfgs:
-        mtype = next(
-            t for t in ("sum", "gauge", "histogram", "exponential_histogram")
-            if t in cfg
-        )
-        body = cfg[mtype]
-        info = MetricInfo(
-            name=cfg["name"],
-            metric_type=mtype,
-            value=body["value"],
-            description=cfg.get("description", ""),
-            conditions=tuple(cfg.get("conditions", ())),
-            attributes=tuple(
-                (a["key"], a["default_value"]) if "default_value" in a
-                else (a["key"],)
-                for a in cfg.get("attributes", ())
-            ),
-            **({"buckets": body["buckets"]} if "buckets" in body else {}),
-        )
-        out[cfg["name"]] = signal_to_metrics(df, info)
-    return out

@@ -22,7 +22,6 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..model import severity_band_text, severity_number
 from ..operators import transform as TR
 from ..operators.aggregate import (
     alert_rule,
@@ -38,7 +37,7 @@ from ..operators.aggregate import (
 )
 from ..operators.enrich import broadcast_enrich
 from ..operators.filter import filter_processor, tail_sampler
-from ..operators.parse import json_parser, keyvalue_parser
+from ..operators.parse import json_parser, keyvalue_parser, severity_parser
 from ..operators.route import Route, apply_routes
 
 from .base import QueryFn, load  # noqa: E402
@@ -170,8 +169,7 @@ def q_severity_parser(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("event_type") == "purchase", "warning")  # alias -> warn
         .otherwise("info")
     )
-    out = ev.withColumn("severity_number", severity_number(sev_text_raw).cast("int"))
-    out = out.withColumn("severity_text", severity_band_text(F.col("severity_number")))
+    out = severity_parser(ev, sev_text_raw)
     return (
         out.groupBy("severity_number", "severity_text")
         .agg(F.count(F.lit(1)).alias("n"))

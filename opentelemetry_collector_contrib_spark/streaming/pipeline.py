@@ -27,7 +27,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -83,74 +83,6 @@ def routed_foreach_batch_writer(root: str, route_col: str = "route"):
 # stateful session recombine (applyInPandasWithState)
 # ---------------------------------------------------------------------------
 
-ALERT_OUTPUT_SCHEMA = (
-    "rule_key string, window_start timestamp, metric double, streak int"
-)
-ALERT_STATE_SCHEMA = "streak int, last_window long"
-
-
-def make_alert_persistence_fn(threshold: float, for_windows: int, window_sec: int):
-    """alertsgen `for:` duration in streaming form: per rule group,
-    count CONSECUTIVE breaching windows in state; emit only once the
-    streak reaches ``for_windows`` (rules.go `for:` persistence +
-    dedup fingerprint semantics). A gap or non-breach resets the
-    streak."""
-
-    def fn(key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        (rule_key,) = key
-        if state.exists:
-            streak, last_window = state.get
-        else:
-            streak, last_window = 0, -1
-
-        rows = []
-        for pdf in pdf_iter:
-            # zip over numpy columns, not iterrows: the state machine is
-            # sequential per group but per-row extraction cost is the
-            # hot loop at millions of groups/microbatch (~10x cheaper)
-            rows.extend(zip(pdf["window_start"], pdf["metric"].astype(float)))
-        rows.sort(key=lambda t: t[0])
-
-        out = []
-        for window_start, metric in rows:
-            epoch = int(window_start.timestamp())
-            breach = metric > threshold
-            consecutive = last_window < 0 or epoch - last_window == window_sec
-            streak = (streak + 1) if (breach and consecutive) else (1 if breach else 0)
-            last_window = epoch
-            if streak >= for_windows:
-                out.append(
-                    {
-                        "rule_key": rule_key,
-                        "window_start": window_start,
-                        "metric": metric,
-                        "streak": streak,
-                    }
-                )
-        state.update((streak, last_window))
-        if out:
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def stream_alert_rule(
-    windowed: DataFrame,
-    threshold: float,
-    for_windows: int,
-    window_sec: int,
-    key_col: str = "rule_key",
-) -> DataFrame:
-    """Stateful streaming threshold rule over pre-windowed metrics
-    (columns: key_col, window_start, metric)."""
-    return windowed.groupBy(key_col).applyInPandasWithState(
-        make_alert_persistence_fn(threshold, for_windows, window_sec),
-        outputStructType=ALERT_OUTPUT_SCHEMA,
-        stateStructType=ALERT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
 
 RECOMBINE_OUTPUT_SCHEMA = (
     "conv_id string, session_start long, text string, n_turns int, closed boolean"
@@ -205,7 +137,9 @@ def _recombine_fn(
 
     rows: list[tuple[int, bool, str]] = []
     for pdf in pdf_iter:
-        # numpy column zip, not iterrows (see make_alert_persistence_fn)
+        # zip over numpy columns, not iterrows: the state machine is
+        # sequential per group but per-row extraction cost is the hot
+        # loop at millions of groups/microbatch (~10x cheaper)
         rows.extend(
             zip(
                 pdf["turn_idx"].astype(int),

@@ -45,10 +45,11 @@ def test_config_driven_pipeline(spark):
 
 
 def test_config_schema_span_and_metrics(spark):
-    from opentelemetry_collector_contrib_spark.plans.config import (
-        build_pipeline,
-        metrics_from_config,
+    from opentelemetry_collector_contrib_spark.operators.signaltometrics import (
+        MetricInfo,
+        signal_to_metrics,
     )
+    from opentelemetry_collector_contrib_spark.plans.config import build_pipeline
 
     df = spark.createDataFrame(
         [
@@ -73,17 +74,13 @@ def test_config_schema_span_and_metrics(spark):
     assert rows[0]["attributes"]["net.sock.peer.addr"] == "1.2.3.4"
     assert "net.peer.ip" not in rows[0]["attributes"]
 
-    # signaltometrics config section (connector README yaml shape)
-    metrics = metrics_from_config(
-        out,
-        [
-            {
-                "name": "op.value.sum",
-                "sum": {"value": 'Double(attributes["value"])'},
-                "attributes": [{"key": "operation"}],
-            }
-        ],
+    # signaltometrics over the configured pipeline's output
+    info = MetricInfo(
+        name="op.value.sum",
+        metric_type="sum",
+        value='Double(attributes["value"])',
+        attributes=(("operation",),),
     )
     got = {r["operation"]: r["op.value.sum"]
-           for r in metrics["op.value.sum"].collect()}
+           for r in signal_to_metrics(out, info).collect()}
     assert got == {"read": 5.0, "write": 7.0}

@@ -185,16 +185,3 @@ def test_frame_sample_fanout(spark):
     # 200 // 64 = 3 frames: 64, 64, 64 bytes (slices), remaining 8 not sampled
     assert len(frames) == 3
     assert [len(f["frame_bytes"]) for f in frames] == [64, 64, 64]
-
-
-def test_decode_image_is_explicit_stub():
-    from opentelemetry_collector_contrib_spark.operators.multimodal import decode_image
-
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("PIL present; stub not exercised")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError):
-        decode_image(b"notanimage")

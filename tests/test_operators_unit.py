@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from opentelemetry_collector_contrib_spark.functions.ottl import ExtractPatterns
 from opentelemetry_collector_contrib_spark.operators import transform as TR
 from opentelemetry_collector_contrib_spark.operators.aggregate import (
     alert_rule,
@@ -20,7 +21,6 @@ from opentelemetry_collector_contrib_spark.operators.aggregate import (
 from opentelemetry_collector_contrib_spark.operators.enrich import (
     broadcast_enrich,
     range_enrich,
-    stamp_constants,
 )
 from opentelemetry_collector_contrib_spark.operators.filter import (
     filter_processor,
@@ -29,7 +29,6 @@ from opentelemetry_collector_contrib_spark.operators.filter import (
 from opentelemetry_collector_contrib_spark.operators.route import (
     Route,
     apply_routes,
-    split_by_route,
 )
 
 
@@ -51,7 +50,8 @@ def test_map_set_and_insert_and_update(attrs_df):
     assert got[1] == {"a": "1", "b": "9"} and got[2] == {"b": "9"}
     got = _attrs(attrs_df, TR.map_insert(a, "b", F.lit("9")))
     assert got[1]["b"] == "2" and got[3] == {"b": "9"}  # only-if-absent
-    got = _attrs(attrs_df, TR.map_update(a, "b", F.lit("9")))
+    update = F.create_map(F.lit("b"), F.lit("9"))
+    got = _attrs(attrs_df, TR.map_merge(a, update, "update"))
     assert got[1]["b"] == "9" and got[3] == {}  # only-if-present
 
 
@@ -80,8 +80,10 @@ def test_map_extract_and_hash(spark):
     df = spark.createDataFrame(
         [(1, {"line": "user=alice id=7"})], "id long, attrs map<string,string>"
     )
-    ext = TR.map_extract(
-        F.col("attrs"), "line", r"user=(\w+) id=(\d+)", ["user", "uid"]
+    # attraction EXTRACT: named groups of one value upserted into the map
+    line = F.element_at("attrs", F.lit("line"))
+    ext = TR.map_merge(
+        F.col("attrs"), ExtractPatterns(line, r"user=(?<user>\w+) id=(?<uid>\d+)")
     )
     got = df.select(ext.alias("out")).collect()[0]["out"]
     assert got["user"] == "alice" and got["uid"] == "7"
@@ -93,14 +95,6 @@ def test_map_extract_and_hash(spark):
     assert hashed["pw"] == (
         "2bb80d537b1da3e38bd30361aa855686bde0eacd7162fef6a25fe97bf527a25b"
     )
-
-
-def test_unquote_and_regex_replace(spark):
-    df = spark.createDataFrame([('"quoted"',), ("plain",)], "v string")
-    got = [r["v"] for r in TR.unquote_field(df, "v").collect()]
-    assert got == ["quoted", "plain"]
-    df2 = spark.createDataFrame([("a-b-c",)], "v string")
-    assert TR.regex_replace_field(df2, "v", "-", "_").collect()[0]["v"] == "a_b_c"
 
 
 # ---------------------------------------------------------------------------
@@ -119,13 +113,11 @@ def test_broadcast_enrich_insert_if_absent(spark):
     assert out[3] is None          # unknown key -> left-join null path
 
 
-def test_range_enrich_and_constants(spark):
+def test_range_enrich(spark):
     fact = spark.createDataFrame([(5,), (15,), (99,)], "v int")
     dim = spark.createDataFrame([(0, 9, "low"), (10, 19, "mid")], "lo int, hi int, band string")
     got = {r["v"]: r["band"] for r in range_enrich(fact, dim, "v", "lo", "hi").collect()}
     assert got == {5: "low", 15: "mid", 99: None}
-    st = stamp_constants(fact, {"env": "prod"}).collect()[0]
-    assert st["env"] == "prod"
 
 
 # ---------------------------------------------------------------------------
@@ -145,8 +137,8 @@ def test_route_first_match_wins_and_null_is_false(spark):
     got = {r["id"]: r["route"] for r in routed.collect()}
     # id=4: sev NULL -> condition NULL -> treated false (error_mode=ignore)
     assert got == {1: "alerts", 2: "tools", 3: "rest", 4: "rest"}
-    sinks = split_by_route(routed, ["alerts", "tools", "rest"])
-    assert sum(s.count() for s in sinks.values()) == df.count()  # sent==received
+    sent = routed.groupBy("route").count().collect()
+    assert sum(r["count"] for r in sent) == df.count()  # sent==received
 
 
 # ---------------------------------------------------------------------------
@@ -341,3 +333,20 @@ def test_time_parser_epoch_units(spark):
             .first()["us"]
         )
         assert us // 1_000_000 == base, (unit, us)
+
+
+@pytest.mark.parametrize("protocol, line", [
+    ("rfc5424", "<165>1 2003-10-11T22:14:15.003Z host app 42 ID47 - hello"),
+    ("rfc3164", "<34>Oct 11 22:14:15 mymachine su: 'su root' failed"),
+], ids=["rfc5424", "rfc3164"])
+def test_syslog_parser_keeps_non_syslog_line(spark, protocol, line):
+    from opentelemetry_collector_contrib_spark.operators.parse import syslog_parser
+
+    df = spark.createDataFrame([(1, line), (2, "not a syslog line")], "id long, body string")
+    rows = {r["id"]: r for r in syslog_parser(df, protocol=protocol).collect()}
+    assert (rows[1]["facility"], rows[1]["severity_number"]) == (
+        (20, 13) if protocol == "rfc5424" else (4, 22))
+    bad = rows[2]  # on_error send: the row stays, its typed fields are NULL
+    assert bad["syslog_priority"] is None and bad["severity_number"] is None
+    if protocol == "rfc5424":
+        assert bad["syslog_version"] is None and bad["syslog_ts"] is None

@@ -168,47 +168,13 @@ def test_stream_recombine_max_batch_size_bounds_state(spark, tmp_path):
     assert flushed == [(0, 3, False), (3, 3, False), (6, 1, False)]
 
 
-def test_stream_alert_for_persistence(spark, tmp_path):
-    from opentelemetry_collector_contrib_spark.streaming.pipeline import stream_alert_rule
-
-    # one rule key; windows 60s apart; breaches (>5): w1,w2,w3 then gap
-    rows = [
-        ("r1", "2024-01-01 00:00:00", 9.0),
-        ("r1", "2024-01-01 00:01:00", 8.0),
-        ("r1", "2024-01-01 00:02:00", 7.0),
-        ("r1", "2024-01-01 00:03:00", 1.0),   # streak reset
-        ("r1", "2024-01-01 00:04:00", 9.0),   # streak 1 only -> no fire
-        ("r2", "2024-01-01 00:00:00", 9.0),   # isolated breach
-    ]
-    import pyspark.sql.functions as F
-
-    df = spark.createDataFrame(rows, "rule_key string, window_start string, metric double")
-    df = df.withColumn("window_start", F.to_timestamp("window_start"))
-    d = str(tmp_path / "alerts-in")
-    df.coalesce(1).write.parquet(d)
-    stream = spark.readStream.schema(
-        "rule_key string, window_start timestamp, metric double"
-    ).parquet(d)
-    fired = stream_alert_rule(stream, threshold=5.0, for_windows=2, window_sec=60)
-    _run(fired, tmp_path, "alerts")
-    got = [
-        (r["rule_key"], str(r["window_start"]), r["streak"])
-        for r in spark.sql("select * from alerts order by window_start").collect()
-    ]
-    # fires at windows 2 and 3 of the first streak only
-    assert got == [
-        ("r1", "2024-01-01 00:01:00", 2),
-        ("r1", "2024-01-01 00:02:00", 3),
-    ]
-
-
 def test_stream_alert_fingerprint_dedup(spark, tmp_path):
     """`for:` persistence composed with the dedup fingerprint stage:
-    repeated fires of the same (rule, labels) within the dedup window
-    emit once (alertsgen dedup.Deduper semantics)."""
+    the rule's fires, streamed, emit once per (rule, labels) within the
+    dedup window (alertsgen dedup.Deduper semantics)."""
+    from opentelemetry_collector_contrib_spark.operators.aggregate import alert_rule
     from opentelemetry_collector_contrib_spark.streaming.pipeline import (
         stream_alert_dedup,
-        stream_alert_rule,
     )
 
     rows = [
@@ -220,20 +186,17 @@ def test_stream_alert_fingerprint_dedup(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "rule_key string, window_start string, metric double")
     df = df.withColumn("window_start", F.to_timestamp("window_start"))
+    fired = alert_rule(df, "metric", 5.0, for_windows=2, group_by=["rule_key"])
     d = str(tmp_path / "alerts-fp-in")
-    df.coalesce(1).write.parquet(d)
+    fired.coalesce(1).write.parquet(d)
     stream = spark.readStream.schema(
         "rule_key string, window_start timestamp, metric double"
     ).parquet(d)
-    fired = stream_alert_rule(stream, threshold=5.0, for_windows=2, window_sec=60)
-    deduped = stream_alert_dedup(fired, "high_metric", ["rule_key"])
+    deduped = stream_alert_dedup(stream, "high_metric", ["rule_key"])
     _run(deduped, tmp_path, "alerts_fp")
-    got = sorted(
-        (r["rule_key"], r["streak"])
-        for r in spark.sql("select * from alerts_fp").collect()
-    )
+    got = sorted(r["rule_key"] for r in spark.sql("select * from alerts_fp").collect())
     # r1 fired twice (streaks 2,3) but dedups to ONE alert; r2 once
-    assert [k for k, _ in got] == ["r1", "r2"]
+    assert got == ["r1", "r2"]
 
 
 def test_iceberg_sink_fallback(spark, tmp_path):
