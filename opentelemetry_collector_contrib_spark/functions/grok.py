@@ -97,7 +97,6 @@ class GrokError(ValueError):
 
 def compile_grok(
     pattern: str,
-    library: dict[str, str] | None = None,
     _depth: int = 0,
 ) -> tuple[str, list[tuple[str, str]]]:
     """Expand a grok expression to (java_regex, [(field, cast_type)]).
@@ -108,14 +107,13 @@ def compile_grok(
     """
     if _depth > 16:
         raise GrokError("grok recursion too deep (cyclic pattern?)")
-    lib = {**PATTERNS, **(library or {})}
     fields: list[tuple[str, str]] = []
 
     def repl(m: re.Match) -> str:
         name, field, typ = m.group(1), m.group(2), m.group(3)
-        if name not in lib or not lib[name]:
+        if not PATTERNS.get(name):
             raise GrokError(f"unknown grok pattern %{{{name}}}")
-        sub, sub_fields = compile_grok(lib[name], library, _depth + 1)
+        sub, sub_fields = compile_grok(PATTERNS[name], _depth + 1)
         if field:
             # Java assigns group numbers by '(' position: the outer
             # group opens before any nested sub-captures.
@@ -182,7 +180,7 @@ def compile_grok(
 
 
 def grok_columns(
-    source: Column, pattern: str, library: dict[str, str] | None = None
+    source: Column, pattern: str
 ) -> dict[str, Column]:
     """Compile grok and return {field: typed Column} via regexp_extract.
 
@@ -191,7 +189,7 @@ def grok_columns(
     codegen). Non-matching rows yield NULL (grok no-match semantics:
     reference returns empty map -> no attrs set).
     """
-    regex, fields = compile_grok(pattern, library)
+    regex, fields = compile_grok(pattern)
     # group index = position among *capturing* groups, 1-based, in the
     # order compile_grok appended them
     cols: dict[str, Column] = {}

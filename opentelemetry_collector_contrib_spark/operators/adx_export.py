@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .faro import _shortest_double
 from .syslog_export import _rfc3339nano
 
 _ENTRY_T = "array<struct<key:string,value:string>>"
@@ -65,12 +66,6 @@ def _merge_last_wins(*entry_arrays: Column) -> Column:
     return F.map_from_entries(F.filter(
         rev, lambda e, i: ~F.exists(F.slice(rev, F.lit(1), i),
                                     lambda p: p["key"] == e["key"])))
-
-
-def _shortest(v: Column) -> Column:
-    return F.when(v == F.floor(v),
-                  v.cast("long").cast("string")) \
-        .otherwise(v.cast("string"))
 
 
 def adx_log_rows(df: DataFrame, *, id_cols: list[str]) -> DataFrame:
@@ -203,7 +198,7 @@ def adx_metric_rows(df: DataFrame, *, id_cols: list[str],
         cum = F.transform(
             bounds,
             lambda b, i: F.struct(
-                _shortest(b).alias("le"),
+                _shortest_double(b).alias("le"),
                 F.aggregate(F.slice(counts, F.lit(1), i + 1),
                             F.lit(0).cast("bigint"),
                             lambda acc, x: acc + x).alias("v")))
@@ -238,12 +233,12 @@ def adx_metric_rows(df: DataFrame, *, id_cols: list[str],
             "array<struct<q:double,v:double>>"))
         fan = df.withColumn("_qv", F.explode(q))
         qname = F.concat(name, F.lit("_"),
-                         _shortest(F.col("_qv")["q"]))
+                         _shortest_double(F.col("_qv")["q"]))
         q_entries = F.array(
             F.struct(F.lit("qt").alias("key"),
-                     _shortest(F.col("_qv")["q"]).alias("value")),
+                     _shortest_double(F.col("_qv")["q"]).alias("value")),
             F.struct(qname.alias("key"),
-                     _shortest(F.col("_qv")["v"]).alias("value")))
+                     _shortest_double(F.col("_qv")["v"]).alias("value")))
         q_attrs = _merge_last_wins(scope, q_entries, dp_entries)
         q_r = out(fan, qname,
                   F.concat(desc, F.lit("(Count of samples)")),

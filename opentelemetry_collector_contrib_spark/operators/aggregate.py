@@ -27,21 +27,19 @@ def count_connector(
     group_by: list[str],
     condition: Column | None = None,
     metric_name: str = "count",
-    require_attrs: bool = True,
 ) -> DataFrame:
     """connector/countconnector/counter.go:38-106 semantics.
 
     - optional OTTL condition filters rows first;
     - rows missing any grouped attribute (NULL, no default) are NOT
-      counted (counter.go:70-73) when ``require_attrs``;
+      counted (counter.go:70-73);
     - output is the delta-sum datapoint set: group tuple + value.
     """
     out = df
     if condition is not None:
         out = out.filter(condition)
-    if require_attrs and group_by:
-        for g in group_by:
-            out = out.filter(F.col(g).isNotNull())
+    for g in group_by:
+        out = out.filter(F.col(g).isNotNull())
     if group_by:
         return out.groupBy(*group_by).agg(F.count(F.lit(1)).alias(metric_name))
     return out.agg(F.count(F.lit(1)).alias(metric_name))
@@ -51,19 +49,13 @@ def sum_connector(
     df: DataFrame,
     value: str | Column,
     group_by: list[str],
-    condition: Column | None = None,
     metric_name: str = "sum",
-    require_attrs: bool = True,
 ) -> DataFrame:
     """connector/sumconnector: count's shape, summing a numeric attr."""
-    out = df
-    if condition is not None:
-        out = out.filter(condition)
     v = F.col(value) if isinstance(value, str) else value
-    out = out.filter(v.isNotNull())
-    if require_attrs and group_by:
-        for g in group_by:
-            out = out.filter(F.col(g).isNotNull())
+    out = df.filter(v.isNotNull())
+    for g in group_by:
+        out = out.filter(F.col(g).isNotNull())
     if group_by:
         return out.groupBy(*group_by).agg(F.sum(v).alias(metric_name))
     return out.agg(F.sum(v).alias(metric_name))
@@ -102,7 +94,6 @@ def log_dedup(
     key_cols: list[str],
     ts_col: str = "ts",
     interval: str = "10 seconds",
-    count_col: str = "log_count",
 ) -> DataFrame:
     """Within each tumbling ``interval``, collapse identical records
     (the record-identity hash minus exclude_fields ≙ ``key_cols``) to
@@ -120,7 +111,7 @@ def log_dedup(
         df.groupBy(win.alias("window"), *key_cols)
         .agg(
             F.min(keep_first).alias("__first"),
-            F.count(F.lit(1)).alias(count_col),
+            F.count(F.lit(1)).alias("log_count"),
             F.min(t).alias("first_observed_ts"),
             F.max(t).alias("last_observed_ts"),
         )
@@ -131,7 +122,7 @@ def log_dedup(
         [F.col("window.start").alias("window_start")]
         + [F.col(c) for c in key_cols]
         + [_row_field(df, "__first.row", c) for c in other]
-        + [F.col(count_col), F.col("first_observed_ts"), F.col("last_observed_ts")]
+        + [F.col("log_count"), F.col("first_observed_ts"), F.col("last_observed_ts")]
     )
     return agg.select(*sel)
 
@@ -427,22 +418,6 @@ def _interval_seconds(s: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# interval processor (processor/intervalprocessor/processor.go:72-150)
-# ---------------------------------------------------------------------------
-
-def interval_last(
-    df: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    interval: str = "60 seconds",
-) -> DataFrame:
-    """Collapse to last-datapoint-per-interval per stream key."""
-    win = F.window(F.col(ts_col), interval)
-    w = W.partitionBy(win, *key_cols).orderBy(F.col(ts_col).desc())
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-
-
-# ---------------------------------------------------------------------------
 # delta <-> cumulative <-> rate
 # ---------------------------------------------------------------------------
 
@@ -484,19 +459,19 @@ def delta_to_rate(
 # groupbyattrs (processor/groupbyattrsprocessor/processor.go:63-100)
 # ---------------------------------------------------------------------------
 
-def group_by_attrs(df: DataFrame, promote: list[str], resource_col: str = "resource") -> DataFrame:
+def group_by_attrs(df: DataFrame, promote: list[str]) -> DataFrame:
     """Move listed attribute columns into the resource struct (re-key).
 
     Grouping under the new resource is physical-only in Spark —
     partitioned writes / later groupBys pick it up; no shuffle here.
     """
     existing = (
-        [F.col(f"{resource_col}.{f.name}") for f in df.schema[resource_col].dataType.fields]
-        if resource_col in df.columns
+        [F.col(f"resource.{f.name}") for f in df.schema["resource"].dataType.fields]
+        if "resource" in df.columns
         else []
     )
     new_res = F.struct(*existing, *[F.col(c).alias(c) for c in promote])
-    return df.withColumn(resource_col, new_res).drop(*promote)
+    return df.withColumn("resource", new_res).drop(*promote)
 
 
 # ---------------------------------------------------------------------------
@@ -508,13 +483,12 @@ def alert_windows(
     group_by: list[str],
     ts_col: str = "ts",
     window: str = "5 seconds",
-    slide: str | None = None,
     exprs: dict[str, Column] | None = None,
 ) -> DataFrame:
     """Sliding/tumbling window aggregation per rule group
     (alertsgenconnector/rules.go:61-139: avg/rate/count/quantile over a
     5 s window grouped by labels)."""
-    win = F.window(F.col(ts_col), window, slide or window)
+    win = F.window(F.col(ts_col), window)
     exprs = exprs or {"value_count": F.count(F.lit(1))}
     aggs = [c.alias(name) for name, c in exprs.items()]
     return (
@@ -574,7 +548,6 @@ def alert_absent(
     df: DataFrame,
     group_by: list[str],
     groups: DataFrame,
-    ts_col: str = "ts",
     window: str = "5 seconds",
 ) -> DataFrame:
     """absent_over_time (rules.go:128-132): fire for every
@@ -588,7 +561,7 @@ def alert_absent(
     tiny next to the event volume; the anti-join's observed side is a
     pre-aggregated (group, window) set, one map-side-combined shuffle
     of distinct keys, never raw events."""
-    win = F.window(F.col(ts_col), window)
+    win = F.window(F.col("ts"), window)
     observed = (
         df.groupBy(win.alias("w"), *group_by)
         .agg(F.count(F.lit(1)).alias("__n"))
@@ -619,19 +592,17 @@ def storm_limit(
     alerts: DataFrame,
     max_per_minute: int,
     ts_col: str = "window_start",
-    rule_col: str | None = None,
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """Storm limiter (storm.NewLimiter(cfg.Storm.MaxAlertsPerMinute),
-    factory.go:121): cap emitted alerts per minute (per rule when
-    ``rule_col``); deterministic keep-order = (ts, order_cols) so
-    re-runs emit the identical subset. One window shuffle over the
+    factory.go:121): cap emitted alerts per minute; deterministic
+    keep-order = (ts, order_cols) so re-runs emit the identical
+    subset. One window shuffle over the
     already-aggregated alert stream — negligible at any scale."""
     keys = [F.date_trunc("minute", F.col(ts_col)).alias("__minute")]
-    part = ["__minute"] + ([rule_col] if rule_col else [])
     order = [F.col(ts_col)] + [F.col(c) for c in (order_cols or [])]
     out = alerts.withColumn("__minute", keys[0])
-    w = W.partitionBy(*part).orderBy(*order)
+    w = W.partitionBy("__minute").orderBy(*order)
     return (
         out.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= max_per_minute)
@@ -674,7 +645,6 @@ def k_smallest_exemplars(
     group_cols: list[str],
     id_col: str,
     k: int = 2,
-    salt_buckets: int = 64,
 ) -> DataFrame:
     """K smallest ``id_col`` values per group in O(K) state per task —
     the exemplar-accumulation analog of ``connector/
@@ -685,12 +655,12 @@ def k_smallest_exemplars(
     id of a hot bucket (billions of rows at 100 TB) in one aggregation
     buffer -> executor OOM.  Instead:
 
-    1. salt the group key (``xxhash64(id) % salt_buckets``) and take
+    1. salt the group key (``xxhash64(id) % 64``) and take
        ``row_number() <= k`` per (group, salt) — the sort runs per
-       *salt group*, so a hot bucket fans out across ``salt_buckets``
+       *salt group*, so a hot bucket fans out across 64
        tasks instead of serializing in one, and row_number streams in
        O(1) state over Spark's external (spill-safe) sort;
-    2. re-rank the <= salt_buckets*k survivors per group — a tiny
+    2. re-rank the <= 64*k survivors per group — a tiny
        second window;
     3. collect the final <= k ids (bounded by construction).
 
@@ -700,7 +670,7 @@ def k_smallest_exemplars(
     from pyspark.sql import Window
 
     ids = df.select(*group_cols, F.col(id_col).alias("__ex_id")).withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col("__ex_id")), F.lit(salt_buckets))
+        "__salt", F.pmod(F.xxhash64(F.col("__ex_id")), F.lit(64))
     )
     w1 = Window.partitionBy(*group_cols, "__salt").orderBy("__ex_id")
     cand = (

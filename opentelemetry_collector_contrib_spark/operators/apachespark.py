@@ -272,11 +272,9 @@ def _ent(metric, a1, a2, vi, vd, present=None):
 def spark_rest_metrics(
     df: DataFrame,
     application_names: list | None = None,
-    kind_col: str = "kind",
-    ts_col: str = "ts",
 ) -> DataFrame:
-    kind = F.col(kind_col)
-    base = df.select(kind.alias("_kind"), F.col(ts_col).alias("ts"),
+    kind = F.col("kind")
+    base = df.select(kind.alias("_kind"), F.col("ts").alias("ts"),
                      F.col("app_id"), F.col("app_name"),
                      F.col("body"))
 

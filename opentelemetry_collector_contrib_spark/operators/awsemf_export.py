@@ -55,16 +55,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .cloudwatch_export import _jstr
+
 OTELLIB = "OTelLib"
 STORAGE_RES_ATTR = "aws.emf.storage_resolution"
 DEFAULT_NAMESPACE = "default"
 
 _ENT_T = "struct<key:string,value:string>"
-
-
-def _jstr(c: Column) -> Column:
-    js = F.to_json(F.array(F.coalesce(c, F.lit(""))))
-    return F.substring(js, F.lit(2), F.length(js) - 2)
 
 
 def _num(c: Column) -> Column:

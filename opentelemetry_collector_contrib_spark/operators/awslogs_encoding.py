@@ -64,12 +64,11 @@ def vpc_flow_log_parse(
     *,
     id_cols: list[str],
     fields: list[str],
-    line_col: str = "line",
 ) -> DataFrame:
     # stage the split array: ~20 positional readers would otherwise
     # re-inline (and re-evaluate) the split per reference — the helix
     # lesson (PLANS.md session-4 addendum)
-    df = df.select("*", F.split(F.col(line_col), " ").alias("_vals"))
+    df = df.select("*", F.split(F.col("line"), " ").alias("_vals"))
     vals = F.col("_vals")
     n_fields = len(fields)
 
@@ -175,11 +174,10 @@ _WAF_SCHEMA = (
     "ja4Fingerprint:string>")
 
 
-def waf_log_parse(df: DataFrame, *, id_cols: list[str],
-                  line_col: str = "line") -> DataFrame:
+def waf_log_parse(df: DataFrame, *, id_cols: list[str]) -> DataFrame:
     # stage the parse: ~25 field readers re-inline from_json per
     # reference otherwise
-    df = df.select("*", F.from_json(F.col(line_col), _WAF_SCHEMA)
+    df = df.select("*", F.from_json(F.col("line"), _WAF_SCHEMA)
                    .alias("_waf"))
     j = F.col("_waf")
     acl = F.coalesce(j["webaclId"], F.lit(""))
@@ -277,8 +275,7 @@ _S3_INT_IDX = {9, 11, 12, 13, 14}
 _S3_TOKEN_RE = r'("[^"]*")|(\[[^\]]*\])|([^ ]+)'
 
 
-def s3_access_log_parse(df: DataFrame, *, id_cols: list[str],
-                        line_col: str = "line") -> DataFrame:
+def s3_access_log_parse(df: DataFrame, *, id_cols: list[str]) -> DataFrame:
     """One row per S3 server access log line (unmarshaler.go:95-256):
     quote-aware field scan (the bracketed timestamp is the Go
     two-token rejoin), "-" skips except the acl field, the
@@ -288,7 +285,7 @@ def s3_access_log_parse(df: DataFrame, *, id_cols: list[str],
     # stage the tokenization: 26 positional readers re-inline the
     # regexp_extract_all per reference otherwise (measured ~5x)
     df = df.select("*", F.regexp_extract_all(
-        F.col(line_col), F.lit(_S3_TOKEN_RE), F.lit(0))
+        F.col("line"), F.lit(_S3_TOKEN_RE), F.lit(0))
         .alias("_toks"))
     toks = F.col("_toks")
 
@@ -402,8 +399,7 @@ _CT_SCHEMA = (
     "errorMessage:string,sharedEventID:string>>>")
 
 
-def cloudtrail_log_parse(df: DataFrame, *, id_cols: list[str],
-                         body_col: str = "body") -> DataFrame:
+def cloudtrail_log_parse(df: DataFrame, *, id_cols: list[str]) -> DataFrame:
     """CloudTrail file -> one row per Records[] entry
     (unmarshaler.go:93-279): RFC3339 eventTime (bad time
     dead-letters), the field/semconv table with empty-skip gates,
@@ -413,7 +409,7 @@ def cloudtrail_log_parse(df: DataFrame, *, id_cols: list[str],
     parsed = df.select(
         *id_cols,
         F.posexplode(F.coalesce(
-            F.from_json(F.col(body_col), _CT_SCHEMA)["Records"],
+            F.from_json(F.col("body"), _CT_SCHEMA)["Records"],
             F.expr("array()").cast(
                 _CT_SCHEMA[len("struct<Records:"):-1])))
         .alias("_pos", "r"))

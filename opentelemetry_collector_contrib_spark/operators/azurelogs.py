@@ -467,8 +467,7 @@ def _fallback_body_tokens(r: Column, props: Column,
                     .otherwise(F.array().cast("array<string>")))
 
 
-def azurelogs_parse(df: DataFrame, line_col: str = "body",
-                    version: str = "v0.0.1") -> DataFrame:
+def azurelogs_parse(df: DataFrame, version: str = "v0.0.1") -> DataFrame:
     """Parse Azure Event Hub resource-log batches with the azurelogs
     (next-gen) translator. Adds per-record columns:
 
@@ -482,7 +481,7 @@ def azurelogs_parse(df: DataFrame, line_col: str = "body",
     barriers); records with unparsable timestamps are dropped exactly
     like resourcelogs_to_logs.go:111-115.
     """
-    line = F.col(line_col)
+    line = F.col("body")
     # stage the envelope parse: the ok-flag and the explode would
     # otherwise each re-evaluate the from_json (staging rule, PLANS.md)
     df = df.select(

@@ -186,24 +186,10 @@ def azuremonitor_metric_envelopes(
     df: DataFrame,
     *,
     id_cols: list[str],
-    name_col: str = "name",
-    mtype_col: str = "mtype",
-    ts_ns_col: str = "ts_ns",
-    attrs_col: str = "attrs",
-    res_attrs_col: str = "res_attrs",
-    scope_name_col: str = "scope_name",
-    scope_version_col: str = "scope_version",
-    is_int_col: str = "is_int",
-    vint_col: str = "vint",
-    vdouble_col: str = "vdouble",
-    count_col: str = "count",
-    sum_col: str = "sum",
-    min_col: str = "min",
-    max_col: str = "max",
 ) -> DataFrame:
-    mtype = F.col(mtype_col)
-    res = F.col(res_attrs_col)
-    is_int = F.col(is_int_col)
+    mtype = F.col("mtype")
+    res = F.col("res_attrs")
+    is_int = F.col("is_int")
     scalar = mtype.isin("gauge", "sum")
     agg = mtype.isin("histogram", "exphist", "summary")
 
@@ -211,31 +197,31 @@ def azuremonitor_metric_envelopes(
     value = F.when(
         scalar,
         F.when(is_int.isNull(), F.lit(0.0))        # EMPTY -> 0
-        .when(is_int, F.col(vint_col).cast("double"))
-        .otherwise(F.col(vdouble_col))) \
-        .otherwise(F.coalesce(F.col(sum_col), F.lit(0.0)))
+        .when(is_int, F.col("vint").cast("double"))
+        .otherwise(F.col("vdouble"))) \
+        .otherwise(F.coalesce(F.col("sum"), F.lit(0.0)))
 
     return df.where(scalar | agg).select(
         *id_cols,
-        F.col(name_col).alias("name"),
-        _rfc3339nano(F.col(ts_ns_col)).alias("time"),
+        F.col("name").alias("name"),
+        _rfc3339nano(F.col("ts_ns")).alias("time"),
         value.cast("double").alias("value"),
-        F.when(scalar, F.lit(1)).otherwise(F.col(count_col))
+        F.when(scalar, F.lit(1)).otherwise(F.col("count"))
         .cast("bigint").alias("dp_count"),
         F.when(scalar, F.lit("Measurement"))
         .otherwise(F.lit("Aggregation")).alias("dp_kind"),
         F.when(agg & ~(mtype == "summary"),
-               F.coalesce(F.col(min_col), F.lit(0.0)))
+               F.coalesce(F.col("min"), F.lit(0.0)))
         .alias("dp_min"),
         F.when(agg & ~(mtype == "summary"),
-               F.coalesce(F.col(max_col), F.lit(0.0)))
+               F.coalesce(F.col("max"), F.lit(0.0)))
         .alias("dp_max"),
         _cloud_role(res).alias("cloud_role"),
         res["service.instance.id"].alias("cloud_role_instance"),
         _props_csv(
             _ents(res),
-            _scope_ents(F.coalesce(F.col(scope_name_col), F.lit("")),
-                        F.coalesce(F.col(scope_version_col),
+            _scope_ents(F.coalesce(F.col("scope_name"), F.lit("")),
+                        F.coalesce(F.col("scope_version"),
                                    F.lit(""))),
-            _ents(F.col(attrs_col))).alias("properties"),
+            _ents(F.col("attrs"))).alias("properties"),
     )

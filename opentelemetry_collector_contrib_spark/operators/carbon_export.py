@@ -46,24 +46,12 @@ def carbon_export_lines(
     df: DataFrame,
     *,
     id_cols: list[str],
-    name_col: str = "name",
-    mtype_col: str = "mtype",
-    ts_ns_col: str = "ts_ns",
-    attrs_col: str = "attrs",
-    is_int_col: str = "is_int",
-    vint_col: str = "vint",
-    vdouble_col: str = "vdouble",
-    count_col: str = "count",
-    sum_col: str = "sum",
-    bounds_col: str = "bounds",
-    bucket_counts_col: str = "bucket_counts",
-    quantiles_col: str = "quantiles",
 ) -> DataFrame:
-    name, mtype = F.col(name_col), F.col(mtype_col)
+    name, mtype = F.col("name"), F.col("mtype")
 
     tags = F.array_join(F.transform(
         F.map_entries(F.coalesce(
-            F.col(attrs_col),
+            F.col("attrs"),
             F.expr("map()").cast("map<string,string>"))),
         lambda e: F.concat(
             F.lit(";"),
@@ -82,18 +70,18 @@ def carbon_export_lines(
             F.expr("array()").cast(_EMPTY_LNS))
 
     nil_s = F.lit("")
-    is_int = F.col(is_int_col)
+    is_int = F.col("is_int")
     number_lns = one(
         mtype.isin("gauge", "sum") & is_int.isNotNull(),
         ln(nil_s,
-           F.when(is_int, F.col(vint_col).cast("string"))
-           .otherwise(_fmt_f(F.col(vdouble_col))), nil_s))
+           F.when(is_int, F.col("vint").cast("string"))
+           .otherwise(_fmt_f(F.col("vdouble"))), nil_s))
 
-    sum_v = _fmt_f(F.coalesce(F.col(sum_col), F.lit(0.0)))
-    count_v = F.col(count_col).cast("string")
-    counts = F.coalesce(F.col(bucket_counts_col),
+    sum_v = _fmt_f(F.coalesce(F.col("sum"), F.lit(0.0)))
+    count_v = F.col("count").cast("string")
+    counts = F.coalesce(F.col("bucket_counts"),
                         F.expr("array()").cast("array<bigint>"))
-    bounds = F.coalesce(F.col(bounds_col),
+    bounds = F.coalesce(F.col("bounds"),
                         F.expr("array()").cast("array<double>"))
     hist = mtype == "histogram"
     hist_lns = F.concat(
@@ -116,7 +104,7 @@ def carbon_export_lines(
         one(summ, ln(F.lit(".count"), count_v, nil_s)),
         one(summ, ln(nil_s, sum_v, nil_s)),
         F.when(summ, F.transform(
-            F.coalesce(F.col(quantiles_col), F.expr("array()").cast(
+            F.coalesce(F.col("quantiles"), F.expr("array()").cast(
                 "array<struct<q:double,v:double>>")),
             lambda qv: ln(F.lit(".quantile"), _fmt_f(qv["v"]),
                           F.concat(F.lit(";quantile="),
@@ -126,7 +114,7 @@ def carbon_export_lines(
 
     out = df.where(name != "").select(
         *id_cols,
-        F.expr(f"CAST({ts_ns_col} AS BIGINT) div 1000000000")
+        F.expr("CAST(ts_ns AS BIGINT) div 1000000000")
         .cast("string").alias("_ts"),
         F.explode(F.concat(number_lns, hist_lns, summary_lns))
         .alias("_ln"),

@@ -60,8 +60,7 @@ def _earr() -> Column:
     return F.expr("array()").cast(_ENTRY_T)
 
 
-def _merge_with_suffix(base: Column, extra_map: Column,
-                       suffix: str = "_") -> Column:
+def _merge_with_suffix(base: Column, extra_map: Column) -> Column:
     """updateWithPrefixedValues collision rule (datasetexporter.go:
     106-133): keys from ``extra_map`` that already exist in ``base``
     get the distinguishing suffix appended (one level — fixtures
@@ -72,7 +71,7 @@ def _merge_with_suffix(base: Column, extra_map: Column,
         extra,
         lambda e: F.struct(
             F.when(F.exists(base, lambda b: b["key"] == e["key"]),
-                   F.concat(e["key"], F.lit(suffix)))
+                   F.concat(e["key"], F.lit("_")))
             .otherwise(e["key"]).alias("key"),
             e["value"].alias("value")))
     return F.concat(base, renamed)
@@ -95,9 +94,6 @@ def dataset_log_events(
     *,
     id_cols: list[str],
     server_host: str = "",
-    export_resource_info: bool = False,
-    export_scope_info: bool = True,
-    resource_prefix: str = "resource.",
     now_ns: int = 0,
 ) -> DataFrame:
     sev_num = F.coalesce(F.col("severity_number"), F.lit(0)).cast("int")
@@ -133,21 +129,13 @@ def dataset_log_events(
         F.when(span_id != "", _entry("span_id", span_id)),
         F.when(trace_id != "", _entry("trace_id", trace_id)),
     ), lambda e: e.isNotNull())
-    if export_resource_info:
-        res_pref = F.transform(
-            F.coalesce(F.map_entries(res), _earr()),
-            lambda e: F.struct(
-                F.concat(F.lit(resource_prefix), e["key"]).alias("key"),
-                e["value"].alias("value")))
-        built = F.concat(built, res_pref)
-    if export_scope_info:
-        scope_name = F.coalesce(F.col("scope_name"), F.lit(""))
-        built = F.concat(
-            built,
-            F.filter(F.array(F.when(scope_name != "",
-                                    _entry("scope.name", scope_name))),
-                     lambda e: e.isNotNull()),
-            F.coalesce(F.map_entries(F.col("scope_attrs")), _earr()))
+    scope_name = F.coalesce(F.col("scope_name"), F.lit(""))
+    built = F.concat(
+        built,
+        F.filter(F.array(F.when(scope_name != "",
+                                _entry("scope.name", scope_name))),
+                 lambda e: e.isNotNull()),
+        F.coalesce(F.map_entries(F.col("scope_attrs")), _earr()))
 
     merged = _merge_with_suffix(built, F.col("attrs"))
     return df.select(

@@ -141,13 +141,11 @@ def _z(c: Column) -> Column:
 
 def docker_container_stats(
     df: DataFrame,
-    stats_col: str = "stats",
-    container_col: str = "container",
     now_ns: int = 0,
 ) -> DataFrame:
-    s = F.from_json(F.col(stats_col), _STATS_SCHEMA)
-    c = F.from_json(F.col(container_col), _CONTAINER_SCHEMA)
-    base = [x for x in df.columns if x not in (stats_col, container_col)]
+    s = F.from_json(F.col("stats"), _STATS_SCHEMA)
+    c = F.from_json(F.col("container"), _CONTAINER_SCHEMA)
+    base = [x for x in df.columns if x not in ("stats", "container")]
     df = df.select(*base, s.alias("_s"), c.alias("_c"))
     s, c = F.col("_s"), F.col("_c")
 

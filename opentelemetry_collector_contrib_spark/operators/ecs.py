@@ -202,12 +202,10 @@ def _metrics_struct(c: Column, st: Column) -> Column:
 
 def ecs_task_metrics(
     df: DataFrame,
-    metadata_col: str = "metadata",
-    stats_col: str = "stats",
 ) -> DataFrame:
-    meta = F.from_json(F.col(metadata_col), _META)
-    stats = F.from_json(F.col(stats_col), _STATS)
-    base = [x for x in df.columns if x not in (metadata_col, stats_col)]
+    meta = F.from_json(F.col("metadata"), _META)
+    stats = F.from_json(F.col("stats"), _STATS)
+    base = [x for x in df.columns if x not in ("metadata", "stats")]
     df = df.select(*base, meta.alias("_meta"), stats.alias("_st"))
     meta, stats = F.col("_meta"), F.col("_st")
 

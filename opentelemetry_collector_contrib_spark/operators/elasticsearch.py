@@ -298,11 +298,10 @@ def _es_schema() -> str:
 
 def elasticsearch_node_stats(
     df: DataFrame,
-    body_col: str = "body",
     es_version: str = "7.17",
 ) -> DataFrame:
-    v = F.from_json(F.col(body_col), _es_schema())
-    base = [c for c in df.columns if c != body_col]
+    v = F.from_json(F.col("body"), _es_schema())
+    base = [c for c in df.columns if c != "body"]
     df = df.select(*base, v.alias("_v"))
     v = F.col("_v")
 
@@ -487,7 +486,7 @@ def elasticsearch_node_stats(
 
 
 def elasticsearch_cluster_health(
-    df: DataFrame, body_col: str = "body"
+    df: DataFrame
 ) -> DataFrame:
     """``/_cluster/health`` + ``/_cluster/stats`` documents → rows.
 
@@ -500,8 +499,8 @@ def elasticsearch_cluster_health(
     rows). Cluster stats contribute jvm heap used + the two cache
     eviction rows.
     """
-    v = F.try_parse_json(F.col(body_col))
-    base = [c for c in df.columns if c != body_col]
+    v = F.try_parse_json(F.col("body"))
+    base = [c for c in df.columns if c != "body"]
     df = df.select(*base, v.alias("_v"))
     v = F.col("_v")
     kind = F.col("kind")

@@ -24,7 +24,6 @@ def broadcast_enrich(
     dim: DataFrame,
     on: str | list[str],
     insert_if_absent: bool = True,
-    prefix: str = "",
 ) -> DataFrame:
     """Left-broadcast-join ``dim`` onto ``fact``.
 
@@ -40,14 +39,13 @@ def broadcast_enrich(
     fact_cols = set(fact.columns)
     values: dict[str, Column] = {}
     for c in dim_cols:
-        target = prefix + c
         dim_val = F.col(f"__dim_{c}")
-        if target in fact_cols and insert_if_absent:
-            existing = F.col(target)
+        if c in fact_cols and insert_if_absent:
+            existing = F.col(c)
             keep = existing.isNotNull() & (existing.cast("string") != "")
-            values[target] = F.when(keep, existing).otherwise(dim_val)
+            values[c] = F.when(keep, existing).otherwise(dim_val)
         else:
-            values[target] = dim_val
+            values[c] = dim_val
     # one projection for every field: the Spark driver analyses the
     # plan once, not once per field
     return out.withColumns(values).drop(*[f"__dim_{c}" for c in dim_cols])
@@ -71,15 +69,12 @@ def ip_to_long(ip: Column) -> Column:
 def geoip_enrich(
     fact: DataFrame,
     blocks: DataFrame,
-    ip_col: str = "client_ip",
-    lo_col: str = "ip_lo",
-    hi_col: str = "ip_hi",
 ) -> DataFrame:
     """geoipprocessor analog: IP -> block range lookup. Converts the
     dotted quad to int64 and range-joins against broadcast CIDR
     blocks (pre-expanded to [lo, hi] int ranges offline)."""
-    keyed = fact.withColumn("__ip_long", ip_to_long(F.col(ip_col)))
-    return range_enrich(keyed, blocks, "__ip_long", lo_col, hi_col).drop("__ip_long")
+    keyed = fact.withColumn("__ip_long", ip_to_long(F.col("client_ip")))
+    return range_enrich(keyed, blocks, "__ip_long", "ip_lo", "ip_hi").drop("__ip_long")
 
 
 def range_enrich(

@@ -292,7 +292,7 @@ def _meta_tokens(meta: Column, payload: Column) -> Column:
     return toks
 
 
-def faro_to_logs(df: DataFrame, payload_col: str = "body") -> DataFrame:
+def faro_to_logs(df: DataFrame) -> DataFrame:
     """One Faro payload JSON per row → exploded log-record rows with
     ``fr_body`` (logfmt line), ``fr_kind``, ``fr_hash`` /
     ``fr_drained`` (exceptions), ``fr_resource_attrs``, ``fr_ok``.
@@ -303,7 +303,7 @@ def faro_to_logs(df: DataFrame, payload_col: str = "body") -> DataFrame:
     the parse per reference (the awslogs staging rule, PLANS.md;
     measured ~6x here)."""
     df = df.select(
-        "*", F.from_json(F.col(payload_col), _FARO_SCHEMA).alias("_fr_p")
+        "*", F.from_json(F.col("body"), _FARO_SCHEMA).alias("_fr_p")
     )
     p = F.col("_fr_p")
     meta = p["meta"]
@@ -490,7 +490,7 @@ def faro_to_logs(df: DataFrame, payload_col: str = "body") -> DataFrame:
     staged = df.select(
         "*",
         p.isNotNull().alias("_fr_parsed"),
-        _meta_tokens(meta, F.col(payload_col)).alias("_fr_meta"),
+        _meta_tokens(meta, F.col("body")).alias("_fr_meta"),
         F.array_join(res_toks, ",").alias("fr_resource_attrs"),
         F.explode(items).alias("_fr_item"),
     )

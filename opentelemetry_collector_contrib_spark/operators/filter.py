@@ -34,31 +34,12 @@ def filter_processor(df: DataFrame, drop_conditions: list[Column]) -> DataFrame:
     return df.filter(~combined)
 
 
-def stanza_filter(
-    df: DataFrame,
-    expr: Column,
-    drop_ratio: float = 1.0,
-    key_cols: list[str] | None = None,
-    seed: int = 42,
-) -> DataFrame:
-    """Drop matching rows with probability ``drop_ratio`` —
-    deterministically: pmod(xxhash64(keys, seed), 1000) < ratio*1000
-    (the reference's dropCutoff scale)."""
-    cutoff = int(drop_ratio * 1000)
-    keys = [F.col(c) for c in (key_cols or df.columns)]
-    bucket = F.pmod(F.xxhash64(*keys, F.lit(seed)), F.lit(1000))
-    drop = F.coalesce(expr.cast("boolean"), F.lit(False)) & (bucket < cutoff)
-    return df.filter(~drop)
-
-
 def probabilistic_sampler(
     df: DataFrame,
     percent: float,
-    source_col: str = "trace_id",
-    seed: int = 22,
 ) -> DataFrame:
     """Consistent hash sampling: keep row iff
-    pmod(xxhash64(source, seed), 2^14) < percent% of 2^14.
+    pmod(xxhash64(trace_id, 22), 2^14) < percent% of 2^14.
 
     The reference uses FNV over the randomness source with hash_seed
     (logsprocessor.go:124-156); identical keys always sample the same
@@ -66,7 +47,7 @@ def probabilistic_sampler(
     """
     buckets = 1 << 14
     threshold = int(buckets * percent / 100.0)
-    h = F.pmod(F.xxhash64(F.col(source_col), F.lit(seed)), F.lit(buckets))
+    h = F.pmod(F.xxhash64(F.col("trace_id"), F.lit(22)), F.lit(buckets))
     return df.filter(h < threshold).withColumn(
         "sampling_threshold", F.lit(threshold)
     )
@@ -130,7 +111,6 @@ def rate_limited_sampler(
     sampled: DataFrame,
     group_col: str,
     per_second: int,
-    ts_col: str = "ts",
 ) -> DataFrame:
     """rate_limiting.go: cap sampled traces per second; deterministic
     keep order (first per group-min-ts, group id tiebreak) so re-runs
@@ -138,7 +118,7 @@ def rate_limited_sampler(
     set (small), not raw spans."""
     from pyspark.sql import Window as W
 
-    firsts = sampled.groupBy(group_col).agg(F.min(F.col(ts_col)).alias("__t0"))
+    firsts = sampled.groupBy(group_col).agg(F.min(F.col("ts")).alias("__t0"))
     w = W.partitionBy(F.date_trunc("second", F.col("__t0"))).orderBy(
         F.col("__t0"), F.col(group_col)
     )
@@ -153,7 +133,6 @@ def rate_limited_sampler(
 def remote_tap(
     df: DataFrame,
     limit_per_sec: float = 1.0,
-    ts_col: str = "ts",
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """remotetapprocessor's rate-limited tap (README `limit`: messages
@@ -168,16 +147,16 @@ def remote_tap(
     """
     from pyspark.sql.window import Window as W
 
-    order = [F.col(c) for c in (order_cols or [ts_col])]
+    order = [F.col(c) for c in (order_cols or ["ts"])]
     if limit_per_sec >= 1:
         quota = int(limit_per_sec)
-        bucket = F.date_trunc("second", F.col(ts_col))
+        bucket = F.date_trunc("second", F.col("ts"))
     else:
         # sub-1 rates (the reference default is 1, config allows e.g.
         # 0.5/sec): one row per 1/limit-second bucket
         quota = 1
         bucket = F.floor(
-            F.unix_timestamp(F.col(ts_col)) * F.lit(float(limit_per_sec))
+            F.unix_timestamp(F.col("ts")) * F.lit(float(limit_per_sec))
         )
     w = W.partitionBy(bucket).orderBy(*order)
     return (

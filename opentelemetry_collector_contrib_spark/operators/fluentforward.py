@@ -282,12 +282,12 @@ def _records(msg: bytes):
     raise MsgpackError("unable to determine event mode")
 
 
-def fluent_forward_to_logs(df: DataFrame, msg: str = "msg") -> DataFrame:
+def fluent_forward_to_logs(df: DataFrame) -> DataFrame:
     """Forward-protocol events (binary column) → log rows."""
-    passthrough = [c for c in df.columns if c != msg]
+    passthrough = [c for c in df.columns if c != "msg"]
     schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}"
-        for f in df.schema.fields if f.name != msg
+        for f in df.schema.fields if f.name != "msg"
     )
     out_schema = (schema + ", " if schema else "") + _OUT_SCHEMA
 
@@ -298,7 +298,7 @@ def fluent_forward_to_logs(df: DataFrame, msg: str = "msg") -> DataFrame:
             rows = []
             for t in pdf.itertuples(index=False):
                 base = {c: getattr(t, c) for c in passthrough}
-                raw = getattr(t, msg)
+                raw = t.msg
                 try:
                     mode, tag, ents, opts = _records(bytes(raw))
                     chunk = opts.get("chunk") if isinstance(

@@ -86,15 +86,15 @@ def _parses(s: Column) -> Column:
     return _nonempty(s) & _ts(s).isNotNull()
 
 
-def gitlab_pipeline_spans(df: DataFrame, body: str = "body") -> DataFrame:
+def gitlab_pipeline_spans(df: DataFrame) -> DataFrame:
     """Pipeline webhook JSON → (pipeline | stage | job) span rows.
 
     Input: any DataFrame with a JSON string column ``body`` (plus
     passthrough columns, kept). Output adds one row per span with
     gl_span_type / ids / name / ns timestamps / gl_service / gl_ok.
     """
-    passthrough = [c for c in df.columns if c != body]
-    p = df.select(*passthrough, F.from_json(F.col(body), _SCHEMA).alias("p"))
+    passthrough = [c for c in df.columns if c != "body"]
+    p = df.select(*passthrough, F.from_json(F.col("body"), _SCHEMA).alias("p"))
 
     oa = F.col("p.object_attributes")
     a = p.select(

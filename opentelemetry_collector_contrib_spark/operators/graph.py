@@ -12,7 +12,7 @@ dedup literature, e.g. the CCF/large-star-small-star family).
 Algorithm: iterative min-label propagation.  Each round every vertex
 takes the min label among itself and its neighbors; converges in
 O(component diameter) rounds — near-dup clusters are shallow (dozens
-of hops at most), and ``max_iter`` bounds the loop.  Each round is one
+of hops at most), and 20 rounds bound the loop.  Each round is one
 shuffle (join on vertex) + one map-side-combined min aggregate; the
 driver-side loop holds only an iteration counter and a convergence
 flag (one scalar count per round, not data).
@@ -23,7 +23,7 @@ free with the identical plan shape.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -31,7 +31,6 @@ def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """(vertex, component) for every vertex in ``pairs``; the component
     id is the minimum vertex id in the connected component.
@@ -58,7 +57,7 @@ def connected_components(
         .distinct()
         .withColumn("label", F.col("vertex"))
     )
-    for i in range(max_iter):
+    for i in range(20):
         neighbor_min = (
             edges.join(labels, edges["v"] == labels["vertex"])
             .groupBy("u")
@@ -93,15 +92,12 @@ def dedup_keep_representative(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Corpus dedup: keep exactly one doc (the min id) per duplicate
     cluster.  Docs in no pair keep themselves; duplicates are removed
     transitively (A~B~C keeps only min(A,B,C), unlike pairwise
     neighbor-min which can keep a duplicate)."""
-    comp = connected_components(pairs, src, dst, max_iter)
+    comp = connected_components(pairs)
     drop = comp.filter(F.col("vertex") != F.col("component")).select(
         F.col("vertex").alias(id_col)
     )

@@ -86,9 +86,8 @@ def helix_metrics(
     df: DataFrame,
     *,
     id_cols: list[str],
-    group_col: str = "metric_group",
 ) -> DataFrame:
-    """One input row per number datapoint; ``group_col`` identifies
+    """One input row per number datapoint; ``metric_group`` identifies
     which rows came from the same pmetric.Metric (the enrich pass
     scopes to it)."""
     res = F.col("res_attrs")
@@ -168,7 +167,7 @@ def helix_metrics(
     # exploded-entries groupBy and the join-back side
     stage1 = pre2.filter(~err).select(
         *id_cols,
-        F.col(group_col).alias("_grp"),
+        F.col("metric_group").alias("_grp"),
         labels.alias("_labels"), entity_id.alias("_eid"),
         value.alias("_v"), ts_ms.alias("_ts"),
         monotonic.alias("_flag"),

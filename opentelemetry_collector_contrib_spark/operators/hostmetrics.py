@@ -99,17 +99,14 @@ def _explode_entries(df: DataFrame, base: list, entries: list,
     return out.select(*base, *cols)
 
 
-def host_cpu_metrics(
-    df: DataFrame, host_col: str = "host", cpu_col: str = "cpu",
-    ts_col: str = "ts",
-) -> DataFrame:
+def host_cpu_metrics(df: DataFrame) -> DataFrame:
     """cpu.time + cpu.utilization rows from cumulative cpu samples.
 
     Input columns: host, cpu, ts (orderable), and the 8+2 cumulative
     state-seconds doubles ``user system idle nice iowait irq softirq
     steal guest guest_nice``.
     """
-    host, cpu, ts = F.col(host_col), F.col(cpu_col), F.col(ts_col)
+    host, cpu, ts = F.col("host"), F.col("cpu"), F.col("ts")
     states = ["user", "system", "idle", "nice", "iowait", "irq",
               "softirq", "steal"]
     total = sum((F.col(c) for c in states[1:]), F.col(states[0])) \
@@ -146,14 +143,13 @@ def host_cpu_metrics(
     return out.where(F.col("hm_value_d").isNotNull())
 
 
-def host_memory_metrics(df: DataFrame, host_col: str = "host",
-                        ts_col: str = "ts") -> DataFrame:
+def host_memory_metrics(df: DataFrame) -> DataFrame:
     """memory usage/utilization/limit + linux extras per sample.
 
     Input columns: host, ts, total, used, free, buffers, cached,
     sreclaimable, sunreclaim, available, dirty, page_size (bigints).
     """
-    base = [F.col(host_col).alias("host"), F.col(ts_col).alias("ts")]
+    base = [F.col("host").alias("host"), F.col("ts").alias("ts")]
     states = [("used", "used"), ("free", "free"),
               ("buffers", "buffered"), ("cached", "cached"),
               ("sreclaimable", "slab_reclaimable"),
@@ -184,15 +180,13 @@ def host_memory_metrics(df: DataFrame, host_col: str = "host",
                             ["metric", "state", "value", "value_d"])
 
 
-def host_load_metrics(df: DataFrame, cpu_average: bool = False,
-                      host_col: str = "host",
-                      ts_col: str = "ts") -> DataFrame:
+def host_load_metrics(df: DataFrame, cpu_average: bool = False) -> DataFrame:
     """load 1m/5m/15m (+ uptime when present) per sample.
 
     Input columns: host, ts, load1, load5, load15, ncpu
     [, uptime_sec].
     """
-    base = [F.col(host_col).alias("host"), F.col(ts_col).alias("ts")]
+    base = [F.col("host").alias("host"), F.col("ts").alias("ts")]
     div = F.col("ncpu").cast("double") if cpu_average else F.lit(1.0)
     entries = [
         F.struct(F.lit(f"system.cpu.load_average.{m}").alias("metric"),
@@ -208,19 +202,16 @@ def host_load_metrics(df: DataFrame, cpu_average: bool = False,
                             ["metric", "value_d"])
 
 
-def host_filesystem_metrics(
-    df: DataFrame, host_col: str = "host", ts_col: str = "ts",
-    seq_col: str = "seq",
-) -> DataFrame:
+def host_filesystem_metrics(df: DataFrame) -> DataFrame:
     """filesystem usage/utilization/inodes per partition sample.
 
     Input columns: host, ts, seq (partition-list ordinal — drives the
     reference's first-wins dedup), device, mountpoint, fstype, opts
     (comma-joined), used, free, total, inodes_used, inodes_free.
     """
-    host, ts = F.col(host_col), F.col(ts_col)
+    host, ts = F.col("host"), F.col("ts")
     w = Window.partitionBy(host, ts, F.col("device"),
-                           F.col("mountpoint")).orderBy(F.col(seq_col))
+                           F.col("mountpoint")).orderBy(F.col("seq"))
     df = (df.withColumn("_rn", F.row_number().over(w))
             .where((F.col("mountpoint") == "") | (F.col("_rn") == 1)))
 
@@ -264,8 +255,7 @@ def host_filesystem_metrics(
     )
 
 
-def host_disk_metrics(df: DataFrame, host_col: str = "host",
-                      ts_col: str = "ts") -> DataFrame:
+def host_disk_metrics(df: DataFrame) -> DataFrame:
     """disk io/operations/times/pending/merged per device sample.
 
     Input columns: host, ts, device, read_bytes, write_bytes,
@@ -273,7 +263,7 @@ def host_disk_metrics(df: DataFrame, host_col: str = "host",
     weighted_io_ms, merged_read_count, merged_write_count,
     iops_in_progress.
     """
-    base = [F.col(host_col).alias("host"), F.col(ts_col).alias("ts"),
+    base = [F.col("host").alias("host"), F.col("ts").alias("ts"),
             F.col("device").alias("device")]
     pairs = [  # (metric, read-ish column, write-ish column, is_int)
         ("system.disk.io", "read_bytes", "write_bytes", True),
@@ -308,14 +298,13 @@ def host_disk_metrics(df: DataFrame, host_col: str = "host",
                             ["metric", "direction", "value", "value_d"])
 
 
-def host_network_metrics(df: DataFrame, host_col: str = "host",
-                         ts_col: str = "ts") -> DataFrame:
+def host_network_metrics(df: DataFrame) -> DataFrame:
     """per-interface packets/dropped/errors/io counter rows.
 
     Input columns: host, ts, interface, bytes_sent, bytes_recv,
     packets_sent, packets_recv, errin, errout, dropin, dropout.
     """
-    base = [F.col(host_col).alias("host"), F.col(ts_col).alias("ts"),
+    base = [F.col("host").alias("host"), F.col("ts").alias("ts"),
             F.col("interface").alias("interface")]
     fan = [("system.network.packets", "packets_sent", "packets_recv"),
            ("system.network.dropped", "dropout", "dropin"),
@@ -333,15 +322,14 @@ def host_network_metrics(df: DataFrame, host_col: str = "host",
                             ["metric", "direction", "value"])
 
 
-def host_network_connections(df: DataFrame, host_col: str = "host",
-                             ts_col: str = "ts") -> DataFrame:
+def host_network_connections(df: DataFrame) -> DataFrame:
     """tcp connection counts zero-filled over the 12-state grid.
 
     Input: one row per live connection (host, ts, status). Statuses
     outside the grid still count (the Go map accumulates them too);
     grid states absent from the sample emit 0.
     """
-    host, ts = F.col(host_col).alias("host"), F.col(ts_col).alias("ts")
+    host, ts = F.col("host").alias("host"), F.col("ts").alias("ts")
     counts = (df.groupBy(host, ts, F.col("status").alias("state"))
                 .agg(F.count("*").alias("n")))
     spark = df.sparkSession
@@ -361,17 +349,15 @@ def host_network_connections(df: DataFrame, host_col: str = "host",
     )
 
 
-def host_paging_metrics(df_pagefile: DataFrame, df_swap: DataFrame,
-                        host_col: str = "host",
-                        ts_col: str = "ts") -> DataFrame:
+def host_paging_metrics(df_pagefile: DataFrame, df_swap: DataFrame) -> DataFrame:
     """paging usage/utilization per device + swap ops/faults rows.
 
     df_pagefile: host, ts, device, used, free, total, cached
     (nullable). df_swap: host, ts, sin, sout, pgin, pgout, pgfault,
     pgmajfault.
     """
-    host = F.col(host_col).alias("host")
-    ts = F.col(ts_col).alias("ts")
+    host = F.col("host").alias("host")
+    ts = F.col("ts").alias("ts")
     dev = F.col("device").alias("device")
     tot = F.col("total").cast("double")
     entries = []
@@ -438,9 +424,7 @@ def host_paging_metrics(df_pagefile: DataFrame, df_swap: DataFrame,
     )
 
 
-def host_processes_metrics(df_procs: DataFrame, df_misc: DataFrame,
-                           host_col: str = "host",
-                           ts_col: str = "ts") -> DataFrame:
+def host_processes_metrics(df_procs: DataFrame, df_misc: DataFrame) -> DataFrame:
     """processes.count by status + processes.created per sample.
 
     df_procs: host, ts, status (gopsutil status word, e.g. 'running');
@@ -452,7 +436,7 @@ def host_processes_metrics(df_procs: DataFrame, df_misc: DataFrame,
     """
     spark = df_procs.sparkSession
     smap = spark.createDataFrame(_PROC_STATES, "word string, st string")
-    host, ts = F.col(host_col).alias("host"), F.col(ts_col).alias("ts")
+    host, ts = F.col("host").alias("host"), F.col("ts").alias("ts")
 
     mapped = (df_procs.select(host, ts, F.col("status").alias("word"))
               .join(F.broadcast(smap), "word", "left")

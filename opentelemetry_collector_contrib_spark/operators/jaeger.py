@@ -133,13 +133,13 @@ def _find_tag(tags: Column, key: str) -> Column:
 
 
 def jaeger_batches_to_spans(
-    df: DataFrame, batch_col: str = "body"
+    df: DataFrame
 ) -> DataFrame:
     """One Jaeger batch JSON per row → one row per span with flattened
     OTLP columns (``jg_*``); resource identity as a canonical attr
     string so the ResourceSpans regroup (:48-81) is one groupBy."""
     parsed = df.select(
-        "*", F.from_json(F.col(batch_col), _JG_SCHEMA).alias("_jg")
+        "*", F.from_json(F.col("body"), _JG_SCHEMA).alias("_jg")
     )
     sp = F.col("_sp")
     blank = (
@@ -154,7 +154,7 @@ def jaeger_batches_to_spans(
             F.col("_jg")["process"].alias("_bproc"),
         )
         .where(sp.isNotNull() & ~blank)  # blankJaegerProtoSpan skip :182
-        .drop("_jg", batch_col)
+        .drop("_jg", "body")
     )
 
     tags = sp["tags"]

@@ -94,35 +94,17 @@ def jaeger_export_spans(
     df: DataFrame,
     *,
     id_cols: list[str],
-    trace_id_col: str = "trace_id",
-    span_id_col: str = "span_id",
-    parent_span_id_col: str = "parent_span_id",
-    name_col: str = "name",
-    kind_col: str = "kind",
-    start_ns_col: str = "start_ns",
-    end_ns_col: str = "end_ns",
-    status_code_col: str = "status_code",
-    status_message_col: str = "status_message",
-    trace_state_col: str = "trace_state",
-    attrs_col: str = "attrs",
-    res_attrs_col: str = "res_attrs",
-    scope_name_col: str | None = "scope_name",
-    scope_version_col: str | None = "scope_version",
-    events_col: str | None = "events",
-    links_col: str | None = "links",
 ) -> DataFrame:
-    res = F.coalesce(F.col(res_attrs_col), F.expr("array()").cast(_TAGS_T))
-    attrs = F.coalesce(F.col(attrs_col), F.expr("array()").cast(_TAGS_T))
-    kind = F.coalesce(F.col(kind_col), F.lit(0)).cast("int")
-    status = F.coalesce(F.col(status_code_col), F.lit(0)).cast("int")
-    msg = F.coalesce(F.col(status_message_col), F.lit(""))
-    tstate = F.coalesce(F.col(trace_state_col), F.lit(""))
-    start_ns = F.coalesce(F.col(start_ns_col), F.lit(0)).cast("bigint")
-    end_ns = F.coalesce(F.col(end_ns_col), F.lit(0)).cast("bigint")
-    scope_name = (F.coalesce(F.col(scope_name_col), F.lit(""))
-                  if scope_name_col else F.lit(""))
-    scope_ver = (F.coalesce(F.col(scope_version_col), F.lit(""))
-                 if scope_version_col else F.lit(""))
+    res = F.coalesce(F.col("res_attrs"), F.expr("array()").cast(_TAGS_T))
+    attrs = F.coalesce(F.col("attrs"), F.expr("array()").cast(_TAGS_T))
+    kind = F.coalesce(F.col("kind"), F.lit(0)).cast("int")
+    status = F.coalesce(F.col("status_code"), F.lit(0)).cast("int")
+    msg = F.coalesce(F.col("status_message"), F.lit(""))
+    tstate = F.coalesce(F.col("trace_state"), F.lit(""))
+    start_ns = F.coalesce(F.col("start_ns"), F.lit(0)).cast("bigint")
+    end_ns = F.coalesce(F.col("end_ns"), F.lit(0)).cast("bigint")
+    scope_name = (F.coalesce(F.col("scope_name"), F.lit("")))
+    scope_ver = (F.coalesce(F.col("scope_version"), F.lit("")))
 
     # --- process (resourceToJaegerProtoProcess :74-94) -------------------
     svc_entries = F.filter(res, lambda t: t["key"] == "service.name")
@@ -159,13 +141,13 @@ def jaeger_export_spans(
                          trailer)
 
     # --- references (makeJaegerProtoReferences :235-278) -----------------
-    tid_high = _hex_to_i64(F.substring(F.col(trace_id_col), 1, 16))
-    tid_low = _hex_to_i64(F.substring(F.col(trace_id_col), 17, 16))
-    sid = _hex_to_i64(F.col(span_id_col))
-    parent = _hex_to_i64(F.col(parent_span_id_col))
+    tid_high = _hex_to_i64(F.substring(F.col("trace_id"), 1, 16))
+    tid_low = _hex_to_i64(F.substring(F.col("trace_id"), 17, 16))
+    sid = _hex_to_i64(F.col("span_id"))
+    parent = _hex_to_i64(F.col("parent_span_id"))
 
     links = F.coalesce(
-        F.col(links_col) if links_col else F.lit(None),
+        F.col("links"),
         F.expr("array()").cast(
             f"array<struct<trace_id:string,span_id:string,"
             f"attrs:{_TAGS_T}>>"))
@@ -212,7 +194,7 @@ def jaeger_export_spans(
 
     # --- logs (spanEventsToJaegerProtoLogs :280-301) ----------------------
     events = F.coalesce(
-        F.col(events_col) if events_col else F.lit(None),
+        F.col("events"),
         F.expr("array()").cast(
             f"array<struct<ts_ns:bigint,name:string,attrs:{_TAGS_T}>>"))
 
@@ -236,7 +218,7 @@ def jaeger_export_spans(
         tid_high.alias("trace_id_high"),
         tid_low.alias("trace_id_low"),
         sid.alias("span_id_u64"),
-        F.coalesce(F.col(name_col), F.lit("")).alias("op_name"),
+        F.coalesce(F.col("name"), F.lit("")).alias("op_name"),
         F.array_join(refs, ";").alias("refs"),
         start_ns.alias("start_ns"),
         (end_ns - start_ns).alias("duration_ns"),

@@ -78,13 +78,11 @@ def _quantity_cores(q: Column) -> Column:
     return milli / 1000.0
 
 
-def k8s_cluster_metrics(
-    df: DataFrame, kind_col: str = "kind", body_col: str = "body"
-) -> DataFrame:
-    kind = F.col(kind_col)
-    pod = F.from_json(F.col(body_col), _POD_SCHEMA)
-    dep = F.from_json(F.col(body_col), _DEPLOY_SCHEMA)
-    base = [c for c in df.columns if c not in (kind_col, body_col)]
+def k8s_cluster_metrics(df: DataFrame) -> DataFrame:
+    kind = F.col("kind")
+    pod = F.from_json(F.col("body"), _POD_SCHEMA)
+    dep = F.from_json(F.col("body"), _DEPLOY_SCHEMA)
+    base = [c for c in df.columns if c not in ("kind", "body")]
     staged = df.select(*base, kind.alias("_kind"), pod.alias("_p"),
                        dep.alias("_d"))
     kind, pod, dep = F.col("_kind"), F.col("_p"), F.col("_d")
@@ -267,9 +265,7 @@ _WL_SCHEMA = """struct<
 >"""
 
 
-def k8s_cluster_workloads(
-    df: DataFrame, kind_col: str = "kind", body_col: str = "body"
-) -> DataFrame:
+def k8s_cluster_workloads(df: DataFrame) -> DataFrame:
     """Remaining k8scluster object kinds → metric rows.
 
     Re-expresses the node / statefulset / daemonset / replicaset /
@@ -288,9 +284,9 @@ def k8s_cluster_workloads(
       max_parallel only when their spec pointers exist (jobs.go:16-25);
     - cronjob active_jobs = len(Status.Active) (cronjobs.go:22).
     """
-    kind = F.col(kind_col)
-    o = F.from_json(F.col(body_col), _WL_SCHEMA)
-    base = [c for c in df.columns if c not in (kind_col, body_col)]
+    kind = F.col("kind")
+    o = F.from_json(F.col("body"), _WL_SCHEMA)
+    base = [c for c in df.columns if c not in ("kind", "body")]
     staged = df.select(*base, kind.alias("_kind"), o.alias("_o"))
     kind, o = F.col("_kind"), F.col("_o")
 
@@ -383,7 +379,7 @@ def k8s_cluster_workloads(
 
     exploded = staged.select(
         *base,
-        kind.alias(kind_col),
+        kind.alias("kind"),
         o["metadata"]["name"].alias("kc_name"),
         o["metadata"]["namespace"].alias("kc_namespace"),
         o["metadata"]["uid"].alias("kc_uid"),

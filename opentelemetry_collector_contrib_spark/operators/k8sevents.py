@@ -60,12 +60,12 @@ def _s(c: Column) -> Column:
 
 
 def k8s_events_to_logs(
-    df: DataFrame, body: str = "body", start_ts: int | None = None
+    df: DataFrame, start_ts: int | None = None
 ) -> DataFrame:
     """corev1 Event JSON rows → one log row each (flat columns)."""
-    passthrough = [c for c in df.columns if c != body]
+    passthrough = [c for c in df.columns if c != "body"]
     p = df.select(
-        *passthrough, F.from_json(F.col(body), _SCHEMA).alias("e")
+        *passthrough, F.from_json(F.col("body"), _SCHEMA).alias("e")
     )
     ev = F.col("e")
     ts = F.coalesce(

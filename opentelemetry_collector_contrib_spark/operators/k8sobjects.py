@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 
 def k8s_objects_to_logs(
     df: DataFrame,
-    body: str = "body",
     mode: str = "pull",
     resource: str = "pods",
     observed_ts: int = 0,
@@ -39,8 +38,8 @@ def k8s_objects_to_logs(
     """
     if mode not in ("pull", "watch"):
         raise ValueError(f"unknown k8sobjects mode {mode!r}")
-    passthrough = [c for c in df.columns if c != body]
-    v = F.try_parse_json(F.col(body))
+    passthrough = [c for c in df.columns if c != "body"]
+    v = F.try_parse_json(F.col("body"))
     if mode == "watch":
         ns = F.try_variant_get(v, "$.object.metadata.namespace", "string")
         name = F.try_variant_get(v, "$.object.metadata.name", "string")

@@ -7,9 +7,9 @@ Re-expresses ``receiver/kafkametricsreceiver`` over sample tables
   count (len of the partition listing), per-partition current/oldest
   offsets + replica counts, each emitted only when its fetch
   succeeded (nullable input = the AddPartial branch); topics are
-  filtered by ``topic_match`` (default ``^[^_].*$`` — internal topics
-  excluded, config.go); topic configs (:97-148): replication factor
-  always, min_insync_replicas / retention period (ms ATOI then
+  filtered by the reference's default ``topic_match`` ``^[^_].*$``
+  (internal topics excluded, config.go); topic configs (:97-148):
+  replication factor always, min_insync_replicas / retention period (ms ATOI then
   integer ÷1000) / retention size each only when Atoi succeeds
   (try_cast dead letter).
 - broker scraper (``broker_scraper.go:37-85``): kafka.brokers =
@@ -63,14 +63,13 @@ def kafka_metrics(
     df_group_members: DataFrame,
     df_group_offsets: DataFrame,
     group_match: str = ".*",
-    topic_match: str = "^[^_].*$",
 ) -> DataFrame:
     """See module docstring for the per-table input columns."""
     key = ["cluster", "ts"]
     t = F.col("topic")
 
     # ---- topic scraper ------------------------------------------------
-    parts = df_partitions.where(t.rlike(topic_match))
+    parts = df_partitions.where(t.rlike("^[^_].*$"))
     part_counts = (parts.groupBy(*key, "topic")
                    .agg(F.count("*").alias("_n"))
                    .select(*key, *_row("kafka.topic.partitions",
@@ -90,7 +89,7 @@ def kafka_metrics(
         F.filter(F.array(*per_part), lambda x: x.isNotNull()))
         .alias("_m")).select(*key, "_m.*"))
 
-    cfg = df_topic_configs.where(t.rlike(topic_match))
+    cfg = df_topic_configs.where(t.rlike("^[^_].*$"))
     cfg_entries = [
         F.struct(*_row("kafka.topic.replication_factor", topic=t,
                        value=F.col("replication_factor"))),
@@ -134,12 +133,12 @@ def kafka_metrics(
 
     # offsets were requested only for matched topics whose newest
     # offset was fetchable → inner join to non-null current offsets
-    cur = (df_partitions.where(t.rlike(topic_match))
+    cur = (df_partitions.where(t.rlike("^[^_].*$"))
            .where(F.col("current_offset").isNotNull())
            .select(*key, "topic", "partition",
                    F.col("current_offset").alias("_cur")))
     blocks = (df_group_offsets.where(g.rlike(group_match))
-              .where(t.rlike(topic_match))
+              .where(t.rlike("^[^_].*$"))
               .join(cur, key + ["topic", "partition"], "inner"))
 
     w = Window.partitionBy(*key, "group", "topic")

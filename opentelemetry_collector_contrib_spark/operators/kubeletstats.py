@@ -139,12 +139,11 @@ def _group_entries(prefix: str, node, all_interfaces: bool,
 
 def kubelet_stats_summary(
     df: DataFrame,
-    body_col: str = "body",
     all_interfaces: bool = False,
     include_volumes: bool = False,
 ) -> DataFrame:
-    s = F.from_json(F.col(body_col), _SUMMARY_SCHEMA)
-    base_cols = [c for c in df.columns if c != body_col]
+    s = F.from_json(F.col("body"), _SUMMARY_SCHEMA)
+    base_cols = [c for c in df.columns if c != "body"]
     staged = df.select(*base_cols, s.alias("_s"))
     s = F.col("_s")
 

@@ -117,21 +117,19 @@ def _strip(c: Column) -> Column:
 _HEXRE = r"^[0-9a-fA-F]+$"
 
 
-def libhoney_events_parse(
-    df: DataFrame, body_col: str = "body", dataset_col: str = "dataset"
-) -> DataFrame:
+def libhoney_events_parse(df: DataFrame) -> DataFrame:
     """One libhoney event JSON per row (+ a ``dataset`` column) → one
     row per signal with flattened OTLP columns (``lh_*``)."""
     # from_json is PERMISSIVE (all-null struct on corrupt input) —
     # try_parse_json is the malformed-row gate (Unmarshal error analog)
     parsed = df.where(
-        F.try_parse_json(F.col(body_col)).isNotNull()
-    ).select("*", F.from_json(F.col(body_col), _LH_SCHEMA).alias("_e"))
+        F.try_parse_json(F.col("body")).isNotNull()
+    ).select("*", F.from_json(F.col("body"), _LH_SCHEMA).alias("_e"))
     e = F.col("_e")
     data = F.coalesce(
         e["data"], F.from_json(F.lit("{}"), "map<string,variant>")
     )
-    dataset = F.col(dataset_col)
+    dataset = F.col("dataset")
 
     get = lambda k: F.try_element_at(data, F.lit(k))  # noqa: E731
     gstr = lambda k: F.try_variant_get(get(k), "$", "string")  # noqa: E731

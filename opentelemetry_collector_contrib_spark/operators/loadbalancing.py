@@ -129,19 +129,16 @@ def ring_endpoint_for(identifier_bin: Column,
     return F.element_at(endpoints, wrapped + 1)
 
 
-def route_by_trace_id(df: DataFrame, ring: list[tuple[int, str]],
-                      trace_id_hex_col: str = "trace_id",
-                      out_col: str = "endpoint") -> DataFrame:
+def route_by_trace_id(df: DataFrame, ring: list[tuple[int, str]]) -> DataFrame:
     """traceIDRouting (trace_exporter.go:176-181): the identifier is
     the RAW trace-id bytes."""
     return df.withColumn(
-        out_col,
-        ring_endpoint_for(F.unhex(F.col(trace_id_hex_col)), ring))
+        "endpoint",
+        ring_endpoint_for(F.unhex(F.col("trace_id")), ring))
 
 
 def route_by_attr_key(df: DataFrame, ring: list[tuple[int, str]],
-                      attr_cols: list[str],
-                      out_col: str = "endpoint") -> DataFrame:
+                      attr_cols: list[str]) -> DataFrame:
     """svcRouting / attrRouting (trace_exporter.go:182-241): the
     identifier is the concatenation of the attribute values (missing
     attributes contribute nothing; an all-missing key is "")."""
@@ -149,12 +146,11 @@ def route_by_attr_key(df: DataFrame, ring: list[tuple[int, str]],
         F.coalesce(F.col(c), F.lit("")) for c in attr_cols
     ]) if attr_cols else F.lit("")
     return df.withColumn(
-        out_col, ring_endpoint_for(composite.cast("binary"), ring))
+        "endpoint", ring_endpoint_for(composite.cast("binary"), ring))
 
 
-def endpoint_counts(df: DataFrame,
-                    endpoint_col: str = "endpoint") -> DataFrame:
+def endpoint_counts(df: DataFrame) -> DataFrame:
     """Per-backend batch counts — the merge loop of
     metrics_exporter.go:114-136 reduced to its aggregate."""
-    return df.groupBy(endpoint_col).agg(
+    return df.groupBy("endpoint").agg(
         F.count(F.lit(1)).alias("n_rows"))

@@ -43,45 +43,34 @@ def logservice_logs(
     df: DataFrame,
     *,
     id_cols: list[str],
-    body_col: str = "body",
-    ts_ns_col: str = "ts_ns",
-    trace_id_col: str = "trace_id",
-    span_id_col: str = "span_id",
-    severity_number_col: str = "severity_number",
-    severity_text_col: str = "severity_text",
-    flags_col: str = "flags",
-    attrs_col: str = "attrs",
-    res_attrs_col: str = "res_attrs",
-    scope_name_col: str = "scope_name",
-    scope_version_col: str = "scope_version",
 ) -> DataFrame:
-    res = F.col(res_attrs_col)
-    ts = F.coalesce(F.col(ts_ns_col), F.lit(0))
+    res = F.col("res_attrs")
+    ts = F.coalesce(F.col("ts_ns"), F.lit(0))
 
-    return df.where(F.col(body_col).isNotNull()).select(
+    return df.where(F.col("body").isNotNull()).select(
         *id_cols,
         F.when(ts > 0, F.expr(
-            f"CAST(COALESCE({ts_ns_col}, 0) AS BIGINT)"
+            "CAST(COALESCE(ts_ns, 0) AS BIGINT)"
             " div 1000000000")).alias("time_s"),
         F.coalesce(res["host.name"], F.lit("")).alias("host"),
         F.coalesce(res["service.name"], F.lit("")).alias("service"),
         _sorted_json(res, ["host.name", "service.name"])
         .alias("resource"),
-        F.coalesce(F.col(scope_name_col), F.lit(""))
+        F.coalesce(F.col("scope_name"), F.lit(""))
         .alias("otlp_name"),
-        F.coalesce(F.col(scope_version_col), F.lit(""))
+        F.coalesce(F.col("scope_version"), F.lit(""))
         .alias("otlp_version"),
         ts.cast("string").alias("time_unix_nano"),
-        F.coalesce(F.col(severity_number_col), F.lit(0)).cast("string")
+        F.coalesce(F.col("severity_number"), F.lit(0)).cast("string")
         .alias("severity_number"),
-        F.coalesce(F.col(severity_text_col), F.lit(""))
+        F.coalesce(F.col("severity_text"), F.lit(""))
         .alias("severity_text"),
-        _sorted_json(F.col(attrs_col), []).alias("attribute"),
-        F.col(body_col).alias("content"),
-        F.lower(F.hex(F.coalesce(F.col(flags_col), F.lit(0))))
+        _sorted_json(F.col("attrs"), []).alias("attribute"),
+        F.col("body").alias("content"),
+        F.lower(F.hex(F.coalesce(F.col("flags"), F.lit(0))))
         .alias("flags"),
-        F.coalesce(F.col(trace_id_col), F.lit("")).alias("trace_id"),
-        F.coalesce(F.col(span_id_col), F.lit("")).alias("span_id"),
+        F.coalesce(F.col("trace_id"), F.lit("")).alias("trace_id"),
+        F.coalesce(F.col("span_id"), F.lit("")).alias("span_id"),
     )
 
 
@@ -89,22 +78,6 @@ def logservice_spans(
     df: DataFrame,
     *,
     id_cols: list[str],
-    trace_id_col: str = "trace_id",
-    span_id_col: str = "span_id",
-    parent_span_id_col: str = "parent_span_id",
-    name_col: str = "name",
-    kind_col: str = "kind",
-    start_ns_col: str = "start_ns",
-    end_ns_col: str = "end_ns",
-    status_code_col: str = "status_code",
-    status_message_col: str = "status_message",
-    trace_state_col: str = "trace_state",
-    attrs_col: str = "attrs",
-    res_attrs_col: str = "res_attrs",
-    scope_name_col: str = "scope_name",
-    scope_version_col: str = "scope_version",
-    events_col: str | None = "events",
-    links_col: str | None = "links",
 ) -> DataFrame:
     """Spans → SLS KV logs
     (``alibabacloudlogserviceexporter/tracedata_to_logservice.go``
@@ -116,10 +89,10 @@ def logservice_spans(
     Known divergence: Go computes duration as
     ``uint64(end-start)/1000`` — a zero end timestamp UNDERFLOWS to
     ~2^64; this engine renders the signed value instead."""
-    res = F.col(res_attrs_col)
-    kind = F.coalesce(F.col(kind_col), F.lit(0)).cast("int")
-    start = F.coalesce(F.col(start_ns_col), F.lit(0))
-    end = F.coalesce(F.col(end_ns_col), F.lit(0))
+    res = F.col("res_attrs")
+    kind = F.coalesce(F.col("kind"), F.lit(0)).cast("int")
+    start = F.coalesce(F.col("start_ns"), F.lit(0))
+    end = F.coalesce(F.col("end_ns"), F.lit(0))
 
     kind_word = (F.when(kind == 1, F.lit("internal"))
                  .when(kind == 2, F.lit("server"))
@@ -127,8 +100,8 @@ def logservice_spans(
                  .when(kind == 4, F.lit("producer"))
                  .when(kind == 5, F.lit("consumer"))
                  .otherwise(F.lit("unspecified")))
-    code_word = (F.when(F.col(status_code_col) == 1, F.lit("OK"))
-                 .when(F.col(status_code_col) == 2, F.lit("ERROR"))
+    code_word = (F.when(F.col("status_code") == 1, F.lit("OK"))
+                 .when(F.col("status_code") == 2, F.lit("ERROR"))
                  .otherwise(F.lit("UNSET")))
 
     def jmap(m: Column) -> Column:
@@ -140,7 +113,7 @@ def logservice_spans(
             F.lit("{}"))
 
     links = F.coalesce(
-        F.col(links_col) if links_col else F.lit(None),
+        F.col("links"),
         F.expr("array()").cast(
             "array<struct<trace_id:string,span_id:string,"
             "attrs:map<string,string>>>"))
@@ -156,7 +129,7 @@ def logservice_spans(
         F.lit("]"))
 
     events = F.coalesce(
-        F.col(events_col) if events_col else F.lit(None),
+        F.col("events"),
         F.expr("array()").cast(
             "array<struct<ts_ns:bigint,name:string,"
             "attrs:map<string,string>>>"))
@@ -175,36 +148,36 @@ def logservice_spans(
     return df.select(
         *id_cols,
         F.when(end > 0, F.expr(
-            f"CAST(COALESCE({end_ns_col}, 0) AS BIGINT)"
+            "CAST(COALESCE(end_ns, 0) AS BIGINT)"
             " div 1000000000")).alias("time_s"),
         F.coalesce(res["host.name"], F.lit("")).alias("host"),
         F.coalesce(res["service.name"], F.lit("")).alias("service"),
         _sorted_json(res, ["host.name", "service.name"])
         .alias("resource"),
-        F.coalesce(F.col(scope_name_col), F.lit(""))
+        F.coalesce(F.col("scope_name"), F.lit(""))
         .alias("otlp_name"),
-        F.coalesce(F.col(scope_version_col), F.lit(""))
+        F.coalesce(F.col("scope_version"), F.lit(""))
         .alias("otlp_version"),
-        F.coalesce(F.col(trace_id_col), F.lit("")).alias("trace_id"),
-        F.coalesce(F.col(span_id_col), F.lit("")).alias("span_id"),
-        F.coalesce(F.col(parent_span_id_col), F.lit(""))
+        F.coalesce(F.col("trace_id"), F.lit("")).alias("trace_id"),
+        F.coalesce(F.col("span_id"), F.lit("")).alias("span_id"),
+        F.coalesce(F.col("parent_span_id"), F.lit(""))
         .alias("parent_span_id"),
         kind_word.alias("kind"),
-        F.coalesce(F.col(name_col), F.lit("")).alias("name"),
+        F.coalesce(F.col("name"), F.lit("")).alias("name"),
         links_json.alias("links"),
         events_json.alias("logs"),
-        F.coalesce(F.col(trace_state_col), F.lit(""))
+        F.coalesce(F.col("trace_state"), F.lit(""))
         .alias("trace_state"),
-        F.expr(f"CAST(COALESCE({start_ns_col}, 0) AS BIGINT)"
+        F.expr("CAST(COALESCE(start_ns, 0) AS BIGINT)"
                " div 1000").cast("string").alias("start"),
-        F.expr(f"CAST(COALESCE({end_ns_col}, 0) AS BIGINT)"
+        F.expr("CAST(COALESCE(end_ns, 0) AS BIGINT)"
                " div 1000").cast("string").alias("end"),
-        F.expr(f"CAST(COALESCE({end_ns_col}, 0)"
-               f" - COALESCE({start_ns_col}, 0) AS BIGINT) div 1000")
+        F.expr("CAST(COALESCE(end_ns, 0)"
+               " - COALESCE(start_ns, 0) AS BIGINT) div 1000")
         .cast("string").alias("duration"),
-        jmap(F.col(attrs_col)).alias("attribute"),
+        jmap(F.col("attrs")).alias("attribute"),
         code_word.alias("status_code"),
-        F.coalesce(F.col(status_message_col), F.lit(""))
+        F.coalesce(F.col("status_message"), F.lit(""))
         .alias("status_message"),
     )
 
@@ -232,19 +205,6 @@ def logservice_metrics(
     df: DataFrame,
     *,
     id_cols: list[str],
-    name_col: str = "name",
-    mtype_col: str = "mtype",
-    ts_ns_col: str = "ts_ns",
-    attrs_col: str = "attrs",
-    res_attrs_col: str = "res_attrs",
-    is_int_col: str = "is_int",
-    vint_col: str = "vint",
-    vdouble_col: str = "vdouble",
-    count_col: str = "count",
-    sum_col: str = "sum",
-    bounds_col: str = "bounds",
-    bucket_counts_col: str = "bucket_counts",
-    quantiles_col: str = "quantiles",
 ) -> DataFrame:
     """Metric datapoints → SLS time-series KV logs
     (``alibabacloudlogserviceexporter/metricsdata_to_logservice.go``):
@@ -259,8 +219,8 @@ def logservice_metrics(
     ``_sum``/``_count`` + UNSUFFIXED quantile points (:227-261),
     exp-histogram/empty dropped; Log.Time = ns/1e9 with NO Now()
     fallback (:113-119)."""
-    name = F.col(name_col)
-    mtype = F.col(mtype_col)
+    name = F.col("name")
+    mtype = F.col("mtype")
 
     def lab_ents(m: Column) -> Column:
         return F.transform(
@@ -270,8 +230,8 @@ def logservice_metrics(
                 _sanitize_label_key(e["key"]).alias("key"),
                 e["value"].alias("value")))
 
-    base_ents = F.concat(lab_ents(F.col(res_attrs_col)),
-                         lab_ents(F.col(attrs_col)))
+    base_ents = F.concat(lab_ents(F.col("res_attrs")),
+                         lab_ents(F.col("attrs")))
 
     def ln(nm: Column, extra: Column, value: Column) -> Column:
         return F.struct(nm.alias("name"),
@@ -283,22 +243,22 @@ def logservice_metrics(
             F.expr("array()").cast(_EMPTY_LNS))
 
     nil_s = F.lit(None).cast("string")
-    is_int = F.col(is_int_col)
+    is_int = F.col("is_int")
     number_lns = one(
         mtype.isin("gauge", "sum") & is_int.isNotNull(),
         ln(name,
            nil_s,
-           F.when(is_int, F.col(vint_col).cast("string"))
-           .otherwise(_fmt_g(F.col(vdouble_col)))))
+           F.when(is_int, F.col("vint").cast("string"))
+           .otherwise(_fmt_g(F.col("vdouble")))))
 
-    counts = F.coalesce(F.col(bucket_counts_col),
+    counts = F.coalesce(F.col("bucket_counts"),
                         F.expr("array()").cast("array<bigint>"))
-    bounds = F.coalesce(F.col(bounds_col),
+    bounds = F.coalesce(F.col("bounds"),
                         F.expr("array()").cast("array<double>"))
     n_buckets = F.least(F.size(bounds) + 1, F.size(counts))
     hist = mtype == "histogram"
-    sum_v = _fmt_g(F.coalesce(F.col(sum_col), F.lit(0.0)))
-    count_v = F.coalesce(F.col(count_col), F.lit(0)).cast("string")
+    sum_v = _fmt_g(F.coalesce(F.col("sum"), F.lit(0.0)))
+    count_v = F.coalesce(F.col("count"), F.lit(0)).cast("string")
     hist_lns = F.concat(
         one(hist, ln(F.concat(name, F.lit("_sum")), nil_s, sum_v)),
         one(hist, ln(F.concat(name, F.lit("_count")), nil_s,
@@ -321,7 +281,7 @@ def logservice_metrics(
         one(summ, ln(F.concat(name, F.lit("_count")), nil_s,
                      count_v)),
         F.when(summ, F.transform(
-            F.coalesce(F.col(quantiles_col), F.expr("array()").cast(
+            F.coalesce(F.col("quantiles"), F.expr("array()").cast(
                 "array<struct<q:double,v:double>>")),
             lambda qv: ln(name, _fmt_g(qv["q"]), _fmt_g(qv["v"]))))
         .otherwise(F.expr("array()").cast(_EMPTY_LNS)),
@@ -329,9 +289,9 @@ def logservice_metrics(
 
     out = df.select(
         *id_cols,
-        F.expr(f"CAST(COALESCE({ts_ns_col}, 0) AS BIGINT)"
+        F.expr("CAST(COALESCE(ts_ns, 0) AS BIGINT)"
                " div 1000000000").alias("time_s"),
-        F.coalesce(F.col(ts_ns_col), F.lit(0)).cast("string")
+        F.coalesce(F.col("ts_ns"), F.lit(0)).cast("string")
         .alias("time_nano"),
         base_ents.alias("_base"),
         (F.when(mtype == "histogram", F.lit("le"))

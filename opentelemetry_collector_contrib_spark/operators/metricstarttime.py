@@ -31,39 +31,35 @@ def metric_start_time(
     df: DataFrame,
     series_cols: list[str],
     strategy: str = "true_reset_point",
-    ts_col: str = "ts",
-    value_col: str = "value",
     order_cols: list[str] | None = None,
-    start_metric_name: str = "process_start_time",
-    metric_col: str = "metric_name",
 ) -> DataFrame:
-    order = [F.col(ts_col)] + [F.col(c) for c in (order_cols or [])]
+    order = [F.col("ts")] + [F.col(c) for c in (order_cols or [])]
     w = W.partitionBy(*series_cols).orderBy(*order)
-    first_ts = F.first(ts_col).over(w)
-    first_val = F.first(value_col).over(w)
+    first_ts = F.first("ts").over(w)
+    first_val = F.first("value").over(w)
     if strategy == "true_reset_point":
         return df.withColumn("start_ts", first_ts)
     if strategy == "subtract_initial_point":
         out = (
             df.withColumn("start_ts", first_ts)
             .withColumn("__rn", F.row_number().over(w))
-            .withColumn(value_col, F.col(value_col) - first_val)
+            .withColumn("value", F.col("value") - first_val)
         )
         return out.filter(F.col("__rn") > 1).drop("__rn")
     if strategy == "start_time_metric":
         # start time = the process_start_time point's value within the
         # same series group (minus the metric name itself)
-        group = [c for c in series_cols if c != metric_col]
+        group = [c for c in series_cols if c != "metric_name"]
         wg = W.partitionBy(*group)
         start = F.max(
             F.when(
-                F.col(metric_col) == start_metric_name,
-                F.col(value_col),
+                F.col("metric_name") == "process_start_time",
+                F.col("value"),
             )
         ).over(wg)
         # window BEFORE the filter — the start-metric row must still be
         # in the partition when the max is taken
         return df.withColumn("start_ts", F.timestamp_seconds(start)).filter(
-            F.col(metric_col) != start_metric_name
+            F.col("metric_name") != "process_start_time"
         )
     raise ValueError(f"unknown strategy {strategy!r}")

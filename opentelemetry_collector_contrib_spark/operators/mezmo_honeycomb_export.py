@@ -48,19 +48,12 @@ def mezmo_log_lines(
     df: DataFrame,
     *,
     id_cols: list[str],
-    body_col: str = "body",
-    ts_ns_col: str = "ts_ns",
-    trace_id_col: str = "trace_id",
-    span_id_col: str = "span_id",
-    severity_text_col: str = "severity_text",
-    attrs_col: str = "attrs",
-    res_attrs_col: str = "res_attrs",
 ) -> DataFrame:
-    attrs = F.coalesce(F.col(attrs_col),
+    attrs = F.coalesce(F.col("attrs"),
                        F.expr("map()").cast("map<string,string>"))
-    host = F.col(res_attrs_col)["host.name"]
-    tid = F.coalesce(F.col(trace_id_col), F.lit(""))
-    sid = F.coalesce(F.col(span_id_col), F.lit(""))
+    host = F.col("res_attrs")["host.name"]
+    tid = F.coalesce(F.col("trace_id"), F.lit(""))
+    sid = F.coalesce(F.col("span_id"), F.lit(""))
 
     def ent(cond: Column, key: str, value: Column) -> Column:
         return F.when(cond, F.array(F.struct(
@@ -83,14 +76,14 @@ def mezmo_log_lines(
             F.slice(meta, i + 2,
                     F.greatest(F.size(meta) - i - 1, F.lit(0))),
             lambda y: y["key"] == x["key"]))
-    level = _trunc(F.coalesce(F.col(severity_text_col), F.lit("")),
+    level = _trunc(F.coalesce(F.col("severity_text"), F.lit("")),
                    MAX_LOG_LEVEL_LEN)
-    ts_ms = F.expr(f"CAST({ts_ns_col} AS BIGINT) div 1000000")
+    ts_ms = F.expr("CAST(ts_ns AS BIGINT) div 1000000")
 
     return df.select(
         *id_cols,
         F.when(ts_ms != 0, ts_ms).alias("ts_ms"),  # 0 -> Now() (ref)
-        _trunc(F.coalesce(F.col(body_col), F.lit("")),
+        _trunc(F.coalesce(F.col("body"), F.lit("")),
                MAX_MESSAGE_SIZE).alias("line"),
         _trunc(F.coalesce(attrs["appname"], F.lit("")),
                MAX_APPNAME_LEN).alias("app"),
@@ -119,11 +112,10 @@ def honeycomb_markers(
     *,
     id_cols: list[str],
     markers: list[Marker],
-    attrs_col: str = "attributes",   # the OTTL flat-log-model name
 ) -> DataFrame:
     from ..functions.ottl_compiler import compile_condition
 
-    attrs = F.col(attrs_col)
+    attrs = F.col("attributes")
     out = None
     for m in markers:
         cond = F.lit(True)

@@ -72,10 +72,9 @@ def build_forest(
     feature_ranges: list[tuple[float, float]],
     num_trees: int = 4,
     max_depth: int = 3,
-    seed: str = "isoforest",
 ) -> list[Node]:
     """Deterministic random-split forest: feature and split value per
-    node derive from md5(seed, tree, node-path). Isolation-forest
+    node derive from md5("isoforest", tree, node-path). Isolation-forest
     splits ARE uniform-random over the feature range (buildTreeNode in
     the reference picks rng feature + rng split within min/max), so a
     seeded-hash build is the same estimator family, reproducible."""
@@ -84,9 +83,9 @@ def build_forest(
     def build(tree: int, path: str, depth: int) -> Node:
         if depth >= max_depth:
             return Node(depth=depth)
-        f = int(_frac(f"{seed}-{tree}-{path}-f") * n_feat)
+        f = int(_frac(f"isoforest-{tree}-{path}-f") * n_feat)
         lo, hi = feature_ranges[f]
-        split = lo + _frac(f"{seed}-{tree}-{path}-s") * (hi - lo)
+        split = lo + _frac(f"isoforest-{tree}-{path}-s") * (hi - lo)
         return Node(
             depth=depth,
             feature=f,
@@ -104,10 +103,10 @@ def _path_length(node: Node, row) -> float:
     return float(node.depth)
 
 
-def score_rows(forest: list[Node], rows, window: int = 256) -> list[float]:
-    """score = 2^(-avgPath / c(window)) rounded 6dp
+def score_rows(forest: list[Node], rows) -> list[float]:
+    """score = 2^(-avgPath / c(256)) rounded 6dp
     (calculateAnomalyScore, isolation_forest.go:146-177)."""
-    expected = _c(window)
+    expected = _c(256)
     out = []
     for row in rows:
         avg = sum(_path_length(t, row) for t in forest) / len(forest)
@@ -119,28 +118,24 @@ def score_with_forest(
     df: DataFrame,
     forest: list[Node],
     feature_cols: list[str],
-    window: int = 256,
-    score_col: str = "anomaly_score",
 ) -> DataFrame:
     """mapInPandas scorer: the forest travels to executors once per
     task via closure capture (tiny — a few hundred floats; Spark
     serializes it into the UDF, the broadcast-variable analog), rows
     stream through as Arrow batches."""
-    fields = df.schema.fields + [T.StructField(score_col, T.DoubleType())]
+    fields = df.schema.fields + [T.StructField("anomaly_score", T.DoubleType())]
     schema = T.StructType(fields)
 
     def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = pdf[feature_cols].to_numpy(dtype=float)
-            pdf[score_col] = score_rows(forest, feats, window)
+            pdf["anomaly_score"] = score_rows(forest, feats)
             yield pdf
 
     return df.mapInPandas(score_batches, schema=schema)
 
 
-def forest_case_sql(
-    forest: list[Node], feature_sql: list[str], window: int = 256, dp: int = 6
-) -> str:
+def forest_case_sql(forest: list[Node], feature_sql: list[str]) -> str:
     """Render the same forest as ANSI SQL: one nested CASE per tree,
     averaged, then the score formula — the DuckDB oracle (and a proof
     the scorer is pure data-parallel math)."""
@@ -156,4 +151,4 @@ def forest_case_sql(
 
     trees = " + ".join(f"({node_sql(t)})" for t in forest)
     avg = f"(({trees}) / {float(len(forest))})"
-    return f"round(power(2.0, -{avg} / {_c(window)!r}), {dp})"
+    return f"round(power(2.0, -{avg} / {_c(256)!r}), 6)"

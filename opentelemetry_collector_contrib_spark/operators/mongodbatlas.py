@@ -70,13 +70,12 @@ def _ts_console(s: Column) -> Column:
 
 def mongodb_atlas_logs(
     df: DataFrame,
-    line: str = "line",
     version: str = "4.4",
     log_name: str = "mongodb.gz",
 ) -> DataFrame:
     """mongod/mongos log lines → log rows (JSON or 4.2 console)."""
-    passthrough = [c for c in df.columns if c != line]
-    raw = F.col(line)
+    passthrough = [c for c in df.columns if c != "line"]
+    raw = F.col("line")
     if version == "4.2":
         m = F.regexp_extract(raw, _CONSOLE_RE, 0)
         p = df.where(m != "")  # skip non-matching lines (:74-78)
@@ -116,11 +115,11 @@ def mongodb_atlas_logs(
 
 
 def mongodb_atlas_audit_logs(
-    df: DataFrame, line: str = "line", log_name: str = "audit.gz"
+    df: DataFrame, log_name: str = "audit.gz"
 ) -> DataFrame:
     """Audit-log JSON lines → log rows (severity fixed at INFO)."""
-    passthrough = [c for c in df.columns if c != line]
-    raw = F.col(line)
+    passthrough = [c for c in df.columns if c != "line"]
+    raw = F.col("line")
     e = F.from_json(raw, _AUDIT_SCHEMA)
     p = df.where(F.schema_of_variant(F.try_parse_json(raw))
                  .startswith("OBJECT"))

@@ -52,9 +52,7 @@ def _fake_decode(blob: bytes) -> tuple[int, int, str]:
     return width, height, fmt
 
 
-def extract_media_meta(
-    df: DataFrame, blob_col: str = "blob", id_col: str = "doc_id", buckets: int = 32
-) -> DataFrame:
+def extract_media_meta(df: DataFrame) -> DataFrame:
     """Arrow-batched metadata extraction over mapInPandas.
 
     Repartitions by md5-bucket of the blob first so large blobs spread
@@ -65,12 +63,12 @@ def extract_media_meta(
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            blobs = pdf[blob_col]
+            blobs = pdf["blob"]
             n_bytes = blobs.map(lambda b: len(b) if b is not None else 0)
             decoded = blobs.map(lambda b: _fake_decode(b or b""))
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_bytes": n_bytes.astype("int64"),
                     "fake_width": decoded.map(lambda d: d[0]).astype("int32"),
                     "fake_height": decoded.map(lambda d: d[1]).astype("int32"),
@@ -81,8 +79,8 @@ def extract_media_meta(
                 }
             )
 
-    bucket = F.pmod(F.xxhash64(F.col(blob_col)), F.lit(buckets))
-    return df.repartition(buckets, bucket).mapInPandas(batches, META_SCHEMA)
+    bucket = F.pmod(F.xxhash64(F.col("blob")), F.lit(32))
+    return df.repartition(32, bucket).mapInPandas(batches, META_SCHEMA)
 
 
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes binary"
@@ -90,8 +88,6 @@ FRAME_SCHEMA = "doc_id long, frame_idx int, frame_bytes binary"
 
 def frame_sample(
     df: DataFrame,
-    blob_col: str = "blob",
-    id_col: str = "doc_id",
     every_n_bytes: int = 64,
     max_frames: int = 8,
 ) -> DataFrame:
@@ -102,7 +98,7 @@ def frame_sample(
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out_ids, out_idx, out_bytes = [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf[blob_col]):
+            for doc_id, blob in zip(pdf["doc_id"], pdf["blob"]):
                 b = blob or b""
                 for i in range(min(max_frames, max(1, len(b) // every_n_bytes))):
                     out_ids.append(doc_id)

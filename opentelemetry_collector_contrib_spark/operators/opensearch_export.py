@@ -38,13 +38,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .cloudwatch_export import _jstr
+
 _FLD_T = "struct<key:string,idx:int,jv:string>"
 _EMPTY_FLDS = f"array<{_FLD_T}>"
-
-
-def _jstr(c: Column) -> Column:
-    js = F.to_json(F.array(F.coalesce(c, F.lit(""))))
-    return F.substring(js, F.lit(2), F.length(js) - 2)
 
 
 def _ts_layout(ts_ns: Column) -> Column:

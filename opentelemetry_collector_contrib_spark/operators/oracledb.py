@@ -85,7 +85,7 @@ ORACLE_RESOURCE_TABLE = [
 ]
 
 
-def oracledb_metrics(df: DataFrame, kind_col: str = "kind") -> DataFrame:
+def oracledb_metrics(df: DataFrame) -> DataFrame:
     """Kind-fanned (stat | session | reslimit | tablespace) rows.
 
     Columns per kind: stat → name, value; session → status, type;
@@ -94,7 +94,7 @@ def oracledb_metrics(df: DataFrame, kind_col: str = "kind") -> DataFrame:
     block_size. Passthrough keys: instance, ts.
     """
     spark = df.sparkSession
-    kind = F.col(kind_col)
+    kind = F.col("kind")
     base = ["instance", "ts"]
     ns = F.lit(None).cast("string")
     nl = F.lit(None).cast("bigint")

@@ -55,8 +55,6 @@ def regex_parser(
     df: DataFrame,
     pattern: str,
     parse_from: str = "body",
-    prefix: str = "",
-    if_expr: Column | None = None,
     mark_ok: str | None = None,
 ) -> DataFrame:
     """Extract every named group as a typed string column.
@@ -64,19 +62,17 @@ def regex_parser(
     The reference's per-operator LRU result cache (regex
     config.go:82-89) is unnecessary here — the regex runs inside
     whole-stage codegen. Rows not matching get NULL fields (and
-    ``mark_ok=False`` if requested); ``if_expr`` gates the parse like
-    the operator's ``if`` (non-matching rows pass through untouched).
+    ``mark_ok=False`` if requested).
     """
     src = _col(parse_from)
     java_pattern = pattern.replace("(?P<", "(?<")
     matched = src.rlike(java_pattern)
-    gate = matched if if_expr is None else (if_expr & matched)
     out = df
     for name, idx in regex_named_groups(pattern).items():
-        val = F.when(gate, F.regexp_extract(src, java_pattern, idx))
-        out = out.withColumn(prefix + name, val)
+        val = F.when(matched, F.regexp_extract(src, java_pattern, idx))
+        out = out.withColumn(name, val)
     if mark_ok:
-        out = out.withColumn(mark_ok, gate if if_expr is not None else matched)
+        out = out.withColumn(mark_ok, matched)
     return out
 
 
@@ -102,9 +98,9 @@ def json_parser(
     return df.withColumn(parse_to, F.from_json(_col(parse_from), schema))
 
 
-def jsonarray_parser(df: DataFrame, element_schema: str, parse_from: str = "body", parse_to: str = "parsed") -> DataFrame:
+def jsonarray_parser(df: DataFrame, element_schema: str, parse_from: str = "body") -> DataFrame:
     return df.withColumn(
-        parse_to, F.from_json(_col(parse_from), f"array<{element_schema}>")
+        "parsed", F.from_json(_col(parse_from), f"array<{element_schema}>")
     )
 
 
@@ -116,16 +112,14 @@ def csv_parser(
     df: DataFrame,
     header: list[str],
     parse_from: str = "body",
-    delimiter: str = ",",
-    prefix: str = "",
 ) -> DataFrame:
     """Header config -> one column per field via ``from_csv`` (proper
     quote handling, unlike naive split)."""
     schema = ", ".join(f"`{h}` string" for h in header)
-    parsed = F.from_csv(_col(parse_from), schema, {"sep": delimiter})
+    parsed = F.from_csv(_col(parse_from), schema, {"sep": ","})
     out = df.withColumn("_csv", parsed)
     for h in header:
-        out = out.withColumn(prefix + h, F.col(f"_csv.{h}"))
+        out = out.withColumn(h, F.col(f"_csv.{h}"))
     return out.drop("_csv")
 
 
@@ -137,12 +131,10 @@ def keyvalue_parser(
     df: DataFrame,
     parse_from: str = "body",
     parse_to: str = "attributes",
-    pair_delimiter: str = " ",
-    kv_delimiter: str = "=",
 ) -> DataFrame:
     return df.withColumn(
         parse_to,
-        F.str_to_map(F.trim(_col(parse_from)), F.lit(pair_delimiter), F.lit(kv_delimiter)),
+        F.str_to_map(F.trim(_col(parse_from)), F.lit(" "), F.lit("=")),
     )
 
 
@@ -161,10 +153,10 @@ def uri_columns(source: Column) -> dict[str, Column]:
     }
 
 
-def uri_parser(df: DataFrame, parse_from: str = "body", prefix: str = "uri_") -> DataFrame:
+def uri_parser(df: DataFrame, parse_from: str = "body") -> DataFrame:
     out = df
     for k, c in uri_columns(_col(parse_from)).items():
-        out = out.withColumn(prefix + k, c)
+        out = out.withColumn("uri_" + k, c)
     return out
 
 
@@ -176,20 +168,12 @@ def grok_parser(
     df: DataFrame,
     pattern: str,
     parse_from: str = "body",
-    prefix: str = "",
-    library: dict[str, str] | None = None,
-    mark_ok: str | None = None,
 ) -> DataFrame:
     src = _col(parse_from)
-    cols = grok_columns(src, pattern, library)
+    cols = grok_columns(src, pattern)
     out = df
     for name, c in cols.items():
-        out = out.withColumn(prefix + name, c)
-    if mark_ok:
-        from ..functions.grok import compile_grok
-
-        regex, _ = compile_grok(pattern, library)
-        out = out.withColumn(mark_ok, src.rlike(regex))
+        out = out.withColumn(name, c)
     return out
 
 
@@ -252,9 +236,6 @@ def time_parser(
 def severity_parser(
     df: DataFrame,
     parse_from: str,
-    parse_to_number: str = "severity_number",
-    parse_to_text: str = "severity_text",
-    default: int = 0,
     mapping: dict[str, list] | None = None,
 ) -> DataFrame:
     """Severity parse with optional custom ``mapping`` overlay
@@ -264,7 +245,7 @@ def severity_parser(
     ranges into per-value map entries; here they compile to range
     PREDICATES — same semantics, no 100-entry lookup."""
     src = _col(parse_from)
-    num = severity_number(src, default=default)
+    num = severity_number(src)
     if mapping:
         from ..model import SEVERITY_NUMBER
 
@@ -292,8 +273,8 @@ def severity_parser(
                 else chain.when(cond, F.lit(sev_val))
             )
         num = chain.otherwise(num)
-    return df.withColumn(parse_to_number, num.cast("int")).withColumn(
-        parse_to_text, severity_band_text(F.col(parse_to_number))
+    return df.withColumn("severity_number", num.cast("int")).withColumn(
+        "severity_text", severity_band_text(F.col("severity_number"))
     )
 
 
@@ -307,7 +288,7 @@ _RFC5424 = (
 _RFC3164 = r"^<(\d{1,3})>([A-Z][a-z]{2}\s+\d{1,2}\s\d{2}:\d{2}:\d{2})\s+(\S+)\s+([^:\[\s]+)(?:\[(\d+)\])?:?\s*(.*)$"
 
 
-def syslog_parser(df: DataFrame, parse_from: str = "body", protocol: str = "rfc5424") -> DataFrame:
+def syslog_parser(df: DataFrame, protocol: str = "rfc5424") -> DataFrame:
     """Syslog -> columns. priority = facility*8 + severity (both
     derived); severity here is the syslog 0-7 scale mapped onto the
     24-level enum the way the reference's severity mapping does.
@@ -316,7 +297,7 @@ def syslog_parser(df: DataFrame, parse_from: str = "body", protocol: str = "rfc5
     ``on_error: send``): ``regexp_extract`` gives ``''`` on no match,
     so the typed fields use the ``try_`` casts, which ANSI mode would
     otherwise turn into a job abort."""
-    src = _col(parse_from)
+    src = _col("body")
     if protocol == "rfc5424":
         pat = _RFC5424
         out = (
@@ -437,7 +418,6 @@ def decode_input(
     source: str = "raw",
     target: str = "body",
     encoding: str = "utf-8",
-    drop_source: bool = True,
 ) -> DataFrame:
     """Decode a binary input column into the string body the parser
     chain reads — the filelog receiver's ``encoding`` config.
@@ -473,14 +453,12 @@ def decode_input(
         except LookupError:
             raise ValueError(f"unsupported encoding '{encoding}'") from None
 
-        import pandas as pd  # noqa: F401 (typing for the UDF signature)
-
         @F.pandas_udf("string")
         def _codec_decode(s):
             return s.str.decode(codec, errors="replace")
 
         decoded = _codec_decode(F.col(source))
     out = df.withColumn(target, decoded)
-    if drop_source and source != target:
+    if source != target:
         out = out.drop(source)
     return out

@@ -75,15 +75,12 @@ _ENTRY = ("metric string, attr string, table string, index string, "
 
 def postgresql_stats(
     df: DataFrame,
-    kind_col: str = "kind",
-    db_col: str = "db",
-    body_col: str = "body",
     exclude_databases: list | None = None,
 ) -> DataFrame:
-    kind, db = F.col(kind_col), F.col(db_col)
-    o = F.from_json(F.col(body_col), _SCHEMA)
+    kind, db = F.col("kind"), F.col("db")
+    o = F.from_json(F.col("body"), _SCHEMA)
     base = [c for c in df.columns
-            if c not in (kind_col, db_col, body_col)]
+            if c not in ("kind", "db", "body")]
     if exclude_databases:
         per_db = kind.isin("database", "table", "index", "function")
         df = df.where(~(per_db & db.isin(*exclude_databases)))
@@ -210,12 +207,12 @@ def postgresql_stats(
     arr = arr.otherwise(F.array().cast(f"array<struct<{_ENTRY}>>"))
 
     fanned = staged.select(
-        *base, kind.alias(kind_col), db.alias(db_col),
+        *base, kind.alias("kind"), db.alias("db"),
         F.explode(arr).alias("_m"),
     ).where(F.col("_m.present"))
     m = F.col("_m")
     rows = fanned.select(
-        *base, F.col(kind_col), F.col(db_col),
+        *base, F.col("kind"), F.col("db"),
         m["metric"].alias("pg_metric"), m["attr"].alias("pg_attr"),
         m["table"].alias("pg_table"), m["index"].alias("pg_index"),
         m["value"].alias("pg_value"), m["value_d"].alias("pg_value_d"),
@@ -225,8 +222,8 @@ def postgresql_stats(
     counts = (staged.where(kind == "database")
               .groupBy(*base)
               .agg(F.count("*").alias("_n"))
-              .select(*base, F.lit("database_count").alias(kind_col),
-                      F.lit(None).cast("string").alias(db_col),
+              .select(*base, F.lit("database_count").alias("kind"),
+                      F.lit(None).cast("string").alias("db"),
                       F.lit("postgresql.database.count")
                       .alias("pg_metric"),
                       F.lit(None).cast("string").alias("pg_attr"),

@@ -39,7 +39,7 @@ GROUPING here — the rendered "*"-joined string itself is transport.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _FLAT = ("array_join(array_sort(transform(map_entries({m}), "

@@ -182,13 +182,6 @@ def prw_histogram_series(
     *,
     id_cols: list[str],
     name_col: str = "name",
-    ts_ns_col: str = "ts_ns",
-    sum_col: str = "sum",
-    has_sum_col: str = "has_sum",
-    count_col: str = "count",
-    bounds_col: str = "bounds",
-    bucket_counts_col: str = "bucket_counts",
-    stale_col: str = "stale",
 ) -> DataFrame:
     """addHistogramDataPoints (helper.go:205-278).
 
@@ -200,16 +193,16 @@ def prw_histogram_series(
     ``transform``+``aggregate`` over the (small) bounds array followed by
     a single ``inline`` Generate.
     """
-    df = df.withColumn("_stale", F.coalesce(F.col(stale_col), F.lit(False)))
+    df = df.withColumn("_stale", F.coalesce(F.col("stale"), F.lit(False)))
     name = F.col(name_col)
-    ts_ms = (F.col(ts_ns_col) / F.lit(1000000)).cast("bigint")
+    ts_ms = (F.col("ts_ns") / F.lit(1000000)).cast("bigint")
     stale = F.col("_stale")
-    n = F.least(F.size(F.col(bounds_col)), F.size(F.col(bucket_counts_col)))
+    n = F.least(F.size(F.col("bounds")), F.size(F.col("bucket_counts")))
     # cumulative bucket counts: prefix sums of bucket_counts[0..i]
     cum = F.transform(
         F.sequence(F.lit(1), n),
         lambda i: F.aggregate(
-            F.slice(F.col(bucket_counts_col), F.lit(1), i),
+            F.slice(F.col("bucket_counts"), F.lit(1), i),
             F.lit(0).cast("bigint"), lambda acc, x: acc + x),
     )
     val = lambda v: F.when(stale, F.lit(None).cast("double")).otherwise(v)  # noqa: E731
@@ -218,18 +211,18 @@ def prw_histogram_series(
     none_le = F.lit(None).cast("string")
 
     rows = F.concat(
-        F.when(F.col(has_sum_col),
+        F.when(F.col("has_sum"),
                F.array(sample(F.concat(name, F.lit("_sum")), none_le,
-                              val(F.col(sum_col).cast("double")))))
+                              val(F.col("sum").cast("double")))))
         .otherwise(F.array().cast("array<struct<metric:string,le:string,value:double>>")),
         F.array(sample(F.concat(name, F.lit("_count")), none_le,
-                       val(F.col(count_col).cast("double")))),
+                       val(F.col("count").cast("double")))),
         F.zip_with(
-            F.slice(F.col(bounds_col), F.lit(1), n), cum,
+            F.slice(F.col("bounds"), F.lit(1), n), cum,
             lambda b, c: sample(F.concat(name, F.lit("_bucket")),
                                 _fmt_float(b), val(c.cast("double")))),
         F.array(sample(F.concat(name, F.lit("_bucket")), F.lit("+Inf"),
-                       val(F.col(count_col).cast("double")))),
+                       val(F.col("count").cast("double")))),
     )
     out = df.select(*id_cols, ts_ms.alias("ts_ms"), stale.alias("stale"),
                     F.inline(rows))
@@ -241,18 +234,12 @@ def prw_summary_series(
     *,
     id_cols: list[str],
     name_col: str = "name",
-    ts_ns_col: str = "ts_ns",
-    sum_col: str = "sum",
-    count_col: str = "count",
-    quantiles_col: str = "quantiles",
-    quantile_values_col: str = "quantile_values",
-    stale_col: str = "stale",
 ) -> DataFrame:
     """addSummaryDataPoints (helper.go:382-428): _sum + _count series plus
     one base-name series per quantile with the ``quantile`` label."""
-    df = df.withColumn("_stale", F.coalesce(F.col(stale_col), F.lit(False)))
+    df = df.withColumn("_stale", F.coalesce(F.col("stale"), F.lit(False)))
     name = F.col(name_col)
-    ts_ms = (F.col(ts_ns_col) / F.lit(1000000)).cast("bigint")
+    ts_ms = (F.col("ts_ns") / F.lit(1000000)).cast("bigint")
     stale = F.col("_stale")
     val = lambda v: F.when(stale, F.lit(None).cast("double")).otherwise(v)  # noqa: E731
     sample = lambda nm, q, v: F.struct(  # noqa: E731
@@ -262,11 +249,11 @@ def prw_summary_series(
     rows = F.concat(
         F.array(
             sample(F.concat(name, F.lit("_sum")), none_q,
-                   val(F.col(sum_col).cast("double"))),
+                   val(F.col("sum").cast("double"))),
             sample(F.concat(name, F.lit("_count")), none_q,
-                   val(F.col(count_col).cast("double")))),
+                   val(F.col("count").cast("double")))),
         F.zip_with(
-            F.col(quantiles_col), F.col(quantile_values_col),
+            F.col("quantiles"), F.col("quantile_values"),
             lambda q, v: sample(name, _fmt_float(q),
                                 val(v.cast("double")))),
     )
@@ -371,9 +358,6 @@ def prw_target_info(
     df: DataFrame,
     *,
     id_col: str,
-    attrs_col: str = "resource_attrs",
-    ts_ns_col: str = "ts_ns",
-    namespace: str | None = None,
 ) -> DataFrame:
     """addResourceTargetInfo (helper.go:483-532) -> exploded labels of the
     target_info sample (value 1.0 at ns->ms timestamp).
@@ -385,12 +369,11 @@ def prw_target_info(
     but still feed job/instance.
     """
     ident = ["service.namespace", "service.name", "service.instance.id"]
-    name = ("%s_target_info" % namespace) if namespace else "target_info"
-    a = F.col(attrs_col)
+    a = F.col("resource_attrs")
     non_ident = F.size(F.filter(
         F.map_keys(a), lambda k: ~k.isin(*ident)))
     eligible = df.where(
-        (F.col(ts_ns_col).isNotNull()) & (F.col(ts_ns_col) != 0)
+        (F.col("ts_ns").isNotNull()) & (F.col("ts_ns") != 0)
         & (non_ident > 0)
         & (F.element_at(a, "service.name").isNotNull()
            | F.element_at(a, "service.instance.id").isNotNull()))
@@ -400,8 +383,8 @@ def prw_target_info(
         F.element_at(a, "service.name").alias("_ti_svc"),
         F.element_at(a, "service.namespace").alias("_ti_ns"),
         F.element_at(a, "service.instance.id").alias("_ti_inst"),
-        F.lit(name).alias("_ti_name"),
-        ((F.col(ts_ns_col) / F.lit(1000000)).cast("bigint")).alias("ts_ms"),
+        F.lit("target_info").alias("_ti_name"),
+        ((F.col("ts_ns") / F.lit(1000000)).cast("bigint")).alias("ts_ms"),
     )
     labels = prw_label_set(
         prepped, id_col=id_col, attrs_col="_ti_attrs",
@@ -412,26 +395,14 @@ def prw_target_info(
         id_col, "label", "value", "ts_ms", F.lit(1.0).alias("sample_value"))
 
 
-def prom_metadata(
-    df: DataFrame,
-    *,
-    name_col: str = "name",
-    unit_col: str = "unit",
-    type_col: str = "metric_type",
-    monotonic_col: str = "is_monotonic",
-    metadata_type_col: str | None = "metadata_type",
-    description_col: str = "description",
-    namespace: str | None = None,
-    add_suffixes: bool = True,
-) -> DataFrame:
+def prom_metadata(df: DataFrame) -> DataFrame:
     """OtelMetricsToMetadata (otlp_to_openmetrics_metadata.go:16-81):
     one metadata row per metric — prom type (with the metadata-key
     unknown/info/stateset overrides), compliant family name, compliant
     unit, help text."""
-    t = F.col(type_col)
-    mono = F.coalesce(F.col(monotonic_col), F.lit(False))
-    md = (F.coalesce(F.col(metadata_type_col), F.lit(""))
-          if metadata_type_col else F.lit(""))
+    t = F.col("metric_type")
+    mono = F.coalesce(F.col("is_monotonic"), F.lit(False))
+    md = F.coalesce(F.col("metadata_type"), F.lit(""))
     prom_type = (
         F.when(t == "gauge",
                F.when(md == "unknown", "UNKNOWN").otherwise("GAUGE"))
@@ -447,9 +418,7 @@ def prom_metadata(
     return df.select(
         prom_type.alias("prom_type"),
         prom_compliant_name(
-            F.col(name_col), F.col(unit_col), t, mono,
-            namespace=namespace, add_suffixes=add_suffixes,
-        ).alias("family_name"),
-        prom_compliant_unit(F.col(unit_col)).alias("prom_unit"),
-        F.col(description_col).alias("help"),
+            F.col("name"), F.col("unit"), t, mono).alias("family_name"),
+        prom_compliant_unit(F.col("unit")).alias("prom_unit"),
+        F.col("description").alias("help"),
     )

@@ -114,7 +114,6 @@ def _canon_attrs(parts: Column, sep: str = ":") -> Column:
 
 def statsd_parse(
     df: DataFrame,
-    line_col: str = "body",
     enable_simple_tags: bool = False,
     enable_metric_type: bool = False,
 ) -> DataFrame:
@@ -138,7 +137,7 @@ def statsd_parse(
     floats ('1e309' value or rate) are ParseFloat range ERRORS, while
     'inf'/'nan' spellings are accepted — see ``_go_float_ok``.
     """
-    line = F.col(line_col)
+    line = F.col("body")
     has_pipe = F.instr(line, "|") > 0
     name_value = F.substring_index(line, "|", 1)
     has_colon = F.instr(name_value, ":") > 0
@@ -283,7 +282,7 @@ def _effective_rate() -> Column:
     return F.when(r.isNotNull() & (r > 0) & (r < 1), r).otherwise(F.lit(1.0))
 
 
-def statsd_counters(parsed: DataFrame, is_monotonic: bool = False) -> DataFrame:
+def statsd_counters(parsed: DataFrame) -> DataFrame:
     """Counter aggregation: per (name, attrs), sum of per-line
     ``int64(value / rate)`` — the truncation happens per LINE, not on
     the total (Aggregate :290-298 adds counterValue() per line).
@@ -294,7 +293,7 @@ def statsd_counters(parsed: DataFrame, is_monotonic: bool = False) -> DataFrame:
     return (
         c.groupBy(F.col("sd_name").alias("name"), F.col("sd_attrs").alias("attrs"))
         .agg(F.sum(inc).alias("counter_value"))
-        .withColumn("is_monotonic", F.lit(bool(is_monotonic)))
+        .withColumn("is_monotonic", F.lit(False))
     )
 
 
@@ -341,7 +340,7 @@ def statsd_summaries(parsed: DataFrame) -> DataFrame:
 # carbon plaintext
 # ---------------------------------------------------------------------------
 
-def carbon_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
+def carbon_parse(df: DataFrame) -> DataFrame:
     """Parse carbon plaintext ``<path> <value> <ts>`` lines.
 
     Mirrors ``path_parser_helper.go Parse`` (:92-147): SplitN on ' '
@@ -358,7 +357,7 @@ def carbon_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
     invalid lines. A remainder that is empty as a whole (``name;``) is
     legal (:53-56).
     """
-    line = F.col(line_col)
+    line = F.col("body")
     parts = F.split(line, " ")
     three = F.size(parts) == 3
     path, value_str, ts_str = parts[0], parts[1], parts[2]
@@ -418,7 +417,7 @@ def carbon_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
 # prometheus exposition text
 # ---------------------------------------------------------------------------
 
-def prom_text_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
+def prom_text_parse(df: DataFrame) -> DataFrame:
     """Parse Prometheus exposition-format sample lines.
 
     ``name{k="v",...} value [ts_ms]`` — value accepts the special
@@ -429,7 +428,7 @@ def prom_text_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
     attaches those series to their TYPE), canonical sorted labels,
     double value, and optional millisecond timestamp.
     """
-    line = F.col(line_col)
+    line = F.col("body")
     sample_re = (
         r'^([a-zA-Z_:][a-zA-Z0-9_:]*)'
         r'(\{([^}]*)\})?'
@@ -474,11 +473,11 @@ def prom_text_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
     )
 
 
-def prom_type_table(df: DataFrame, line_col: str = "body") -> DataFrame:
+def prom_type_table(df: DataFrame) -> DataFrame:
     """Extract ``# TYPE <name> <type>`` metadata lines into a
     (family → metric type) dimension — broadcast-joined onto samples
     via ``pm_family`` (small by construction: one row per metric)."""
-    line = F.col(line_col)
+    line = F.col("body")
     type_re = r"^# TYPE ([a-zA-Z_:][a-zA-Z0-9_:]*) (counter|gauge|histogram|summary|untyped)\s*$"
     return (
         df.filter(line.rlike(type_re))
@@ -494,7 +493,7 @@ def prom_type_table(df: DataFrame, line_col: str = "body") -> DataFrame:
 # influx line protocol
 # ---------------------------------------------------------------------------
 
-def influx_line_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
+def influx_line_parse(df: DataFrame) -> DataFrame:
     """Parse InfluxDB line protocol (unescaped common case), one
     output row per FIELD (fields explode; tags replicate — the same
     flattening influxdbreceiver applies building pmetric points).
@@ -504,7 +503,7 @@ def influx_line_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
     float otherwise. Lines with escapes (``\\,`` ``\\ `` ``\\"``) are
     flagged not-ok rather than mis-parsed.
     """
-    line = F.col(line_col)
+    line = F.col("body")
     # STAGED projections: the quote-aware splits are expensive regexes
     # referenced by a dozen downstream expressions — materialize each
     # once as a concrete column (select barriers keep CollapseProject
@@ -536,7 +535,7 @@ def influx_line_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
         F.when(n == 3, parts[2]).otherwise(F.lit("")).alias("_ts_str"),
         # split fields on commas NOT inside double quotes (same gate)
         F.when(
-            F.col(line_col).contains('"'),
+            F.col("body").contains('"'),
             F.split(parts[1], r',(?=(?:[^"]*"[^"]*")*[^"]*$)'),
         ).otherwise(F.split(parts[1], ",")).alias("_fparts"),
     ).drop("_parts")
@@ -623,7 +622,7 @@ _LOKI_SCHEMA = (
 )
 
 
-def loki_push_parse(df: DataFrame, body_col: str = "body") -> DataFrame:
+def loki_push_parse(df: DataFrame) -> DataFrame:
     """Parse Loki HTTP push-request JSON bodies into one row per log
     entry.
 
@@ -637,7 +636,7 @@ def loki_push_parse(df: DataFrame, body_col: str = "body") -> DataFrame:
     Plan: gated ``from_json`` + two Generates — all JVM-side; the JSON
     schema prunes to exactly the fields used.
     """
-    parsed = F.from_json(F.col(body_col), _LOKI_SCHEMA)
+    parsed = F.from_json(F.col("body"), _LOKI_SCHEMA)
     out = df.withColumn("_stream", F.explode_outer(parsed["streams"]))
     labels = F.concat_ws(
         ",",
@@ -710,7 +709,7 @@ _COLLECTD_SCHEMA = (
 )
 
 
-def collectd_parse(df: DataFrame, body_col: str = "body") -> DataFrame:
+def collectd_parse(df: DataFrame) -> DataFrame:
     """Parse collectd write_http JSON payloads into one row per value
     (``receiver/collectdreceiver/collectd.go:20-200``).
 
@@ -726,7 +725,7 @@ def collectd_parse(df: DataFrame, body_col: str = "body") -> DataFrame:
     - value int64-else-float64 (json.Number, :133-139);
     - ts = time seconds (float) → ns (:45-52).
     """
-    parsed = F.from_json(F.col(body_col), _COLLECTD_SCHEMA)
+    parsed = F.from_json(F.col("body"), _COLLECTD_SCHEMA)
     rec = df.withColumn("_body_ok", parsed.isNotNull()).withColumn(
         "_rec", F.explode_outer(parsed)
     )
@@ -800,7 +799,6 @@ def collectd_parse(df: DataFrame, body_col: str = "body") -> DataFrame:
 def grafana_host_info(
     df: DataFrame,
     host_identifiers: list[str],
-    ts_col: str = "ts",
     flush_interval: str = "1 hour",
 ) -> DataFrame:
     """``connector/grafanacloudconnector/connector.go:72-88`` +
@@ -814,7 +812,7 @@ def grafana_host_info(
         df.withColumn("__host", host)
         .filter(F.col("__host").isNotNull())
         .groupBy(
-            F.window(F.col(ts_col), flush_interval)["start"].alias("flush_start"),
+            F.window(F.col("ts"), flush_interval)["start"].alias("flush_start"),
             F.col("__host").alias("grafana_host_id"),
         )
         .agg(F.count(F.lit(1)).alias("spans_seen"))
@@ -834,9 +832,6 @@ def grafana_host_info(
 
 def webhook_events(
     df: DataFrame,
-    body_col: str = "body",
-    query_col: str | None = "query",
-    headers_col: str | None = "headers",
     split_logs_at_newline: bool = True,
     header_regex: str | None = None,
 ) -> DataFrame:
@@ -848,29 +843,26 @@ def webhook_events(
     ``header.<name>`` record attributes (:82-92). The JSON-boundary
     split mode (brace-depth scan) is not vectorizable without a UDF
     and is out of scope. Pure projection + one Generate."""
-    body = F.col(body_col)
+    body = F.col("body")
     lines = (
         F.split(body, "\n") if split_logs_at_newline else F.array(body)
     )
     out = df.withColumn("wh_body", F.explode(lines))
-    if query_col:
-        q = F.col(query_col)
-        attrs = F.filter(
-            F.transform(
-                F.map_entries(q),
-                lambda e: F.when(
-                    e["value"] != "",
-                    F.concat(e["key"], F.lit("="), e["value"]),
-                ),
+    attrs = F.filter(
+        F.transform(
+            F.map_entries(F.col("query")),
+            lambda e: F.when(
+                e["value"] != "",
+                F.concat(e["key"], F.lit("="), e["value"]),
             ),
-            lambda x: x.isNotNull(),
-        )
-        out = out.withColumn("wh_resource_attrs", _canon_attrs(attrs, sep="="))
-    if headers_col and header_regex:
-        h = F.col(headers_col)
+        ),
+        lambda x: x.isNotNull(),
+    )
+    out = out.withColumn("wh_resource_attrs", _canon_attrs(attrs, sep="="))
+    if header_regex:
         matched = F.filter(
             F.transform(
-                F.map_entries(h),
+                F.map_entries(F.col("headers")),
                 lambda e: F.when(
                     e["key"].rlike(header_regex),
                     F.concat(F.lit("header."), e["key"], F.lit("="), e["value"]),
@@ -1151,7 +1143,7 @@ def _hec_flat(val: Column) -> Column:
     ).otherwise(F.lit(True))
 
 
-def splunkhec_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
+def splunkhec_parse(df: DataFrame) -> DataFrame:
     """Parse Splunk HEC event JSON into log records
     (``receiver/splunkhecreceiver/splunk_to_logdata.go:31-73`` +
     the request validation in ``receiver.go:410-446``).
@@ -1174,7 +1166,7 @@ def splunkhec_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
 
     Vectorized variant path — zero Python, zero shuffle.
     """
-    line = F.col(line_col)
+    line = F.col("body")
     v = _hec_variant(line)
 
     def meta(name: str) -> tuple[Column, Column]:
@@ -1264,7 +1256,7 @@ def splunkhec_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
     )
 
 
-def splunkhec_metrics(df: DataFrame, line_col: str = "body") -> DataFrame:
+def splunkhec_metrics(df: DataFrame) -> DataFrame:
     """Explode Splunk HEC metric events into gauge datapoints
     (``splunkhec_to_metricdata.go:21-101``).
 
@@ -1279,7 +1271,7 @@ def splunkhec_metrics(df: DataFrame, line_col: str = "body") -> DataFrame:
     ``metric_name*``/``_value`` minus empty keys and null values,
     stringified (buildAttributes:155-169).
     """
-    line = F.col(line_col)
+    line = F.col("body")
     fm = F.from_json(
         F.get_json_object(line, "$.fields"), "map<string,variant>"
     )
@@ -1544,7 +1536,7 @@ def cloudflare_logs_parse(
 # ---------------------------------------------------------------------------
 
 
-def cwlogs_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
+def cwlogs_parse(df: DataFrame) -> DataFrame:
     """Parse CloudWatch Logs subscription records (one decompressed
     JSON record per row — gzip is transport framing;
     ``receiver/awsfirehosereceiver/internal/unmarshaler/cwlog/
@@ -1558,7 +1550,7 @@ def cwlogs_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
     slices (rendered as JSON arrays) plus the two deprecated
     cloudwatch string attrs (:99-110).
     """
-    line = F.col(line_col)
+    line = F.col("body")
     z = F.from_json(
         line,
         "messageType string, owner string, logGroup string,"
@@ -1609,7 +1601,7 @@ def cwlogs_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
     ).drop("_cl_ev")
 
 
-def cwmetrics_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
+def cwmetrics_parse(df: DataFrame) -> DataFrame:
     """Parse CloudWatch Metric Stream JSON data (one NDJSON datum per
     row — the reference splits each Firehose record on newlines;
     ``cwmetricstream/unmarshaler.go:54-230`` + ``cwmetric.go``).
@@ -1626,7 +1618,7 @@ def cwmetrics_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
     service. identity, with ``AWS/``-prefixed namespaces split into
     service namespace + name (:185-207).
     """
-    line = F.col(line_col)
+    line = F.col("body")
     z = F.from_json(
         line,
         "metric_stream_name string, account_id string, region string,"
@@ -1754,7 +1746,7 @@ _AZURE_REC = (
 )
 
 
-def azure_resource_logs_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
+def azure_resource_logs_parse(df: DataFrame) -> DataFrame:
     """Parse Azure Monitor resource-log batches (one Event Hub message
     ``{"records": [...]}`` per row —
     ``pkg/translator/azure/resourcelogs_to_logs.go:82-222``).
@@ -1773,7 +1765,7 @@ def azure_resource_logs_parse(df: DataFrame, line_col: str = "body") -> DataFram
 
     Vectorized from_json + explode; zero Python.
     """
-    line = F.col(line_col)
+    line = F.col("body")
     z = F.from_json(line, _AZURE_REC)
     # identity/properties keep arbitrary shape — variant side-channel
     idx_props = F.from_json(
@@ -1940,7 +1932,7 @@ DD_KNOWN_RESOURCE_ATTRS: dict[str, str] = {
 }
 
 
-def datadog_series_v1_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
+def datadog_series_v1_parse(df: DataFrame) -> DataFrame:
     """Parse Datadog ``/api/v1/series`` submissions (one
     ``{"series": [...]}`` payload per row —
     ``receiver/datadogreceiver/internal/translator/series.go:55-119``
@@ -1961,7 +1953,7 @@ def datadog_series_v1_parse(df: DataFrame, line_col: str = "body") -> DataFrame:
     interval multiplies by zero in the reference (NullableInt64 is
     "set"); here a null interval leaves the value unscaled.
     """
-    line = F.col(line_col)
+    line = F.col("body")
     z = F.from_json(
         line,
         "series array<struct<metric:string,type:string,interval:long,"
@@ -2171,7 +2163,6 @@ _EXPVAR_SCHEMA = """struct<memstats: struct<
 
 def expvar_memstats(
     df: DataFrame,
-    body_col: str = "body",
     enabled: frozenset | None = None,
 ) -> DataFrame:
     """/debug/vars memstats JSON → one row per enabled metric.
@@ -2197,7 +2188,7 @@ def expvar_memstats(
         if name not in _EXPVAR_DISABLED_DEFAULT
     } if enabled is None else set(enabled)
 
-    ms = F.from_json(F.col(body_col), _EXPVAR_SCHEMA)["memstats"]
+    ms = F.from_json(F.col("body"), _EXPVAR_SCHEMA)["memstats"]
     df = df.withColumn("_ms", ms)
     m = F.col("_ms")
     z = lambda f: F.coalesce(m[f], F.lit(0))  # noqa: E731  Go zero value
@@ -2230,7 +2221,7 @@ def expvar_memstats(
 
     ok = m.isNotNull()
     exploded = df.select(
-        *[c for c in df.columns if c not in ("_ms", body_col)],
+        *[c for c in df.columns if c not in ("_ms", "body")],
         ok.alias("ev_ok"),
         F.explode_outer(
             F.when(ok, F.array(*entries))
@@ -2294,7 +2285,6 @@ _HAPROXY_HRSP = ("1xx", "2xx", "3xx", "4xx", "5xx", "other")
 
 def haproxy_stats(
     df: DataFrame,
-    body_col: str = "body",
     endpoint: str = "",
     enabled: frozenset | None = None,
 ) -> DataFrame:
@@ -2328,7 +2318,7 @@ def haproxy_stats(
     } | {"haproxy.requests.total", "haproxy.responses.errors"} \
         if enabled is None else set(enabled)
 
-    lines = F.split(F.trim(F.col(body_col)), "\r?\n")
+    lines = F.split(F.trim(F.col("body")), "\r?\n")
     header = F.transform(
         F.split(F.regexp_replace(F.get(lines, 0), "^# ", ""), ","),
         lambda h: F.trim(h),
@@ -2338,7 +2328,7 @@ def haproxy_stats(
         lambda x: x != "",
     )
     staged = df.select(
-        *[c for c in df.columns if c != body_col],
+        *[c for c in df.columns if c != "body"],
         header.alias("_hdr"),
         records.alias("_recs"),
     )
@@ -2472,7 +2462,6 @@ _APACHE_SCOREBOARD = (
 
 def apache_status(
     df: DataFrame,
-    body_col: str = "body",
     server_name: str = "",
     port: str = "",
 ) -> DataFrame:
@@ -2493,7 +2482,7 @@ def apache_status(
     constants). Plan: one codegen projection + inline explode, zero
     shuffle, zero Python.
     """
-    body = F.col(body_col)
+    body = F.col("body")
 
     def raw(key: str) -> Column:
         pat = "(?m)^" + key.replace(" ", "\\ ") + ": (.*)$"
@@ -2566,7 +2555,7 @@ def apache_status(
         sb_has & (unk > 0), unk, nd, F.lit(True))
 
     exploded = df.select(
-        *[c for c in df.columns if c != body_col],
+        *[c for c in df.columns if c != "body"],
         F.lit(server_name).alias("ap_server_name"),
         F.lit(port).alias("ap_server_port"),
         F.explode(
@@ -2600,7 +2589,7 @@ _NGINX_STUB_RE = (
 )
 
 
-def nginx_stub_status(df: DataFrame, body_col: str = "body") -> DataFrame:
+def nginx_stub_status(df: DataFrame) -> DataFrame:
     """stub_status pages → the 4 nginx metrics (7 datapoints).
 
     Re-expresses ``receiver/nginxreceiver/scraper.go:48-64`` over the
@@ -2614,7 +2603,7 @@ def nginx_stub_status(df: DataFrame, body_col: str = "body") -> DataFrame:
     ``ng_ok=false`` row. Plan: one regexp projection + inline
     explode, zero shuffle, zero Python.
     """
-    body = F.col(body_col)
+    body = F.col("body")
 
     def g(i: int) -> Column:
         return F.regexp_extract(body, _NGINX_STUB_RE, i).try_cast("bigint")
@@ -2643,7 +2632,7 @@ def nginx_stub_status(df: DataFrame, body_col: str = "body") -> DataFrame:
         "struct<metric:string,mono:boolean,state:string,value:bigint>"
     ))
     exploded = df.select(
-        *[c for c in df.columns if c != body_col],
+        *[c for c in df.columns if c != "body"],
         ok.alias("ng_ok"),
         F.explode(
             F.when(ok, F.array(*entries)).otherwise(null_entry)
@@ -2666,7 +2655,6 @@ def nginx_stub_status(df: DataFrame, body_col: str = "body") -> DataFrame:
 
 def journald_parse(
     df: DataFrame,
-    line_col: str = "body",
     convert_message_bytes: bool = False,
 ) -> DataFrame:
     """``journalctl -o json`` lines → log rows.
@@ -2687,7 +2675,7 @@ def journald_parse(
     ``map<string,variant>`` + codegen projection — zero shuffle, zero
     Python.
     """
-    m = F.from_json(F.col(line_col), "map<string,variant>")
+    m = F.from_json(F.col("body"), "map<string,variant>")
     df = df.withColumn("_j", m)
     m = F.col("_j")
 
@@ -2746,7 +2734,7 @@ def journald_parse(
     )
 
     return df.select(
-        *[c for c in df.columns if c not in ("_j", line_col)],
+        *[c for c in df.columns if c not in ("_j", "body")],
         F.when(ok, ts_int * 1000).alias("jd_ts_ns"),
         F.when(ok, cursor).alias("jd_cursor"),
         F.when(ok, body_json).alias("jd_body"),
@@ -2824,7 +2812,6 @@ _REDIS_DISABLED_DEFAULT = frozenset({
 
 def redis_info(
     df: DataFrame,
-    body_col: str = "body",
     enabled: frozenset | None = None,
 ) -> DataFrame:
     """Redis ``INFO`` pages → one row per recorded metric.
@@ -2867,14 +2854,14 @@ def redis_info(
     ) - _REDIS_DISABLED_DEFAULT if enabled is None else set(enabled)
 
     lines = F.filter(
-        F.split(F.col(body_col), "\r?\n"),
+        F.split(F.col("body"), "\r?\n"),
         lambda l: (l != "") & ~l.startswith("#"),
     )
     ents = F.filter(
         F.transform(lines, lambda l: F.split(l, ":")),
         lambda a: F.size(a) == 2,
     )
-    passthrough = [c for c in df.columns if c != body_col]
+    passthrough = [c for c in df.columns if c != "body"]
     staged = df.select(*passthrough, ents.alias("_ents"))
     ents = F.col("_ents")
 
@@ -3147,7 +3134,7 @@ _MEMCACHED_STATS: tuple[tuple[str, str, str, bool, str, dict], ...] = (
 )
 
 
-def memcached_stats(df: DataFrame, body_col: str = "body") -> DataFrame:
+def memcached_stats(df: DataFrame) -> DataFrame:
     """``stats`` command output → one row per recorded metric.
 
     Re-expresses ``receiver/memcachedreceiver/scraper.go:38-211`` over
@@ -3163,7 +3150,7 @@ def memcached_stats(df: DataFrame, body_col: str = "body") -> DataFrame:
     parse, 0 when the sum is 0. Plan: one projection + inline
     explode, zero shuffle, zero Python.
     """
-    body = F.col(body_col)
+    body = F.col("body")
 
     def raw(key: str) -> Column:
         return F.regexp_extract(
@@ -3217,7 +3204,7 @@ def memcached_stats(df: DataFrame, body_col: str = "body") -> DataFrame:
            {"operation": op}, both, nl, ratio)
 
     exploded = df.select(
-        *[c for c in df.columns if c != body_col],
+        *[c for c in df.columns if c != "body"],
         F.explode(
             F.filter(F.array(*entries), lambda x: x["present"])
         ).alias("_m"),
@@ -3546,8 +3533,6 @@ _RABBITMQ_MSG_STATS = (
 
 def rabbitmq_api(
     df: DataFrame,
-    body_col: str = "body",
-    kind_col: str = "kind",
     enable_node_metrics: bool = False,
 ) -> DataFrame:
     """RabbitMQ management-API objects → one row per recorded metric.
@@ -3573,8 +3558,8 @@ def rabbitmq_api(
     """
     from pyspark.sql import types as T
 
-    kind = F.col(kind_col)
-    q = F.from_json(F.col(body_col), (
+    kind = F.col("kind")
+    q = F.from_json(F.col("body"), (
         "struct<name: string, node: string, vhost: string,"
         " consumers: bigint, messages_unacknowledged: bigint,"
         " messages_ready: bigint, message_stats: map<string,variant>>"
@@ -3584,15 +3569,15 @@ def rabbitmq_api(
         t = {"int": T.LongType(), "double": T.DoubleType(),
              "bool": T.BooleanType()}[vt]
         node_fields.append(T.StructField(tag, t))
-    n = F.from_json(F.col(body_col), T.StructType(node_fields))
+    n = F.from_json(F.col("body"), T.StructType(node_fields))
 
     # Go json.Unmarshal errors on non-object payloads; from_json is
     # PERMISSIVE (all-null struct), so gate on the variant shape.
     is_obj = F.schema_of_variant(
-        F.try_parse_json(F.col(body_col))
+        F.try_parse_json(F.col("body"))
     ).startswith("OBJECT")
     df = df.select(
-        *[c for c in df.columns if c != body_col],
+        *[c for c in df.columns if c != "body"],
         q.alias("_q"), n.alias("_n"),
         F.coalesce(is_obj, F.lit(False)).alias("_is_obj"),
     )
@@ -3689,8 +3674,20 @@ _COUCHDB_CODES = ("200", "201", "202", "204", "206", "301", "302", "304",
 _COUCHDB_VIEWS = ("temporary_view_reads", "view_reads")
 
 
+def _json_num(v: Column, path: str) -> Column:
+    """The JSON number at ``path`` of variant ``v`` as a double. Go's
+    parseInt/parseFloat type-switch accepts JSON numbers only — a JSON
+    string "123" must NOT pass, so gate on the variant's own type
+    before casting."""
+    pv = F.try_variant_get(v, path, "variant")
+    is_num = F.schema_of_variant(pv).rlike(
+        "^(BIGINT|INT|SMALLINT|TINYINT|DOUBLE|FLOAT|DECIMAL)"
+    )
+    return F.when(is_num, F.try_variant_get(pv, "$", "double"))
+
+
 def couchdb_stats(
-    df: DataFrame, body_col: str = "body", node_name: str = ""
+    df: DataFrame, node_name: str = ""
 ) -> DataFrame:
     """``_node/_local/_stats`` documents → one row per recorded metric.
 
@@ -3704,7 +3701,7 @@ def couchdb_stats(
     the endpoint as ``couchdb.node.name``. Plan: one schema-pruned
     from_json + inline explode, zero shuffle/Python.
     """
-    v = F.try_parse_json(F.col(body_col))
+    v = F.try_parse_json(F.col("body"))
     df = df.withColumn("_v", v)
     v = F.col("_v")
 
@@ -3713,18 +3710,8 @@ def couchdb_stats(
     nd = F.lit(None).cast("double")
     entries = []
 
-    def _num(path: str) -> Column:
-        # Go's parseInt/parseFloat type-switch accepts JSON numbers
-        # only — a JSON string "123" must NOT pass, so gate on the
-        # variant's own type before casting.
-        pv = F.try_variant_get(v, path, "variant")
-        is_num = F.schema_of_variant(pv).rlike(
-            "^(BIGINT|INT|SMALLINT|TINYINT|DOUBLE|FLOAT|DECIMAL)"
-        )
-        return F.when(is_num, F.try_variant_get(pv, "$", "double"))
-
     def path_num(*keys) -> Column:
-        return _num("$." + ".".join(keys))
+        return _json_num(v, "$." + ".".join(keys))
 
     def mk(metric, kind, mono, method, code, view, op, vi, vd, ok):
         entries.append(F.struct(
@@ -3751,7 +3738,7 @@ def couchdb_stats(
            None, p, nd, p.isNotNull())
     for code in _COUCHDB_CODES:
         # numeric keys need bracket quoting in variant paths
-        p = _num("$.httpd_status_codes['" + code + "'].value")
+        p = _json_num(v, "$.httpd_status_codes['" + code + "'].value")
         mk("couchdb.httpd.responses", "sum", True, None, code, None,
            None, p, nd, p.isNotNull())
     for view in _COUCHDB_VIEWS:
@@ -3771,7 +3758,7 @@ def couchdb_stats(
            op, p, nd, p.isNotNull())
 
     exploded = df.select(
-        *[c for c in df.columns if c not in ("_v", body_col)],
+        *[c for c in df.columns if c not in ("_v", "body")],
         F.lit(node_name).alias("cd_node_name"),
         F.explode(F.array(*entries)).alias("_m"),
     )
@@ -3910,7 +3897,7 @@ _MYSQL_GLOBAL_STATS: tuple[tuple[str, str, tuple], ...] = (
 )
 
 
-def mysql_global_status(df: DataFrame, body_col: str = "body") -> DataFrame:
+def mysql_global_status(df: DataFrame) -> DataFrame:
     """``SHOW GLOBAL STATUS`` maps → one row per recorded metric.
 
     Re-expresses the global-status half of the mysql receiver
@@ -3944,8 +3931,8 @@ def mysql_global_status(df: DataFrame, body_col: str = "body") -> DataFrame:
         "key string, metric string, attr string, is_misc boolean",
     )
 
-    mp = F.from_json(F.col(body_col), "map<string,string>")
-    base = [c for c in df.columns if c != body_col]
+    mp = F.from_json(F.col("body"), "map<string,string>")
+    base = [c for c in df.columns if c != "body"]
     staged = df.select(*base, mp.alias("_g"))
 
     ents = staged.select(
@@ -4011,9 +3998,6 @@ def mysql_global_status(df: DataFrame, body_col: str = "body") -> DataFrame:
 
 def mongodb_stats(
     df: DataFrame,
-    kind_col: str = "kind",
-    body_col: str = "body",
-    db_col: str = "database",
     mongo_version: str = "5.0",
 ) -> DataFrame:
     """MongoDB dbStats / serverStatus documents → metric rows.
@@ -4046,20 +4030,13 @@ def mongodb_stats(
     pipeline owns rate state). Plan: one try_parse_json + inline
     explode, zero shuffle/Python.
     """
-    v = F.try_parse_json(F.col(body_col))
+    v = F.try_parse_json(F.col("body"))
     df = df.withColumn("_v", v)
     v = F.col("_v")
-    kind = F.col(kind_col)
+    kind = F.col("kind")
 
     ns = F.lit(None).cast("string")
     entries = []
-
-    def num(path: str) -> Column:
-        pv = F.try_variant_get(v, path, "variant")
-        is_num = F.schema_of_variant(pv).rlike(
-            "^(BIGINT|INT|SMALLINT|TINYINT|DOUBLE|FLOAT|DECIMAL)"
-        )
-        return F.when(is_num, F.try_variant_get(pv, "$", "double"))
 
     def mk(cond, metric, attr, vi, ok):
         entries.append(F.struct(
@@ -4079,78 +4056,78 @@ def mongodb_stats(
         ("indexes", "mongodb.index.count"),
         ("indexSize", "mongodb.index.size"),
     ):
-        p = num("$." + path)
+        p = _json_num(v, "$." + path)
         mk(is_db, metric, None, p, p.isNotNull())
     major, minor = (mongo_version.split(".") + ["0"])[:2]
     if (int(major), int(minor)) < (4, 4):
-        p = num("$.numExtents")
+        p = _json_num(v, "$.numExtents")
         mk(is_db, "mongodb.extent.count", None, p, p.isNotNull())
 
     is_ss = kind == "serverstatus"
     for ct in ("active", "available", "current"):
-        p = num("$.connections." + ct)
+        p = _json_num(v, "$.connections." + ct)
         mk(is_ss, "mongodb.connection.count", ct, p, p.isNotNull())
     for mt in ("resident", "virtual"):
-        p = num("$.mem." + mt)
+        p = _json_num(v, "$.mem." + mt)
         mk(is_ss, "mongodb.memory.usage", mt, p * 1048576, p.isNotNull())
     for op, attr in (("inserted", "insert"), ("updated", "update"),
                      ("deleted", "delete")):
-        p = num("$.metrics.document." + op)
+        p = _json_num(v, "$.metrics.document." + op)
         mk(is_ss, "mongodb.document.operation.count", attr, p,
            p.isNotNull())
 
     is_adm = kind == "admin"
     engine = F.try_variant_get(v, "$.storageEngine.name", "string")
     is_wt = engine == "wiredTiger"
-    p = num("$.wiredTiger.session['open session count']")
+    p = _json_num(v, "$.wiredTiger.session['open session count']")
     mk(is_adm & (engine.isNull() | is_wt), "mongodb.session.count",
        None, F.when(is_wt, p),
        F.when(is_wt, p.isNotNull()).otherwise(F.lit(False)))
     for lat in ("read", "write", "command"):
-        p = num(f"$.opLatencies.{lat}s.latency")
+        p = _json_num(v, f"$.opLatencies.{lat}s.latency")
         mk(is_adm, "mongodb.operation.latency.time", lat, p,
            p.isNotNull())
     for op in ("insert", "query", "update", "delete", "getmore",
                "command"):
-        p = num("$.opcounters." + op)
+        p = _json_num(v, "$.opcounters." + op)
         mk(is_adm, "mongodb.operation.count", op, p, p.isNotNull())
-    p = num("$.globalLock.activeClients.writers")
+    p = _json_num(v, "$.globalLock.activeClients.writers")
     mk(is_adm, "mongodb.active.writes", None, p, p.isNotNull())
-    p = num("$.globalLock.activeClients.readers")
+    p = _json_num(v, "$.globalLock.activeClients.readers")
     mk(is_adm, "mongodb.active.reads", None, p, p.isNotNull())
-    p = num("$.wiredTiger.cache['bytes read into cache']")
+    p = _json_num(v, "$.wiredTiger.cache['bytes read into cache']")
     mk(is_adm, "mongodb.wtcache.bytes.read", None, p, p.isNotNull())
-    p = num("$.extra_info.page_faults")
+    p = _json_num(v, "$.extra_info.page_faults")
     mk(is_adm, "mongodb.page_faults", None, p, p.isNotNull())
-    miss = num("$.wiredTiger.cache['pages read into cache']")
-    req = num("$.wiredTiger.cache['pages requested from the cache']")
+    miss = _json_num(v, "$.wiredTiger.cache['pages read into cache']")
+    req = _json_num(v, "$.wiredTiger.cache['pages requested from the cache']")
     mk(is_adm & (engine.isNull() | is_wt), "mongodb.cache.operations",
        "miss", F.when(is_wt, miss),
        F.when(is_wt, miss.isNotNull()).otherwise(F.lit(False)))
     mk(is_adm & is_wt & miss.isNotNull(), "mongodb.cache.operations",
        "hit", req - miss, req.isNotNull())
-    p = num("$.globalLock.totalTime")
+    p = _json_num(v, "$.globalLock.totalTime")
     # integer µs -> ms division (Go int64 / 1000 truncates)
     mk(is_adm, "mongodb.global_lock.time", None,
        (p.cast("bigint") - F.pmod(p.cast("bigint"), 1000)) / 1000, p.isNotNull())
-    p = num("$.metrics.cursor.open.total")
+    p = _json_num(v, "$.metrics.cursor.open.total")
     mk(is_adm, "mongodb.cursor.count", None, p, p.isNotNull())
-    p = num("$.metrics.cursor.timedOut")
+    p = _json_num(v, "$.metrics.cursor.timedOut")
     mk(is_adm, "mongodb.cursor.timeout.count", None, p, p.isNotNull())
     for key, metric in (
         ("bytesIn", "mongodb.network.io.receive"),
         ("bytesOut", "mongodb.network.io.transmit"),
         ("numRequests", "mongodb.network.request.count"),
     ):
-        p = num("$.network." + key)
+        p = _json_num(v, "$.network." + key)
         mk(is_adm, metric, None, p, p.isNotNull())
-    p = num("$.uptimeMillis")
+    p = _json_num(v, "$.uptimeMillis")
     mk(is_adm, "mongodb.uptime", None, p, p.isNotNull())
-    p = num("$.ok")
+    p = _json_num(v, "$.ok")
     mk(is_adm, "mongodb.health", None, p, p.isNotNull())
 
     exploded = df.select(
-        *[c for c in df.columns if c not in ("_v", body_col)],
+        *[c for c in df.columns if c not in ("_v", "body")],
         F.explode(
             F.filter(F.array(*entries), lambda x: x["present"])
         ).alias("_m"),
@@ -4274,9 +4251,7 @@ _AEROSPIKE_NAMESPACE = (
 )
 
 
-def aerospike_info(
-    df: DataFrame, kind_col: str = "kind", body_col: str = "body"
-) -> DataFrame:
+def aerospike_info(df: DataFrame) -> DataFrame:
     """Aerospike info key/value maps → one row per recorded metric.
 
     Re-expresses ``receiver/aerospikereceiver/scraper.go:140-400``
@@ -4306,25 +4281,25 @@ def aerospike_info(
               " a2 string, a3 string",
     )
 
-    mp = F.from_json(F.col(body_col), "map<string,string>")
-    base = [c for c in df.columns if c not in (kind_col, body_col)]
-    staged = df.select(*base, F.col(kind_col).alias(kind_col),
+    mp = F.from_json(F.col("body"), "map<string,string>")
+    base = [c for c in df.columns if c not in ("kind", "body")]
+    staged = df.select(*base, F.col("kind").alias("kind"),
                        mp.alias("_i"))
     mpc = F.col("_i")
     ents = staged.select(
-        *base, kind_col,
+        *base, "kind",
         F.try_element_at(mpc, F.lit("node")).alias("as_node"),
-        F.when(F.col(kind_col) == "namespace",
+        F.when(F.col("kind") == "namespace",
                F.try_element_at(mpc, F.lit("name"))).alias("as_namespace"),
         F.explode(mpc).alias("_k", "_v"),
     )
     parsed = F.col("_v").try_cast("bigint")
     return ents.join(
         F.broadcast(dim),
-        (ents[kind_col] == dim["dkind"]) & (ents["_k"] == dim["key"]),
+        (ents["kind"] == dim["dkind"]) & (ents["_k"] == dim["key"]),
         "inner",
     ).select(
-        *base, kind_col, "as_node", "as_namespace",
+        *base, "kind", "as_node", "as_namespace",
         F.col("metric").alias("as_metric"),
         F.col("a1").alias("as_a1"),
         F.col("a2").alias("as_a2"),
@@ -4339,9 +4314,7 @@ def aerospike_info(
 # ---------------------------------------------------------------------------
 
 
-def podman_stats(
-    df: DataFrame, body_col: str = "body", image_col: str = "image"
-) -> DataFrame:
+def podman_stats(df: DataFrame) -> DataFrame:
     """podman libpod container stats → metric rows.
 
     Re-expresses ``receiver/podmanreceiver/receiver.go:134-180`` over
@@ -4354,14 +4327,14 @@ def podman_stats(
     tx_bytes (:160-161). Plan: one from_json + inline explode, zero
     shuffle/Python.
     """
-    s = F.from_json(F.col(body_col), (
+    s = F.from_json(F.col("body"), (
         "struct<ContainerID: string, Name: string, PerCPU: array<bigint>,"
         " CPU: double, CPUNano: bigint, CPUSystemNano: bigint,"
         " MemUsage: bigint, MemLimit: bigint, MemPerc: double,"
         " NetInput: bigint, NetOutput: bigint, BlockInput: bigint,"
         " BlockOutput: bigint>"
     ))
-    base = [c for c in df.columns if c != body_col]
+    base = [c for c in df.columns if c != "body"]
     df = df.select(*base, s.alias("_s"))
     s = F.col("_s")
 
@@ -4433,9 +4406,7 @@ def podman_stats(
 # ---------------------------------------------------------------------------
 
 
-def nsxt_stats(
-    df: DataFrame, kind_col: str = "kind", body_col: str = "body"
-) -> DataFrame:
+def nsxt_stats(df: DataFrame) -> DataFrame:
     """NSX-T interface/node status documents → metric rows.
 
     Re-expresses ``receiver/nsxtreceiver/scraper.go:186-233`` over rows
@@ -4449,15 +4420,15 @@ def nsxt_stats(
       derived available = total − used, and utilization =
       used / max(total, 1) (the division-by-zero guard, :227).
     """
-    kind = F.col(kind_col)
-    iface = F.from_json(F.col(body_col), (
+    kind = F.col("kind")
+    iface = F.from_json(F.col("body"), (
         "struct<interface_id: string, node_name: string,"
         " node_type: string, node_id: string, rx_bytes: bigint,"
         " rx_packets: bigint, rx_dropped: bigint, rx_errors: bigint,"
         " tx_bytes: bigint, tx_packets: bigint, tx_dropped: bigint,"
         " tx_errors: bigint>"
     ))
-    node = F.from_json(F.col(body_col), (
+    node = F.from_json(F.col("body"), (
         "struct<node_name: string, node_type: string, node_id: string,"
         " system_status: struct<cpu_usage: struct<"
         "avg_cpu_core_usage_dpdk: double,"
@@ -4465,7 +4436,7 @@ def nsxt_stats(
         " mem_cache: bigint, disk_space_used: bigint,"
         " disk_space_total: bigint>>"
     ))
-    base = [c for c in df.columns if c not in (kind_col, body_col)]
+    base = [c for c in df.columns if c not in ("kind", "body")]
     df = df.select(*base, kind.alias("_kind"), iface.alias("_if"),
                    node.alias("_n"))
     kind, iface, node = F.col("_kind"), F.col("_if"), F.col("_n")
@@ -4580,9 +4551,7 @@ _BIGIP_KINDS = {
 }
 
 
-def bigip_stats(
-    df: DataFrame, kind_col: str = "kind", body_col: str = "body"
-) -> DataFrame:
+def bigip_stats(df: DataFrame) -> DataFrame:
     """F5 BIG-IP nestedStats entries → metric rows.
 
     Re-expresses ``receiver/bigipreceiver/scraper.go:141-303`` over
@@ -4597,9 +4566,9 @@ def bigip_stats(
     and enabled (HasPrefix enabled) triples every kind emits.
     Resources: tmName/nodeName:port/addr/poolName per kind.
     """
-    kind = F.col(kind_col)
-    v = F.try_parse_json(F.col(body_col))
-    base = [c for c in df.columns if c not in (kind_col, body_col)]
+    kind = F.col("kind")
+    v = F.try_parse_json(F.col("body"))
+    base = [c for c in df.columns if c not in ("kind", "body")]
     df = df.select(*base, kind.alias("_kind"), v.alias("_v"))
     kind, v = F.col("_kind"), F.col("_v")
 
@@ -4677,7 +4646,7 @@ def bigip_stats(
     )
     exploded = df.select(
         *base,
-        kind.alias(kind_col),
+        kind.alias("kind"),
         name.alias("bp_name"),
         F.when(kind.isin("pool_member", "node"), desc("addr"))
             .alias("bp_ip"),
@@ -4702,7 +4671,7 @@ def bigip_stats(
 # ---------------------------------------------------------------------------
 
 
-def chrony_tracking(df: DataFrame, body_col: str = "body") -> DataFrame:
+def chrony_tracking(df: DataFrame) -> DataFrame:
     """chronyd tracking replies → the 7 ntp.* metrics.
 
     Re-expresses ``receiver/chronyreceiver/scraper.go:31-69`` over
@@ -4713,15 +4682,15 @@ def chrony_tracking(df: DataFrame, body_col: str = "body") -> DataFrame:
     enum) and skew. A malformed reply is the whole-scrape error →
     one ``nt_ok=false`` row.
     """
-    s = F.from_json(F.col(body_col), (
+    s = F.from_json(F.col("body"), (
         "struct<stratum: bigint, leap_status: bigint,"
         " current_correction: double, last_offset: double,"
         " rms_offset: double, freq_ppm: double, skew_ppm: double,"
         " root_delay: double>"
     ))
-    base = [c for c in df.columns if c != body_col]
+    base = [c for c in df.columns if c != "body"]
     ok = F.schema_of_variant(
-        F.try_parse_json(F.col(body_col))).startswith("OBJECT")
+        F.try_parse_json(F.col("body"))).startswith("OBJECT")
     df = df.select(*base, s.alias("_t"),
                    F.coalesce(ok, F.lit(False)).alias("_ok"))
     s = F.col("_t")
@@ -4777,7 +4746,7 @@ def chrony_tracking(df: DataFrame, body_col: str = "body") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def ntp_offset(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def ntp_offset(df: DataFrame) -> DataFrame:
     """ntp query replies → one ``ntp.offset`` gauge per reply.
 
     Re-expresses ``receiver/ntpreceiver/receiver.go:20-29``: the clock
@@ -4786,7 +4755,7 @@ def ntp_offset(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     reference returns the error with an empty pmetric.
     """
     return df.where(F.col("offset_ns").isNotNull()).select(
-        F.col(ts_col).alias("ts"), F.col("endpoint").alias("endpoint"),
+        F.col("ts").alias("ts"), F.col("endpoint").alias("endpoint"),
         F.lit("ntp.offset").alias("np_metric"),
         F.col("offset_ns").cast("bigint").alias("np_value"),
     )
@@ -4797,7 +4766,7 @@ def ntp_offset(df: DataFrame, ts_col: str = "ts") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def file_stats(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def file_stats(df: DataFrame) -> DataFrame:
     """glob-matched file listings → file.* metric rows.
 
     Re-expresses ``receiver/filestatsreceiver/scraper.go:21-49`` +
@@ -4809,7 +4778,7 @@ def file_stats(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     stat loop and `continue`s on error. file.count is emitted once
     per scrape (one bounded groupBy keyed by ts).
     """
-    ts = F.col(ts_col)
+    ts = F.col("ts")
     ok = df.where(F.col("stat_ok"))
     nd = F.lit(None).cast("string")
     entries = [
@@ -4845,7 +4814,7 @@ def file_stats(df: DataFrame, ts_col: str = "ts") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def riak_stats(df: DataFrame, body_col: str = "body") -> DataFrame:
+def riak_stats(df: DataFrame) -> DataFrame:
     """riak /stats JSON → the 11-point metric fan.
 
     Re-expresses ``receiver/riakreceiver/scraper.go:47-77``: node and
@@ -4860,9 +4829,9 @@ def riak_stats(df: DataFrame, body_col: str = "body") -> DataFrame:
               "mem_allocated: bigint, vnode_gets: bigint, vnode_puts:"
               " bigint, vnode_index_reads: bigint, vnode_index_writes"
               ": bigint, vnode_index_deletes: bigint>")
-    base = [c for c in df.columns if c != body_col]
+    base = [c for c in df.columns if c != "body"]
     staged = df.select(
-        *base, F.from_json(F.col(body_col), schema).alias("_o"))
+        *base, F.from_json(F.col("body"), schema).alias("_o"))
     o = F.col("_o")
     staged = staged.where(o["node"].isNotNull())
     fan = [
@@ -4905,7 +4874,7 @@ _HTTP_CLASSES = [("1xx", 1), ("2xx", 2), ("3xx", 3), ("4xx", 4),
                  ("5xx", 5)]
 
 
-def httpcheck_metrics(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def httpcheck_metrics(df: DataFrame) -> DataFrame:
     """HTTP probe results → httpcheck.* metric rows.
 
     Re-expresses ``receiver/httpcheckreceiver/scraper.go:122-290``
@@ -4923,7 +4892,7 @@ def httpcheck_metrics(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     before and after the timing block (:212-224 and :242-255), a
     duplication carried faithfully.
     """
-    ts = F.col(ts_col)
+    ts = F.col("ts")
     ep = F.col("endpoint")
     ns = F.lit(None).cast("string")
     nl = F.lit(None).cast("bigint")

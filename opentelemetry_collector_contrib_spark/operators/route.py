@@ -3,8 +3,9 @@
 Reference semantics (``connector/routingconnector/logs.go:62-107``):
 an *ordered* route table; each route has a condition; matching data is
 MOVED out (first match wins), leftovers go to ``default_pipelines``;
-with ``error_mode=ignore`` a route whose condition errors is treated
-as non-matching (the payload flows on to later routes / default).
+a route whose condition errors is treated as non-matching (the
+payload flows on to later routes / default), as the reference does
+under ``error_mode: ignore``.
 
 Spark re-expression: one ``when()`` chain — ``when`` evaluates
 conditions in order per row and stops at the first hit, which is
@@ -14,9 +15,9 @@ pass with zero data movement. Fan-out to sinks is then either
 pushes ``route = 'x'`` into the scan when the routed frame is
 checkpointed/cached).
 
-error_mode=ignore: conditions are wrapped so NULL (the Spark analog of
-an errored predicate, e.g. missing attribute) is FALSE -> the row
-falls through, matching config.go:26-34.
+NULL is false: conditions are wrapped so NULL (the Spark analog of an
+errored predicate, e.g. missing attribute) is FALSE -> the row falls
+through, matching ``error_mode: ignore`` (config.go:26-34).
 """
 
 from __future__ import annotations
@@ -36,15 +37,12 @@ class Route:
 def route_column(
     routes: list[Route],
     default: str = "default",
-    error_mode: str = "ignore",
 ) -> Column:
     """Ordered route table -> a single STRING route column."""
     chain: Column | None = None
     for r in routes:
-        cond = r.condition
-        if error_mode == "ignore":
-            # NULL condition (errored / missing attr) must not match
-            cond = F.coalesce(cond.cast("boolean"), F.lit(False))
+        # NULL condition (errored / missing attr) must not match
+        cond = F.coalesce(r.condition.cast("boolean"), F.lit(False))
         chain = F.when(cond, r.name) if chain is None else chain.when(cond, r.name)
     if chain is None:
         return F.lit(default)
@@ -55,7 +53,5 @@ def apply_routes(
     df: DataFrame,
     routes: list[Route],
     default: str = "default",
-    route_col: str = "route",
-    error_mode: str = "ignore",
 ) -> DataFrame:
-    return df.withColumn(route_col, route_column(routes, default, error_mode))
+    return df.withColumn("route", route_column(routes, default))

@@ -28,23 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.strptime import strptime_to_spark
-
-
-def _jstr(c: Column) -> Column:
-    js = F.to_json(F.array(F.coalesce(c, F.lit(""))))
-    return F.substring(js, F.lit(2), F.length(js) - 2)
-
-
-def _sorted_map_json(m: Column) -> Column:
-    ents = F.array_sort(F.coalesce(
-        F.map_entries(m), F.expr("array()").cast(
-            "array<struct<key:string,value:string>>")))
-    return F.concat(
-        F.lit("{"),
-        F.array_join(F.transform(
-            ents, lambda e: F.concat(_jstr(e["key"]), F.lit(":"),
-                                     _jstr(e["value"]))), ","),
-        F.lit("}"))
+from .cloudwatch_export import _jstr, _sorted_map_json
 
 
 def _go_time_string(ts_ns: Column) -> Column:
@@ -94,7 +78,6 @@ def s3_partition_keys(
     *,
     id_cols: list[str],
     partition_prefix: str = "",
-    partition_format: str = "year=%Y/month=%m/day=%d/hour=%H/minute=%M",
     file_prefix: str = "",
     metadata: str = "logs",
     file_format: str = "json",
@@ -104,7 +87,7 @@ def s3_partition_keys(
     """partition.go:47-76 — the object key for each row's timestamp;
     an ``s3_prefix`` attr-style override column (when present) takes
     the directory prefix's place."""
-    spark_fmt = strptime_to_spark(partition_format)
+    spark_fmt = strptime_to_spark("year=%Y/month=%m/day=%d/hour=%H/minute=%M")
     ts = F.timestamp_seconds(
         ((F.coalesce(F.col("ts_ns"), F.lit(0))
           - F.pmod(F.coalesce(F.col("ts_ns"), F.lit(0)),

@@ -174,7 +174,6 @@ def schema_translate(
     to_version: str,
     attr_cols: tuple[str, ...] = ("attributes",),
     resource_cols: tuple[str, ...] = (),
-    schema: dict | None = None,
 ) -> DataFrame:
     """Translate attribute/resource map columns between semconv
     versions (processor.go processLogs: resource attrs use the
@@ -184,7 +183,7 @@ def schema_translate(
             c,
             translate_keys(
                 F.col(c),
-                compose_renames(from_version, to_version, schema, "logs"),
+                compose_renames(from_version, to_version),
             ),
         )
     for c in resource_cols:
@@ -192,9 +191,8 @@ def schema_translate(
             c,
             translate_keys(
                 F.col(c),
-                compose_renames(
-                    from_version, to_version, schema, "resources"
-                ),
+                compose_renames(from_version, to_version,
+                                section="resources"),
             ),
         )
     return df

@@ -70,12 +70,12 @@ def _dims_tokens(dims: Column) -> Column:
 
 
 def signalfx_datapoints_parse(
-    df: DataFrame, body_col: str = "body"
+    df: DataFrame
 ) -> DataFrame:
     """One DataPointUploadMessage JSON per row → one row per datapoint
     (``sfx_*``)."""
     parsed = df.select(
-        "*", F.from_json(F.col(body_col), _DP_SCHEMA).alias("_m")
+        "*", F.from_json(F.col("body"), _DP_SCHEMA).alias("_m")
     )
     dp = F.col("_dp")
     rows = (
@@ -84,7 +84,7 @@ def signalfx_datapoints_parse(
         )
         .select("*", F.explode(F.col("_m")["datapoints"]).alias("_dp"))
         .where(dp.isNotNull())  # nil datapoint skip (:34-37)
-        .drop("_m", body_col)
+        .drop("_m", "body")
     )
 
     mtype = F.coalesce(dp["metricType"], F.lit("GAUGE"))  # proto zero value
@@ -134,10 +134,10 @@ def _prop_json(value: Column) -> Column:
     )
 
 
-def signalfx_events_parse(df: DataFrame, body_col: str = "body") -> DataFrame:
+def signalfx_events_parse(df: DataFrame) -> DataFrame:
     """One EventUploadMessage JSON per row → one log row per event."""
     parsed = df.select(
-        "*", F.from_json(F.col(body_col), _EV_SCHEMA).alias("_m")
+        "*", F.from_json(F.col("body"), _EV_SCHEMA).alias("_m")
     )
     ev = F.col("_ev")
     rows = (
@@ -146,7 +146,7 @@ def signalfx_events_parse(df: DataFrame, body_col: str = "body") -> DataFrame:
         )
         .select("*", F.explode(F.col("_m")["events"]).alias("_ev"))
         .where(ev.isNotNull())
-        .drop("_m", body_col)
+        .drop("_m", "body")
     )
 
     etype = F.when(

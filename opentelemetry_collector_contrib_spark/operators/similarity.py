@@ -61,10 +61,7 @@ def normalized(vec: Column) -> Column:
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 1,
-    round_dp: int = 6,
     max_broadcast_rows: int | None = 100_000,
 ) -> DataFrame:
     """Exact top-k neighbors of every query vector (self-join when
@@ -84,7 +81,7 @@ def brute_force_topk(
     results are engine-portable.
     """
     if max_broadcast_rows is not None:
-        n_q = queries.select(id_col).limit(max_broadcast_rows + 1).count()
+        n_q = queries.select("vec_id").limit(max_broadcast_rows + 1).count()
         if n_q > max_broadcast_rows:
             raise ValueError(
                 f"brute_force_topk: query side has >{max_broadcast_rows} rows; "
@@ -92,14 +89,14 @@ def brute_force_topk(
                 "ivf_topk for self-ANN, or raise max_broadcast_rows explicitly"
             )
     q = queries.select(
-        F.col(id_col).alias("query_id"), normalized(F.col(vec_col)).alias("__qv")
+        F.col("vec_id").alias("query_id"), normalized(F.col("embedding")).alias("__qv")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), normalized(F.col(vec_col)).alias("__cv")
+        F.col("vec_id").alias("neighbor_id"), normalized(F.col("embedding")).alias("__cv")
     )
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim", F.round(dot(F.col("__qv"), F.col("__cv")), round_dp))
+        .withColumn("cosine_sim", F.round(dot(F.col("__qv"), F.col("__cv")), 6))
         .drop("__qv", "__cv")
     )
     w = W.partitionBy("query_id").orderBy(
@@ -141,12 +138,9 @@ def lsh_bucket(vec: Column, num_planes: int, dim: int) -> Column:
 
 def lsh_bucket_topk(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     num_planes: int = 6,
     k: int = 1,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket.
 
@@ -156,20 +150,20 @@ def lsh_bucket_topk(
     trade; add more tables to recover).
     """
     withb = corpus.select(
-        F.col(id_col),
-        normalized(F.col(vec_col)).alias("__nv"),
-        lsh_bucket(F.col(vec_col), num_planes, dim).alias("bucket"),
+        F.col("vec_id"),
+        normalized(F.col("embedding")).alias("__nv"),
+        lsh_bucket(F.col("embedding"), num_planes, dim).alias("bucket"),
     )
     a = withb.select(
-        F.col(id_col).alias("query_id"), F.col("__nv").alias("__qv"), "bucket"
+        F.col("vec_id").alias("query_id"), F.col("__nv").alias("__qv"), "bucket"
     )
     b = withb.select(
-        F.col(id_col).alias("neighbor_id"), F.col("__nv").alias("__cv"), "bucket"
+        F.col("vec_id").alias("neighbor_id"), F.col("__nv").alias("__cv"), "bucket"
     )
     scored = (
         a.join(b, on="bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim", F.round(dot(F.col("__qv"), F.col("__cv")), round_dp))
+        .withColumn("cosine_sim", F.round(dot(F.col("__qv"), F.col("__cv")), 6))
         .drop("__qv", "__cv", "bucket")
     )
     w = W.partitionBy("query_id").orderBy(
@@ -184,12 +178,7 @@ def lsh_bucket_topk(
 
 def lsh_near_duplicates(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    num_planes: int = 6,
     threshold: float = 0.99,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate detection, LSH-bucketed.
 
@@ -201,27 +190,27 @@ def lsh_near_duplicates(
     cosine_sim) — one row per detected duplicate.
     """
     withb = corpus.select(
-        F.col(id_col),
-        normalized(F.col(vec_col)).alias("__nv"),
-        lsh_bucket(F.col(vec_col), num_planes, dim).alias("bucket"),
+        F.col("vec_id"),
+        normalized(F.col("embedding")).alias("__nv"),
+        lsh_bucket(F.col("embedding"), 6, 64).alias("bucket"),
     )
     a = withb.select(
-        F.col(id_col).alias("dup_of"), F.col("__nv").alias("__qv"), "bucket"
+        F.col("vec_id").alias("dup_of"), F.col("__nv").alias("__qv"), "bucket"
     )
     b = withb.select(
-        F.col(id_col).alias("doc_id"), F.col("__nv").alias("__cv"), "bucket"
+        F.col("vec_id").alias("doc_id"), F.col("__nv").alias("__cv"), "bucket"
     )
     pairs = (
         a.join(b, on="bucket")
         .filter(F.col("dup_of") < F.col("doc_id"))
         .withColumn(
-            "cosine_sim", F.round(dot(F.col("__qv"), F.col("__cv")), round_dp)
+            "cosine_sim", F.round(dot(F.col("__qv"), F.col("__cv")), 6)
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
     return pairs.groupBy("doc_id").agg(
         F.min("dup_of").alias("dup_of"),
-        F.round(F.min_by("cosine_sim", F.col("dup_of")), round_dp).alias(
+        F.round(F.min_by("cosine_sim", F.col("dup_of")), 6).alias(
             "cosine_sim"
         ),
     ).select("doc_id", "dup_of", "cosine_sim")
@@ -229,13 +218,10 @@ def lsh_near_duplicates(
 
 def lsh_bucket_topk_multi(
     corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     num_planes: int = 6,
     num_tables: int = 2,
     k: int = 1,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Multi-table LSH (OR-amplification): a candidate pair qualifies
     if it collides in ANY of ``num_tables`` independent plane sets —
@@ -247,14 +233,14 @@ def lsh_bucket_topk_multi(
     Scale shape: num_tables bucket equi-joins (each O(n) shuffle) +
     one dedup shuffle — still never O(n^2)."""
     per_table = []
-    nv = corpus.select(F.col(id_col), normalized(F.col(vec_col)).alias("__nv"))
+    nv = corpus.select(F.col("vec_id"), normalized(F.col("embedding")).alias("__nv"))
     for t in range(num_tables):
         withb = corpus.select(
-            F.col(id_col),
-            lsh_bucket_offset(F.col(vec_col), num_planes, dim, t * num_planes).alias("bucket"),
+            F.col("vec_id"),
+            lsh_bucket_offset(F.col("embedding"), num_planes, dim, t * num_planes).alias("bucket"),
         )
-        a = withb.select(F.col(id_col).alias("query_id"), "bucket")
-        b = withb.select(F.col(id_col).alias("neighbor_id"), "bucket")
+        a = withb.select(F.col("vec_id").alias("query_id"), "bucket")
+        b = withb.select(F.col("vec_id").alias("neighbor_id"), "bucket")
         per_table.append(
             a.join(b, on="bucket")
             .filter(F.col("query_id") != F.col("neighbor_id"))
@@ -265,9 +251,9 @@ def lsh_bucket_topk_multi(
         cands = cands.unionByName(extra)
     cands = cands.dropDuplicates(["query_id", "neighbor_id"])
     scored = (
-        cands.join(nv.select(F.col(id_col).alias("query_id"), F.col("__nv").alias("__qv")), on="query_id")
-        .join(nv.select(F.col(id_col).alias("neighbor_id"), F.col("__nv").alias("__cv")), on="neighbor_id")
-        .withColumn("cosine_sim", F.round(dot(F.col("__qv"), F.col("__cv")), round_dp))
+        cands.join(nv.select(F.col("vec_id").alias("query_id"), F.col("__nv").alias("__qv")), on="query_id")
+        .join(nv.select(F.col("vec_id").alias("neighbor_id"), F.col("__nv").alias("__cv")), on="neighbor_id")
+        .withColumn("cosine_sim", F.round(dot(F.col("__qv"), F.col("__cv")), 6))
         .drop("__qv", "__cv")
     )
     w = W.partitionBy("query_id").orderBy(
@@ -297,22 +283,18 @@ def lsh_bucket_offset(vec: Column, num_planes: int, dim: int, offset: int) -> Co
 def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
-    centroid_vec: str = "centroid",
 ) -> DataFrame:
     """Assign each vector to its nearest centroid (broadcast join +
     rank). Centroids are a tiny DataFrame (id, vector) — e.g. a sampled
     or k-means'd codebook computed offline."""
     c = centroids.select(
-        F.col(centroid_id), F.col(centroid_vec).alias("__ctr")
+        F.col("centroid_id"), F.col("centroid").alias("__ctr")
     )
     scored = corpus.join(F.broadcast(c)).withColumn(
         # round 12dp so cell assignment is identical across engines
-        "__sim", F.round(cosine(F.col(vec_col), F.col("__ctr")), 12)
+        "__sim", F.round(cosine(F.col("embedding"), F.col("__ctr")), 12)
     )
-    w = W.partitionBy(id_col).orderBy(F.col("__sim").desc(), F.col(centroid_id).asc())
+    w = W.partitionBy("vec_id").orderBy(F.col("__sim").desc(), F.col("centroid_id").asc())
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -323,28 +305,25 @@ def ivf_assign(
 def ivf_topk(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 1,
-    round_dp: int = 6,
 ) -> DataFrame:
     """Search within each vector's own IVF cell (nprobe=1): assign,
     then bucket-join on the cell id, rank by exact cosine."""
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
+    assigned = ivf_assign(corpus, centroids)
     a = assigned.select(
-        F.col(id_col).alias("query_id"),
-        normalized(F.col(vec_col)).alias("__qv"),
+        F.col("vec_id").alias("query_id"),
+        normalized(F.col("embedding")).alias("__qv"),
         "centroid_id",
     )
     b = assigned.select(
-        F.col(id_col).alias("neighbor_id"),
-        normalized(F.col(vec_col)).alias("__cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        normalized(F.col("embedding")).alias("__cv"),
         "centroid_id",
     )
     scored = (
         a.join(b, on="centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine_sim", F.round(dot(F.col("__qv"), F.col("__cv")), round_dp))
+        .withColumn("cosine_sim", F.round(dot(F.col("__qv"), F.col("__cv")), 6))
         .drop("__qv", "__cv", "centroid_id")
     )
     w = W.partitionBy("query_id").orderBy(
@@ -364,17 +343,15 @@ def ivf_topk(
 # leaving the engine.
 # ---------------------------------------------------------------------------
 
-def argmax_cosine_cell(
-    vec: Column, cents: list[list[float]], sim_dp: int = 12
-) -> Column:
+def argmax_cosine_cell(vec: Column, cents: list[list[float]]) -> Column:
     """Index of the max-cosine literal centroid (ties -> lowest index;
-    sims rounded to ``sim_dp`` for oracle parity). The zero-shuffle
+    sims rounded to 12 dp for oracle parity). The zero-shuffle
     assignment idiom shared by kmeans_lloyd and pq_encode — both SQL
     oracles replay it as ``ORDER BY cos DESC, cell``; keep the
     tie-break and rounding in lockstep here only."""
     scored = [
         F.struct(
-            F.round(cosine(vec, F.array(*[F.lit(x) for x in c])), sim_dp).alias("s"),
+            F.round(cosine(vec, F.array(*[F.lit(x) for x in c])), 12).alias("s"),
             F.lit(-j).alias("nc"),
         )
         for j, c in enumerate(cents)
@@ -388,8 +365,6 @@ def kmeans_lloyd(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sim_dp: int = 12,
-    centroid_dp: int = 9,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Deterministic spherical k-means: ``iters`` assignment passes
     with a mean-update between consecutive passes.
@@ -403,8 +378,8 @@ def kmeans_lloyd(
     - Update is one map-side-combined shuffle (posexplode ->
       groupBy(cell, dim).avg) followed by a bounded k x dim driver
       collect (exactly what MLlib's Lloyd does per round).
-    - Cross-engine portability: sims round to ``sim_dp``, updated
-      centroid components to ``centroid_dp``, so a SQL oracle running
+    - Cross-engine portability: sims round to 12 dp, updated
+      centroid components to 9 dp, so a SQL oracle running
       the same recursion stays bit-identical.
 
     Returns (assignments DataFrame with ``cell`` added, final
@@ -425,7 +400,7 @@ def kmeans_lloyd(
 
     def assign(cents: list[list[float]]) -> DataFrame:
         return corpus.withColumn(
-            "cell", argmax_cosine_cell(F.col(vec_col), cents, sim_dp)
+            "cell", argmax_cosine_cell(F.col(vec_col), cents)
         )
 
     assigned = assign(centroids)
@@ -433,7 +408,7 @@ def kmeans_lloyd(
         means = (
             assigned.select("cell", F.posexplode(F.col(vec_col)).alias("pos", "x"))
             .groupBy("cell", "pos")
-            .agg(F.round(F.avg(F.col("x").cast("double")), centroid_dp).alias("m"))
+            .agg(F.round(F.avg(F.col("x").cast("double")), 9).alias("m"))
             .collect()
         )
         upd: dict[int, dict[int, float]] = {}
@@ -460,9 +435,7 @@ def semantic_dedup(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sim_dp: int = 12,
     max_cell_size: int | None = None,
-    salt_planes: int = 4,
     dim: int | None = None,
 ) -> DataFrame:
     """SemDeDup over an embedding column: spherical k-means partitions
@@ -475,7 +448,7 @@ def semantic_dedup(
     set is sum_c |c|^2, not n^2 — at 100 TB pick k so the expected
     cell is ~10-100k vectors (SemDeDup uses k=50k clusters for LAION),
     and cap stragglers with ``max_cell_size``: cells whose population
-    exceeds it are sub-split on a ``salt_planes``-bit LSH sign bucket
+    exceeds it are sub-split on a 4-bit LSH sign bucket
     of the vector BEFORE the pair join, so the worst cell's candidate
     count drops from |c|^2 to ~sum_b |c_b|^2 and no single task can
     straggle the stage.  The salt is a finer partition of the same
@@ -494,7 +467,7 @@ def semantic_dedup(
     dup_of is the smallest qualifying cell-mate (NULL when kept).
     """
     assigned, _ = kmeans_lloyd(
-        corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col, sim_dp=sim_dp
+        corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col
     )
     # pre-normalize ONCE per row (norm materialized as a column first —
     # an expression captured inside the transform lambda would re-run
@@ -526,7 +499,7 @@ def semantic_dedup(
                 "__salt",
                 F.when(
                     F.col("cell").isin(oversized),
-                    lsh_bucket(F.col("__v"), salt_planes, dim),
+                    lsh_bucket(F.col("__v"), 4, dim),
                 ).otherwise(F.lit("")),
             )
             join_keys = ["cell", "__salt"]
@@ -539,7 +512,7 @@ def semantic_dedup(
     dups = (
         a.join(b, join_keys)
         .filter(F.col("__aid") < F.col("__bid"))
-        .withColumn("__sim", F.round(dot(F.col("__av"), F.col("__bv")), sim_dp))
+        .withColumn("__sim", F.round(dot(F.col("__av"), F.col("__bv")), 12))
         .filter(F.col("__sim") >= threshold)
         .groupBy(F.col("__bid").alias(id_col))
         .agg(F.min("__aid").alias("dup_of"))
@@ -569,14 +542,10 @@ def pq_train(
     m: int = 4,
     ksub: int = 4,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sim_dp: int = 12,
-    centroid_dp: int = 9,
 ) -> list[list[list[float]]]:
     """Train per-subspace codebooks — the exact kmeans_lloyd recursion
     per block (same seeds: the ksub smallest-id vectors' block slices;
-    same sim_dp/centroid_dp rounding; empty cells keep stale
+    same 12/9 dp rounding; empty cells keep stale
     centroids), but FUSED: the m blocks train in lockstep so each
     Lloyd round is ONE zero-shuffle assignment projection (all m
     argmaxes in one select) and ONE map-side-combined shuffle for all
@@ -594,8 +563,8 @@ def pq_train(
     division by zero). Real embedding corpora satisfy this; L2-PQ is
     the variant for data that doesn't."""
     sub = dim // m
-    v = F.col(vec_col).cast("array<double>")
-    seed_rows = corpus.orderBy(id_col).limit(ksub).select(v.alias("__v")).collect()
+    v = F.col("embedding").cast("array<double>")
+    seed_rows = corpus.orderBy("vec_id").limit(ksub).select(v.alias("__v")).collect()
     # fewer rows than ksub: every row seeds its own codeword, exactly
     # kmeans_lloyd's k-shrink behavior per block
     books: list[list[list[float]]] = [
@@ -608,7 +577,7 @@ def pq_train(
             v.alias("__v"),
             *[
                 argmax_cosine_cell(
-                    F.slice(v, b * sub + 1, sub), books[b], sim_dp
+                    F.slice(v, b * sub + 1, sub), books[b]
                 ).alias(f"__c{b}")
                 for b in range(m)
             ],
@@ -626,7 +595,7 @@ def pq_train(
         )
         means = (
             exploded.groupBy("block", "cell", "pos")
-            .agg(F.round(F.avg(F.col("x").cast("double")), centroid_dp).alias("mn"))
+            .agg(F.round(F.avg(F.col("x").cast("double")), 9).alias("mn"))
             .collect()
         )
         upd: dict[tuple[int, int], dict[int, float]] = {}
@@ -648,9 +617,6 @@ def pq_encode(
     m: int = 4,
     ksub: int = 4,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sim_dp: int = 12,
     books: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """PQ-encode every vector: one row per vector with ``m`` code
@@ -666,12 +632,12 @@ def pq_encode(
     """
     sub = dim // m
     if books is None:
-        books = pq_train(corpus, dim, m, ksub, iters, id_col, vec_col)
-    v = F.col(vec_col).cast("array<double>")
-    cols = [F.col(id_col)]
+        books = pq_train(corpus, dim, m, ksub, iters)
+    v = F.col("embedding").cast("array<double>")
+    cols = [F.col("vec_id")]
     for b, cents in enumerate(books):
         bv = F.slice(v, b * sub + 1, sub)
-        cols.append(argmax_cosine_cell(bv, cents, sim_dp).alias(f"c{b}"))
+        cols.append(argmax_cosine_cell(bv, cents).alias(f"c{b}"))
     return corpus.select(*cols)
 
 
@@ -682,9 +648,6 @@ def pq_adc_top1(
     ksub: int = 4,
     iters: int = 2,
     n_queries: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sim_dp: int = 12,
     max_scan_rows: int | None = 1_000_000,
 ) -> DataFrame:
     """PQ asymmetric-distance search (the ADC of IVFADC, Jegou et al.
@@ -715,7 +678,7 @@ def pq_adc_top1(
     excluded.
     """
     if max_scan_rows is not None:
-        n_c = corpus.select(id_col).limit(max_scan_rows + 1).count()
+        n_c = corpus.select("vec_id").limit(max_scan_rows + 1).count()
         if n_c > max_scan_rows:
             raise ValueError(
                 f"pq_adc_top1: corpus has >{max_scan_rows} rows; the flat "
@@ -724,16 +687,16 @@ def pq_adc_top1(
                 "explicitly"
             )
     sub = dim // m
-    books = pq_train(corpus, dim, m, ksub, iters, id_col, vec_col)
+    books = pq_train(corpus, dim, m, ksub, iters)
     enc = pq_encode(
-        corpus, dim, m, ksub, iters, id_col, vec_col, sim_dp, books=books
+        corpus, dim, m, ksub, iters, books=books
     )
     queries = (
-        corpus.orderBy(id_col)
+        corpus.orderBy("vec_id")
         .limit(n_queries)
         .select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("__qv"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").cast("array<double>").alias("__qv"),
         )
     )
     score = None
@@ -744,14 +707,14 @@ def pq_adc_top1(
         score = term if score is None else score + term
     scored = (
         enc.crossJoin(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("adc_score", F.round(score, sim_dp))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .withColumn("adc_score", F.round(score, 12))
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc(id_col))
+    w = W.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("vec_id"))
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .select("query_id", F.col(id_col).alias("neighbor_id"), "adc_score")
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "adc_score")
     )
 
 
@@ -765,9 +728,6 @@ def ivfadc_topk(
     nprobe: int = 2,
     n_queries: int = 5,
     k: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sim_dp: int = 12,
 ) -> DataFrame:
     """True IVFADC (Jegou et al. 2011 §IV): the composition of the
     coarse quantizer and ADC that ``pq_adc_top1`` lacks — instead of
@@ -804,34 +764,32 @@ def ivfadc_topk(
     to the smaller neighbor id, self excluded.
     """
     sub = dim // m
-    _, coarse = kmeans_lloyd(
-        corpus, k=kc, iters=iters, id_col=id_col, vec_col=vec_col, sim_dp=sim_dp
-    )
-    books = pq_train(corpus, dim, m, ksub, iters, id_col, vec_col)
+    _, coarse = kmeans_lloyd(corpus, k=kc, iters=iters)
+    books = pq_train(corpus, dim, m, ksub, iters)
 
     # index build: coarse cell + m codes in ONE projection
-    v = F.col(vec_col).cast("array<double>")
+    v = F.col("embedding").cast("array<double>")
     enc_cols = [
-        F.col(id_col),
-        argmax_cosine_cell(v, coarse, sim_dp).alias("cell"),
+        F.col("vec_id"),
+        argmax_cosine_cell(v, coarse).alias("cell"),
     ]
     for b, cents in enumerate(books):
         bv = F.slice(v, b * sub + 1, sub)
-        enc_cols.append(argmax_cosine_cell(bv, cents, sim_dp).alias(f"c{b}"))
+        enc_cols.append(argmax_cosine_cell(bv, cents).alias(f"c{b}"))
     enc = corpus.select(*enc_cols)
 
     # queries probe their nprobe nearest coarse cells (tiny side):
     # reverse(array_sort) of (sim, -cell) structs = sim DESC, cell ASC
     queries = (
-        corpus.orderBy(id_col)
+        corpus.orderBy("vec_id")
         .limit(n_queries)
-        .select(F.col(id_col).alias("query_id"), v.alias("__qv"))
+        .select(F.col("vec_id").alias("query_id"), v.alias("__qv"))
     )
     cell_sims = F.array(
         *[
             F.struct(
                 F.round(
-                    cosine(F.col("__qv"), F.array(*[F.lit(x) for x in c])), sim_dp
+                    cosine(F.col("__qv"), F.array(*[F.lit(x) for x in c])), 12
                 ).alias("s"),
                 F.lit(-j).alias("nc"),
             )
@@ -857,14 +815,14 @@ def ivfadc_topk(
         score = term if score is None else score + term
     scored = (
         enc.join(F.broadcast(probes), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .withColumn("adc_score", F.round(score, sim_dp))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .withColumn("adc_score", F.round(score, 12))
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc(id_col))
+    w = W.partitionBy("query_id").orderBy(F.desc("adc_score"), F.asc("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            "query_id", F.col(id_col).alias("neighbor_id"), "adc_score", "rank"
+            "query_id", F.col("vec_id").alias("neighbor_id"), "adc_score", "rank"
         )
     )

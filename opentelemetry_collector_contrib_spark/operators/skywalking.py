@@ -172,11 +172,11 @@ def sw_span_hex(segment_id: Column, span_id: Column) -> Column:
 
 
 def skywalking_segments_to_spans(
-    df: DataFrame, segment_col: str = "body"
+    df: DataFrame
 ) -> DataFrame:
     """One SegmentObject JSON per row → one row per span (``sw_*``)."""
     parsed = df.select(
-        "*", F.from_json(F.col(segment_col), _SW_SCHEMA).alias("_sw")
+        "*", F.from_json(F.col("body"), _SW_SCHEMA).alias("_sw")
     )
     seg = F.col("_seg")
     sp = F.col("_sp")
@@ -195,7 +195,7 @@ def skywalking_segments_to_spans(
             F.explode(F.col("_sw")["spans"]).alias("_sp"),
         )
         .where(sp.isNotNull())  # nil-span skip (:96-98)
-        .drop("_sw", segment_col)
+        .drop("_sw", "body")
     )
 
     seg_id = F.coalesce(seg["traceSegmentId"], F.lit(""))

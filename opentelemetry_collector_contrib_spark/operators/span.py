@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _NAMED_GROUP_RE = re.compile(r"\(\?P?<([A-Za-z][A-Za-z0-9_]*)>")
@@ -74,9 +74,8 @@ def span_name_from_attributes(
     from_attributes: list[str],
     separator: str = "",
     name_col: str = "name",
-    attrs_col: str = "attributes",
 ) -> DataFrame:
-    attrs = F.col(attrs_col)
+    attrs = F.col("attributes")
     vals = [F.element_at(attrs, F.lit(k)) for k in from_attributes]
     all_present = vals[0].isNotNull()
     for v in vals[1:]:
@@ -133,7 +132,6 @@ def span_to_attributes(
     rules: list[str],
     break_after_match: bool = True,
     name_col: str = "name",
-    attrs_col: str = "attributes",
 ) -> DataFrame:
     """Apply extraction rules in order (span.go processToAttributes);
     with break_after_match a span stops at its first matching rule
@@ -155,16 +153,16 @@ def span_to_attributes(
             pairs.extend([F.lit(g), F.regexp_extract(name, java_pat, idx)])
         extracted = F.create_map(*pairs)
         df = df.withColumn(
-            attrs_col,
+            "attributes",
             F.when(
                 matched,
                 F.map_concat(
                     F.map_filter(
-                        F.col(attrs_col), lambda k, _v: ~k.isin(*groups)
+                        F.col("attributes"), lambda k, _v: ~k.isin(*groups)
                     ),
                     extracted,
                 ),
-            ).otherwise(F.col(attrs_col)),
+            ).otherwise(F.col("attributes")),
         ).withColumn(
             "__new_name",
             F.when(

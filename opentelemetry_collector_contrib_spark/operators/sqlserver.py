@@ -136,8 +136,7 @@ def _ent(metric, a1, a2, vi, vd, present):
     ))
 
 
-def sqlserver_metrics(df: DataFrame, kind_col: str = "kind",
-                      body_col: str = "body") -> DataFrame:
+def sqlserver_metrics(df: DataFrame) -> DataFrame:
     """Kind-fanned (io | perf | status | wait) rows → datapoints.
 
     Expected passthrough columns: ``computer``, ``instance``, ``db``
@@ -145,13 +144,13 @@ def sqlserver_metrics(df: DataFrame, kind_col: str = "kind",
     family JSON.
     """
     spark = df.sparkSession
-    kind = F.col(kind_col)
-    base = [c for c in df.columns if c not in (kind_col, body_col)]
+    kind = F.col("kind")
+    base = [c for c in df.columns if c not in ("kind", "body")]
     ns = F.lit(None).cast("string")
 
     def fan(kname, schema, builder):
         rows = df.where(kind == kname).select(
-            *base, F.from_json(F.col(body_col), schema).alias("_o"))
+            *base, F.from_json(F.col("body"), schema).alias("_o"))
         o = F.col("_o")
         entries, extra = builder(o)
         out = rows.select(
@@ -195,7 +194,7 @@ def sqlserver_metrics(df: DataFrame, kind_col: str = "kind",
         "counter string, metric string, a1 string, a2 string, "
         "is_float boolean")
     perf = df.where(kind == "perf").select(
-        *base, F.from_json(F.col(body_col), _PERF_SCHEMA).alias("_o"))
+        *base, F.from_json(F.col("body"), _PERF_SCHEMA).alias("_o"))
     o = F.col("_o")
     perf = perf.join(F.broadcast(dim),
                      o["counter"] == dim["counter"], "inner")

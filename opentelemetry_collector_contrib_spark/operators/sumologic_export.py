@@ -83,26 +83,13 @@ def sumologic_prom_lines(
     df: DataFrame,
     *,
     id_cols: list[str],
-    name_col: str = "name",
-    mtype_col: str = "mtype",
-    ts_ns_col: str = "ts_ns",
-    attrs_col: str = "attrs",
-    res_attrs_col: str = "res_attrs",
-    is_int_col: str = "is_int",
-    vint_col: str = "vint",
-    vdouble_col: str = "vdouble",
-    count_col: str = "count",
-    sum_col: str = "sum",
-    bounds_col: str = "bounds",
-    bucket_counts_col: str = "bucket_counts",
-    quantiles_col: str = "quantiles",
 ) -> DataFrame:
-    name = _sanit_key(F.col(name_col))
-    mtype = F.col(mtype_col)
-    res_e = _ents(F.col(res_attrs_col))
-    dp_e = _ents(F.col(attrs_col))
+    name = _sanit_key(F.col("name"))
+    mtype = F.col("mtype")
+    res_e = _ents(F.col("res_attrs"))
+    dp_e = _ents(F.col("attrs"))
     no_extra = F.expr("array()").cast(_EMPTY_ENTS)
-    ts = F.expr(f"CAST({ts_ns_col} AS BIGINT) div 1000000")\
+    ts = F.expr("CAST(ts_ns AS BIGINT) div 1000000")\
         .cast("string")
 
     def ent(key: str, value: Column) -> Column:
@@ -117,20 +104,20 @@ def sumologic_prom_lines(
         return F.when(cond, F.array(ln)).otherwise(
             F.expr("array()").cast(_EMPTY_LINES))
 
-    is_int = F.col(is_int_col)
+    is_int = F.col("is_int")
     number_lines = one(
         mtype.isin("gauge", "sum"),
         F.when(is_int.isNotNull(),
                line(name, no_extra,
-                    F.when(is_int, F.col(vint_col).cast("string"))
-                    .otherwise(_fmt_g(F.col(vdouble_col)))))
+                    F.when(is_int, F.col("vint").cast("string"))
+                    .otherwise(_fmt_g(F.col("vdouble")))))
         .otherwise(F.lit("")))   # EMPTY value type -> empty line
 
-    counts = F.coalesce(F.col(bucket_counts_col),
+    counts = F.coalesce(F.col("bucket_counts"),
                         F.expr("array()").cast("array<bigint>"))
-    bounds = F.coalesce(F.col(bounds_col),
+    bounds = F.coalesce(F.col("bounds"),
                         F.expr("array()").cast("array<double>"))
-    sum_c = F.col(sum_col)
+    sum_c = F.col("sum")
     hist = mtype == "histogram"
     n_bucket = F.concat(name, F.lit("_bucket"))
     cum = lambda j: F.aggregate(  # noqa: E731
@@ -148,13 +135,13 @@ def sumologic_prom_lines(
             line(F.concat(name, F.lit("_sum")), no_extra,
                  _fmt_g(sum_c))),
         one(hist, line(F.concat(name, F.lit("_count")), no_extra,
-                       F.col(count_col).cast("string"))),
+                       F.col("count").cast("string"))),
     )
 
     summ = mtype == "summary"
     summary_lines = F.concat(
         F.when(summ, F.transform(
-            F.coalesce(F.col(quantiles_col), F.expr("array()").cast(
+            F.coalesce(F.col("quantiles"), F.expr("array()").cast(
                 "array<struct<q:double,v:double>>")),
             lambda qv: line(name, ent("quantile", _fmt_g(qv["q"])),
                             _fmt_g(qv["v"]))))
@@ -162,7 +149,7 @@ def sumologic_prom_lines(
         one(summ, line(F.concat(name, F.lit("_sum")), no_extra,
                        _fmt_g(F.coalesce(sum_c, F.lit(0.0))))),
         one(summ, line(F.concat(name, F.lit("_count")), no_extra,
-                       F.col(count_col).cast("string"))),
+                       F.col("count").cast("string"))),
     )
 
     return df.select(
@@ -177,14 +164,12 @@ def sumologic_log_lines(
     *,
     id_cols: list[str],
     log_format: str = "text",
-    body_col: str = "body",
-    attrs_col: str = "attrs",
 ) -> DataFrame:
-    body = F.coalesce(F.col(body_col), F.lit(""))
+    body = F.coalesce(F.col("body"), F.lit(""))
     if log_format == "text":
         line = body
     elif log_format == "json":
-        ents = _ents(F.col(attrs_col))
+        ents = _ents(F.col("attrs"))
         with_log = F.when(
             body != "",
             F.concat(ents, F.array(F.struct(

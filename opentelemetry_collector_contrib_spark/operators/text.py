@@ -61,9 +61,9 @@ def word_shingles(text: Column, n: int) -> Column:
     return shingles_from_tokens(tokens_col(text), n)
 
 
-def token_count(text: Column, pattern: str = TOKEN_REGEX) -> Column:
+def token_count(text: Column) -> Column:
     """BPE-ish token count via regexp matching (vectorized, JVM)."""
-    return F.coalesce(F.regexp_count(text, F.lit(pattern)), F.lit(0))
+    return F.coalesce(F.regexp_count(text, F.lit(TOKEN_REGEX)), F.lit(0))
 
 
 # ---------------------------------------------------------------------------
@@ -71,7 +71,7 @@ def token_count(text: Column, pattern: str = TOKEN_REGEX) -> Column:
 # ---------------------------------------------------------------------------
 
 def exact_dedup(
-    df: DataFrame, id_col: str, text_col: str, hash_col: str = "content_hash"
+    df: DataFrame, id_col: str, text_col: str
 ) -> DataFrame:
     """Collapse byte-identical documents: md5(text) groupBy, keep the
     smallest id (deterministic representative), count duplicates.
@@ -81,8 +81,8 @@ def exact_dedup(
     """
     h = F.md5(F.col(text_col))
     return (
-        df.withColumn(hash_col, h)
-        .groupBy(hash_col)
+        df.withColumn("content_hash", h)
+        .groupBy("content_hash")
         .agg(
             F.min(id_col).alias(id_col),
             F.count(F.lit(1)).alias("dup_count"),
@@ -262,7 +262,7 @@ def minhash_lsh_dedup(
 # SimHash (32-bit, md5-derived — engine-portable)
 # ---------------------------------------------------------------------------
 
-def simhash32(df: DataFrame, id_col: str, text_col: str, out_col: str = "simhash") -> DataFrame:
+def simhash32(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """32-bit SimHash per document as a bit-string column.
 
     Bit b of token t = high bit of hex digit b of md5(t) (char >= '8').
@@ -283,7 +283,7 @@ def simhash32(df: DataFrame, id_col: str, text_col: str, out_col: str = "simhash
     bits = F.concat(
         *[F.when(F.col(f"b{b}") > 0, F.lit("1")).otherwise(F.lit("0")) for b in range(32)]
     )
-    return summed.select(F.col("doc").alias(id_col), bits.alias(out_col))
+    return summed.select(F.col("doc").alias(id_col), bits.alias("simhash"))
 
 
 def hamming_distance_bits(a: Column, b: Column) -> Column:
@@ -308,33 +308,27 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def lang_scores(text: Column, markers: dict[str, list[str]] | None = None) -> dict[str, Column]:
+def lang_scores(text: Column) -> dict[str, Column]:
     """Per-language marker-token hit counts (n-gram-free heuristic)."""
-    markers = markers or LANG_MARKERS
     toks = tokens_col(F.lower(text))
     out = {}
-    for lang, words in markers.items():
+    for lang, words in LANG_MARKERS.items():
         arr = F.array(*[F.lit(w) for w in words])
         out[lang] = F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
     return out
 
 
-def lang_id(
-    text: Column,
-    markers: dict[str, list[str]] | None = None,
-    default: str = "und",
-    min_hits: int = 1,
-) -> Column:
+def lang_id(text: Column) -> Column:
     """argmax over language scores; deterministic tiebreak = dict order
-    (first language wins ties); below ``min_hits`` -> ``default``."""
-    scores = lang_scores(text, markers)
+    (first language wins ties); no marker hit -> ``und``."""
+    scores = lang_scores(text)
     langs = list(scores)
     best = F.greatest(*[scores[lang] for lang in langs]) if len(langs) > 1 else scores[langs[0]]
     chain = None
     for lang in langs:
         cond = scores[lang] == best
         chain = F.when(cond, lang) if chain is None else chain.when(cond, lang)
-    return F.when(best >= min_hits, chain).otherwise(F.lit(default))
+    return F.when(best >= 1, chain).otherwise(F.lit("und"))
 
 
 # ---------------------------------------------------------------------------
@@ -403,15 +397,15 @@ def quality_score(text: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 def doc_fingerprint(
-    text: Column, shingle_n: int = 4, out_bits: int = 16
+    text: Column, shingle_n: int = 4
 ) -> Column:
     """Content fingerprint = min md5 over word n-gram shingles
     (the winnowing global-min special case: robust to reordering of
     surrounding text, portable across engines). Returns the first
-    ``out_bits`` hex chars."""
+    16 hex chars."""
     sh = word_shingles(text, shingle_n)
     return F.substring(
-        F.array_min(F.transform(sh, lambda s: F.md5(s))), 1, out_bits
+        F.array_min(F.transform(sh, lambda s: F.md5(s))), 1, 16
     )
 
 
@@ -495,13 +489,11 @@ def gopher_filter(
 # within-document repetition metrics
 # ---------------------------------------------------------------------------
 
-def repetition_metrics(
-    df: DataFrame, id_col: str, text_col: str, top_n: int = 2
-) -> DataFrame:
+def repetition_metrics(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document repetition features (the Gopher A1.1 duplicate
     n-gram family adapted to single-line docs): for n in {2,3} the
     duplicate-n-gram fraction ``1 - distinct/total``, plus the
-    top-``top_n``-gram fraction (occurrences of the most frequent
+    top-2-gram fraction (occurrences of the most frequent
     n-gram / total n-grams).
 
     Scale shape: the dup fractions are array-native per row (no
@@ -526,7 +518,7 @@ def repetition_metrics(
         ],
     )
     top = (
-        base.select(F.col(id_col), F.explode(word_ngrams(F.col("__toks"), top_n)).alias("gram"))
+        base.select(F.col(id_col), F.explode(word_ngrams(F.col("__toks"), 2)).alias("gram"))
         .groupBy(id_col, "gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .groupBy(id_col)
@@ -536,17 +528,15 @@ def repetition_metrics(
         )
         .select(
             F.col(id_col),
-            F.round(F.col("__top") / F.col("__total"), 6).alias(
-                f"top_{top_n}gram_frac"
-            ),
+            F.round(F.col("__top") / F.col("__total"), 6).alias("top_2gram_frac"),
         )
     )
     return (
         narrow.drop("__toks")
         .join(top, id_col, "left")
         .withColumn(
-            f"top_{top_n}gram_frac",
-            F.coalesce(F.col(f"top_{top_n}gram_frac"), F.lit(0.0)),
+            "top_2gram_frac",
+            F.coalesce(F.col("top_2gram_frac"), F.lit(0.0)),
         )
     )
 
@@ -628,7 +618,6 @@ PII_RULES: tuple[tuple[str, str], ...] = (
 def pii_scrub(
     df: DataFrame,
     text_col: str = "text",
-    rules: tuple[tuple[str, str], ...] = PII_RULES,
 ) -> DataFrame:
     """Mask PII spans in a text column with type tokens.
 
@@ -637,7 +626,7 @@ def pii_scrub(
     map over whatever partitioning the scan chose).
     """
     c = F.col(text_col)
-    for pat, token in rules:
+    for pat, token in PII_RULES:
         c = F.regexp_replace(c, pat, token)
     return df.withColumn(text_col, c)
 
@@ -757,8 +746,6 @@ def stratified_sample(
 
 def pack_sequences(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     budget: int = 2048,
     shards: int = 16,
     tokens_count_col: str | None = None,
@@ -783,20 +770,20 @@ def pack_sequences(
     toks = (
         F.col(tokens_count_col)
         if tokens_count_col
-        else F.size(tokens_col(F.col(text_col)))
+        else F.size(tokens_col(F.col("text")))
     ).alias("n_tokens")
-    id_is_numeric = isinstance(df.schema[id_col].dataType, NumericType)
+    id_is_numeric = isinstance(df.schema["doc_id"].dataType, NumericType)
     shard_key = (
-        F.col(id_col) if id_is_numeric else F.xxhash64(F.col(id_col))
+        F.col("doc_id") if id_is_numeric else F.xxhash64(F.col("doc_id"))
     )
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.pmod(shard_key, F.lit(shards)).alias("shard"),
         toks,
     )
     w = (
         W.partitionBy("shard")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     packed = base.withColumn(
@@ -810,8 +797,8 @@ def pack_sequences(
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tokens").alias("bin_tokens"),
-            F.min(id_col).alias("first_doc"),
-            F.max(id_col).alias("last_doc"),
+            F.min("doc_id").alias("first_doc"),
+            F.max("doc_id").alias("last_doc"),
         )
     )
 
@@ -870,7 +857,6 @@ def c4_line_filter(
 
 def corpus_shuffle(
     df: DataFrame,
-    id_col: str = "doc_id",
     seed: str = "epoch0",
     shard_prefix_len: int = 1,
 ) -> DataFrame:
@@ -885,8 +871,8 @@ def corpus_shuffle(
     + the rank as in-file order gives the training loader its shuffled
     sequence.
     """
-    h = F.md5(F.concat(F.lit(seed), F.col(id_col).cast("string")))
-    w = W.partitionBy("shuffle_shard").orderBy("shuffle_key", id_col)
+    h = F.md5(F.concat(F.lit(seed), F.col("doc_id").cast("string")))
+    w = W.partitionBy("shuffle_shard").orderBy("shuffle_key", "doc_id")
     return (
         df.withColumn("shuffle_key", h)
         .withColumn("shuffle_shard", F.substring(F.col("shuffle_key"), 1, shard_prefix_len))
@@ -968,7 +954,6 @@ def unigram_nll(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    dp: int = 6,
 ) -> DataFrame:
     """Per-document mean negative log-likelihood under a corpus-trained
     unigram LM — the in-engine stand-in for CCNet's KenLM perplexity
@@ -992,7 +977,7 @@ def unigram_nll(
     Cross-engine note: p(t) is one IEEE division of two exact ints
     (identical in any engine); ln() is <=1 ulp everywhere; the per-doc
     sum reorders under parallel aggregation, so the result is rounded
-    to ``dp`` (default 1e-6 — 9 orders above the drift).
+    to 6 dp (1e-6 — 9 orders above the drift).
     """
     toks = tokens_col(F.lower(F.col(text_col)))
     tf = (
@@ -1016,7 +1001,7 @@ def unigram_nll(
     )
     return scored.groupBy(id_col).agg(
         F.sum("tf").alias("n_tokens"),
-        F.round(-F.sum("lp") / F.sum("tf"), dp).alias("nll"),
+        F.round(-F.sum("lp") / F.sum("tf"), 6).alias("nll"),
     )
 
 
@@ -1031,12 +1016,11 @@ def dup_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 8,
-    min_docs: int = 2,
     exempt_first: bool = False,
 ) -> DataFrame:
     """Per-document duplicated-span statistics: how many of the
     document's ``k``-token sliding windows also occur in at least
-    ``min_docs - 1`` OTHER documents.
+    one OTHER document.
 
     This is the bounded-window approximation of suffix-array
     ExactSubstr dedup (a true suffix array is not expressible as a
@@ -1047,7 +1031,7 @@ def dup_spans(
     Plan: window explode (row count x ~tokens, each row one 32-char
     md5 — the shuffle key is the hash, never the window text) ->
     groupBy(window) distinct-doc count [shuffle 1, map-side combined]
-    -> filter >= min_docs -> semi-join back on the hash [shuffle 2,
+    -> filter >= 2 -> semi-join back on the hash [shuffle 2,
     equi-join] -> groupBy(doc) [shuffle 3]. O(tokens x 1) rows, no
     all-pairs path. At 100 TB the hot-window skew is bounded: a window
     shared by millions of docs still reduces to ONE group row before
@@ -1086,7 +1070,7 @@ def dup_spans(
             F.count_distinct(F.col(id_col)).alias("ndocs"),
             F.min(F.col(id_col)).alias("__first_doc"),
         )
-        .filter(F.col("ndocs") >= min_docs)
+        .filter(F.col("ndocs") >= 2)
         .select("wkey", "__first_doc")
     )
     hits = wins.join(shared, "wkey")
@@ -1116,9 +1100,6 @@ def mix_sources(
     weights: dict[str, float],
     budget_frac: float = 0.5,
     strata_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokens_count_col: str | None = None,
 ) -> DataFrame:
     """Derive per-source keep rates that hit a target token mixture,
     then apply them with the md5-consistent unit hash.
@@ -1144,25 +1125,18 @@ def mix_sources(
     unconfigured appears with rate 0; a configured source with no rows
     produces no row (there is nothing to sample from it — callers
     asserting every target got budget must check for missing rows).
-
-    ``tokens_count_col``: use a pre-computed per-row token count
-    column instead of whitespace tokenization — pass the SAME token
-    definition the downstream packer uses so the budget is measured
-    in the unit that gets packed.
     """
     tok = df.select(
         F.col(strata_col).alias("source"),
-        F.col(id_col),
+        F.col("doc_id"),
         (
-            F.col(tokens_count_col)
-            if tokens_count_col
-            else token_count_ws(F.col(text_col))
+            token_count_ws(F.col("text"))
         ).alias("t"),
     )
     rates = mix_rates(tok, weights, budget_frac)
     kept = (
         tok.join(F.broadcast(rates.select("source", "__cut")), "source")
-        .filter(F.substring(F.md5(F.col(id_col).cast("string")), 1, 4) < F.col("__cut"))
+        .filter(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4) < F.col("__cut"))
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("kept_docs"),
@@ -1228,8 +1202,6 @@ def mix_keep(
     weights: dict[str, float],
     budget_frac: float = 0.5,
     strata_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     tokens_count_col: str | None = None,
 ) -> DataFrame:
     """The row-level form of mix_sources: return the KEPT rows (all
@@ -1242,7 +1214,7 @@ def mix_keep(
         (
             F.col(tokens_count_col)
             if tokens_count_col
-            else token_count_ws(F.col(text_col))
+            else token_count_ws(F.col("text"))
         ).alias("t"),
     )
     rates = mix_rates(tok, weights, budget_frac)
@@ -1250,7 +1222,7 @@ def mix_keep(
     return (
         df.join(F.broadcast(cuts), strata_col)
         .filter(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 4) < F.col("__cut")
+            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4) < F.col("__cut")
         )
         .drop("__cut")
     )
@@ -1270,7 +1242,6 @@ def token_count_ws(text: Column) -> Column:
 
 def bpe_merge_candidates(
     df: DataFrame,
-    text_col: str = "text",
     k: int = 20,
 ) -> DataFrame:
     """Top-``k`` adjacent character pairs inside whitespace words —
@@ -1287,7 +1258,7 @@ def bpe_merge_candidates(
     a data-scale window). Ties break on the pair string for
     cross-engine determinism.
     """
-    w = F.explode(tokens_col(F.lower(F.col(text_col)))).alias("w")
+    w = F.explode(tokens_col(F.lower(F.col("text")))).alias("w")
     pair = F.explode(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.length("w") - 1, F.lit(0))),
@@ -1354,11 +1325,8 @@ def _quality_features(text: Column) -> dict[str, Column]:
 
 def quality_classifier(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     weights: dict[str, float] | None = None,
     bias: float = -2.0,
-    dp: int = 6,
 ) -> DataFrame:
     """Logistic quality score per document: sigmoid(bias + w·features)
     over (alpha_ratio, stopword_ratio, distinct_token_ratio,
@@ -1376,13 +1344,13 @@ def quality_classifier(
     w = dict(QUALITY_CLF_WEIGHTS)
     if weights:
         w.update(weights)
-    feats = _quality_features(F.col(text_col))
+    feats = _quality_features(F.col("text"))
     z = F.lit(float(bias))
     for name, col in feats.items():
         z = z + F.lit(float(w[name])) * col
-    prob = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), dp)
+    prob = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         prob.alias("quality_prob"),
         (prob >= 0.5).alias("keep"),
     )
@@ -1391,10 +1359,8 @@ def quality_classifier(
 def quality_classifier_train(
     df: DataFrame,
     label: Column,
-    text_col: str = "text",
     lr: float = 1.0,
     iters: int = 3,
-    dp: int = 9,
 ) -> tuple[float, dict[str, float]]:
     """In-engine logistic-regression fit for the quality classifier —
     full-batch gradient descent, the distributed shape of the fastText
@@ -1404,11 +1370,11 @@ def quality_classifier_train(
 
     Per iteration, ONE narrow pass over the corpus:
       z_i = b + w·x_i            (features as literal-weighted exprs)
-      p_i = round(sigmoid(z_i), dp)
-      g_j = Σ_i round((p_i - y_i)·x_ij, dp)   as DECIMAL(28,9) — exact
+      p_i = round(sigmoid(z_i), 9)
+      g_j = Σ_i round((p_i - y_i)·x_ij, 9)    as DECIMAL(28,9) — exact
             fixed-point sums, so the gradient is independent of
             partial-aggregation order and bit-identical in any engine
-      w_j ← round(w_j - lr·(g_j / n), dp)     computed INSIDE the agg
+      w_j ← round(w_j - lr·(g_j / n), 9)      computed INSIDE the agg
             (Spark's HALF_UP round, same convention a SQL replay uses)
 
     Labels come from the caller (default use: the Gopher rule-set
@@ -1421,7 +1387,7 @@ def quality_classifier_train(
 
     Returns (bias, weights) ready for ``quality_classifier``.
     """
-    feats = _quality_features(F.col(text_col))
+    feats = _quality_features(F.col("text"))
     names = list(feats)
     base = df.select(
         *[col.alias(n) for n, col in feats.items()],
@@ -1433,7 +1399,7 @@ def quality_classifier_train(
         z = F.lit(b)
         for n in names:
             z = z + F.lit(w[n]) * F.col(n)
-        p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), dp)
+        p = F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 9)
         err = p - F.col("__y")
         cnt = F.count(F.lit(1))
 
@@ -1441,8 +1407,8 @@ def quality_classifier_train(
             # decimal(28,9): 19 integer digits of headroom — per-row
             # terms are bounded by the largest feature (~ln corpus doc
             # cap), so even 10^12 rows cannot overflow the exact sum
-            g = F.sum(F.round(term, dp).cast("decimal(28,9)")).cast("double")
-            return F.round(F.lit(cur) - F.lit(lr) * (g / cnt), dp)
+            g = F.sum(F.round(term, 9).cast("decimal(28,9)")).cast("double")
+            return F.round(F.lit(cur) - F.lit(lr) * (g / cnt), 9)
 
         row = base.agg(
             step(b, err).alias("__b"),
@@ -1462,8 +1428,6 @@ def quality_classifier_train(
 def bpe_encode(
     df: DataFrame,
     merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     passes: int = 4,
 ) -> DataFrame:
     """Tokenize each document with a literal BPE merge list.
@@ -1494,7 +1458,7 @@ def bpe_encode(
     trained tokenizer ships with a pipeline); at 100 TB this is a
     pure map stage that fuses into the scan.
     """
-    words = tokens_col(F.lower(F.col(text_col)))
+    words = tokens_col(F.lower(F.col("text")))
 
     def encode_word(w: Column) -> Column:
         # 'abc' -> ' a b c ' (delimited symbol string)
@@ -1510,7 +1474,7 @@ def bpe_encode(
         F.transform(encoded, lambda e: F.split(e, " "))
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.concat_ws(" ", token_arrays).alias("bpe_text"),
         F.coalesce(F.size(token_arrays), F.lit(0)).alias("n_bpe_tokens"),
     )
@@ -1525,14 +1489,11 @@ def dsir_weights(
     df: DataFrame,
     target_pred: Column,
     id_col: str = "doc_id",
-    text_col: str = "text",
     buckets: int = 512,
-    smoothing: float = 1.0,
-    dp: int = 6,
 ) -> DataFrame:
     """Per-document DSIR importance weight: hashed unigram features,
     ``w(d) = Σ_f count_f(d) · (ln p̂_target(f) − ln q̂_raw(f))`` with
-    Laplace-``smoothing`` estimates. Documents scoring high look like
+    add-one (Laplace) estimates. Documents scoring high look like
     the target distribution — the weights feed importance resampling
     of a raw corpus toward a curated target (DSIR's bag-of-hashed-
     ngrams formulation).
@@ -1549,13 +1510,13 @@ def dsir_weights(
     collect inlined as literals.
 
     Cross-engine: counts are exact ints; ln() ≤1 ulp; per-doc sums
-    reorder under parallel agg → rounded to ``dp`` (unigram_nll's
+    reorder under parallel agg → rounded to 6 dp (unigram_nll's
     convention).
     """
     toks = df.select(
         F.col(id_col),
         target_pred.alias("__is_target"),
-        F.explode(tokens_col(F.lower(F.col(text_col)))).alias("t"),
+        F.explode(tokens_col(F.lower(F.col("text")))).alias("t"),
     )
     bucket = F.pmod(
         F.conv(F.substring(F.md5(F.col("t")), 1, 4), 16, 10).cast("int"),
@@ -1569,7 +1530,7 @@ def dsir_weights(
         F.sum("q_cnt").alias("q"), F.sum("p_cnt").alias("p")
     ).collect()[0]
     q_total, p_total = int(tot["q"] or 0), int(tot["p"] or 0)
-    a, B = float(smoothing), buckets
+    a, B = 1.0, buckets
     lam = stats.select(
         "bucket",
         (
@@ -1581,6 +1542,6 @@ def dsir_weights(
         toks.select(F.col(id_col), bucket)
         .join(F.broadcast(lam), "bucket")
         .groupBy(id_col)
-        .agg(F.round(F.sum("lam"), dp).alias("dsir_w"))
+        .agg(F.round(F.sum("lam"), 6).alias("dsir_w"))
     )
     return scored

@@ -35,7 +35,6 @@ def assign_keys(
     field: str,
     keys: list[str],
     on_error: str = "send",
-    out_col: str | None = None,
 ) -> DataFrame:
     """stanza assign_keys transformer
     (``pkg/stanza/operator/transformer/assignkeys/transformer.go:24-62``):
@@ -43,20 +42,20 @@ def assign_keys(
     configured key at the same position.  The reference errors when the
     list length differs from ``len(keys)``; per stanza on_error
     semantics 'send' passes the entry through unchanged (the original
-    list is kept, out_col stays NULL) and 'drop' removes it.
+    list is kept, the map stays NULL) and 'drop' removes it.
 
     The field may be a native ARRAY column or a compact-JSON array cell
     (the flat model's encoding for nested slices); both decode JVM-side.
-    Output: ``out_col`` as MAP<STRING,STRING> — pure expressions, no
-    shuffle.  Default ``out_col``: with on_error='drop' the map replaces
-    ``field`` (every surviving row parsed); with 'send' it defaults to
-    ``{field}_map`` so mismatched rows RETAIN the original list column
+    Output: a MAP<STRING,STRING> column — pure expressions, no
+    shuffle.  With on_error='drop' the map replaces ``field`` (every
+    surviving row parsed); with 'send' it is ``{field}_map`` so
+    mismatched rows RETAIN the original list column
     (transformer.go returns an error and the entry keeps its field —
     overwriting the source with a NULL map would lose data).
     """
     if not keys:
         raise ValueError("assign_keys missing required field keys")
-    out_col = out_col or (field if on_error == "drop" else f"{field}_map")
+    out_col = field if on_error == "drop" else f"{field}_map"
     src = F.col(field)
     dtype = dict(df.dtypes)[field]
     arr = src if dtype.startswith("array") else F.from_json(src, "array<string>")
@@ -68,8 +67,7 @@ def assign_keys(
     if on_error == "drop":
         return df.filter(ok).withColumn(out_col, assigned)
     # 'send': mismatched rows pass through with a NULL map (the typed
-    # out column can't hold the original list; callers that need it
-    # keep the source column by passing out_col != field)
+    # out column can't hold the original list, which stays in ``field``)
     return df.withColumn(out_col, F.when(ok, assigned))
 
 

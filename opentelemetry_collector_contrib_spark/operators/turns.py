@@ -18,16 +18,10 @@ from pyspark.sql import functions as F
 def turn_context(
     df: DataFrame,
     n: int = 3,
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    text_col: str = "text",
-    role_col: str = "role",
-    sep: str = "\n",
-    out_col: str = "context",
 ) -> DataFrame:
     """Attach each turn's rolling context: the previous ``n`` turns
     of its conversation, oldest first, rendered ``role: text`` and
-    joined with ``sep``.
+    joined with newlines.
 
     One window per conversation (ROWS BETWEEN n PRECEDING AND 1
     PRECEDING — O(n) state per row, no whole-conversation
@@ -36,39 +30,34 @@ def turn_context(
     keeps, and no group serializes more than its own turns.
     """
     w = (
-        W.partitionBy(conv_col)
-        .orderBy(idx_col)
+        W.partitionBy("conv_id")
+        .orderBy("turn_idx")
         .rowsBetween(-n, -1)
     )
-    line = F.concat_ws(": ", F.col(role_col), F.col(text_col))
+    line = F.concat_ws(": ", F.col("role"), F.col("text"))
     return df.withColumn(
-        out_col,
-        F.array_join(F.collect_list(line).over(w), sep),
+        "context",
+        F.array_join(F.collect_list(line).over(w), "\n"),
     )
 
 
 def sft_pairs(
     df: DataFrame,
     n: int = 3,
-    response_role: str = "assistant",
-    conv_col: str = "conv_id",
-    idx_col: str = "turn_idx",
-    text_col: str = "text",
-    role_col: str = "role",
 ) -> DataFrame:
     """(context, response) supervised pairs: one row per turn whose
-    role is ``response_role``, context = the preceding ``n`` turns.
+    role is ``assistant``, context = the preceding ``n`` turns.
     Turns with EMPTY context (conversation openers) are dropped — a
     response with no prompt is not a training pair.
     """
-    ctx = turn_context(df, n, conv_col, idx_col, text_col, role_col)
+    ctx = turn_context(df, n)
     return (
-        ctx.filter(F.col(role_col) == response_role)
+        ctx.filter(F.col("role") == "assistant")
         .filter(F.col("context") != "")
         .select(
-            conv_col,
-            idx_col,
+            "conv_id",
+            "turn_idx",
             F.col("context"),
-            F.col(text_col).alias("response"),
+            F.col("text").alias("response"),
         )
     )

@@ -55,12 +55,10 @@ _ENTRY = ("struct<metric:string,attr:string,value:bigint,"
           "value_d:double,present:boolean>")
 
 
-def vcenter_stats(
-    df: DataFrame, kind_col: str = "kind", body_col: str = "body"
-) -> DataFrame:
-    kind = F.col(kind_col)
-    o = F.from_json(F.col(body_col), _SCHEMA)
-    base = [c for c in df.columns if c not in (kind_col, body_col)]
+def vcenter_stats(df: DataFrame) -> DataFrame:
+    kind = F.col("kind")
+    o = F.from_json(F.col("body"), _SCHEMA)
+    base = [c for c in df.columns if c not in ("kind", "body")]
     df = df.select(*base, kind.alias("_kind"), o.alias("_o"))
     kind, o = F.col("_kind"), F.col("_o")
 
@@ -191,7 +189,7 @@ def vcenter_stats(
 
     exploded = df.select(
         *base,
-        kind.alias(kind_col),
+        kind.alias("kind"),
         F.explode(
             F.filter(F.array(*entries), lambda x: x["present"])
         ).alias("_m"),

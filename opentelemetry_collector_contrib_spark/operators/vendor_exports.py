@@ -40,17 +40,13 @@ def coralogix_resource_metadata(
     df: DataFrame,
     *,
     id_cols: list[str],
-    app_name_attributes: tuple = ("service.namespace",
-                                  "k8s.namespace.name"),
-    subsystem_attributes: tuple = ("service.name",
-                                   "k8s.deployment.name",
-                                   "k8s.statefulset.name"),
     app_name: str = "",
-    subsystem: str = "",
 ) -> DataFrame:
     res = F.col("res_attrs")
-    app = _ladder(res, app_name_attributes, app_name, CX_APP)
-    sub = _ladder(res, subsystem_attributes, subsystem, CX_SUBSYSTEM)
+    app = _ladder(res, ("service.namespace", "k8s.namespace.name"),
+                  app_name, CX_APP)
+    sub = _ladder(res, ("service.name", "k8s.deployment.name",
+                        "k8s.statefulset.name"), "", CX_SUBSYSTEM)
     ents = F.concat(
         F.filter(F.coalesce(F.map_entries(res), F.expr("array()").cast(
             "array<struct<key:string,value:string>>")),

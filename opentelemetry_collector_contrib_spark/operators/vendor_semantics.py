@@ -39,11 +39,6 @@ from pyspark.sql import functions as F
 
 def coralogix_transactions(
     df: DataFrame,
-    trace_col: str = "trace_id",
-    span_col: str = "span_id",
-    parent_col: str = "parent_span_id",
-    name_col: str = "name",
-    kind_col: str = "kind",
     rounds: int = 6,
 ) -> DataFrame:
     """Attach (transaction, is_root) to every span.
@@ -60,14 +55,14 @@ def coralogix_transactions(
     single root and leaves orphaned spans untouched; spans whose
     parent chain never reaches a boundary likewise stay NULL here.
     """
-    boundary = F.col(parent_col).isNull() | F.col(kind_col).isin(
+    boundary = F.col("parent_span_id").isNull() | F.col("kind").isin(
         "server", "consumer"
     )
     state = df.select(
-        F.col(trace_col).alias("_tr"),
-        F.col(span_col).alias("_sp"),
-        F.when(boundary, F.col(name_col)).alias("_txn"),
-        F.when(~boundary, F.col(parent_col)).alias("_ptr"),
+        F.col("trace_id").alias("_tr"),
+        F.col("span_id").alias("_sp"),
+        F.when(boundary, F.col("name")).alias("_txn"),
+        F.when(~boundary, F.col("parent_span_id")).alias("_ptr"),
         boundary.alias("is_root"),
     )
     for _ in range(rounds):
@@ -98,8 +93,8 @@ def coralogix_transactions(
             .localCheckpoint()
         )
     return state.select(
-        F.col("_tr").alias(trace_col),
-        F.col("_sp").alias(span_col),
+        F.col("_tr").alias("trace_id"),
+        F.col("_sp").alias("span_id"),
         F.col("_txn").alias("txn"),
         "is_root",
     )
@@ -114,17 +109,6 @@ def _strip_protocol(url: Column) -> Column:
 def datadog_semantics(
     df: DataFrame,
     override: bool = False,
-    service_col: str = "service_name",
-    version_col: str = "service_version",
-    env_col: str = "deployment_env",
-    kind_col: str = "kind",
-    status_code_col: str = "status_code",
-    status_msg_col: str = "status_message",
-    exc_msg_col: str = "exception_message",
-    exc_type_col: str = "exception_type",
-    http_code_col: str = "http_status_code",
-    vcs_rev_col: str = "vcs_revision",
-    vcs_url_col: str = "vcs_repo_url",
 ) -> DataFrame:
     """Derive the ``datadog.*`` / ``git.*`` attribute set from
     flattened span columns (processor.go:35-165).
@@ -154,35 +138,35 @@ def datadog_semantics(
 
     # NULL status (unset, the common case) is NOT an error — status2Error
     # returns 0 for anything but StatusCodeError (:170-172)
-    is_err = F.coalesce(c(status_code_col) == "error", F.lit(False))
+    is_err = F.coalesce(c("status_code") == "error", F.lit(False))
     err_msg = F.when(
         is_err,
         F.coalesce(
-            c(exc_msg_col),
-            F.when(c(status_msg_col) != "", c(status_msg_col)),
-            c(http_code_col).cast("string"),
+            c("exception_message"),
+            F.when(c("status_message") != "", c("status_message")),
+            c("http_status_code").cast("string"),
         ),
     )
     out = df
-    out = put(out, "datadog_version", F.coalesce(c(version_col), F.lit("")))
+    out = put(out, "datadog_version", F.coalesce(c("service_version"), F.lit("")))
     out = put(
         out,
         "datadog_service",
-        F.coalesce(c(service_col), F.lit("otlpresourcenoservicename")),
+        F.coalesce(c("service_name"), F.lit("otlpresourcenoservicename")),
     )
-    out = put(out, "datadog_env", F.coalesce(c(env_col), F.lit("default")))
-    out = put(out, "datadog_span_kind", F.lower(c(kind_col)))
-    out = put(out, "git_commit_sha", c(vcs_rev_col))
-    out = put(out, "git_repository_url", _strip_protocol(c(vcs_url_col)))
+    out = put(out, "datadog_env", F.coalesce(c("deployment_env"), F.lit("default")))
+    out = put(out, "datadog_span_kind", F.lower(c("kind")))
+    out = put(out, "git_commit_sha", c("vcs_revision"))
+    out = put(out, "git_repository_url", _strip_protocol(c("vcs_repo_url")))
     out = put(
         out,
         "datadog_http_status_code",
-        F.when(c(http_code_col).isNotNull(), c(http_code_col).cast("string")),
+        F.when(c("http_status_code").isNotNull(), c("http_status_code").cast("string")),
     )
     out = put(out, "datadog_error", is_err.cast("int"))
     out = put(out, "datadog_error_msg", err_msg)
     out = put(
-        out, "datadog_error_type", F.when(is_err, c(exc_type_col))
+        out, "datadog_error_type", F.when(is_err, c("exception_type"))
     )
     return out
 
@@ -300,9 +284,6 @@ def sumologic_loglevel(severity_number: Column) -> Column:
 
 def sumologic_semantics(
     df: DataFrame,
-    attrs_col: str = "attrs",
-    severity_num_col: str = "severity_number",
-    out_col: str = "attrs",
 ) -> DataFrame:
     """The sumologic processor's semantic stages in reference order
     (processor.go:47-55): cloud namespace insertion, attribute
@@ -314,10 +295,10 @@ def sumologic_semantics(
     barrier: composing the map expressions directly makes every
     per-entry lambda re-evaluate the whole upstream chain (entries² ×
     namespace-insert blowup — measured 5.5s → ~1s at sf0.1)."""
-    passthrough = [c for c in df.columns if c not in (attrs_col,)]
+    passthrough = [c for c in df.columns if c not in ("attrs",)]
     s1 = df.select(
         *passthrough,
-        sumologic_cloud_namespace(F.col(attrs_col)).alias("_a1"),
+        sumologic_cloud_namespace(F.col("attrs")).alias("_a1"),
     )
     # rename pass: per-entry target lookup against the STAGED map
     # (_sumo_renamed_entries is the single source of the rename rule)
@@ -329,8 +310,8 @@ def sumologic_semantics(
     )
     out = s3.select(
         "*",
-        _sumo_first_wins_map(F.col("_entries"), F.col("_keys")).alias(out_col),
-        sumologic_loglevel(F.col(severity_num_col)).alias("loglevel"),
+        _sumo_first_wins_map(F.col("_entries"), F.col("_keys")).alias("attrs"),
+        sumologic_loglevel(F.col("severity_number")).alias("loglevel"),
     ).drop("_entries", "_keys")
     return out
 
@@ -727,9 +708,6 @@ def sumologic_nest_attributes(
 def sumologic_aggregate_attributes(
     df: DataFrame,
     aggregations: list[tuple[str, list[str]]],
-    attrs_col: str = "attrs",
-    out_col: str = "attrs",
-    agg_col: str = "aggregated",
 ) -> DataFrame:
     """Sumologic ``aggregate_attributes``
     (``processor/sumologicprocessor/aggregate_attributes_processor.go``
@@ -741,9 +719,9 @@ def sumologic_aggregate_attributes(
     overwrites the earlier value (pcommon PutEmpty). The aggregated
     attribute is only added when something matched (:153-158).
 
-    Spark re-expression: the flat remainder stays ``out_col``
+    Spark re-expression: the flat remainder stays ``attrs``
     (map<string,string>) and the one-level sub-maps land in
-    ``agg_col`` (map<string,map<string,string>>) — a typed column, no
+    ``aggregated`` (map<string,map<string,string>>) — a typed column, no
     JSON detour. Everything is array/map surgery on ``map_entries``:
     zero shuffle, whole-stage codegen, no Python. Each aggregation
     round is staged behind a select barrier (the lambda-staging
@@ -755,9 +733,9 @@ def sumologic_aggregate_attributes(
     sub-map) — same declared model boundary as ``nest_attributes``
     input values; no reference config does this.
     """
-    passthrough = [c for c in df.columns if c != attrs_col]
+    passthrough = [c for c in df.columns if c != "attrs"]
     cur = df.select(
-        *passthrough, F.map_entries(F.col(attrs_col)).alias("_rem")
+        *passthrough, F.map_entries(F.col("attrs")).alias("_rem")
     )
     # NOTE: higher-order-function lambdas must be UNARY here — PySpark
     # infers lambda arity from the full Python signature, so a default
@@ -830,12 +808,12 @@ def sumologic_aggregate_attributes(
         )
     out = cur.select(
         *passthrough,
-        F.map_from_entries(F.col("_rem")).alias(out_col),
+        F.map_from_entries(F.col("_rem")).alias("attrs"),
         F.map_from_entries(
             F.filter(
                 F.array(*agg_entries), lambda e: e["value"].isNotNull()
             )
-        ).alias(agg_col),
+        ).alias("aggregated"),
     )
     return out
 
@@ -857,12 +835,6 @@ def _id_hex_or_empty(id_col: Column, nbytes: int) -> Column:
 
 def sumologic_log_fields(
     df: DataFrame,
-    attrs_col: str = "attrs",
-    severity_num_col: str = "severity_number",
-    severity_text_col: str = "severity_text",
-    span_id_col: str = "span_id",
-    trace_id_col: str = "trace_id",
-    out_col: str = "attrs",
 ) -> DataFrame:
     """Sumologic ``field_attributes`` log-fields conversion
     (log_fields_conversion_processor.go:92-114): copy record fields
@@ -877,8 +849,8 @@ def sumologic_log_fields(
     Each field is insert-if-missing against the reference's constant
     attribute names. Zero-shuffle map surgery.
     """
-    attrs = F.col(attrs_col)
-    sev = F.col(severity_num_col).cast("int")
+    attrs = F.col("attrs")
+    sev = F.col("severity_number").cast("int")
     entries = [
         F.when(
             sev.isNotNull()
@@ -893,28 +865,28 @@ def sumologic_log_fields(
             ~F.map_contains_key(attrs, "severitytext"),
             F.struct(
                 F.lit("severitytext").alias("key"),
-                F.col(severity_text_col).alias("value"),
+                F.col("severity_text").alias("value"),
             ),
         ),
         F.when(
             ~F.map_contains_key(attrs, "spanid"),
             F.struct(
                 F.lit("spanid").alias("key"),
-                _id_hex_or_empty(F.col(span_id_col), 8).alias("value"),
+                _id_hex_or_empty(F.col("span_id"), 8).alias("value"),
             ),
         ),
         F.when(
             ~F.map_contains_key(attrs, "traceid"),
             F.struct(
                 F.lit("traceid").alias("key"),
-                _id_hex_or_empty(F.col(trace_id_col), 16).alias("value"),
+                _id_hex_or_empty(F.col("trace_id"), 16).alias("value"),
             ),
         ),
     ]
     added = F.map_from_entries(
         F.filter(F.array(*entries), lambda e: e.isNotNull())
     )
-    passthrough = [c for c in df.columns if c != attrs_col]
+    passthrough = [c for c in df.columns if c != "attrs"]
     return df.select(
-        *passthrough, F.map_concat(attrs, added).alias(out_col)
+        *passthrough, F.map_concat(attrs, added).alias("attrs")
     )

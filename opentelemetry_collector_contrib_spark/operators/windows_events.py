@@ -235,13 +235,13 @@ def _ts_ns(system_time: Column) -> Column:
     return (F.unix_micros(sec_ts) * 1000 + nanos).alias("we_ts_ns")
 
 
-def windows_event_parse(df: DataFrame, body_col: str = "body") -> DataFrame:
+def windows_event_parse(df: DataFrame) -> DataFrame:
     """Parse rendered Windows Event XML rows into flattened we_* columns.
 
     Mirrors formattedBody (xml.go:75-135): rendered-info fold,
     severity ladder, Security message split, ordered event_data.
     """
-    e = F.from_xml(F.col(body_col), _EVENT_SCHEMA)
+    e = F.from_xml(F.col("body"), _EVENT_SCHEMA)
     df = df.withColumn("_e", e)
     s = F.col("_e.System")
     r = F.col("_e.RenderingInfo")
@@ -285,7 +285,7 @@ def windows_event_parse(df: DataFrame, body_col: str = "body") -> DataFrame:
     ts = _ts_ns(s["TimeCreated"]["_SystemTime"])
 
     out = df.select(
-        *[c for c in df.columns if c not in ("_e", body_col)],
+        *[c for c in df.columns if c not in ("_e", "body")],
         F.coalesce(s["EventID"]["_VALUE"], F.lit(0)).alias("we_event_id"),
         F.coalesce(s["EventID"]["_Qualifiers"], F.lit(0))
             .cast("int").alias("we_qualifiers"),

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .loki_export import _dedup_last_wins
+
 NO_SERVICE_NAME = "OTLPResourceNoServiceName"   # tracetranslator:23
 TAG_SERVICE_NAME_SOURCE = "otlp.service.name.source"  # zipkin/attributes:16
 _SVC_KEYS = ["service.name", "faas.name", "k8s.deployment.name",
@@ -63,14 +65,6 @@ def _map_entries_of(m: Column) -> Column:
     return F.coalesce(F.map_entries(m), F.expr("array()").cast(_ENTRY_T))
 
 
-def _dedup_last_wins(entries: Column) -> Column:
-    rev = F.reverse(entries)
-    return F.filter(
-        rev,
-        lambda e, i: ~F.exists(F.slice(rev, F.lit(1), i),
-                               lambda p: p["key"] == e["key"]))
-
-
 def _sorted_json(m: Column) -> Column:
     """json.Marshal(map[string]string) — sorted keys, '{}' when empty."""
     return F.coalesce(
@@ -86,35 +80,17 @@ def zipkin_export_spans(
     df: DataFrame,
     *,
     id_cols: list[str],
-    trace_id_col: str = "trace_id",
-    span_id_col: str = "span_id",
-    parent_span_id_col: str = "parent_span_id",
-    name_col: str = "name",
-    kind_col: str = "kind",
-    start_ns_col: str = "start_ns",
-    end_ns_col: str = "end_ns",
-    status_code_col: str = "status_code",
-    status_message_col: str = "status_message",
-    trace_state_col: str = "trace_state",
-    attrs_col: str = "attrs",
-    res_attrs_col: str = "res_attrs",
-    scope_name_col: str | None = "scope_name",
-    scope_version_col: str | None = "scope_version",
-    events_col: str | None = "events",
-    links_col: str | None = "links",
 ) -> DataFrame:
-    res = F.col(res_attrs_col)
-    attrs = F.col(attrs_col)
-    kind = F.coalesce(F.col(kind_col), F.lit(0)).cast("int")
-    status = F.coalesce(F.col(status_code_col), F.lit(0)).cast("int")
-    msg = F.coalesce(F.col(status_message_col), F.lit(""))
-    tstate = F.coalesce(F.col(trace_state_col), F.lit(""))
-    start_ns = F.coalesce(F.col(start_ns_col), F.lit(0)).cast("bigint")
-    end_ns = F.coalesce(F.col(end_ns_col), F.lit(0)).cast("bigint")
-    scope_name = (F.coalesce(F.col(scope_name_col), F.lit(""))
-                  if scope_name_col else F.lit(""))
-    scope_ver = (F.coalesce(F.col(scope_version_col), F.lit(""))
-                 if scope_version_col else F.lit(""))
+    res = F.col("res_attrs")
+    attrs = F.col("attrs")
+    kind = F.coalesce(F.col("kind"), F.lit(0)).cast("int")
+    status = F.coalesce(F.col("status_code"), F.lit(0)).cast("int")
+    msg = F.coalesce(F.col("status_message"), F.lit(""))
+    tstate = F.coalesce(F.col("trace_state"), F.lit(""))
+    start_ns = F.coalesce(F.col("start_ns"), F.lit(0)).cast("bigint")
+    end_ns = F.coalesce(F.col("end_ns"), F.lit(0)).cast("bigint")
+    scope_name = (F.coalesce(F.col("scope_name"), F.lit("")))
+    scope_ver = (F.coalesce(F.col("scope_version"), F.lit("")))
 
     # --- service extraction (from_translator.go:276-300) ---------------
     svc_vals = [F.element_at(res, F.lit(k)) for k in _SVC_KEYS]
@@ -158,18 +134,17 @@ def zipkin_export_spans(
     # --- barrier: tags as a concrete map --------------------------------
     stage1 = df.select(
         *id_cols,
-        F.col(trace_id_col).alias("trace_id"),
-        F.col(span_id_col).alias("span_id"),
-        F.coalesce(F.col(parent_span_id_col), F.lit(""))
+        F.col("trace_id").alias("trace_id"),
+        F.col("span_id").alias("span_id"),
+        F.coalesce(F.col("parent_span_id"), F.lit(""))
         .alias("parent_span_id"),
-        F.coalesce(F.col(name_col), F.lit("")).alias("name"),
+        F.coalesce(F.col("name"), F.lit("")).alias("name"),
         kind.alias("_kind"), status.alias("_status"), msg.alias("_msg"),
         start_ns.alias("_start"), end_ns.alias("_end"),
         F.map_from_entries(merged).alias("_tags"),
         local_service.alias("local_service"),
-        (F.col(events_col) if events_col else
-         F.lit(None)).alias("_events"),
-        (F.col(links_col) if links_col else F.lit(None)).alias("_links"),
+        (F.col("events")).alias("_events"),
+        (F.col("links")).alias("_links"),
     )
     tags = F.col("_tags")
 

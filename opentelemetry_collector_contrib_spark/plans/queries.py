@@ -17,9 +17,7 @@ Determinism rules used throughout:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators import transform as TR
@@ -30,7 +28,6 @@ from ..operators.aggregate import (
     cumulative_to_delta,
     delta_to_cumulative,
     explicit_histogram,
-    interval_last,
     recombine,
     sessionize,
     sum_connector,
@@ -303,7 +300,8 @@ FROM events
 
 
 # ---------------------------------------------------------------------------
-# interval processor: last datapoint per (stream, interval)
+# interval processor: last datapoint per (stream, interval), ties broken
+# by event_id (processor/intervalprocessor/processor.go:72-150)
 # ---------------------------------------------------------------------------
 
 def q_interval_last(spark: SparkSession, sf_dir: str) -> DataFrame:

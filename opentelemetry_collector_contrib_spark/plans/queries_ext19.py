@@ -53,9 +53,7 @@ def _sql_fmt_float(e: str) -> str:
 # normalizeName CTE chain over a fixture CTE with columns
 # (name, unit, mtype, mono); yields CTEs nn1..nn4 where nn4 has
 # full_name / toks4 available.
-def _sql_norm_name_ctes(fx: str, namespace: str | None = None) -> str:
-    ns_pre = f"'{namespace}' || '_' || " if namespace else ""
-    ns_tok = f"list_concat(['{namespace}'], t4)" if namespace else "t4"
+def _sql_norm_name_ctes(fx: str) -> str:
     return f"""
 um(uo, up) AS (VALUES {_UM_VALUES}),
 pm(uo, up) AS (VALUES {_PM_VALUES}),
@@ -81,12 +79,12 @@ nn1 AS (
                 x -> x <> '') AS t0
   FROM nn2
 ), nn4 AS (
-  SELECT *, {ns_pre}CASE WHEN regexp_matches(
+  SELECT *, CASE WHEN regexp_matches(
       array_to_string(t4x, '_'), '^{_D}')
     THEN '_' || array_to_string(t4x, '_')
     ELSE array_to_string(t4x, '_') END AS full_name
   FROM (
-    SELECT *, {ns_tok} AS t4x FROM (
+    SELECT *, t4 AS t4x FROM (
       SELECT *, CASE WHEN unit = '1' AND mtype = 'gauge'
           THEN list_concat(list_filter(t3, x -> x <> 'ratio'), ['ratio'])
           ELSE t3 END AS t4

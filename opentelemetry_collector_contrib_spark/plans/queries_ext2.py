@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from ..operators.aggregate import delta_to_rate, group_by_attrs
 from ..operators.enrich import range_enrich
-from ..operators.filter import stanza_filter
 from ..operators.parse import jsonarray_parser
 from .base import QueryFn, load
 

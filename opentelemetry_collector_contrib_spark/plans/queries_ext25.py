@@ -11,20 +11,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .base import QueryFn, load
+from .base import QueryFn, load, omap
 
 EXT25_QUERIES: dict[str, QueryFn] = {}
 EXT25_ORACLES: dict[str, str] = {}
-
-
-def _omap(*entries):
-    arr = F.filter(
-        F.array(*[
-            F.when(cond, F.struct(F.lit(k).alias("key"),
-                                  v.alias("value")))
-            for cond, k, v in entries]),
-        lambda x: x.isNotNull())
-    return F.map_from_entries(arr)
 
 
 def q_splunk_hec_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,12 +45,12 @@ def q_splunk_hec_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("severity_text"),
         F.when(e % 3 == 0, F.lit(0)).otherwise(u % 24 + 1).cast("int")
         .alias("severity_number"),
-        _omap(
+        omap(
             (t, "k", F.concat(F.lit("v"), s(e % 4))),
             (e % 9 == 0, "host.name", F.concat(F.lit("ha"), s(e % 2))),
             (e % 8 == 0, "env", F.concat(F.lit("dev"), s(e % 2))),
         ).alias("attrs"),
-        _omap(
+        omap(
             (u % 3 != 0, "host.name", F.concat(F.lit("h"), s(u % 5))),
             (u % 4 == 0, "com.splunk.source",
              F.concat(F.lit("s"), s(u % 2))),
@@ -132,11 +122,11 @@ def q_splunk_hec_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mtype"),
         (F.lit(1700000000000000000) + e * 1000000).cast("bigint")
         .alias("ts_ns"),
-        _omap(
+        omap(
             (e % 7 != 0, "k", F.concat(F.lit("v"), s(e % 3))),
             (e % 7 != 0, "q", F.concat(F.lit("z"), s(u % 2))),
         ).alias("attrs"),
-        _omap(
+        omap(
             (u % 3 != 0, "host.name", F.concat(F.lit("h"), s(u % 5))),
             (u % 4 == 0, "com.splunk.source",
              F.concat(F.lit("s"), s(u % 2))),
@@ -287,11 +277,11 @@ def q_splunk_hec_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0)).cast("int").alias("status_code"),
         F.when(e % 11 == 0, F.lit("boom")).otherwise(F.lit(""))
         .alias("status_message"),
-        _omap(
+        omap(
             (e % 3 != 0, "a", F.concat(F.lit("x"), s(e % 3))),
             (e % 3 != 0, "b", F.concat(F.lit("y"), s(u % 2))),
         ).alias("attrs"),
-        _omap(
+        omap(
             (u % 3 != 0, "host.name", F.concat(F.lit("h"), s(u % 5))),
             (u % 4 == 0, "com.splunk.source",
              F.concat(F.lit("s"), s(u % 2))),
@@ -385,7 +375,7 @@ def _syslog_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.alias("i"),
         (F.lit(1700000000000000000) + e * 1357911).cast("bigint")
         .alias("ts_ns"),
-        _omap(
+        omap(
             (e % 3 == 0, "priority", F.lit("34")),
             (e % 9 == 0, "version", F.lit("2")),
             (u % 3 != 0, "hostname", F.concat(F.lit("h"), s(u % 5))),
@@ -637,13 +627,13 @@ def q_sumologic_prom_export(spark: SparkSession,
         .otherwise(F.lit("empty")).alias("mtype"),
         (F.lit(1700000000000000000) + e * 1000000).cast("bigint")
         .alias("ts_ns"),
-        _omap(
+        omap(
             (e % 7 != 0, "k", F.concat(F.lit("v"), s(e % 3))),
             # same key as a resource attr: PutStr keeps the resource
             # POSITION but takes this value
             (e % 4 == 0, "env", F.concat(F.lit("dp"), s(u % 2))),
         ).alias("attrs"),
-        _omap(
+        omap(
             (F.lit(True), "env", F.concat(F.lit("prod"), s(u % 3))),
             (u % 3 != 0, "host name", F.concat(F.lit("h"), s(u % 5))),
         ).alias("res_attrs"),
@@ -757,7 +747,7 @@ def q_sumologic_log_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.alias("i"),
         F.when(e % 9 == 0, F.lit("")).otherwise(
             F.concat(F.lit("msg "), F.col("event_type"))).alias("body"),
-        _omap(
+        omap(
             (e % 3 != 0, "zk", F.concat(F.lit("v"), s(e % 4))),
             (F.lit(True), "app", F.concat(F.lit("a"), s(u % 3))),
         ).alias("attrs"),
@@ -798,7 +788,7 @@ def q_alertmanager_export(spark: SparkSession,
             F.struct((start + 1).cast("bigint").alias("ts_ns"),
                      F.concat(F.lit("exc-"), F.col("event_type"))
                      .alias("name"),
-                     _omap(
+                     omap(
                          (e % 2 == 0, "severity",
                           F.when(u % 2 == 0, F.lit("critical"))
                           .otherwise(F.lit("warning"))),
@@ -875,12 +865,12 @@ def q_mezmo_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(e % 5 == 0, F.lit("")).otherwise(
             F.when(u % 2 == 0, F.lit("INFO")).otherwise(F.lit("WARN")))
         .alias("severity_text"),
-        _omap(
+        omap(
             (e % 2 == 0, "appname", F.concat(F.lit("app"), s(u % 3))),
             (F.lit(True), "k", F.concat(F.lit("v"), s(e % 4))),
             (e % 9 == 0, "hostname", F.concat(F.lit("ha"), s(e % 2))),
         ).alias("attrs"),
-        _omap(
+        omap(
             (u % 3 != 0, "host.name", F.concat(F.lit("h"), s(u % 5))),
         ).alias("res_attrs"),
     )
@@ -933,7 +923,7 @@ def q_honeycomb_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.alias("i"),
         F.concat(F.lit("b-"), F.col("event_type")).alias("body"),
         (e % 25).cast("bigint").alias("severity_number"),
-        _omap(
+        omap(
             (e % 3 == 0, "kind", F.lit("deploy")),
             (e % 2 == 0, "msg", F.concat(F.lit("m"), s(e % 5))),
             (e % 7 == 0, "link", F.concat(F.lit("http://x/"), s(u))),

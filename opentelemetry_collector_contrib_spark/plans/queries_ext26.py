@@ -8,8 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .base import QueryFn, load
-from .queries_ext25 import _omap
+from .base import QueryFn, load, omap
 
 EXT26_QUERIES: dict[str, QueryFn] = {}
 EXT26_ORACLES: dict[str, str] = {}
@@ -44,7 +43,7 @@ def q_azuremonitor_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lpad(F.lower(F.hex(e + 1)), 16, "0")).alias("span_id"),
         (e % 26).cast("int").alias("severity_number"),
         F.concat(F.lit("sev"), s(e % 5)).alias("severity_text"),
-        _omap(
+        omap(
             (F.lit(True), "k", F.concat(F.lit("v"), s(e % 3))),
             (e % 10 == 0, "microsoft.custom_event.name",
              F.concat(F.lit("ce"), s(e % 3))),
@@ -55,7 +54,7 @@ def q_azuremonitor_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
             (e % 7 == 0, "exception.message", F.lit("em")),
             (e % 14 == 0, "exception.stacktrace", F.lit("st")),
         ).alias("attrs"),
-        _omap(
+        omap(
             (F.lit(True), "rk", F.concat(F.lit("rv"), s(u % 2))),
             (u % 5 != 0, "service.name",
              F.concat(F.lit("svc"), s(u % 3))),
@@ -186,10 +185,10 @@ def q_azuremonitor_metrics(spark: SparkSession,
         .alias("mtype"),
         (F.lit(1700000000000000000) + e * 1000000).cast("bigint")
         .alias("ts_ns"),
-        _omap(
+        omap(
             (e % 7 != 0, "k", F.concat(F.lit("v"), s(e % 3))),
         ).alias("attrs"),
-        _omap(
+        omap(
             (F.lit(True), "rk", F.concat(F.lit("rv"), s(u % 2))),
             (u % 5 != 0, "service.name",
              F.concat(F.lit("svc"), s(u % 3))),
@@ -308,7 +307,7 @@ def q_azuremonitor_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0)).cast("int").alias("status_code"),
         F.when(e % 11 == 0, F.lit("boom")).otherwise(F.lit(""))
         .alias("status_message"),
-        _omap(
+        omap(
             ((t != 4) & (e % 4 == 0), "enduser.id",
              F.concat(F.lit("u"), s(u % 5))),
             # http family
@@ -359,7 +358,7 @@ def q_azuremonitor_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((t == 4) & (q % 4 >= 2), "za",
              F.concat(F.lit("zv"), s(q % 2))),
         ).alias("attrs"),
-        _omap(
+        omap(
             (F.lit(True), "rk", F.concat(F.lit("rv"), s(u % 2))),
             (u % 5 != 0, "service.name",
              F.concat(F.lit("svc"), s(u % 3))),
@@ -376,7 +375,7 @@ def q_azuremonitor_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(F.struct(
                 (start + 5).cast("bigint").alias("ts_ns"),
                 F.lit("exception").alias("name"),
-                _omap(
+                omap(
                     (F.lit(True), "exception.type",
                      F.concat(F.lit("T"), s(e % 3))),
                     (e % 2 == 0, "exception.message", F.lit("em")),
@@ -695,12 +694,12 @@ def q_awsemf_export(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("summary"))).alias("mtype"),
         F.when(u % 9 == 0, F.lit("")).otherwise(
             F.concat(F.lit("lib"), s(u % 2))).alias("scope_name"),
-        _omap(
+        omap(
             (F.lit(True), "dim1", F.concat(F.lit("a"), s(u % 3))),
             (u % 2 == 0, "dim2", F.concat(F.lit("b"), s(u % 5))),
             (u % 7 == 0, "aws.emf.storage_resolution", F.lit("30")),
         ).alias("attrs"),
-        _omap(
+        omap(
             (u % 5 != 0, "service.name",
              F.concat(F.lit("svc"), s(u % 3))),
             (u % 4 == 0, "service.namespace", F.lit("ns0")),
@@ -843,11 +842,11 @@ def q_logservice_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         (e % 26).cast("int").alias("severity_number"),
         F.concat(F.lit("sev"), s(e % 5)).alias("severity_text"),
         (e % 256).cast("bigint").alias("flags"),
-        _omap(
+        omap(
             (e % 3 != 0, "zk", F.concat(F.lit("v"), s(e % 4))),
             (F.lit(True), "ak", F.concat(F.lit("w"), s(u % 3))),
         ).alias("attrs"),
-        _omap(
+        omap(
             (u % 3 != 0, "host.name", F.concat(F.lit("h"), s(u % 5))),
             (u % 5 != 0, "service.name",
              F.concat(F.lit("svc"), s(u % 3))),
@@ -932,10 +931,10 @@ def q_logservice_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("status_message"),
         F.when(e % 4 == 0, F.lit("a=b")).otherwise(F.lit(""))
         .alias("trace_state"),
-        _omap(
+        omap(
             (e % 3 != 0, "ak", F.concat(F.lit("x"), s(e % 3))),
         ).alias("attrs"),
-        _omap(
+        omap(
             (u % 3 != 0, "host.name", F.concat(F.lit("h"), s(u % 5))),
             (u % 5 != 0, "service.name",
              F.concat(F.lit("svc"), s(u % 3))),
@@ -1037,12 +1036,12 @@ def q_logservice_metrics(spark: SparkSession,
         .alias("mtype"),
         (F.lit(1700000000000000000) + e * 1000000000).cast("bigint")
         .alias("ts_ns"),
-        _omap(
+        omap(
             (F.lit(True), "dim.a", F.concat(F.lit("x"), s(e % 3))),
             (u % 4 == 0, "1b", F.concat(F.lit("y"), s(u % 2))),
             (u % 3 == 0, "_z", F.concat(F.lit("w"), s(u % 3))),
         ).alias("attrs"),
-        _omap(
+        omap(
             (F.lit(True), "rk", F.concat(F.lit("rv"), s(u % 2))),
             (u % 2 == 0, "h-n", F.concat(F.lit("hv"), s(u % 5))),
         ).alias("res_attrs"),
@@ -1163,12 +1162,12 @@ def _opensearch_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(e % 5 == 0, F.lit("")).otherwise(
             F.concat(F.lit("sev"), s(e % 5))).alias("severity_text"),
         (e % 256).cast("bigint").alias("flags"),
-        _omap(
+        omap(
             (F.lit(True), "app.name", F.concat(F.lit("x"), s(e % 3))),
             (e % 4 == 0, "app", F.concat(F.lit("p"), s(u % 2))),
             (e % 2 == 0, "zz", F.concat(F.lit("z"), s(u % 3))),
         ).alias("attrs"),
-        _omap(
+        omap(
             (F.lit(True), "rk", F.concat(F.lit("rv"), s(u % 2))),
             (u % 3 == 0, "app.name", F.concat(F.lit("ry"), s(u % 4))),
         ).alias("res_attrs"),

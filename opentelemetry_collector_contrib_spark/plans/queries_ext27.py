@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .base import QueryFn, load
+from .base import QueryFn, load, omap
 
 EXT27_QUERIES: dict[str, QueryFn] = {}
 EXT27_ORACLES: dict[str, str] = {}
@@ -33,15 +33,6 @@ def _fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     u, e = F.col("user_id"), F.col("event_id")
     s = lambda c: c.cast("string")  # noqa: E731
     hx = lambda c, n: F.lpad(F.lower(F.hex(c)), n, "0")  # noqa: E731
-
-    def omap(*entries):
-        arr = F.filter(
-            F.array(*[
-                F.when(cond, F.struct(F.lit(k).alias("key"),
-                                      v.alias("value")))
-                for cond, k, v in entries]),
-            lambda x: x.isNotNull())
-        return F.map_from_entries(arr)
 
     t = F.lit(True)
     srv, cli = e % 4 == 0, e % 4 == 1

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .base import QueryFn, load
+from .base import QueryFn, load, omap
 
 EXT28_QUERIES: dict[str, QueryFn] = {}
 EXT28_ORACLES: dict[str, str] = {}
@@ -32,15 +32,6 @@ def q_sentry_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = lambda c: c.cast("string")  # noqa: E731
     j = e % 10
     t = F.floor(e / 10)
-
-    def omap(*entries):
-        arr = F.filter(
-            F.array(*[
-                F.when(cond, F.struct(F.lit(k).alias("key"),
-                                      v.alias("value")))
-                for cond, k, v in entries]),
-            lambda x: x.isNotNull())
-        return F.map_from_entries(arr)
 
     tr = F.lit(True)
     kind = (F.when(j == 5, 2).when(j == 7, 5).when(j == 0, 1)

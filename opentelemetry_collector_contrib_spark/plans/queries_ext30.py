@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .base import QueryFn, load
+from .base import QueryFn, load, omap
 
 EXT30_QUERIES: dict[str, QueryFn] = {}
 EXT30_ORACLES: dict[str, str] = {}
@@ -31,15 +31,6 @@ def q_dataset_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
     u, e = F.col("user_id"), F.col("event_id")
     s = lambda c: c.cast("string")  # noqa: E731
-
-    def omap(*entries):
-        arr = F.filter(
-            F.array(*[
-                F.when(cond, F.struct(F.lit(k).alias("key"),
-                                      v.alias("value")))
-                for cond, k, v in entries]),
-            lambda x: x.isNotNull())
-        return F.map_from_entries(arr)
 
     t = F.lit(True)
     fx = ev.select(

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .base import QueryFn, load
+from .base import QueryFn, load, omap
 
 EXT33_QUERIES: dict[str, QueryFn] = {}
 EXT33_ORACLES: dict[str, str] = {}
@@ -32,15 +32,6 @@ def q_helix_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = lambda c: c.cast("string")  # noqa: E731
     t = F.floor(e / 5)
     j = e % 5
-
-    def omap(*entries):
-        arr = F.filter(
-            F.array(*[
-                F.when(cond, F.struct(F.lit(k).alias("key"),
-                                      v.alias("value")))
-                for cond, k, v in entries]),
-            lambda x: x.isNotNull())
-        return F.map_from_entries(arr)
 
     tr = F.lit(True)
     fx = ev.select(

@@ -10,7 +10,6 @@ oracle checks exact value equality with the batch-equivalent answer.
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession

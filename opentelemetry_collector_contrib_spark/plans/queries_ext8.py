@@ -307,16 +307,16 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_encode(emb, dim=64, m=4, ksub=4, iters=2).orderBy("vec_id")
 
 
-def _pq_block_ctes(b: int, sub: int = 16, ksub: int = 4) -> str:
-    lo = b * sub + 1
+def _pq_block_ctes(b: int) -> str:
+    lo = b * 16 + 1
     cos = (
         "round(list_dot_product(e.v, s.c) / "
         "(sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(s.c, s.c))), 12)"
     )
     return f"""
-e{b} AS (SELECT vec_id, list_slice(embedding::DOUBLE[], {lo}, {lo + sub - 1}) AS v
+e{b} AS (SELECT vec_id, list_slice(embedding::DOUBLE[], {lo}, {lo + 15}) AS v
          FROM embeddings),
-s{b} AS (SELECT CAST(vec_id AS INT) AS cell, v AS c FROM e{b} WHERE vec_id < {ksub}),
+s{b} AS (SELECT CAST(vec_id AS INT) AS cell, v AS c FROM e{b} WHERE vec_id < 4),
 x{b} AS (
   SELECT vec_id, cell FROM (
     SELECT e.vec_id, s.cell,
@@ -327,7 +327,7 @@ x{b} AS (
 u{b} AS (
   SELECT cell, list(m ORDER BY i) AS c FROM (
     SELECT x{b}.cell, t.i, round(avg(e.v[CAST(t.i AS INT) + 1]), 9) AS m
-    FROM x{b} JOIN e{b} e USING (vec_id) CROSS JOIN range({sub}) t(i)
+    FROM x{b} JOIN e{b} e USING (vec_id) CROSS JOIN range(16) t(i)
     GROUP BY 1, 2)
   GROUP BY cell
 ),

@@ -35,7 +35,7 @@ def _as_dir(path: str) -> str:
     return d
 
 
-def _run_stream(df, name: str, timeout_sec: int = 600) -> None:
+def _run_stream(df, name: str) -> None:
     ck = tempfile.mkdtemp(prefix=f"ck-{name}-")
     q = (
         df.writeStream.format("memory")
@@ -48,12 +48,12 @@ def _run_stream(df, name: str, timeout_sec: int = 600) -> None:
     # awaitTermination returns False on timeout; reading the memory
     # sink of a still-running query would hand the grader a silently
     # truncated result — fail loudly instead
-    if not q.awaitTermination(timeout_sec):
+    if not q.awaitTermination(600):
         q.stop()
-        raise TimeoutError(f"stream {name} did not drain in {timeout_sec}s")
+        raise TimeoutError(f"stream {name} did not drain in 600s")
 
 
-def _run_stream_until_drained(df, name: str, timeout_sec: int = 600) -> None:
+def _run_stream_until_drained(df, name: str) -> None:
     """Drive a stateful availableNow query that uses PROCESSING-TIME
     timeouts. Spark's availableNow trigger never self-terminates with
     pending processing-time state (it spins "no new data but cleaning
@@ -72,7 +72,7 @@ def _run_stream_until_drained(df, name: str, timeout_sec: int = 600) -> None:
         .trigger(availableNow=True)
         .start()
     )
-    deadline = _time.time() + timeout_sec
+    deadline = _time.time() + 600
     drained = 0
     while _time.time() < deadline:
         if not q.isActive:
@@ -92,7 +92,7 @@ def _run_stream_until_drained(df, name: str, timeout_sec: int = 600) -> None:
                 drained = 0
         _time.sleep(1)
     q.stop()
-    raise TimeoutError(f"stream {name} did not drain in {timeout_sec}s")
+    raise TimeoutError(f"stream {name} did not drain in 600s")
 
 
 def q_stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,7 +25,6 @@ def write_sink(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    mode: str = "overwrite",
     fmt: str = "parquet",
 ) -> None:
     """Idempotent partitioned write (dynamic overwrite: re-running a
@@ -34,7 +33,7 @@ def write_sink(
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        writer = df.write.mode(mode).format(fmt)
+        writer = df.write.mode("overwrite").format(fmt)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.save(path)
@@ -111,8 +110,6 @@ def write_table_sink(
 def failover_write(
     df: DataFrame,
     paths: list[str],
-    partition_by: list[str] | None = None,
-    fmt: str = "parquet",
 ) -> str:
     """failoverconnector semantics (connector/failoverconnector/logs.go:
     21-25): priority-ordered sinks; on write failure fall through to
@@ -122,7 +119,7 @@ def failover_write(
     last_err: Exception | None = None
     for path in paths:
         try:
-            write_sink(df, path, partition_by=partition_by, fmt=fmt)
+            write_sink(df, path)
             return path
         except Exception as e:  # noqa: BLE001 - any sink failure fails over
             last_err = e
@@ -136,7 +133,6 @@ def write_file_exporter(
     compression: str | None = None,
     max_records_per_file: int | None = None,
     group_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """The fileexporter's own knobs, Spark-native
     (``exporter/fileexporter/config.go:53-88``):
@@ -157,7 +153,7 @@ def write_file_exporter(
             "proto framing has no splittable distributed writer; "
             "use parquet (columnar) or json (line protocol)"
         )
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if compression:
         writer = writer.option("compression", compression)
     if max_records_per_file:

@@ -54,16 +54,15 @@ def stream_windowed_counts(
 def stream_dedup(
     stream: DataFrame,
     key_cols: list[str],
-    ts_col: str = "ts",
     watermark: str = "2 minutes",
 ) -> DataFrame:
     """logdedup streaming form: keep the first record per key within
     the watermark horizon (dropDuplicates maintains keyed state and
     evicts it at the watermark — the interval flush analog)."""
-    return stream.withWatermark(ts_col, watermark).dropDuplicates(key_cols)
+    return stream.withWatermark("ts", watermark).dropDuplicates(key_cols)
 
 
-def routed_foreach_batch_writer(root: str, route_col: str = "route"):
+def routed_foreach_batch_writer(root: str):
     """routingconnector fan-out as a foreachBatch sink: each microbatch
     is routed once (when() chain computed upstream) and written with
     partitionBy(route) — one job per microbatch, per-sink dirs, exactly
@@ -72,7 +71,7 @@ def routed_foreach_batch_writer(root: str, route_col: str = "route"):
     def write(batch: DataFrame, epoch_id: int) -> None:
         (
             batch.write.mode("append")
-            .partitionBy(route_col)
+            .partitionBy("route")
             .parquet(f"{root}/routed_stream")
         )
 
@@ -331,7 +330,7 @@ SFT_OUTPUT_SCHEMA = (
 SFT_STATE_SCHEMA = "idxs array<long>, lines array<string>"
 
 
-def make_sft_fn(n: int = 3, response_role: str = "assistant"):
+def make_sft_fn(n: int = 3):
     def fn(
         key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -355,7 +354,7 @@ def make_sft_fn(n: int = 3, response_role: str = "assistant"):
 
         out: list[dict] = []
         for turn_idx, role, text in rows:
-            if role == response_role:
+            if role == "assistant":
                 ctx = "\n".join(line for _, line in buf[-n:])
                 if ctx:
                     out.append(
@@ -378,14 +377,14 @@ def make_sft_fn(n: int = 3, response_role: str = "assistant"):
 
 
 def stream_sft_pairs(
-    stream: DataFrame, n: int = 3, response_role: str = "assistant"
+    stream: DataFrame, n: int = 3
 ) -> DataFrame:
     """(context, response) SFT pairs over a live transcript stream.
     Input needs (conv_id, turn_idx, role, text); per-conv state is the
     last ``n`` rendered turns — O(n) per conversation, the same bound
     the batch window variant carries per row."""
     return stream.groupBy("conv_id").applyInPandasWithState(
-        make_sft_fn(n, response_role),
+        make_sft_fn(n),
         outputStructType=SFT_OUTPUT_SCHEMA,
         stateStructType=SFT_STATE_SCHEMA,
         outputMode="append",
@@ -468,15 +467,7 @@ def stream_cumulative_to_delta(
     )
 
 
-def stream_spanmetrics(
-    stream: DataFrame,
-    dim_col: str = "event_type",
-    value_col: str = "value",
-    ts_col: str = "ts",
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    buckets: tuple[float, ...] = (25.0, 50.0),
-) -> DataFrame:
+def stream_spanmetrics(stream: DataFrame) -> DataFrame:
     """spanmetricsconnector live: per (dim, tumbling window) RED
     metrics — call count, explicit histogram bucket counts, mean
     duration (connector/spanmetricsconnector/connector.go:249-272;
@@ -485,7 +476,8 @@ def stream_spanmetrics(
     twin). One streaming state row per (dim, window); bucket counts
     are conditional counts inside the SAME aggregate, so the state
     stays O(dims x windows), never O(spans)."""
-    v = F.col(value_col)
+    buckets = (25.0, 50.0)
+    v = F.col("value")
     aggs = [F.count(F.lit(1)).alias("calls")]
     lo = None
     for b in buckets:
@@ -502,10 +494,10 @@ def stream_spanmetrics(
     # IEEE division of identical operands needs no tolerance.
     aggs.append(F.sum(v.cast("decimal(18,6)")).alias("__sum_dec"))
     return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), dim_col)
+        stream.withWatermark("ts", "2 hours")
+        .groupBy(F.window(F.col("ts"), "1 hour").alias("w"), "event_type")
         .agg(*aggs)
-        .select(F.col("w.start").alias("window_start"), dim_col, "calls",
+        .select(F.col("w.start").alias("window_start"), "event_type", "calls",
                 *[f"bucket_le_{int(b)}" for b in buckets], "bucket_inf",
                 (F.col("__sum_dec").cast("double") / F.col("calls"))
                 .alias("avg_duration"))

@@ -12,11 +12,13 @@ from opentelemetry_collector_contrib_spark.functions.ottl import ExtractPatterns
 from opentelemetry_collector_contrib_spark.operators import transform as TR
 from opentelemetry_collector_contrib_spark.operators.aggregate import (
     alert_rule,
+    count_connector,
     cumulative_to_delta,
     delta_to_cumulative,
     explicit_histogram,
     group_by_attrs,
     recombine,
+    sum_connector,
 )
 from opentelemetry_collector_contrib_spark.operators.enrich import (
     broadcast_enrich,
@@ -135,7 +137,7 @@ def test_route_first_match_wins_and_null_is_false(spark):
     ]
     routed = apply_routes(df, routes, default="rest")
     got = {r["id"]: r["route"] for r in routed.collect()}
-    # id=4: sev NULL -> condition NULL -> treated false (error_mode=ignore)
+    # id=4: sev NULL -> condition NULL -> treated false
     assert got == {1: "alerts", 2: "tools", 3: "rest", 4: "rest"}
     sent = routed.groupBy("route").count().collect()
     assert sum(r["count"] for r in sent) == df.count()  # sent==received
@@ -207,6 +209,22 @@ def test_histogram_bucket_edges(spark):
     out = explicit_histogram(df, "v", bounds=[10.0, 20.0], group_by=["g"])
     got = {r["bucket_idx"]: r["bucket_count"] for r in out.collect()}
     assert got == {0: 1, 1: 1, 2: 1}  # <=10 | (10,20] | +Inf
+
+
+def test_count_and_sum_connectors_skip_null_attrs_and_values(spark):
+    df = spark.createDataFrame(
+        [("a", "x", 1.0), ("a", "x", None), ("a", None, 4.0),
+         ("b", "y", 2.0), (None, "y", 8.0)],
+        "svc string, op string, v double",
+    )
+    # counter.go:70-73: a row with a NULL grouped attribute is not counted
+    counts = {(r["svc"], r["op"]): r["count"]
+              for r in count_connector(df, ["svc", "op"]).collect()}
+    assert counts == {("a", "x"): 2, ("b", "y"): 1}
+    # sumconnector also skips a NULL value
+    sums = {(r["svc"], r["op"]): r["sum"]
+            for r in sum_connector(df, "v", ["svc", "op"]).collect()}
+    assert sums == {("a", "x"): 1.0, ("b", "y"): 2.0}
 
 
 def test_group_by_attrs_promotes_into_resource(spark):

@@ -1,4 +1,6 @@
-"""Every top-level package definition is reached by code that runs.
+"""Every top-level package definition is reached by code that runs, and
+every defaulted parameter of a package function is set by some call
+(the second scan, further down).
 
 A pure-Python scan, no Spark. It collects each module-level function,
 class and assigned name in the package, then counts the places the name
@@ -6,7 +8,9 @@ is used in the program: the package, ``jobs/``, ``tools/``,
 ``perfbench/``, ``bench.py`` and ``__spark_entry__.py`` (test files are
 not program). A use is a NAME token, or an identifier inside an f-string
 (on Python 3.11 an f-string is one STRING token, and the oracle SQL
-interpolates helpers such as ``{_SQL_SPANS}``). A use inside the
+interpolates helpers such as ``{_SQL_SPANS}``). A name in an ``import``
+statement is a use only when the importing module uses it elsewhere,
+so an unused import keeps nothing alive. A use inside the
 definition's own lines does not count, and neither does a use inside a
 definition that is itself unreached; the scan iterates to a fixed point.
 
@@ -64,12 +68,15 @@ _IDENT = re.compile(r"[A-Za-z_]\w*")
 _FSTRING = re.compile(r"^[rRbB]?[fF][rRbB]?['\"]")
 
 
+def _py_files(paths):
+    for p in paths:
+        yield from [p] if p.is_file() else sorted(p.rglob("*.py"))
+
+
 def _program_files():
-    for p in PROGRAM:
-        files = [p] if p.is_file() else sorted(p.rglob("*.py"))
-        for f in files:
-            if not (f.name.startswith("test_") or f.name == "conftest.py"):
-                yield f
+    for f in _py_files(PROGRAM):
+        if not (f.name.startswith("test_") or f.name == "conftest.py"):
+            yield f
 
 
 def _statements():
@@ -97,20 +104,34 @@ def _statements():
 
 
 def _uses(names):
-    """{name: [(path, line)]} of every use of a name in `names`."""
+    """{name: [(path, line)]} of every use of a name in `names`. A name
+    in an ``import`` statement is a use only when the importing module
+    uses it elsewhere."""
     uses = defaultdict(list)
     for f in _program_files():
-        toks = tokenize.generate_tokens(io.StringIO(f.read_text()).readline)
-        for tok in toks:
+        text = f.read_text()
+        imports = [n for n in ast.walk(ast.parse(text, str(f)))
+                   if isinstance(n, (ast.Import, ast.ImportFrom))]
+        in_import = {line for n in imports
+                     for line in range(n.lineno, n.end_lineno + 1)}
+        seen: set[str] = set()
+        for tok in tokenize.generate_tokens(io.StringIO(text).readline):
+            if tok.start[0] in in_import:
+                continue
             if tok.type == tokenize.NAME:
                 found = [tok.string]
             elif tok.type == tokenize.STRING and _FSTRING.match(tok.string):
                 found = _IDENT.findall(tok.string)
             else:
                 continue
+            seen.update(found)
             for name in found:
                 if name in names:
                     uses[name].append((f, tok.start[0]))
+        for n in imports:
+            for a in n.names:
+                if a.name in names and (a.asname or a.name) in seen:
+                    uses[a.name].append((f, n.lineno))
     return uses
 
 
@@ -148,3 +169,136 @@ def test_every_package_definition_is_reached():
 def test_keep_lists_only_unreached_definitions():
     stale = sorted(KEEP.keys() - unreached())
     assert not stale, f"KEEP names reached or deleted definitions: {stale}"
+
+
+# --- every defaulted parameter is set by some call -------------------------
+#
+# A parameter with a default is an option. It is set when some call in
+# the program, ``tests/`` or ``perfbench/test_*.py`` passes it, by keyword
+# or by position. Calls match a function by name (a class name matches
+# its ``__init__``; a method's positions skip ``self``/``cls``). A
+# function called with ``*args``/``**kwargs``, or whose name is also used
+# as a value (a registry entry, a callback, a partial), is skipped, so
+# the scan can miss a dead option but never flags a live one. An option
+# no call sets is deleted and its default inlined, or listed in
+# ``KEEP_PARAMS`` with the reason it stays (deployment settings only:
+# paths, addresses, credentials).
+
+KEEP_PARAMS: dict[str, str] = {}
+
+
+def _annotations(tree):
+    """ids of the nodes inside annotations (a type is not a use)."""
+    ids = set()
+    for node in ast.walk(tree):
+        anns = []
+        if isinstance(node, ast.arg):
+            anns = [node.annotation]
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            anns = [node.returns]
+        elif isinstance(node, ast.AnnAssign):
+            anns = [node.annotation]
+        ids.update(id(n) for a in anns if a is not None
+                   for n in ast.walk(a))
+    return ids
+
+
+def _call_name(func):
+    if isinstance(func, ast.Name):
+        return func.id
+    if isinstance(func, ast.Attribute):
+        return func.attr
+    return None
+
+
+@functools.cache
+def _calls():
+    """({name: [(positional count, keyword names)]}, names called with
+    *args/**kwargs, names used as a value)."""
+    calls, starred, values = defaultdict(list), set(), set()
+    for f in _py_files(PROGRAM + [ROOT / "tests"]):
+        tree = ast.parse(f.read_text(), str(f))
+        skip = _annotations(tree)
+        funcs = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                funcs.add(id(node.func))
+                name = _call_name(node.func)
+                if name is None:
+                    continue
+                if (any(isinstance(a, ast.Starred) for a in node.args)
+                        or any(k.arg is None for k in node.keywords)):
+                    starred.add(name)
+                calls[name].append(
+                    (len(node.args), {k.arg for k in node.keywords}))
+        for node in ast.walk(tree):
+            if id(node) in funcs or id(node) in skip:
+                continue
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                values.add(node.id)
+            elif (isinstance(node, ast.Attribute)
+                  and isinstance(node.ctx, ast.Load)):
+                values.add(node.attr)
+    return calls, starred, values
+
+
+def _package_functions():
+    """(path, name the callers use, function node) of every function in
+    the package; a class's ``__init__`` answers to the class name."""
+    for f in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(f.read_text(), str(f))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ClassDef):
+                for item in node.body:
+                    if (isinstance(item, ast.FunctionDef)
+                            and item.name == "__init__"):
+                        yield f, node.name, item
+            elif (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                  and node.name != "__init__"):
+                yield f, node.name, node
+
+
+def _defaulted(fn):
+    """[(position or None, name)] of the parameters with a default; the
+    position skips ``self``/``cls``."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    skip = 1 if positional and positional[0].arg in ("self", "cls") else 0
+    first = len(positional) - len(a.defaults)
+    out = [(i - skip, p.arg) for i, p in enumerate(positional) if i >= first]
+    out += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None]
+    return out
+
+
+@functools.cache
+def unset_parameters() -> tuple:
+    """(path, function, parameter) of each defaulted parameter of a
+    package function that no call sets."""
+    calls, starred, values = _calls()
+    out = []
+    for f, name, fn in _package_functions():
+        if name in starred or name in values:
+            continue
+        names = {name, "__init__"} if fn.name == "__init__" else {name}
+        seen = [c for n in names for c in calls.get(n, ())]
+        for pos, param in _defaulted(fn):
+            if not any(param in kws or (pos is not None and pos < npos)
+                       for npos, kws in seen):
+                out.append((f.relative_to(ROOT).as_posix(), name, param))
+    return tuple(out)
+
+
+def test_every_parameter_is_set():
+    extra = [f"{f}:{fn}({p})" for f, fn, p in unset_parameters()
+             if f"{fn}.{p}" not in KEEP_PARAMS]
+    assert not extra, (
+        f"{len(extra)} defaulted parameters no call sets: {extra}; inline "
+        "each default and delete the parameter, or add it to KEEP_PARAMS "
+        "with the reason it stays")
+
+
+def test_keep_params_lists_only_unset_parameters():
+    unset = {f"{fn}.{p}" for _, fn, p in unset_parameters()}
+    stale = sorted(KEEP_PARAMS.keys() - unset)
+    assert not stale, f"KEEP_PARAMS names set or deleted parameters: {stale}"
